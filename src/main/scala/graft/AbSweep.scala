@@ -59,11 +59,15 @@ object AbSweep {
     }
     spark.conf.set(key, offV)
 
-    def ms(v: Double): String = f"$v%.3f"
+    // Locale.ROOT: a comma-decimal default locale would write invalid
+    // JSON; a mode with no successful pass is null, and so is its delta
+    def secs(v: Option[Double]): String =
+      v.fold("null")(x => String.format(java.util.Locale.ROOT, "%.3f", Double.box(x)))
     val rows = picked.map { case (name, _) =>
-      val off = best.getOrElse((name, offV), -1.0)
-      val on = best.getOrElse((name, onV), -1.0)
-      s""""$name":{"off":${ms(off)},"on":${ms(on)},"delta":${ms(on - off)}}"""
+      val off = best.get((name, offV))
+      val on = best.get((name, onV))
+      val delta = for (a <- off; b <- on) yield b - a
+      s""""$name":{"off":${secs(off)},"on":${secs(on)},"delta":${secs(delta)}}"""
     }
     val json = rows.mkString(s"""{"key":"$key","sf":"$sfDir","queries":{""", ",", "}}")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")

@@ -49,10 +49,14 @@ object BulkLoad {
         * byte order) — the `TotalOrderPartitioner` split-file analog of
         * the reference's live `RegionLocator.getStartKeys` lookup
         * (BulkImporterFromText.java:105-108). When set, the load is
-        * EXACTLY region-aligned via [[graft.plans.RegionAlignedSort]]
+        * EXACTLY region-aligned via [[graft.plans.RegionAlignedRowExchange]]
         * even without salting; `regions` is ignored. Mutually exclusive
         * with `saltBuckets`, whose salt digits define their own
-        * boundaries. */
+        * boundaries. When unset, the MD5-keyed loads ([[csv]],
+        * [[hiveText]], [[rcFile]], [[orc]]) fix them to
+        * [[RegionSort.uniformMd5Splits]]`(regions)` (see
+        * [[withFixedSplits]]); only the named-key feeds ([[avro]],
+        * [[jsonl]]) and `regions` outside 2..65536 sample. */
       splits: Option[Seq[Array[Byte]]] = None) {
     require(splits.isEmpty || saltBuckets.isEmpty,
       "explicit splits and salting are mutually exclusive: salt digits define their own region boundaries")
@@ -144,7 +148,8 @@ object BulkLoad {
     * producing key-less cells ('quarantine, not drop', ARCHITECTURE.md).
     * Key fields beyond the row arity read as null (⇒ quarantine), mirroring
     * where the reference would crash (see [[ReferenceRcKeyFields]]). */
-  def fromPositional(kept: DataFrame, quarantined: DataFrame, cfg: Config): Result = {
+  def fromPositional(kept: DataFrame, quarantined: DataFrame, config: Config): Result = {
+    val cfg = withFixedSplits(config)
     def field(i: Int): Column =
       if (i < cfg.arity) col(s"c$i")
       else lit(null).cast(org.apache.spark.sql.types.StringType)
@@ -170,6 +175,20 @@ object BulkLoad {
       quarantined.unionByName(unkeyable), SortedParquetCellSink)
   }
 
+  /** MD5-keyed config with fixed region boundaries: no salt, no splits
+    * and `regions` in 2..65536 becomes `splits =`
+    * [[RegionSort.uniformMd5Splits]]`(regions)`. MD5-composite keys are
+    * uniform in their leading bytes, so the static uniform pre-split is
+    * exactly region-aligned, and the load needs no sampling pass over its
+    * input — the reference reads the live table's start keys once per
+    * job (BulkImporterFromText.java:105-108). Any other config is
+    * returned as is. */
+  def withFixedSplits(cfg: Config): Config =
+    if (cfg.saltBuckets.isEmpty && cfg.splits.isEmpty &&
+        cfg.regions >= 2 && cfg.regions <= 65536)
+      cfg.copy(splits = Some(RegionSort.uniformMd5Splits(cfg.regions).toSeq))
+    else cfg
+
   /** Empty quarantine frame with the canonical single `value` column. */
   def emptyQuarantine(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -177,47 +196,19 @@ object BulkLoad {
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.StringType))))
 
-  /** Salted loads get EXACT region alignment (the salt digits ARE the
-    * table's pre-split boundaries, create_table.rb:1) via the custom
-    * RegionAlignedSort operator; explicit `cfg.splits` boundaries get the
-    * same exact path without salting (adopting an EXISTING table's region
-    * layout). Unsalted loads with no boundary file fall back to
-    * Catalyst's sampled range exchange — accurate and cheaper for the
-    * uniform MD5 keyspace, but a straddling file may be split server-side
-    * at adoption time. */
-  private[graft] def sorted(cells: DataFrame, cfg: Config): DataFrame =
+  /** Region exchange on the leading binary key column. Salted loads get
+    * EXACT region alignment (the salt digits ARE the table's pre-split
+    * boundaries, create_table.rb:1) and explicit `cfg.splits` the same
+    * exact path without salting (adopting an EXISTING table's region
+    * layout), both through [[graft.plans.RegionAlignedRowExchange]].
+    * A config with neither falls back to Catalyst's sampled range
+    * exchange — the MD5-keyed drivers never reach it (their config is
+    * promoted by [[withFixedSplits]]); the named-key feeds and
+    * compaction of such loads do, and there a straddling file may be
+    * split server-side at adoption time. */
+  private def exchange(rows: DataFrame, cfg: Config): DataFrame = {
+    val key = rows.columns.head
     (cfg.saltBuckets, cfg.splits) match {
-      case (Some(b), _) =>
-        val salted = cells.withColumn("row",
-          concat(keys.saltPrefix(crc32(col("row")), b), col("row")))
-        graft.plans.RegionAlignedSort(salted, RegionSort.saltSplits(b))
-      case (None, Some(s)) =>
-        graft.plans.RegionAlignedSort(cells, s.toArray)
-      case (None, None) =>
-        RegionSort.sortedByRange(cells, cfg.regions)
-    }
-
-  /** Two-phase region sort from WIDE keyed rows — the ingest-side shape
-    * of [[sorted]]: (1) the total-order EXCHANGE runs on the source rows
-    * (leading binary `row` key + raw values — the key and the per-cell
-    * family/qualifier/ts overhead move ONCE per row instead of once per
-    * cell: ~2.5-3× fewer shuffle bytes, arity× fewer shuffle tuples);
-    * (2) the cell explode is a NARROW Generate inside the destination
-    * region partition; (3) the KeyValue (row, family, qualifier) order is
-    * a partition-local spill-safe SortExec (BinaryType compares unsigned
-    * lexicographic — the same order [[RegionSort.unsignedBytes]] defines).
-    * Output contract is IDENTICAL to [[sorted]]: file i ⊆ region i,
-    * in-file KeyValue order. At 100 TB the ingest exchange is the
-    * pipeline's dominant cost — this is the operator the reduction
-    * targets; layout compaction keeps the cell-level [[sorted]] because
-    * its input is already-exploded persisted cells. Salting prepends the
-    * salt digit to the ROW key before the exchange, so the salt-digit
-    * boundaries stay exact. */
-  private[graft] def sortedFromRows(rows: DataFrame,
-                                    explode: DataFrame => DataFrame,
-                                    cfg: Config): DataFrame = {
-    val key = rows.columns.head // the leading column IS the binary row key
-    val exchanged = (cfg.saltBuckets, cfg.splits) match {
       case (Some(b), _) =>
         val salted = rows.withColumn(key,
           concat(keys.saltPrefix(crc32(col(key)), b), col(key)))
@@ -227,9 +218,35 @@ object BulkLoad {
       case (None, None) =>
         rows.repartitionByRange(cfg.regions, col(key))
     }
-    explode(exchanged)
-      .sortWithinPartitions(col("row"), col("family"), col("qualifier"))
   }
+
+  private def kvSorted(cells: DataFrame): DataFrame =
+    cells.sortWithinPartitions(col("row"), col("family"), col("qualifier"))
+
+  /** Region sort of already-exploded cells (`row` leading): the
+    * [[exchange]] chosen by `cfg`, then a partition-local KeyValue sort.
+    * Layout compaction re-sorts persisted cell filesets through this. */
+  private[graft] def sorted(cells: DataFrame, cfg: Config): DataFrame =
+    kvSorted(exchange(cells, cfg))
+
+  /** Two-phase region sort from WIDE keyed rows — the ingest-side shape
+    * of [[sorted]]: (1) the total-order [[exchange]] runs on the source
+    * rows (leading binary `row` key + raw values — the key and the
+    * per-cell family/qualifier/ts overhead move ONCE per row instead of
+    * once per cell: ~2.5-3× fewer shuffle bytes, arity× fewer shuffle
+    * tuples); (2) the cell explode is a NARROW Generate inside the
+    * destination region partition; (3) the KeyValue (row, family,
+    * qualifier) order is a partition-local spill-safe SortExec (BinaryType
+    * compares unsigned lexicographic — the same order
+    * [[RegionSort.unsignedBytes]] defines). Output contract is IDENTICAL
+    * to [[sorted]]: file i ⊆ region i, in-file KeyValue order. Salting
+    * prepends the salt digit to the ROW key before the exchange, so the
+    * salt-digit boundaries stay exact. With fixed boundaries the whole
+    * load is one Spark job: no sampling pass re-reads the input. */
+  private[graft] def sortedFromRows(rows: DataFrame,
+                                    explode: DataFrame => DataFrame,
+                                    cfg: Config): DataFrame =
+    kvSorted(explode(exchange(rows, cfg)))
 
   /** [[sortedFromRows]] for the NAMED-qualifier feeds (Avro/JSONL): keys
     * each source row once under a collision-proof column name (the source
@@ -282,7 +299,12 @@ object SortedParquetCellSink extends CellSink {
     * by contract — every reader falls back to footer stats when it is
     * absent) can land off the micro-batch critical path. */
   def writeData(cells: DataFrame, path: String): Unit =
-    cells.write.mode("overwrite").parquet(path)
+    cells.write.mode("overwrite")
+      // `value` mixes every column's values: its dictionary costs encode
+      // CPU and left the files larger, not smaller. `row` keeps its
+      // dictionary and the min/max statistics the manifest reads.
+      .option("parquet.enable.dictionary#value", "false")
+      .parquet(path)
 
   override def write(cells: DataFrame, path: String): Unit = {
     writeData(cells, path)

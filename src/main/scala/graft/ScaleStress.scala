@@ -571,7 +571,7 @@ object ScaleStress {
       dir.toString
     }
     // explicit boundaries so BOTH paths take the exact-alignment custom
-    // exchange (RegionAlignedRowExchange vs RegionAlignedSort) — the
+    // exchange (RegionAlignedRowExchange over rows vs over cells) — the
     // comparison the r13 claim is about, not Catalyst's sampled range
     val cfg = BulkLoad.Config(compatNaiveSplit = true,
       splits = Some(graft.operators.RegionSort.uniformMd5Splits(32).toSeq))

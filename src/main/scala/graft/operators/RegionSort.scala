@@ -100,10 +100,11 @@ object RegionSort {
     * `RegionSplitter.UniformSplit` pre-split analog): region i+1 starts at
     * the 2-byte big-endian value floor(i·65536/regions). Exact alignment
     * holds because every md5-composite rowkey's leading bytes are uniform
-    * ([[graft.functions.keys.md5CompositeKey]]) — which lets a CONTINUOUS
-    * ingest fix its boundaries ONCE instead of paying Catalyst's sampling
-    * pass per micro-batch (a live table's regions don't move per batch;
-    * the reference reads them once per job, BulkImporterFromText.java:106). */
+    * ([[graft.functions.keys.md5CompositeKey]]) — which lets every
+    * MD5-keyed load, batch or micro-batch, fix its boundaries instead of
+    * paying Catalyst's sampling pass over its input
+    * ([[graft.BulkLoad.withFixedSplits]]; the reference reads a live
+    * table's regions once per job, BulkImporterFromText.java:106). */
   def uniformMd5Splits(regions: Int): Array[Array[Byte]] = {
     require(regions >= 2 && regions <= 65536,
       s"uniform md5 pre-split needs 2..65536 regions, got $regions")

@@ -1,99 +1,40 @@
 package graft.plans
 
 import graft.operators.RegionSort
-import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.Partitioner
+import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graft.{Bridge, RowShuffle}
 
-/** Exact-region-boundary exchange + KeyValue sort as a first-class
-  * Catalyst operator — the one whole-operator semantic Spark's built-ins
-  * genuinely cannot express (SURVEY.md §4.1): `repartitionByRange` SAMPLES
-  * its boundaries, while HFile bulk load requires output partition i to
-  * hold exactly region i's key range (`TotalOrderPartitioner` over
+/** Exact-region-boundary exchange as a first-class Catalyst operator —
+  * the one whole-operator semantic Spark's built-ins genuinely cannot
+  * express (SURVEY.md §4.1): `repartitionByRange` SAMPLES its boundaries,
+  * while HFile bulk load requires output partition i to hold exactly
+  * region i's key range (`TotalOrderPartitioner` over
   * `RegionLocator.getStartKeys` in the reference,
   * BulkImporterFromText.java:105-108). A sampled boundary that straddles a
   * region makes HBase split files server-side during adoption.
   *
+  * Partitions any plan whose FIRST column is the binary row key into exact
+  * region partitions, with no intra-partition order. Two shapes compose
+  * it: the ingest sort ([[graft.BulkLoad.sortedFromRows]]) exchanges
+  * source ROWS — the 64-byte key plus the raw values move once — and
+  * explodes the cells inside the region partition; [[RegionAlignedSort]]
+  * exchanges already-exploded cells (layout compaction). Both finish with
+  * a partition-local spill-safe sort to KeyValue (row, family, qualifier)
+  * order, so the output contract is file i ⊆ region i, rows in unsigned
+  * order.
+  *
   * Full extension stack: logical node → planner [[RegionSortStrategy]] →
-  * [[RegionAlignedSortExec]] physical operator (one shuffle whose reduce
-  * side sorts by the composite (row, family, qualifier) key via Spark's
-  * spill-safe shuffle sorter), injectable via `GraftExtensions` or
+  * [[RegionAlignedRowExchangeExec]], injectable via `GraftExtensions` or
   * `spark.experimental.extraStrategies`. The RDD-level path
-  * (`RegionSort.partitionByRegions`) remains for RDD consumers; this node
-  * keeps the result INSIDE the DataFrame/Catalyst world so downstream
-  * plans (the sink, stats, AQE) compose.
-  */
-case class RegionAlignedSort(child: LogicalPlan, splits: Seq[Array[Byte]])
-    extends UnaryNode {
-  override def output: Seq[Attribute] = child.output
-  /** The exec reads (row, family, qualifier) positionally — declare every
-    * child column referenced so ColumnPruning can't insert a Project
-    * below this node (it would, for e.g. a downstream count()). */
-  override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(child.output)
-  override protected def withNewChildInternal(newChild: LogicalPlan): RegionAlignedSort =
-    copy(child = newChild)
-}
-
-case class RegionAlignedSortExec(child: SparkPlan, splits: Seq[Array[Byte]])
-    extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
-
-  /** This node REPARTITIONS — never inherit the child's partitioning
-    * (the default), which would let a downstream operator skip a needed
-    * exchange on the basis of a distribution this shuffle destroyed. */
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(splits.length + 1)
-
-  override def outputOrdering: Seq[SortOrder] =
-    child.output.take(1).map(a => SortOrder(a, Ascending))
-
-  private type K = (Array[Byte], Array[Byte], Array[Byte])
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val regionPart = new RegionSort.RegionPartitioner(splits.toArray)
-    val part = new Partitioner {
-      override def numPartitions: Int = regionPart.numPartitions
-      override def getPartition(key: Any): Int =
-        regionPart.getPartition(key.asInstanceOf[K]._1)
-    }
-    implicit val ord: Ordering[K] = Ordering.Tuple3(
-      RegionSort.unsignedBytesOrdering,
-      RegionSort.unsignedBytesOrdering,
-      RegionSort.unsignedBytesOrdering)
-    // cell schema contract: columns 0..2 are (row, family, qualifier) binary
-    val keyed = child.execute().mapPartitions { it =>
-      it.map { row =>
-        ((row.getBinary(0), row.getBinary(1), row.getBinary(2)),
-          row.copy())
-      }
-    }
-    new ShuffledRDD[K, InternalRow, InternalRow](keyed, part)
-      .setKeyOrdering(ord) // reduce-side spill-safe sort (ExternalSorter)
-      .mapPartitions(_.map(_._2), preservesPartitioning = true)
-  }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): RegionAlignedSortExec =
-    copy(child = newChild)
-}
-
-/** Row-level exact-boundary EXCHANGE (no sort): partitions any plan whose
-  * FIRST column is the binary row key into exact region partitions — the
-  * skinny-shuffle half of the two-phase ingest sort
-  * ([[graft.BulkLoad.sortedFromRows]]). The total-order exchange moves
-  * each source ROW once (its 64-byte key + the raw values), and the 9×
-  * cell explode plus the KeyValue sort run INSIDE the region partition
-  * (a narrow Generate followed by a spill-safe partition-local SortExec)
-  * — ~2.5-3× fewer shuffle bytes and arity× fewer shuffle tuples than
-  * exchanging exploded cells, with the IDENTICAL file-i ⊆ region-i,
-  * in-file (row, family, qualifier) output contract. The cell-level
-  * [[RegionAlignedSort]] stays for inputs that are already cells
-  * (layout compaction re-sorts persisted cell filesets).
+  * (`RegionSort.partitionByRegions`) remains for RDD consumers.
   *
   * Contract: column 0 is a non-null BinaryType row key (callers
   * quarantine un-keyable rows before the exchange). */
@@ -102,33 +43,35 @@ case class RegionAlignedRowExchange(child: LogicalPlan, splits: Seq[Array[Byte]]
   override def output: Seq[Attribute] = child.output
   /** Positional col-0 read in the exec — keep every child column so
     * ColumnPruning can't re-project below this node. */
-  override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(child.output)
+  override def references: AttributeSet = AttributeSet(child.output)
   override protected def withNewChildInternal(newChild: LogicalPlan): RegionAlignedRowExchange =
     copy(child = newChild)
 }
 
+/** One shuffle on Spark SQL's own path ([[RowShuffle]]): the region id is
+  * computed map-side by [[RegionSort.RegionPartitioner]] over column 0,
+  * and rows cross as `UnsafeRow`s — no Java serialization, no per-row
+  * copy, the key shipped once inside its row. */
 case class RegionAlignedRowExchangeExec(child: SparkPlan, splits: Seq[Array[Byte]])
     extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
 
-  /** Repartitioning node — see [[RegionAlignedSortExec.outputPartitioning]]. */
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(splits.length + 1)
+  /** This node REPARTITIONS — never inherit the child's partitioning
+    * (the default), which would let a downstream operator skip a needed
+    * exchange on the basis of a distribution this shuffle destroyed. */
+  override def outputPartitioning: Partitioning = UnknownPartitioning(splits.length + 1)
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val regionPart = new RegionSort.RegionPartitioner(splits.toArray)
-    val part = new Partitioner {
-      override def numPartitions: Int = regionPart.numPartitions
-      override def getPartition(key: Any): Int =
-        regionPart.getPartition(key.asInstanceOf[Array[Byte]])
-    }
-    val keyed = child.execute().mapPartitions { it =>
-      it.map(row => (row.getBinary(0), row.copy()))
-    }
-    new ShuffledRDD[Array[Byte], InternalRow, InternalRow](keyed, part)
-      .mapPartitions(_.map(_._2), preservesPartitioning = true)
+  override lazy val metrics: Map[String, SQLMetric] = RowShuffle.metrics(sparkContext)
+
+  /** Built once per physical plan, so repeated actions reuse the shuffle
+    * output (as `ShuffleExchangeExec` does). */
+  @transient private lazy val shuffled: RDD[InternalRow] = {
+    val part = new RegionSort.RegionPartitioner(splits.toArray)
+    RowShuffle(child.execute(), child.output, part.numPartitions,
+      row => part.getPartition(row.getBinary(0)), metrics)
   }
+
+  override protected def doExecute(): RDD[InternalRow] = shuffled
 
   override protected def withNewChildInternal(newChild: SparkPlan): RegionAlignedRowExchangeExec =
     copy(child = newChild)
@@ -150,8 +93,6 @@ object RegionAlignedRowExchange {
 
 object RegionSortStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case RegionAlignedSort(child, splits) =>
-      RegionAlignedSortExec(planLater(child), splits) :: Nil
     case RegionAlignedRowExchange(child, splits) =>
       RegionAlignedRowExchangeExec(planLater(child), splits) :: Nil
     case _ => Nil
@@ -159,14 +100,10 @@ object RegionSortStrategy extends SparkStrategy {
 }
 
 object RegionAlignedSort {
-  /** DataFrame-level API: cells (row/family/qualifier binary leading
-    * columns) → exact region-aligned, KV-sorted DataFrame. */
-  def apply(cells: DataFrame, splits: Array[Array[Byte]]): DataFrame = {
-    val spark: SparkSession = cells.sparkSession
-    if (!spark.experimental.extraStrategies.contains(RegionSortStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RegionSortStrategy
-    }
-    Bridge.ofRows(spark, new RegionAlignedSort(Bridge.logicalPlan(cells), splits.toSeq))
-  }
+  /** Cells (row/family/qualifier binary leading columns) → exact
+    * region-aligned, KV-sorted DataFrame: the row exchange over the cells,
+    * then a partition-local sort. */
+  def apply(cells: DataFrame, splits: Array[Array[Byte]]): DataFrame =
+    RegionAlignedRowExchange(cells, splits)
+      .sortWithinPartitions(col("row"), col("family"), col("qualifier"))
 }

@@ -179,8 +179,7 @@ object CellCompaction {
     // contract every scanner filters on)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(destPath.getParent, s"_minor_tmp_$stamp")
-    graft.BulkLoad.sorted(cells, cfg)
-      .write.mode("overwrite").parquet(tmp.toString)
+    graft.SortedParquetCellSink.writeData(graft.BulkLoad.sorted(cells, cfg), tmp.toString)
     installParts(fs, tmp, destPath, stamp)
     CellManifest.update(spark, dest)
     val newestId = newEntries.map(e => batchId(e._1)).max
@@ -333,8 +332,7 @@ object CellCompaction {
       .parquet(dir)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(dirPath.getParent, s"_major_tmp_$stamp")
-    graft.BulkLoad.sorted(cells, cfg)
-      .write.mode("overwrite").parquet(tmp.toString)
+    graft.SortedParquetCellSink.writeData(graft.BulkLoad.sorted(cells, cfg), tmp.toString)
     installParts(fs, tmp, dirPath, stamp)
     oldParts.foreach(p => fs.delete(p, false))
     CellManifest.write(spark, dir)

@@ -7,6 +7,10 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
 /** Region-boundary manifest for a staged cell directory — the engine's
@@ -121,20 +125,31 @@ object CellManifest {
       .sortBy(_._1)
   }
 
-  /** Footer stats for the named files: driver-side under 32 files (a
-    * streaming micro-batch / compaction delta — beats job-scheduling
-    * latency), distributed above (the 100k-region bulk sink). */
+  /** Driver-side footer opens are metadata latency (a few ms each), not
+    * CPU: they overlap on this small bounded pool of daemon threads. */
+  private lazy val footerPool: ExecutionContext = ExecutionContext.fromExecutorService(
+    Executors.newFixedThreadPool(8, (r: Runnable) => {
+      val t = new Thread(r, "graft-manifest-footers"); t.setDaemon(true); t
+    }))
+
+  /** Footer stats for the named files, in the given (name) order:
+    * driver-side and concurrent under 32 files (a streaming micro-batch /
+    * compaction delta — beats job-scheduling latency), distributed above
+    * (the 100k-region bulk sink). */
   private def statFiles(spark: SparkSession, dir: String,
                         files: Seq[(String, Long)]): Seq[(String, Entry)] = {
     val hc = spark.sessionState.newHadoopConf()
     if (files.isEmpty) Seq.empty
-    else if (files.size <= 32)
-      files.map { case (name, len) =>
-        statReads.incrementAndGet()
-        val (rows, bounds) = footerStats(s"$dir/$name", hc)
-        (name, Entry(len, rows, bounds))
+    else if (files.size <= 32) {
+      val opens = files.map { case (name, len) =>
+        Future {
+          statReads.incrementAndGet()
+          val (rows, bounds) = footerStats(s"$dir/$name", hc)
+          (name, Entry(len, rows, bounds))
+        }(footerPool)
       }
-    else {
+      Await.result(Future.sequence(opens)(implicitly, footerPool), Duration.Inf)
+    } else {
       // Hadoop Configuration is not serializable; ship the entries and
       // rebuild ONCE PER PARTITION (fs.defaultFS + credentials travel).
       val confEntries = hc.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray

@@ -28,7 +28,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Thin by design: `WriteBuilder` hands back a [[V1Write]] whose insert
   * applies the SAME exchange/sort/sink path the `BulkLoad` drivers use —
-  * exact alignment via the [[graft.plans.RegionAlignedSort]] Catalyst
+  * exact alignment via the [[graft.plans.RegionAlignedRowExchange]] Catalyst
   * operator under `salt`/`splits`, Catalyst's sampled range exchange
   * under `regions` — so there is exactly one implementation of the layout
   * contract. (A pure DSv2 `BatchWrite` cannot express EXACT boundaries:

@@ -26,11 +26,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Per-batch overhead budget (the round-9 batch-vs-streaming 17× gap was
   * mostly fixed per-batch cost, not pipeline throughput), and what this
   * harness does about each item:
-  *   - region boundaries are FIXED ONCE per run: an unsalted/unsplit
-  *     config is promoted to explicit [[RegionSort.uniformMd5Splits]]
-  *     boundaries, so no micro-batch ever pays Catalyst's range-sampling
-  *     scan — exactly the reference's once-per-job `RegionLocator` read
-  *     (a live table's regions don't move between micro-batches);
+  *   - region boundaries are FIXED: every micro-batch goes through
+  *     [[BulkLoad.fromPositional]], which gives an unsalted/unsplit MD5-
+  *     keyed config the uniform [[graft.operators.RegionSort.uniformMd5Splits]]
+  *     boundaries like every batch load ([[BulkLoad.withFixedSplits]]),
+  *     so no micro-batch pays Catalyst's range-sampling scan — exactly
+  *     the reference's once-per-job `RegionLocator` read (a live table's
+  *     regions don't move between micro-batches). Compaction sweeps use
+  *     the same boundaries;
   *   - the per-batch cell count is read from the written parquet FOOTERS
   *     on the driver (a few metadata pages), never a Spark count job;
   *   - what remains per batch — offset/commit log writes, one write job
@@ -111,14 +114,9 @@ object StreamingIngest {
           sinkOverride: Option[CellSink] = None,
           compactEvery: Int = 0,
           asyncProgress: Boolean = false): Seq[BatchResult] = {
-    // fix the region boundaries ONCE for the whole run (see scaladoc) —
-    // md5-composite keys are uniform in their leading bytes, so the
-    // static uniform pre-split is exactly region-aligned
-    val fixedCfg =
-      if (cfg.saltBuckets.isEmpty && cfg.splits.isEmpty && cfg.regions >= 2)
-        cfg.copy(splits = Some(
-          graft.operators.RegionSort.uniformMd5Splits(cfg.regions).toSeq))
-      else cfg
+    // the batches fix their boundaries in BulkLoad.fromPositional; the
+    // compaction sweeps below must use the same ones
+    val fixedCfg = BulkLoad.withFixedSplits(cfg)
     val results = scala.collection.mutable.ArrayBuffer.empty[BatchResult]
 
     // DEFERRED lane (one background thread): the per-batch manifest write

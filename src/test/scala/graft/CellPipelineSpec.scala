@@ -199,9 +199,9 @@ class CellPipelineSpec extends SparkSuite {
     // still a DataFrame: downstream relational ops compose
     assert(sorted.schema === cells.schema)
     assert(sorted.groupBy().count().head().getLong(0) === 36992L * 3)
-    // physical plan contains the custom exec node
+    // physical plan contains the custom exchange node
     assert(sorted.queryExecution.executedPlan
-      .exists(_.isInstanceOf[graft.plans.RegionAlignedSortExec]),
+      .exists(_.isInstanceOf[graft.plans.RegionAlignedRowExchangeExec]),
       sorted.queryExecution.executedPlan.toString)
     val perPart = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
       var prev: Array[Byte] = null
@@ -255,23 +255,23 @@ class CellPipelineSpec extends SparkSuite {
     }.collect()
     assert(perPart.length === 8)
     assert(perPart.forall(identity), "file i must hold region i, KV-sorted")
-    // (c) the skinny-shuffle claim as an executed-plan METRIC (sampled
-    // path, where the exchange is a standard node with metrics): the
-    // total-order exchange moves the 200 source rows, not the 1800 cells
+    // (c) the skinny-shuffle claim as an executed-plan METRIC (default
+    // config: the fixed-boundary region exchange, which reports Spark's
+    // shuffle-write metrics): the total-order exchange moves the 200
+    // source rows, not the 1800 cells
     val r2 = BulkLoad.fromPositional(wide, BulkLoad.emptyQuarantine(spark),
       BulkLoad.Config())
     r2.cells.collect()
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
       case q: QueryStageExec => q +: nodes(q.plan)
       case _ => p +: p.children.flatMap(nodes)
     }
     val ex = nodes(r2.cells.queryExecution.executedPlan)
-      .collect { case s: ShuffleExchangeExec => s }
-    assert(ex.nonEmpty, "the sampled path plans a range exchange")
+      .collect { case s: graft.plans.RegionAlignedRowExchangeExec => s }
+    assert(ex.nonEmpty, "the default path plans a region exchange")
     val moved = ex.map(e => e.metrics.get("shuffleRecordsWritten")
       .orElse(e.metrics.get("numOutputRows")).map(_.value).getOrElse(0L)).sum
     assert(moved === 200L,
