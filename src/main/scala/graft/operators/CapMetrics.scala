@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * can silently return an EMPTY candidate set when a template cohort
   * floods every band (the recall-collapse regime). Every capped
   * candidate generator attaches one `observe()` metric
-  * (banded_rows / kept_rows) riding the occupancy window's exchange —
+  * (banded_rows / kept_rows) riding the occupancy stage's exchange —
   * no extra job, no extra shuffle — and a once-per-session listener
   * surfaces it:
   *
@@ -29,12 +29,17 @@ object CapMetrics {
   val MetricPrefix = "graft_occ_cap_"
   private val metricSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Attach the cap observation to a banded frame carrying `occ`. */
+  /** Attach the cap observation to a banded frame carrying `occ`. Each
+    * frame row stands for `weight` banded rows: 1 on a frame with one row
+    * per (member, band), the bucket's `occ` on a frame already grouped to
+    * one row per bucket — either way banded_rows / kept_rows count
+    * (member, band) rows. */
   private[operators] def observed(banded: DataFrame, occ: Column,
-                                  maxBucket: Int): DataFrame =
+                                  maxBucket: Int,
+                                  weight: Column = lit(1L)): DataFrame =
     banded.observe(MetricPrefix + metricSeq.incrementAndGet(),
-      count(lit(1)).as("banded_rows"),
-      count(when(occ <= maxBucket, 1)).as("kept_rows"))
+      coalesce(sum(weight), lit(0L)).as("banded_rows"),
+      coalesce(sum(when(occ <= maxBucket, weight)), lit(0L)).as("kept_rows"))
 
   /** The cap-observation messages for one finished query execution —
     * pure so specs can pin the exact binding/collapse conditions.

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.MinHashKernel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,8 +22,12 @@ import org.apache.spark.sql.types._
   *
   * All hashing derives from md5 (deterministic across engines/sessions —
   * no seed state), all math from integer counts, so every operator is
-  * oracle-checkable bit-for-bit. No UDFs anywhere: higher-order array
-  * functions keep signature computation inside codegen.
+  * oracle-checkable bit-for-bit. No UDFs anywhere: the shingle-grain
+  * operators are relational plans of codegen'd built-ins, and the
+  * MinHash path ([[minHashSignatures]], [[corpusDedup]]) runs the native
+  * per-document kernel [[graft.functions.MinHashKernel]] — Catalyst
+  * expressions, like `array_dot` — so it never widens to one row per
+  * shingle.
   */
 object Dedup {
 
@@ -511,7 +516,7 @@ object Dedup {
     SpanStore(spark, path.toString)
   }
 
-  val MinHashK = 32
+  val MinHashK = MinHashKernel.K
   val Bands = 8
   val RowsPerBand = 4 // MinHashK / Bands
 
@@ -526,37 +531,70 @@ object Dedup {
         s => md5(concat(i.cast(StringType), lit(":"), s).cast(BinaryType)))))
   }
 
-  /** Universal-hash family over one md5 base hash per shingle:
-    * base = first 7 md5 hex chars (28 bits); h_i = (a_i·base + b_i) mod
-    * 2^31-1 with md5-derived odd constants a_i, b_i. The product stays
-    * under 2^62, so the arithmetic is exact in any 64-bit engine — the
-    * DuckDB oracle mirrors it literally. One md5 per shingle instead of k. */
-  val MinHashPrime = 2147483647L // 2^31 - 1
-  def hashConstant(tag: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(tag.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    (java.lang.Long.parseLong(hex, 16) % (MinHashPrime - 1)) + 1 // in [1, p-1]
+  /** One [[MinHashKernel]] struct `k` per input row with at least one
+    * shingle: (doc_id, k = struct<nsh, sig, dg>). Null text and texts of
+    * fewer than n tokens have no shingles and drop out, as they do from
+    * the relational shingle index. */
+  private def kernel(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), MinHashKernel.document(col("text"), n).as("k"))
+      .where(col("k").isNotNull)
+
+  /** Per-document MinHash signatures (doc_id, sig): the kernel's one pass
+    * per document, then a per-position min per doc_id (map-side partial),
+    * which folds rows sharing a doc_id into the signature of their pooled
+    * shingles — the identity when doc_ids are unique. The shuffle carries
+    * one k-vector per document regardless of document length. */
+  def minHashSignatures(docs: DataFrame, n: Int): DataFrame = {
+    val mins = (0 until MinHashK).map(i =>
+      min(element_at(col("k.sig"), i + 1)).as(s"h$i"))
+    kernel(docs, n)
+      .groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"), sigArray)
   }
 
-  /** Same signatures as a relational plan: explode shingles, ONE codegen'd
-    * md5 base hash per shingle, k affine transforms, per-document mins with
-    * map-side partial aggregation. Nested-HOF lambdas run interpreted in
-    * Spark (measured ~20× slower); this shape also scales better — the
-    * min-agg combines map-side, so the shuffle carries one k-vector per
-    * document regardless of document length. */
-  def minHashSignatures(docs: DataFrame, n: Int): DataFrame = {
-    val sh = shingleIndex(docs, n)
-      .withColumn("base",
-        graft.functions.keys.md5Prefix64(col("s").cast(BinaryType), 7))
-    val hashMins = (0 until MinHashK).map { i =>
-      val (a, b) = (hashConstant(s"a$i"), hashConstant(s"b$i"))
-      min(pmod(col("base") * lit(a) + lit(b), lit(MinHashPrime))).as(s"h$i")
-    }
-    sh.groupBy(col("doc_id"))
-      .agg(hashMins.head, hashMins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until MinHashK).map(i => col(s"h$i")): _*).as("sig"))
+  /** The kernel frame of [[corpusDedup]] and its evals, one row per
+    * doc_id, materialized: (doc_id, k = struct<nsh, sig, dg>). Rows
+    * sharing a doc_id are folded by [[MinHashKernel.merge]] into the
+    * multiset the relational index builds for them (sizes add, digest
+    * lists concatenate, signatures take the element-wise min), so a
+    * duplicated doc_id keeps the relational formulation's results. */
+  private def kernelFrame(docs: DataFrame, n: Int): DataFrame =
+    kernel(docs, n)
+      .groupBy(col("doc_id"))
+      .agg(MinHashKernel.merge(collect_list(col("k"))).as("k"))
+      .materialized
+
+  /** (doc_id, sig) of a kernel frame — the candidate generator's input. */
+  private def kernelSigs(k: DataFrame): DataFrame =
+    k.select(col("doc_id"), col("k.sig").as("sig"))
+
+  /** Exact verify of candidate pairs against a [[kernelFrame]]: both
+    * sides join the kernel frame, [[MinHashKernel.overlap]]
+    * merge-intersects the two sorted digest lists, and pairs sharing no
+    * shingle drop out. Output: (a, b, jaccard, siga, sigb); unused
+    * signature columns are pruned. */
+  private def kernelVerify(cand: DataFrame, k: DataFrame): DataFrame = {
+    val side = k.select(col("doc_id"), col("k.nsh").as("nsh"),
+      col("k.dg").as("dg"), col("k.sig").as("sig"))
+    cand
+      .join(side.as("ka"), col("a") === col("ka.doc_id"))
+      .join(side.as("kb"), col("b") === col("kb.doc_id"))
+      .select(col("a"), col("b"),
+        MinHashKernel.overlap(col("ka.dg"), col("kb.dg")).as("common"),
+        col("ka.nsh").as("nsh_a"), col("kb.nsh").as("nsh_b"),
+        col("ka.sig").as("siga"), col("kb.sig").as("sigb"))
+      .where(col("common") > 0)
+      .select(col("a"), col("b"),
+        (col("common").cast(DoubleType) /
+          (col("nsh_a") + col("nsh_b") - col("common"))).as("jaccard"),
+        col("siga"), col("sigb"))
   }
+
+  /** Signature-estimated Jaccard: share of equal MinHash positions. */
+  private def estJaccard(siga: Column, sigb: Column): Column =
+    size(filter(sequence(lit(0), lit(MinHashK - 1)),
+      i => element_at(siga, i + lit(1)) === element_at(sigb, i + lit(1))))
+      .cast(DoubleType) / lit(MinHashK.toDouble)
 
   /** (doc_id, band, bkey) band keys from MinHash signatures. Band key =
     * md5 of the band's r signature values joined with '|'. */
@@ -584,50 +622,59 @@ object Dedup {
     * at sf0.1; 590 on the adversarial canonicalized-decade corpus). */
   val BandBucketCap = 10000
 
-  /** LSH band candidate pairs (a < b, distinct) from MinHash signatures.
-    * The band join carries ONLY (doc_id, band, bkey) — signatures are
-    * re-attached after candidate dedup, so the hot self-join shuffles
-    * ~50 bytes per (doc, band) instead of the full k-vector. Buckets
-    * above `maxBucket` ([[BandBucketCap]]) are excluded — see there; the
-    * occupancy window shares the self-join's (band, bkey) exchange, so
-    * the cap costs no extra shuffle. */
+  /** LSH band candidate pairs (a < b, distinct) from MinHash signatures
+    * (doc_id, sig) with one row per doc_id — the one generator shared by
+    * [[corpusDedup]], [[minHashPairs]], [[minHashEstVsExact]],
+    * [[lshRecallCurve]] and [[dedupStore]].
+    *
+    * Each (doc, band) row carries the band's [[RowsPerBand]] = 4 signature
+    * values packed exactly into two longs (each value is < 2^31), and ONE
+    * aggregate groups them into buckets: (band, k1, k2, occ, ids). Two
+    * documents share a bucket iff their band values are equal — the
+    * bucket relation of [[bandKeys]]' md5 `bkey`, without the hash.
+    * Buckets above `maxBucket` ([[BandBucketCap]]) are dropped, then each
+    * remaining bucket streams its member pairs ([[MinHashKernel.bucketPairs]])
+    * and `distinct` folds pairs found in several bands. No window and no
+    * self-join: one exchange of ~24 B per (doc, band) row, one of the
+    * pairs. A bucket's ids are collected by [[MinHashKernel.bucketIds]],
+    * which drops them as soon as the bucket's occupancy passes the cap,
+    * so a flooded bucket holds at most `maxBucket` ids however large its
+    * cohort. */
   def minHashCandidates(sigd: DataFrame,
                         maxBucket: Int = BandBucketCap,
                         observeCap: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val banded = bandKeys(sigd)
-    // the occupancy cap carries the shared CapMetrics observation by
-    // default (binding drop counts + loud collapse detection, incl. AQE's
-    // empty-relation pruning of the metric node itself). COST, measured
-    // the honest way (alternating on/off in one JVM, 6 reps): ~+30 ms on
-    // the sf0.1 candidate pipeline — a first family-level A/B read
-    // +0.5 s/query, which turned out to be ambient the ingest canary
-    // doesn't track; don't re-measure this across sessions. `observeCap
-    // = false` keeps an opt-out for metric-averse callers.
-    // the occupancy window, metric, and listener exist only when the cap
-    // can bind: the uncapped path returns the bare banded frame with no
-    // side effects (no listener install, no metric name burned on a
-    // frame that would be discarded)
+    def v(i: Int) = element_at(col("sig"), i + 1)
+    val banded = sigd.select(col("doc_id"),
+        explode(array((0 until Bands).map { j =>
+          val r = j * RowsPerBand
+          struct(lit(j).as("band"),
+            shiftleft(v(r), 31).bitwiseOR(v(r + 1)).as("k1"),
+            shiftleft(v(r + 2), 31).bitwiseOR(v(r + 3)).as("k2"))
+        }: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.*"))
+    val buckets = banded.groupBy(col("band"), col("k1"), col("k2"))
+      .agg(MinHashKernel.bucketIds(col("doc_id"), maxBucket).as("bk"))
+      .select(col("band"), col("k1"), col("k2"), col("bk.occ").as("occ"), col("bk.ids").as("ids"))
+    // the cap carries the shared CapMetrics observation by default
+    // (binding drop counts + loud collapse detection, incl. AQE's
+    // empty-relation pruning of the metric node itself), weighted by
+    // occupancy so it still counts (doc, band) rows, and observed before
+    // the singleton filter. `observeCap = false` keeps an opt-out for
+    // metric-averse callers; the uncapped path has no observation, no
+    // listener and no metric name
     val kept =
-      if (maxBucket == Int.MaxValue) banded
+      if (maxBucket == Int.MaxValue) buckets
       else {
-        val withOcc = banded
-          .withColumn("occ",
-            count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
         val metered =
-          if (!observeCap) withOcc
+          if (!observeCap) buckets
           else {
             CapMetrics.ensureListener(sigd.sparkSession)
-            CapMetrics.observed(withOcc, col("occ"), maxBucket)
+            CapMetrics.observed(buckets, col("occ"), maxBucket, weight = col("occ"))
           }
-        metered
-          .where(col("occ") <= maxBucket)
-          .drop("occ")
+        metered.where(col("occ") <= maxBucket)
       }
-    kept.as("x").join(kept.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+    kept.where(col("occ") >= 2)
+      .select(MinHashKernel.bucketPairs(col("ids")))
       .distinct()
   }
 
@@ -719,9 +766,7 @@ object Dedup {
       .join(allSig.select(col("doc_id").as("a"), col("sig").as("siga")), "a")
       .join(allSig.select(col("doc_id").as("b"), col("sig").as("sigb")), "b")
       .select(col("a"), col("b"),
-        (size(filter(sequence(lit(0), lit(MinHashK - 1)),
-          i => element_at(col("siga"), i + lit(1)) === element_at(col("sigb"), i + lit(1))))
-          .cast(DoubleType) / lit(MinHashK.toDouble)).as("est_jaccard"))
+        estJaccard(col("siga"), col("sigb")).as("est_jaccard"))
       .where(col("est_jaccard") >= minEst)
   }
 
@@ -735,9 +780,7 @@ object Dedup {
       .join(sigd.select(col("doc_id").as("a"), col("sig").as("siga")), "a")
       .join(sigd.select(col("doc_id").as("b"), col("sig").as("sigb")), "b")
       .select(col("a"), col("b"),
-        (size(filter(sequence(lit(0), lit(MinHashK - 1)),
-          i => element_at(col("siga"), i + lit(1)) === element_at(col("sigb"), i + lit(1))))
-          .cast(DoubleType) / lit(MinHashK.toDouble)).as("est_jaccard"))
+        estJaccard(col("siga"), col("sigb")).as("est_jaccard"))
       .where(col("est_jaccard") >= minEst)
   }
 
@@ -746,34 +789,18 @@ object Dedup {
     * error — the MinHash analogue of the HLL/CMS est-vs-exact rows.
     *
     * ROW-IDENTICAL to `minHashPairs(docs,n,minEst) ⋈_{a,b}
-    * corpusDedup(docs,n,0.0)` (the r17 form of `dedup_minhash_est`) but
-    * ONE pipeline instead of two: both operands derive the same digest
-    * index, the same signatures and the same banded candidates, so the
-    * join was recomputing the entire corpus pass twice. Equivalence: the
-    * old join kept exactly {(a,b) ∈ candidates : est ≥ minEst ∧ common
-    * ≥ 1} (exactVerify inner-joins on shared digests, so common = 0
-    * pairs never emit a row; threshold 0.0 keeps the rest); restricting
-    * the exact verify to the est-passing candidate subset selects the
-    * same set because the final join was inner on both sides. Verified
-    * hash-green against the unchanged DuckDB oracle (r18). */
+    * corpusDedup(docs,n,0.0)` but ONE pipeline instead of two: the
+    * [[corpusDedup]] kernel frame, candidates and verify, with the
+    * estimate read from the signatures the verify join already carries.
+    * The join kept exactly {(a,b) ∈ candidates : est ≥ minEst ∧ common
+    * ≥ 1} (pairs sharing no shingle never verify), which is what the
+    * verify filter and the est filter keep here. */
   def minHashEstVsExact(docs: DataFrame, n: Int, minEst: Double): DataFrame = {
-    val sh = shingleIndex(docs, n)
-      .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-      .materialized
-    val sigsz = digestSignatures(sh)
-    val sigd = sigsz.select(col("doc_id"), sigArray)
-    val est = minHashCandidates(sigd)
-      .join(sigd.select(col("doc_id").as("a"), col("sig").as("siga")), "a")
-      .join(sigd.select(col("doc_id").as("b"), col("sig").as("sigb")), "b")
-      .select(col("a"), col("b"),
-        (size(filter(sequence(lit(0), lit(MinHashK - 1)),
-          i => element_at(col("siga"), i + lit(1)) === element_at(col("sigb"), i + lit(1))))
-          .cast(DoubleType) / lit(MinHashK.toDouble)).as("est_jaccard"))
+    val k = kernelFrame(docs, n)
+    kernelVerify(minHashCandidates(kernelSigs(k)), k)
+      .select(col("a"), col("b"), col("jaccard"),
+        estJaccard(col("siga"), col("sigb")).as("est_jaccard"))
       .where(col("est_jaccard") >= minEst)
-      .materialized // feeds the verify probe side AND the final join
-    val ex = exactVerify(est.select(col("a"), col("b")), sh,
-      sigsz.select(col("doc_id"), col("nsh")), 0.0)
-    est.join(ex, Seq("a", "b"))
       .select(col("a"), col("b"),
         round(col("est_jaccard"), 6).as("est_jaccard"),
         round(col("jaccard"), 6).as("exact_jaccard"),
@@ -785,27 +812,30 @@ object Dedup {
     * pairs. Output: (a, b, jaccard), a < b, jaccard >= threshold (exact,
     * not signature-estimated).
     *
-    * This is the 100 TB shape the per-operator scaladocs promise: the
-    * quadratic inverted-index join ([[ngramJaccardPairs]]) never runs as a
-    * corpus pass — the only all-corpus work is the banded signature
-    * self-join (bucketed, ~50 B/row), and the exact verify fans each
-    * surviving candidate pair out over one side's shingles and equi-joins
-    * the other side's (doc, shingle) index, so verify cost is
-    * O(|candidates| · shingles/doc), independent of corpus size. */
+    * Per-document kernel, not a shingle-grain plan: ONE text pass
+    * ([[MinHashKernel]]) gives every document its shingle count, its
+    * MinHash signature and its sorted shingle digests, and that frame is
+    * materialized once. Candidates come from [[minHashCandidates]]
+    * (exact-band buckets, one aggregate, [[BandBucketCap]]); the verify
+    * joins each candidate pair to the kernel frame on both sides and
+    * merge-intersects the two digest lists ([[MinHashKernel.overlap]]).
+    * The quadratic inverted-index join ([[ngramJaccardPairs]]) never runs;
+    * no stage is wider than one row per (document, band), and verify cost
+    * is O(|candidates| · shingles/doc), independent of corpus size.
+    *
+    * Rows are identical to the relational formulation this replaced
+    * (shingle-grain digest index, [[digestSignatures]], windowed band
+    * self-join, [[exactVerify]]; `MinHashKernelSpec` keeps it as the
+    * reference): same tokenization, same md5 digests, same signatures,
+    * same bucket relation and cap, same Jaccard expression — including
+    * its multiset semantics for rows that share a doc_id
+    * ([[kernelFrame]]). At cluster scale, swap the local checkpoint for
+    * a persisted one (`graft.fixpoint.dir`). */
   def corpusDedup(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
-    // ONE scan + explode + md5 pass, materialized: the signature aggregate
-    // and both verify join sides read the fixed-width digest index (~24
-    // B/row) instead of re-running scan → shingle → hash per consumer. The
-    // minhash base hash is the digest's first 7 hex chars, so it derives
-    // from the stored digest for free (no second hash pass). At cluster
-    // scale, swap localCheckpoint for a persisted/checkpointed dataset —
-    // the reuse structure is the point, the storage level is a knob.
-    val sh = shingleIndex(docs, n)
-      .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-      .materialized
-    val sigsz = digestSignatures(sh)
-    val cand = minHashCandidates(sigsz.select(col("doc_id"), sigArray))
-    exactVerify(cand, sh, sigsz.select(col("doc_id"), col("nsh")), threshold)
+    val k = kernelFrame(docs, n)
+    kernelVerify(minHashCandidates(kernelSigs(k)), k)
+      .where(col("jaccard") >= threshold)
+      .select(col("a"), col("b"), col("jaccard"))
   }
 
   /** The shared exact-Jaccard verify tail of every corpus-dedup form:
@@ -842,7 +872,14 @@ object Dedup {
     * occupancy guard on the all side; exact verify fans only the
     * surviving touching pairs over the digest index — O(|new batch|)
     * band rows on the probe side, independent of corpus size.
-    * Output: (a, b, jaccard), a < b, jaccard >= threshold. */
+    * Output: (a, b, jaccard), a < b, jaccard >= threshold.
+    *
+    * The incremental and store paths ([[incrementalCorpusDedup]],
+    * [[incrementalCorpusDedupStored]], [[dedupStore]],
+    * [[dedupStoreAdvance]], [[capCrossings]]) keep the relational
+    * shingle-grain index and its persisted format — digest rows, signature
+    * rows, md5 band keys — rather than the [[corpusDedup]] kernel; their
+    * pairs are the same, and a stored index stays readable. */
   def incrementalCorpusDedup(newDocs: DataFrame, oldDocs: DataFrame,
                              n: Int, threshold: Double): DataFrame = {
     def digests(docs: DataFrame) = shingleIndex(docs, n)
@@ -942,12 +979,13 @@ object Dedup {
     * (doc_id, s = 16-byte md5): the k universal-hash minima per doc over
     * the digest's 7-hex-char prefix, FUSED with the shingle-set size —
     * one doc_id exchange serves candidate generation and exact verify.
-    * Shared by [[corpusDedup]] and [[lshRecallCurve]] so the recall eval
-    * always measures the generator production runs. */
+    * The relational form behind the incremental and store paths (whose
+    * persisted digest index it reads); its values equal the
+    * [[MinHashKernel]] signature and size bit for bit. */
   private def digestSignatures(sh: DataFrame): DataFrame = {
     val hashMins = (0 until MinHashK).map { i =>
-      val (a, b) = (hashConstant(s"a$i"), hashConstant(s"b$i"))
-      min(pmod(col("base") * lit(a) + lit(b), lit(MinHashPrime))).as(s"h$i")
+      val (a, b) = (MinHashKernel.hashConstant(s"a$i"), MinHashKernel.hashConstant(s"b$i"))
+      min(pmod(col("base") * lit(a) + lit(b), lit(MinHashKernel.Prime))).as(s"h$i")
     }
     sh.withColumn("base", conv(substring(hex(col("s")), 1, 7), 16, 10).cast(LongType))
       .groupBy(col("doc_id"))
@@ -975,10 +1013,10 @@ object Dedup {
     * the sample size rides in the output (`n_docs_sampled`) so a reader
     * can judge the estimate's resolution.
     *
-    * One scan + explode + md5 pass feeds BOTH pipelines: the checkpointed
-    * digest index serves the truth self-join, the set sizes, and the
-    * minhash signature aggregate (base hash = the digest's first 7 hex
-    * chars), so no upstream stage runs twice; banded truth is checkpointed
+    * The candidates are exactly what [[corpusDedup]] generates: the same
+    * kernel frame (which also supplies the set sizes) and the same
+    * [[minHashCandidates]]. The truth side is independent of that path — the
+    * relational digest index's inverted self-join — and is checkpointed
     * once for the totals and the candidate semi-join.
     * Output: (sim_band, n_true, n_hit, recall, n_docs_sampled). */
   def lshRecallCurve(docs: DataFrame, n: Int, minJaccard: Double,
@@ -991,14 +1029,14 @@ object Dedup {
         conv(substring(md5(col("doc_id").cast(StringType)), 1, 4), 16, 10)
           .cast(LongType) % 1000 < samplePermille)
     val nSampled = sampled.agg(count(lit(1)).as("n_docs_sampled"))
+    // the PRODUCTION kernel frame and generator — sharing them is the
+    // point: the eval must measure the generator corpusDedup actually runs
+    val k = kernelFrame(sampled, n)
+    val cand = minHashCandidates(kernelSigs(k))
+    val sz = k.select(col("doc_id"), col("k.nsh").as("nsh"))
     val sh = shingleIndex(sampled, n)
       .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
       .materialized
-    // the PRODUCTION signature aggregate — sharing it is the point: the
-    // eval must measure the generator corpusDedup actually runs
-    val sigsz = digestSignatures(sh)
-    val cand = minHashCandidates(sigsz.select(col("doc_id"), sigArray))
-    val sz = sigsz.select(col("doc_id"), col("nsh"))
     val truth = sh.as("x").join(sh.as("y"),
         col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))

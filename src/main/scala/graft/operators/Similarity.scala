@@ -1453,8 +1453,8 @@ object Similarity {
         }: _*)).as("bb"))
       .select(col("vec_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
     // occupancy cap shares the self-join's (band, bucket) exchange — no
-    // extra shuffle (the [[graft.operators.Dedup.minHashCandidates]] shape);
-    // the observe node rides the same pass and feeds [[rpCapWarnings]]
+    // extra shuffle; the observe node rides the same pass and feeds
+    // [[rpCapWarnings]]
     val kept =
       if (maxBucket == Int.MaxValue) banded
       else CapMetrics.observed(banded

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.MinHashKernel
 import graft.operators.{Bpe, CorpusPipeline, Dedup, Similarity, TextOps}
 import graft.operators.Dedup.MaterializeSyntax
 import org.apache.spark.sql.functions._
@@ -1640,8 +1641,8 @@ object NorthStar {
 
   private val minhashSigSql = {
     val terms = (0 until Dedup.MinHashK).map { i =>
-      val (a, b) = (Dedup.hashConstant(s"a$i"), Dedup.hashConstant(s"b$i"))
-      s"list_min(list_transform(bs, x -> ($a * x + $b) % ${Dedup.MinHashPrime}))"
+      val (a, b) = (MinHashKernel.hashConstant(s"a$i"), MinHashKernel.hashConstant(s"b$i"))
+      s"list_min(list_transform(bs, x -> ($a * x + $b) % ${MinHashKernel.Prime}))"
     }.mkString(", ")
     s"[$terms]"
   }

@@ -108,19 +108,23 @@ object Tables {
   }
 
   /** Parquet row-group count per data file, footer-read once per
-    * (path, mtime, length) — pure layout metadata (never row data), so the
-    * cache cannot carry results across bench/oracle runs. */
-  private val rowGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Int]()
-  private def rowGroups(f: org.apache.hadoop.fs.LocatedFileStatus,
-                        hconf: org.apache.hadoop.conf.Configuration): Option[Long] =
+    * (mtime, length) of its path — pure layout metadata (never row data),
+    * so the cache cannot carry results across bench/oracle runs. One entry
+    * per path: a rewritten file's new (mtime, length) replaces the stale
+    * entry instead of accumulating beside it. */
+  private[queries] val rowGroupCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Int)]()
+  private[queries] def rowGroups(f: org.apache.hadoop.fs.FileStatus,
+                                 hconf: org.apache.hadoop.conf.Configuration): Option[Long] =
     try {
-      val key = (f.getPath.toString, f.getModificationTime, f.getLen)
-      Some(rowGroupCache.computeIfAbsent(key, _ => {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRowGroups.size() finally r.close()
-      }).toLong)
+      val (mtime, len) = (f.getModificationTime, f.getLen)
+      Some(rowGroupCache.compute(f.getPath.toString, (_, cached) =>
+        if (cached != null && cached._1 == mtime && cached._2 == len) cached
+        else {
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hconf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try (mtime, len, r.getRowGroups.size()) finally r.close()
+        })._3.toLong)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** `events.ts` has shipped as parquet TIMESTAMP(NANOS) (which Spark 4

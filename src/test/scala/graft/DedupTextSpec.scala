@@ -308,6 +308,62 @@ class DedupTextSpec extends SparkSuite {
       Dedup.minHashSignatures(cohort.toDF("doc_id", "text"), 3),
       maxBucket = 10, observeCap = false)
     assert(declaredNames(optOut).isEmpty, "opt-out path must not carry the metric")
+    // corpusDedup meters the same generator at the real cap: a cohort of
+    // BandBucketCap + 1 identical short docs floods all 8 of its band
+    // buckets past the cap. Buckets are grouped rows, but banded_rows /
+    // kept_rows still count (doc, band) rows — the 2 pair docs' 16 rows
+    // kept; the pair itself survives
+    val big = spark.range(Dedup.BandBucketCap + 1L)
+      .select((col("id") + 100L).as("doc_id"), lit("zebra yankee xray").as("text"))
+    val dd = Dedup.corpusDedup(big.unionByName(pairDocs.toDF("doc_id", "text")), 3, 0.5)
+    assert(dd.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((1L, 2L)))
+    val ddMetrics = dd.queryExecution.observedMetrics.collect {
+      case (name, row) if name.startsWith(CapMetrics.MetricPrefix) =>
+        (row.getAs[Long]("banded_rows"), row.getAs[Long]("kept_rows"))
+    }.toSeq
+    assert(ddMetrics === Seq(((Dedup.BandBucketCap + 3L) * Dedup.Bands, 2L * Dedup.Bands)),
+      s"$ddMetrics")
+    val ddBind = CapMetrics.warnings(dd.queryExecution.observedMetrics, declaredNames(dd))
+    assert(ddBind.nonEmpty && ddBind.forall(!_._1), s"binding only: $ddBind")
+    // pure cohort: no pairs, and the collapse is reported
+    val ddPure = Dedup.corpusDedup(big, 3, 0.5)
+    assert(ddPure.collect().isEmpty)
+    val ddMsgs = CapMetrics.warnings(ddPure.queryExecution.observedMetrics, declaredNames(ddPure))
+    assert(ddMsgs.exists(_._1), s"expected a collapse warning, got: $ddMsgs")
+  }
+
+  test("bucket_ids: an over-cap cohort keeps a bounded buffer, in update and in merge") {
+    import graft.functions.BucketIds
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.LongType
+    val agg = BucketIds(BoundReference(0, LongType, nullable = true), cap = 10)
+    def fed(ids: Seq[java.lang.Long]) =
+      ids.foldLeft(agg.createAggregationBuffer())((b, id) => agg.update(b, InternalRow(id)))
+    // within the cap: every non-null id kept, occ counts the null row too
+    val small = fed(Seq(5L, null, 3L))
+    assert(small.occ === 3 && small.ids.take(small.len).toSeq === Seq(5L, 3L))
+    // a cohort of 100,000 drops its ids at the 11th row and stays at one
+    // counter: nothing grows with the cohort, and the partial that crosses
+    // the shuffle is 12 bytes
+    var buf = agg.createAggregationBuffer()
+    var peak = 0
+    (0L until 100000L).foreach { i =>
+      buf = agg.update(buf, InternalRow(i))
+      if (buf.ids != null) peak = math.max(peak, buf.ids.length)
+    }
+    assert(buf.occ === 100000L && buf.ids == null && peak <= 16)
+    assert(agg.serialize(buf).length === 12)
+    assert(agg.deserialize(agg.serialize(buf)).occ === 100000L)
+    // two partials each within the cap merge past it: dropped
+    val m = agg.merge(fed((1L to 6L).map(Long.box)),
+      agg.deserialize(agg.serialize(fed((7L to 12L).map(Long.box)))))
+    assert(m.occ === 12 && m.ids == null)
+    val out = agg.eval(m).asInstanceOf[InternalRow]
+    assert(out.getLong(0) === 12 && out.isNullAt(1))
+    // merged within the cap: the ids of both partials
+    val k = agg.eval(agg.merge(fed(Seq(1L, 2L)), fed(Seq(3L)))).asInstanceOf[InternalRow]
+    assert(k.getLong(0) === 3 && k.getArray(1).toLongArray().toSeq === Seq(1L, 2L, 3L))
   }
 
   test("ngram jaccard finds the near-dup pair and the exact pair") {

@@ -269,25 +269,34 @@ class PlanSpec extends SparkSuite {
   }
 
   test("simhashPairs/corpusDedup: shared frames computed ONCE (reuse / materialize)") {
-    // the banded self-join's two sides are the same subtree; ReuseExchange
-    // must collapse them or the signature frame is aggregated twice. (AQE
-    // applies the same reuse at runtime stage-materialization; asserted here
-    // on the static planner where it is visible.)
+    // simhashPairs: the banded self-join's two sides are the same subtree;
+    // ReuseExchange must collapse them or the signature frame is
+    // aggregated twice. (AQE applies the same reuse at runtime
+    // stage-materialization; asserted here on the static planner where it
+    // is visible.)
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     try {
       spark.conf.set(key, "false")
-      for (q <- Seq("dedup_simhash_pairs", "dedup_corpus")) {
-        val p = plan(q)
-        assert(p.linesIterator.count(_.contains("ReusedExchange")) >= 1, s"$q:\n$p")
-      }
-      // corpusDedup materializes the shingle-digest index once; every
-      // consumer (fused sig/size aggregate, both verify join sides) reads
-      // the materialized RDD — the documents parquet is scanned ZERO times
+      val s = plan("dedup_simhash_pairs")
+      assert(s.linesIterator.count(_.contains("ReusedExchange")) >= 1, s"dedup_simhash_pairs:\n$s")
+      // corpusDedup materializes the per-document kernel frame once; every
+      // consumer (band grouping, both verify join sides) reads the
+      // materialized RDD — the documents parquet is scanned ZERO times
       // inside the declared plan
       val p = plan("dedup_corpus")
       assert(p.contains("ExistingRDD"), p)
       assert(!p.contains("documents.parquet"), p)
+      // nothing at shingle grain: no shingle arrays, no shingle hashing, no
+      // window; the only generators are the band explode over the
+      // signature and the bucket pair stream
+      assert(!p.contains("arrays_zip") && !p.contains("md5(") && !p.contains("Window"), p)
+      assert("""\(\d+\) Generate""".r.findAllIn(p).size === 2, p)
+      assert(p.contains("bucket_pairs("), p)
+      // no self-join: the two joins are the verify lookups of the kernel
+      // frame by doc_id
+      assert(p.linesIterator.count(_.matches("""\(\d+\) \w*(HashJoin|SortMergeJoin).*""")) === 2, p)
+      assert(p.linesIterator.count(_.matches("""(Left|Right) keys \[1\]: \[doc_id#.*""")) === 2, p)
     } finally spark.conf.set(key, prev)
   }
 
