@@ -614,15 +614,16 @@ object ReferenceParity {
     }),
 
     // S2 COMPAT SKIP PARITY under the oracle gate: the naive-split CSV
-    // path's keep/skip census on the reference's own shipped sample —
-    // the 2.11% silent drop String.split produces on quoted commas
+    // path's keep/skip census on a reference-shaped CSV ([[CsvSample]]) —
+    // the silent drop String.split produces on quoted commas
     // (BulkImporterFromCSVText.java:54,68-70). One row,
-    // (rows_kept, rows_skipped) = (36,992, 799); previously pinned only
-    // by the sbt suite, now a driver-checked fact (the oracle re-derives
-    // both counts from the raw lines with the same no-quoting split).
+    // (rows_kept, rows_skipped) = (CsvSample.Rows - CsvSample.Quoted,
+    // CsvSample.Quoted); the oracle re-derives both counts from the raw
+    // lines with the same no-quoting split. The reference sample's own
+    // (36,992, 799) stays pinned by CellPipelineSpec on the real file.
     "source_csv_compat_skips" -> ((s, _) => {
       val (kept, rejected) =
-        graft.sources.Delimited.naiveSplit(s, RefSampleCsv, ",", 9)
+        graft.sources.Delimited.naiveSplit(s, CsvSample.stage(), ",", 9)
       // one union-tagged aggregate, not a cross join of two 1-row aggs
       // (a 1-row × 1-row BroadcastNestedLoopJoin is harmless here but
       // would need a standing lint adjudication — the union plans clean)
@@ -633,17 +634,71 @@ object ReferenceParity {
     }),
   )
 
-  /** The reference repo's shipped sample CSV (read-only input; the same
-    * file the bench's ingest-throughput pass replicates). */
-  private val RefSampleCsv =
-    "/root/reference/src/main/resources/iouzipcodes2011.csv"
+  /** A CSV shaped like the reference sample (FIXTURES.md §1), generated
+    * deterministically so the census needs no file from outside the repo:
+    * no header, 9 positional columns, 5-digit zips with leading zeros, and
+    * exactly [[Quoted]] RFC-4180 quoted-comma utility names (one row in
+    * [[QuotedEvery]], 2 % — the sample's 799 of 37,791 is 2.1 %). Staged
+    * once at a fixed path whose name carries [[Version]]: bump it whenever
+    * the content changes, so a stale file is never reused. */
+  private[graft] object CsvSample {
+    private val Version = 1
+    val Rows = 2000
+    private val QuotedEvery = 50
+    val Quoted: Int = Rows / QuotedEvery
+
+    val path: String = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_ref_shaped_csv_v$Version.csv").getPath
+
+    private val Names = Array("Alabama Power Co", "Appalachian Power Co",
+      "Pacific Gas & Electric Co", "Georgia Power Co", "Idaho Power Co",
+      "Commonwealth Edison Co", "Kentucky Utilities Co", "Union Electric Co")
+    private val CommaNames = Array("Duke Energy Carolinas, LLC",
+      "Duke Energy Progress, Inc", "Ohio Edison Co, The")
+    private val States = Array("AL", "AK", "CA", "GA", "ID", "IL", "KY",
+      "MO", "NC", "OH", "PR", "WY")
+    private val Services = Array("Bundled", "Delivery", "Energy")
+
+    private def padded(v: Long, width: Int): String = {
+      val d = v.toString
+      "0" * (width - d.length) + d
+    }
+
+    /** Line `i`: quoted iff `i % QuotedEvery == QuotedEvery / 2`. */
+    private def line(i: Int): String = {
+      val h = (i.toLong + 1) * 0x9E3779B97F4A7C15L
+      def pick(a: Array[String], shift: Int) =
+        a(((h >>> shift) & 0xffff).toInt % a.length)
+      def rate(shift: Int) =
+        "0." + padded(20000000000L + (h >>> shift) % 280000000000L, 12)
+      val name =
+        if (i % QuotedEvery == QuotedEvery / 2) "\"" + pick(CommaNames, 8) + "\""
+        else pick(Names, 8)
+      Seq(padded((h >>> 40) % 100000, 5), (100 + i).toString, name,
+        pick(States, 24), pick(Services, 32), "Investor Owned",
+        rate(4), rate(12), rate(20)).mkString(",")
+    }
+
+    /** The staged file's path, writing it first if absent (through a
+      * temporary file and an atomic rename, so a concurrent reader never
+      * sees a partial file). */
+    def stage(): String = staged(path) {
+      import java.nio.file.{Files, Paths, StandardCopyOption}
+      val target = Paths.get(path)
+      val tmp = Files.createTempFile(target.getParent, "graft_ref_shaped_csv", ".tmp")
+      Files.write(tmp, (0 until Rows).map(i => line(i) + "\n").mkString
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    }
+  }
 
   val oracle: Map[String, String] = Map(
     "source_avro_cells" -> suppCellsAvroSql,
     // raw-line census with the same unquoted split — DuckDB reads the
-    // sample as one-column lines (a delimiter that never occurs in it)
+    // generated sample as one-column lines (a delimiter that never occurs
+    // in it)
     "source_csv_compat_skips" ->
-      s"""WITH raw AS (SELECT value FROM read_csv('$RefSampleCsv',
+      s"""WITH raw AS (SELECT value FROM read_csv('${CsvSample.path}',
             header=false, delim=e'\\x01', quote='', escape='',
             columns={'value': 'VARCHAR'})),
           t AS (SELECT len(string_split(value, ',')) n FROM raw)

@@ -58,6 +58,24 @@ class SourceDriversSpec extends SparkSuite {
     assert(compat.quarantined.count() === 2)
   }
 
+  test("source_csv_compat_skips: naive-split census equals the generated CSV's planted counts") {
+    import graft.queries.ReferenceParity.CsvSample
+    val r = graft.queries.ReferenceParity.defs("source_csv_compat_skips")(spark, sf001)
+      .collect()
+    assert(r.length === 1)
+    val census = (r.head.getAs[Long]("rows_kept"), r.head.getAs[Long]("rows_skipped"))
+    // without planted quoted rows the oracle would match 0 ≡ 0 and check nothing
+    assert(census === ((1960L, 40L)))
+    assert(census === ((CsvSample.Rows - CsvSample.Quoted).toLong, CsvSample.Quoted.toLong))
+    val lines = scala.io.Source.fromFile(CsvSample.path, "UTF-8")
+    try assert(lines.getLines().count(_.contains('"')) === CsvSample.Quoted)
+    finally lines.close()
+    // the planted rows are well-formed RFC-4180: strict parsing keeps every row
+    val strict = BulkLoad.csv(spark, CsvSample.path)
+    assert(strict.quarantined.count() === 0)
+    assert(strict.cells.count() === CsvSample.Rows * 9L)
+  }
+
   test("hiveText driver: \\u0001-delimited parse + 64-byte keys") {
     val dir = tmpDir()
     rows9.map(r => r.productIterator.mkString("\u0001"))
