@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.functions.keys
 import graft.operators.{CellOps, RegionSort}
 import graft.sources.{AvroSource, Delimited, JsonLines, OrcSource, RCFileSource}
@@ -142,7 +144,8 @@ object BulkLoad {
     fromPositional(kept, emptyQuarantine(spark), cfg)
   }
 
-  /** Shared tail: positional columns → rowkey → cells → salt → region sort.
+  /** Shared tail: positional columns → rowkey → region exchange → row
+    * sort → cells ([[sortedFromRows]]).
     * Rows whose KEY fields contain nulls cannot be keyed (the composite MD5
     * would be NULL) — they join the quarantine as JSON instead of silently
     * producing key-less cells ('quarantine, not drop', ARCHITECTURE.md).
@@ -157,21 +160,9 @@ object BulkLoad {
     val keyable = kept.where(keyOk)
     val unkeyable = kept.where(!keyOk)
       .select(to_json(struct(kept.columns.map(col): _*)).as("value"))
-    val keyCols = cfg.keyFields.map(field)
-    val rowKey = keys.md5CompositeKey(keyCols)
-    val valueCols = (0 until cfg.arity).map(i => col(s"c$i"))
-    // two-phase region sort: key each source ROW once, exchange the rows
-    // (64B key + raw values move ONCE), and explode to cells inside the
-    // destination region partition — see [[sortedFromRows]]
-    val wide = keyable.select((rowKey.as("row") +: valueCols): _*)
-    val explodeFn: DataFrame => DataFrame = cfg.qualifiers match {
-      case IndexQualifiers =>
-        df => CellOps.explodeIndexed(df, col("row"), cfg.family, valueCols, cfg.loadTs)
-      case NameQualifiers =>
-        df => CellOps.explodeNamed(df, col("row"), cfg.family,
-          (0 until cfg.arity).map(i => s"c$i"), cfg.loadTs)
-    }
-    Result(sortedFromRows(wide, explodeFn, cfg),
+    val rowKey = keys.md5CompositeKey(cfg.keyFields.map(field))
+    val wide = keyable.select((rowKey.as("row") +: (0 until cfg.arity).map(i => col(s"c$i"))): _*)
+    Result(sortedFromRows(wide, cfg),
       quarantined.unionByName(unkeyable), SortedParquetCellSink)
   }
 
@@ -221,51 +212,57 @@ object BulkLoad {
   }
 
   private def kvSorted(cells: DataFrame): DataFrame =
-    cells.sortWithinPartitions(col("row"), col("family"), col("qualifier"))
+    cells.sortWithinPartitions(CellOps.keyValueOrder: _*)
 
   /** Region sort of already-exploded cells (`row` leading): the
-    * [[exchange]] chosen by `cfg`, then a partition-local KeyValue sort.
-    * Layout compaction re-sorts persisted cell filesets through this. */
+    * [[exchange]] chosen by `cfg`, then a partition-local sort to
+    * [[CellOps.keyValueOrder]]. Every compaction re-sorts persisted cell
+    * filesets through this, so versions of one coordinate land newest
+    * first. */
   private[graft] def sorted(cells: DataFrame, cfg: Config): DataFrame =
     kvSorted(exchange(cells, cfg))
 
-  /** Two-phase region sort from WIDE keyed rows — the ingest-side shape
-    * of [[sorted]]: (1) the total-order [[exchange]] runs on the source
-    * rows (leading binary `row` key + raw values — the key and the
-    * per-cell family/qualifier/ts overhead move ONCE per row instead of
-    * once per cell: ~2.5-3× fewer shuffle bytes, arity× fewer shuffle
-    * tuples); (2) the cell explode is a NARROW Generate inside the
-    * destination region partition; (3) the KeyValue (row, family,
-    * qualifier) order is a partition-local spill-safe SortExec (BinaryType
-    * compares unsigned lexicographic — the same order
-    * [[RegionSort.unsignedBytes]] defines). Output contract is IDENTICAL
-    * to [[sorted]]: file i ⊆ region i, in-file KeyValue order. Salting
-    * prepends the salt digit to the ROW key before the exchange, so the
-    * salt-digit boundaries stay exact. With fixed boundaries the whole
-    * load is one Spark job: no sampling pass re-reads the input. */
-  private[graft] def sortedFromRows(rows: DataFrame,
-                                    explode: DataFrame => DataFrame,
-                                    cfg: Config): DataFrame =
-    kvSorted(explode(exchange(rows, cfg)))
+  /** The load path from WIDE keyed rows (leading binary key, then one
+    * column per value): (1) the values are UTF-8 encoded and the
+    * total-order [[exchange]] moves the source ROWS — the key moves once
+    * per row instead of once per cell, arity× fewer shuffle tuples;
+    * (2) a partition-local sort orders the rows on the key alone (BinaryType
+    * compares unsigned lexicographic, as [[RegionSort.unsignedBytes]]);
+    * (3) [[graft.plans.OrderedExplode]] emits each row's cells in qualifier
+    * byte order, buffering equal-key runs, so the cells come out in
+    * [[CellOps.keyValueOrder]] with no cell sort: the sort buffers one
+    * record per row, not one per cell. Qualifiers follow
+    * `cfg.qualifiers`: 4-byte indexes, or the value columns' names.
+    * Output contract is IDENTICAL to [[sorted]]: file i ⊆ region i,
+    * in-file KeyValue order. Salting prepends the salt digit to the key
+    * before the exchange, so the salt-digit boundaries stay exact. With
+    * fixed boundaries the whole load is one Spark job: no sampling pass
+    * re-reads the input. */
+  private[graft] def sortedFromRows(rows: DataFrame, cfg: Config): DataFrame = {
+    val key = rows.columns.head
+    val values = rows.columns.toSeq.tail
+    val encoded = rows.select(col(key) +: values.map(v => keys.utf8(col(v)).as(v)): _*)
+    val indexed = cfg.qualifiers == IndexQualifiers
+    val qualifiers =
+      if (indexed) values.indices.map(keys.beInt4Bytes) else values.map(_.getBytes(UTF_8))
+    graft.plans.OrderedExplode(exchange(encoded, cfg).sortWithinPartitions(col(key)),
+      cfg.family.getBytes(UTF_8), qualifiers, cfg.loadTs, CellOps.loadSchema(indexed))
+  }
 
   /** [[sortedFromRows]] for the NAMED-qualifier feeds (Avro/JSONL): keys
-    * each source row once under a collision-proof column name (the source
-    * schema may legitimately contain a `row` field) and explodes with
-    * field-name qualifiers inside the region partition. */
+    * each source row under a collision-proof column name (the source
+    * schema may legitimately contain a `row` field). */
   private[graft] def sortedNamedFromRows(kept: DataFrame, rowKey: Column,
-                                         names: Seq[String], cfg: Config): DataFrame = {
-    val keyName = "__graft_row"
-    val wide = kept.select((rowKey.as(keyName) +: names.map(col)): _*)
-    sortedFromRows(wide,
-      df => CellOps.explodeNamed(df, col(keyName), cfg.family, names, cfg.loadTs),
-      cfg)
-  }
+                                         names: Seq[String], cfg: Config): DataFrame =
+    sortedFromRows(kept.select((rowKey.as("__graft_row") +: names.map(col)): _*),
+      cfg.copy(qualifiers = NameQualifiers))
 }
 
 /** Terminal sink for sorted cells — the stand-in seam for
   * `HFileOutputFormat2` + `LoadIncrementalHFiles` (reference X3/X5).
   * Implementations must preserve the partition/order contract: file i
-  * holds region i's cells in unsigned (row, family, qualifier) order. */
+  * holds region i's cells in KeyValue order — unsigned (row, family,
+  * qualifier), newest `ts` first ([[graft.operators.CellOps.keyValueOrder]]). */
 trait CellSink {
   def write(cells: DataFrame, path: String): Unit
   /** Post-commit hook — the reference's fixed tail sequence after the

@@ -18,7 +18,7 @@ import org.apache.spark.sql.DataFrame
   * HFile CONTAINER (blocks, index, bloom) rides on the HBase classes.
   *
   * Scale shape: no extra exchange — the input contract (file i = region i,
-  * rows in unsigned (row, family, qualifier) order) is exactly
+  * cells in KeyValue order, [[graft.operators.CellOps.keyValueOrder]]) is exactly
   * `HFileOutputFormat2`'s reducer contract, so the write is a pure
   * per-partition streaming pass. Reflection cost is per-partition class
   * lookup + boxed constructor calls per cell — the adapter tax only paid

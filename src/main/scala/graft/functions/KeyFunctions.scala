@@ -30,10 +30,8 @@ case class IntToBigEndianBinary(child: Expression) extends UnaryExpression {
         s"be_int4 requires an INT argument, got ${child.dataType.sql}")
     }
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[Int]
-    Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    keys.beInt4Bytes(input.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
@@ -142,6 +140,10 @@ object keys {
   /** Salted key = salt byte(s) ++ key bytes. */
   def saltedKey(k: Column, buckets: Int, key: Column): Column =
     concat(saltPrefix(k, buckets), key)
+
+  /** 4-byte big-endian qualifier of column index `v` (reference P10). */
+  def beInt4Bytes(v: Int): Array[Byte] =
+    Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
 
   /** 4-byte big-endian qualifier from a column index (reference P10). */
   def beInt4(c: Column): Column =

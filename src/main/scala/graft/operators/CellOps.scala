@@ -24,6 +24,31 @@ object CellOps {
     StructField("value", BinaryType, nullable = false),
     StructField("ts", LongType, nullable = false)))
 
+  /** The schema a load writes into its part files: [[cellSchema]]'s
+    * columns with the nullability the optimized [[explodeIndexed]] and
+    * [[explodeNamed]] plans carry into the writer — `row` and `value` are
+    * nullable, as are name qualifiers; the constant family, index
+    * qualifiers and `ts` are not. The load path's ordered explode
+    * declares the same, so its files stay byte-identical to the cell-sort
+    * path's. */
+  def loadSchema(indexQualifiers: Boolean): StructType = StructType(cellSchema.map { f =>
+    f.copy(nullable = f.name == "row" || f.name == "value" ||
+      (f.name == "qualifier" && !indexQualifiers))
+  })
+
+  /** HBase KeyValue order, the one definition every region sort and
+    * compaction uses: unsigned (row, family, qualifier), then NEWEST
+    * version first (`ts` descending) — a reader takes the first cell at a
+    * coordinate as the latest, and the HFile writer rejects a key below
+    * its predecessor. */
+  val keyValueOrder: Seq[Column] = Seq(col("row"), col("family"), col("qualifier"), col("ts").desc)
+
+  /** [[keyValueOrder]] over `(row, family, qualifier, ts)` tuples. */
+  val keyValueOrdering: Ordering[(Array[Byte], Array[Byte], Array[Byte], Long)] = {
+    val b = RegionSort.unsignedBytesOrdering
+    Ordering.Tuple4(b, b, b, Ordering.Long.reverse)
+  }
+
   /** Wide row → cells with 4-byte big-endian column-index qualifiers
     * (text/CSV/RC reference paths; BulkImporterFromText.java:62-66).
     * Null fields emit no cell (reference P4 null guard), and a NULL row

@@ -69,29 +69,27 @@ object RegionSort {
 
   /** Catalyst-native path: range-exchange on `row` into `numRegions`
     * partitions, then shuffle-side sort to HBase KeyValue order
-    * (row, family, qualifier). Boundaries are sampled — use for generic
+    * ([[CellOps.keyValueOrder]]). Boundaries are sampled — use for generic
     * sorted-cell sinks where exact region alignment is not required. */
   def sortedByRange(cells: DataFrame, numRegions: Int): DataFrame =
     cells.repartitionByRange(numRegions, col("row"))
-      .sortWithinPartitions(col("row"), col("family"), col("qualifier"))
+      .sortWithinPartitions(CellOps.keyValueOrder: _*)
 
   /** Exact path: partition cells by explicit region boundaries and sort each
-    * partition to KeyValue order. Returns RDD[(rowKey, (family, qualifier,
-    * value, ts))] grouped per region, ready for an HFile-writing sink.
-    * Secondary sort is done via sorting the full composite key bytes —
-    * one shuffle, sort-on-shuffle semantics like the reference's reducer. */
+    * partition to KeyValue order ([[CellOps.keyValueOrdering]]). Returns
+    * the cell rows grouped per region, ready for an HFile-writing sink.
+    * One shuffle, sort-on-shuffle semantics like the reference's reducer. */
   def partitionByRegions(cells: DataFrame, splits: Array[Array[Byte]]): RDD[Row] = {
+    type Key = (Array[Byte], Array[Byte], Array[Byte], Long)
     val part = new RegionPartitioner(splits)
-    implicit val rowOrd: Ordering[(Array[Byte], Array[Byte], Array[Byte])] =
-      Ordering.Tuple3(unsignedBytesOrdering, unsignedBytesOrdering, unsignedBytesOrdering)
+    implicit val kvOrd: Ordering[Key] = CellOps.keyValueOrdering
     cells.select("row", "family", "qualifier", "value", "ts").rdd
       .map { r =>
-        ((r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2)), r)
+        ((r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2), r.getLong(4)), r)
       }
       .repartitionAndSortWithinPartitions(new Partitioner {
         override def numPartitions: Int = part.numPartitions
-        override def getPartition(key: Any): Int =
-          part.getPartition(key.asInstanceOf[(Array[Byte], Array[Byte], Array[Byte])]._1)
+        override def getPartition(key: Any): Int = part.getPartition(key.asInstanceOf[Key]._1)
       })
       .map(_._2)
   }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.operators.RegionSort
+import graft.operators.{CellOps, RegionSort}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.SQLMetric
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.{Bridge, RowShuffle}
 
 /** Exact-region-boundary exchange as a first-class Catalyst operator —
@@ -23,18 +22,19 @@ import org.apache.spark.sql.graft.{Bridge, RowShuffle}
   *
   * Partitions any plan whose FIRST column is the binary row key into exact
   * region partitions, with no intra-partition order. Two shapes compose
-  * it: the ingest sort ([[graft.BulkLoad.sortedFromRows]]) exchanges
-  * source ROWS — the 64-byte key plus the raw values move once — and
-  * explodes the cells inside the region partition; [[RegionAlignedSort]]
-  * exchanges already-exploded cells (layout compaction). Both finish with
-  * a partition-local spill-safe sort to KeyValue (row, family, qualifier)
-  * order, so the output contract is file i ⊆ region i, rows in unsigned
-  * order.
+  * it: the ingest path ([[graft.BulkLoad.sortedFromRows]]) exchanges
+  * source ROWS — the 64-byte key plus the encoded values move once — then
+  * sorts them on the key alone and emits their cells in KeyValue order
+  * through [[OrderedExplode]]; [[RegionAlignedSort]] exchanges
+  * already-exploded cells (layout compaction) and sorts them to KeyValue
+  * order ([[graft.operators.CellOps.keyValueOrder]]). Either way the
+  * output contract is file i ⊆ region i, cells in KeyValue order.
   *
-  * Full extension stack: logical node → planner [[RegionSortStrategy]] →
-  * [[RegionAlignedRowExchangeExec]], injectable via `GraftExtensions` or
-  * `spark.experimental.extraStrategies`. The RDD-level path
-  * (`RegionSort.partitionByRegions`) remains for RDD consumers.
+  * Full extension stack: logical nodes → planner [[RegionSortStrategy]] →
+  * [[RegionAlignedRowExchangeExec]] / [[OrderedExplodeExec]], injectable
+  * via `GraftExtensions` or `spark.experimental.extraStrategies`. The
+  * RDD-level path (`RegionSort.partitionByRegions`) remains for RDD
+  * consumers.
   *
   * Contract: column 0 is a non-null BinaryType row key (callers
   * quarantine un-keyable rows before the exchange). */
@@ -80,13 +80,10 @@ case class RegionAlignedRowExchangeExec(child: SparkPlan, splits: Seq[Array[Byte
 object RegionAlignedRowExchange {
   /** DataFrame-level API: rows whose FIRST column is the binary row key →
     * exact region-aligned partitions (no intra-partition order — compose
-    * `sortWithinPartitions` above the downstream explode). */
+    * a `sortWithinPartitions` above it). */
   def apply(rows: DataFrame, splits: Array[Array[Byte]]): DataFrame = {
     val spark: SparkSession = rows.sparkSession
-    if (!spark.experimental.extraStrategies.contains(RegionSortStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ RegionSortStrategy
-    }
+    RegionSortStrategy.register(spark)
     Bridge.ofRows(spark, new RegionAlignedRowExchange(Bridge.logicalPlan(rows), splits.toSeq))
   }
 }
@@ -95,15 +92,23 @@ object RegionSortStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case RegionAlignedRowExchange(child, splits) =>
       RegionAlignedRowExchangeExec(planLater(child), splits) :: Nil
+    case OrderedExplode(family, cells, ts, output, child) =>
+      OrderedExplodeExec(family, cells, ts, output, planLater(child)) :: Nil
     case _ => Nil
   }
+
+  /** Plan the graft nodes in `spark` (idempotent) — for sessions built
+    * without `GraftExtensions`. */
+  def register(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(this)) {
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
+    }
 }
 
 object RegionAlignedSort {
   /** Cells (row/family/qualifier binary leading columns) → exact
-    * region-aligned, KV-sorted DataFrame: the row exchange over the cells,
-    * then a partition-local sort. */
+    * region-aligned DataFrame in KeyValue order: the row exchange over the
+    * cells, then a partition-local sort. */
   def apply(cells: DataFrame, splits: Array[Array[Byte]]): DataFrame =
-    RegionAlignedRowExchange(cells, splits)
-      .sortWithinPartitions(col("row"), col("family"), col("qualifier"))
+    RegionAlignedRowExchange(cells, splits).sortWithinPartitions(CellOps.keyValueOrder: _*)
 }

@@ -5,9 +5,9 @@ import graft.sources.Delimited
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Structured Streaming form of the bulk-load pipeline: the exact batch
-  * dataflow (parse → quarantine → rowkey → cell explode → region-aligned
-  * total-order sort → [[CellSink]] → postCommit) wrapped in a file-source
-  * stream with `foreachBatch`.
+  * dataflow (parse → quarantine → rowkey → region exchange → row sort →
+  * ordered cell explode → [[CellSink]] → postCommit) wrapped in a
+  * file-source stream with `foreachBatch`.
   *
   * This is the continuous-ingestion shape the reference's batch drivers
   * (`BulkImporterFrom*.java`, one `Tool.run` per dropped fileset) imply but
