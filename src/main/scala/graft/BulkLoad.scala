@@ -50,15 +50,16 @@ object BulkLoad {
       /** Explicit region boundaries (first key of region i+1, unsigned
         * byte order) — the `TotalOrderPartitioner` split-file analog of
         * the reference's live `RegionLocator.getStartKeys` lookup
-        * (BulkImporterFromText.java:105-108). When set, the load is
-        * EXACTLY region-aligned via [[graft.plans.RegionAlignedRowExchange]]
-        * even without salting; `regions` is ignored. Mutually exclusive
-        * with `saltBuckets`, whose salt digits define their own
-        * boundaries. When unset, the MD5-keyed loads ([[csv]],
+        * (BulkImporterFromText.java:105-108); `regions` is then ignored.
+        * Mutually exclusive with `saltBuckets`, whose salt digits define
+        * their own boundaries. When unset, the MD5-keyed loads ([[csv]],
         * [[hiveText]], [[rcFile]], [[orc]]) fix them to
         * [[RegionSort.uniformMd5Splits]]`(regions)` (see
-        * [[withFixedSplits]]); only the named-key feeds ([[avro]],
-        * [[jsonl]]) and `regions` outside 2..65536 sample. */
+        * [[withFixedSplits]]); the named-key feeds ([[avro]], [[jsonl]]),
+        * [[sorted]] calls without splits and `regions` outside 2..65536
+        * sample `regions` boundaries from the keys. Every load is exactly
+        * aligned to its boundaries through
+        * [[graft.plans.RegionAlignedRowExchange]]. */
       splits: Option[Seq[Array[Byte]]] = None) {
     require(splits.isEmpty || saltBuckets.isEmpty,
       "explicit splits and salting are mutually exclusive: salt digits define their own region boundaries")
@@ -187,27 +188,23 @@ object BulkLoad {
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.StringType))))
 
-  /** Region exchange on the leading binary key column. Salted loads get
-    * EXACT region alignment (the salt digits ARE the table's pre-split
-    * boundaries, create_table.rb:1) and explicit `cfg.splits` the same
-    * exact path without salting (adopting an EXISTING table's region
-    * layout), both through [[graft.plans.RegionAlignedRowExchange]].
-    * A config with neither falls back to Catalyst's sampled range
-    * exchange — the MD5-keyed drivers never reach it (their config is
-    * promoted by [[withFixedSplits]]); the named-key feeds and
-    * compaction of such loads do, and there a straddling file may be
-    * split server-side at adoption time. */
+  /** Region exchange on the leading binary key column, always through
+    * [[graft.plans.RegionAlignedRowExchange]]; only the boundaries'
+    * source differs. Salted loads use the salt digits (the table's
+    * pre-split boundaries, create_table.rb:1), explicit `cfg.splits` an
+    * EXISTING table's region layout (MD5-keyed loads get the uniform
+    * pre-split from [[withFixedSplits]]), and a config with neither
+    * samples `cfg.regions` boundaries from the keys when the exchange
+    * first runs. */
   private def exchange(rows: DataFrame, cfg: Config): DataFrame = {
     val key = rows.columns.head
-    (cfg.saltBuckets, cfg.splits) match {
-      case (Some(b), _) =>
+    cfg.saltBuckets match {
+      case Some(b) =>
         val salted = rows.withColumn(key,
           concat(keys.saltPrefix(crc32(col(key)), b), col(key)))
         graft.plans.RegionAlignedRowExchange(salted, RegionSort.saltSplits(b))
-      case (None, Some(s)) =>
-        graft.plans.RegionAlignedRowExchange(rows, s.toArray)
-      case (None, None) =>
-        rows.repartitionByRange(cfg.regions, col(key))
+      case None =>
+        graft.plans.RegionAlignedRowExchange(rows, cfg.splits, cfg.regions)
     }
   }
 

@@ -3,24 +3,19 @@ package graft.operators
 import java.util.Comparator
 
 import org.apache.spark.Partitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Region-aligned total-order exchange + per-partition KV sort — the one
-  * genuinely custom physical piece of the bulk-load pipeline.
+/** Region boundaries and the unsigned key order of the bulk-load
+  * pipeline's one region exchange ([[graft.plans.RegionAlignedRowExchange]]).
   *
   * The reference delegates this to `HFileOutputFormat2.configureIncrementalLoad`
   * (BulkImporterFromText.java:105-108): a `TotalOrderPartitioner` over the
   * live table's region start keys, reducer count = region count, and a
   * shuffle-side sort into `KeyValue` order. HBase key order is UNSIGNED
   * byte-lexicographic; Spark's `BinaryType` ordering is also unsigned
-  * lexicographic, so the declarative path (`repartitionByRange` +
-  * `sortWithinPartitions`) is semantically correct. The explicit-boundary
-  * path (`partitionByRegions`) exists because Catalyst's range exchange
-  * *samples* boundaries, while HFile bulk load needs EXACT region
-  * alignment — one output partition per region, no HFile straddling a
-  * region boundary (else the load splits files server-side).
+  * lexicographic, so the partition-local `sortWithinPartitions` after the
+  * exchange is semantically correct. Here live the exact-boundary
+  * [[RegionPartitioner]] the exchange routes by and the fixed boundary
+  * sources: the uniform MD5 pre-split and the salt digits.
   *
   * Scale posture: one shuffle total (the unavoidable total-order exchange);
   * sort is shuffle-side and spill-safe; no driver-side collection of data —
@@ -67,40 +62,13 @@ object RegionSort {
     }
   }
 
-  /** Catalyst-native path: range-exchange on `row` into `numRegions`
-    * partitions, then shuffle-side sort to HBase KeyValue order
-    * ([[CellOps.keyValueOrder]]). Boundaries are sampled — use for generic
-    * sorted-cell sinks where exact region alignment is not required. */
-  def sortedByRange(cells: DataFrame, numRegions: Int): DataFrame =
-    cells.repartitionByRange(numRegions, col("row"))
-      .sortWithinPartitions(CellOps.keyValueOrder: _*)
-
-  /** Exact path: partition cells by explicit region boundaries and sort each
-    * partition to KeyValue order ([[CellOps.keyValueOrdering]]). Returns
-    * the cell rows grouped per region, ready for an HFile-writing sink.
-    * One shuffle, sort-on-shuffle semantics like the reference's reducer. */
-  def partitionByRegions(cells: DataFrame, splits: Array[Array[Byte]]): RDD[Row] = {
-    type Key = (Array[Byte], Array[Byte], Array[Byte], Long)
-    val part = new RegionPartitioner(splits)
-    implicit val kvOrd: Ordering[Key] = CellOps.keyValueOrdering
-    cells.select("row", "family", "qualifier", "value", "ts").rdd
-      .map { r =>
-        ((r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2), r.getLong(4)), r)
-      }
-      .repartitionAndSortWithinPartitions(new Partitioner {
-        override def numPartitions: Int = part.numPartitions
-        override def getPartition(key: Any): Int = part.getPartition(key.asInstanceOf[Key]._1)
-      })
-      .map(_._2)
-  }
-
   /** Static uniform boundaries for an md5-uniform keyspace (the HBase
     * `RegionSplitter.UniformSplit` pre-split analog): region i+1 starts at
     * the 2-byte big-endian value floor(i·65536/regions). Exact alignment
     * holds because every md5-composite rowkey's leading bytes are uniform
     * ([[graft.functions.keys.md5CompositeKey]]) — which lets every
     * MD5-keyed load, batch or micro-batch, fix its boundaries instead of
-    * paying Catalyst's sampling pass over its input
+    * paying a sampling pass over its input
     * ([[graft.BulkLoad.withFixedSplits]]; the reference reads a live
     * table's regions once per job, BulkImporterFromText.java:106). */
   def uniformMd5Splits(regions: Int): Array[Array[Byte]] = {

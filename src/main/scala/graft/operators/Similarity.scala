@@ -1422,8 +1422,7 @@ object Similarity {
     * from a planning-time corpus count via [[rpPlanesFor]] — one
     * metadata-cheap count job, the same accepted planning-read pattern as
     * the manifest-answered `rangedCount`. Fixed layouts remain available
-    * for callers that manage sizing themselves (ScaleStress's
-    * fixed-vs-scaled measurement, recall studies).
+    * for callers that manage sizing themselves (recall studies).
     *
     * CONSTRUCTION COST CAVEAT: under the sized default, building the
     * frame runs the planning count EAGERLY — constructing it is not

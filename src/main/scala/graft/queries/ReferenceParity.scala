@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.functions.keys
-import graft.operators.{CellOps, Layout, RegionSort}
+import graft.operators.{CellOps, Layout}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,6 +18,10 @@ object ReferenceParity {
   /** customer's 64-byte composite MD5 rowkey (RowKeyConverter.java:13-31). */
   private def custKey = keys.md5CompositeKey(Seq(
     col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_mktsegment")))
+
+  /** The region layout of [[custKey]] cells: the uniform 10-region MD5
+    * pre-split every MD5-keyed load fixes. */
+  private val md5Regions = graft.BulkLoad.withFixedSplits(graft.BulkLoad.Config())
 
   /** lowercase-hex rendering of the composite key — md5() is already hex in
     * both engines, so hex(unhex(md5 a)||unhex(md5 b)…) = md5(a)||md5(b)…. */
@@ -188,6 +193,16 @@ object ReferenceParity {
     new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_src_${fmt}_${dir.replaceAll("[^A-Za-z0-9]", "_")}").getPath
 
+  /** customer's cells, region-sorted over [[md5Regions]]. */
+  private def sortedCustCells(s: SparkSession, dir: String): DataFrame = graft.BulkLoad.sorted(
+    CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c", custValueCols), md5Regions)
+
+  /** [[sortedCustCells]] staged once as the `cellscan` cell table. */
+  private def cellScanTable(s: SparkSession, dir: String): String =
+    staged(fixturePath(dir, "cellscan")) {
+      graft.SortedParquetCellSink.write(sortedCustCells(s, dir), fixturePath(dir, "cellscan"))
+    }
+
   val defs: Map[String, Q] = Map(
     // S3: avro container round-trip → reversed-id key + name qualifiers +
     // nullable-field cell guard, byte-checked against the oracle
@@ -281,19 +296,14 @@ object ReferenceParity {
     // partitioning/order is asserted by CellPipelineSpec, the driver
     // hash-checks the row set)
     "ingest_sorted_cells" -> ((s, dir) =>
-      hexBin(RegionSort.sortedByRange(
-        CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c", custValueCols), 10))),
+      hexBin(sortedCustCells(s, dir))),
 
     // HBase-scan analog over the STAGED layout: range read [0x40, 0x80)
     // that prunes non-intersecting region files via footer stats before
     // Spark plans the scan (parquet can't push binary predicates), then
     // applies the residual unsigned-range filter in codegen
     "cells_scan_range" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "cellscan")) {
-        graft.SortedParquetCellSink.write(RegionSort.sortedByRange(
-          CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c",
-            custValueCols), 10), fixturePath(dir, "cellscan"))
-      }
+      val path = cellScanTable(s, dir)
       hexBin(graft.sources.CellScan.scanRange(s, path,
         Some(Array(0x40.toByte)), Some(Array(0x80.toByte))))
     }),
@@ -303,11 +313,7 @@ object ReferenceParity {
     // the binary range to the relation (vanilla parquet pushes no
     // binary predicates), which prunes region files via the manifest
     "cells_scan_sql" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "cellscan")) {
-        graft.SortedParquetCellSink.write(RegionSort.sortedByRange(
-          CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c",
-            custValueCols), 10), fixturePath(dir, "cellscan"))
-      }
+      val path = cellScanTable(s, dir)
       hexBin(s.read.format("graft-cells").load(path)
         .where(col("row") >= lit(Array(0x40.toByte)) &&
           col("row") < lit(Array(0x80.toByte))))
@@ -319,11 +325,7 @@ object ReferenceParity {
     // complete aggregate pushdown and plans a local one-row relation —
     // zero data pages, zero tasks at any table size
     "cells_count_pushdown" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "cellscan")) {
-        graft.SortedParquetCellSink.write(RegionSort.sortedByRange(
-          CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c",
-            custValueCols), 10), fixturePath(dir, "cellscan"))
-      }
+      val path = cellScanTable(s, dir)
       s.read.format("graft-cells").load(path)
         .agg(count(lit(1)).as("n_cells"),
           min(col("row")).as("lo"), max(col("row")).as("hi"))
@@ -335,11 +337,7 @@ object ReferenceParity {
     // files answer from the manifest, only the boundary files are
     // scanned — a range count touches <= 2 data files at any region count
     "cells_count_range_pushdown" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "cellscan")) {
-        graft.SortedParquetCellSink.write(RegionSort.sortedByRange(
-          CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c",
-            custValueCols), 10), fixturePath(dir, "cellscan"))
-      }
+      val path = cellScanTable(s, dir)
       s.read.format("graft-cells").load(path)
         .where(col("row") >= lit(Array(0x40.toByte)) &&
           col("row") < lit(Array(0x80.toByte)))
@@ -349,11 +347,7 @@ object ReferenceParity {
     // HBase PrefixFilter analog: all rows under a 1-byte key prefix as
     // the [prefix, prefix+1) range — same manifest-pruned machinery
     "cells_scan_prefix" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "cellscan")) {
-        graft.SortedParquetCellSink.write(RegionSort.sortedByRange(
-          CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c",
-            custValueCols), 10), fixturePath(dir, "cellscan"))
-      }
+      val path = cellScanTable(s, dir)
       hexBin(graft.sources.CellScan.scanPrefix(s, path, Array(0x01.toByte)))
     }),
 
@@ -362,11 +356,7 @@ object ReferenceParity {
     // lookup — a Get client knows its key). The manifest/footer pruning
     // opens one region file; the equality is the [key, key+0x00) range
     "cells_point_get" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "cellscan")) {
-        graft.SortedParquetCellSink.write(RegionSort.sortedByRange(
-          CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c",
-            custValueCols), 10), fixturePath(dir, "cellscan"))
-      }
+      val path = cellScanTable(s, dir)
       // a Get whose key row doesn't exist (EMPTY corpus) degrades to the
       // empty-key Get — [∅, 0x00) matches nothing, schema preserved
       val key = t(s, dir, "customer").where(col("c_custkey") === 42)
@@ -386,8 +376,7 @@ object ReferenceParity {
       val dest = s"$root/compacted"
       staged(root) {
         val cust = t(s, dir, "customer")
-        val cfg = graft.BulkLoad.Config(splits = Some(
-          graft.operators.RegionSort.uniformMd5Splits(10).toSeq))
+        val cfg = md5Regions
         (0 until 3).foreach { b =>
           val cells = CellOps.explodeIndexed(
             cust.where(pmod(col("c_custkey"), lit(3)) === b),
@@ -412,8 +401,7 @@ object ReferenceParity {
       val dest = s"$root/serving"
       staged(root) {
         val cust = t(s, dir, "customer")
-        val cfg = graft.BulkLoad.Config(splits = Some(
-          graft.operators.RegionSort.uniformMd5Splits(10).toSeq))
+        val cfg = md5Regions
         def batch(b: Int): Unit = graft.SortedParquetCellSink.write(
           graft.BulkLoad.sorted(CellOps.explodeIndexed(
             cust.where(pmod(col("c_custkey"), lit(3)) === b),
@@ -447,19 +435,15 @@ object ReferenceParity {
     // table, opening only the region files whose manifest bounds contain
     // a requested key — K keys read <= K files at ANY region count
     "cells_index_lookup" -> ((s, dir) => {
-      val primaryPath = staged(fixturePath(dir, "cellscan")) {
-        graft.SortedParquetCellSink.write(RegionSort.sortedByRange(
-          CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c",
-            custValueCols), 10), fixturePath(dir, "cellscan"))
-      }
+      val primaryPath = cellScanTable(s, dir)
       val idxPath = staged(fixturePath(dir, "cellindex")) {
-        graft.SortedParquetCellSink.write(RegionSort.sortedByRange(
+        graft.SortedParquetCellSink.write(graft.BulkLoad.sorted(
           t(s, dir, "customer").select(
             concat(keys.utf8(col("c_mktsegment")), keys.utf8(lit(":")), custKey).as("row"),
             keys.utf8(lit("i")).as("family"),
             keys.utf8(lit("pk")).as("qualifier"),
             custKey.as("value"),
-            lit(0L).as("ts")), 10), fixturePath(dir, "cellindex"))
+            lit(0L).as("ts")), graft.BulkLoad.Config()), fixturePath(dir, "cellindex"))
       }
       val page = graft.sources.CellScan
         .scanPrefix(s, idxPath, "BUILDING:".getBytes("UTF-8"))
@@ -543,7 +527,7 @@ object ReferenceParity {
         keys.utf8(lit("pk")).as("qualifier"),
         custKey.as("value"),
         lit(0L).as("ts"))
-      hexBin(RegionSort.sortedByRange(idx, 10))
+      hexBin(graft.BulkLoad.sorted(idx, graft.BulkLoad.Config()))
     }),
 
     // the ADMIN op that produces `--splits` boundary files (the reference

@@ -18,20 +18,9 @@ import org.apache.spark.sql.types._
 object Tables {
   type Q = (SparkSession, String) => DataFrame
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val base =
-      if (name == "events") events(spark, dir)
-      else spark.read.parquet(s"$dir/$name.parquet")
-    // sweep lever (r19): `graft.scan.spread.all=true` applies the adaptive
-    // spread to EVERY table read — used only by the AbSweep A/B harness to
-    // measure per-query spread deltas; the standing posture stays opt-in
-    // per call site (tSpread), chosen from those measurements.
-    if (spreadAll(spark)) spreadScan(spark, base, s"$dir/$name.parquet")
-    else base
-  }
-
-  private def spreadAll(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.scan.spread.all").contains("true")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark, dir)
+    else spark.read.parquet(s"$dir/$name.parquet")
 
   /** [[t]] + [[spreadScan]] — opt-in per query. The r18 in-session A/B
     * (20-query subset, alternating on/off sweeps, min-of-3 noop timing)
@@ -44,8 +33,7 @@ object Tables {
     * scans won (table_checksum −0.8 s, corpus_dsir_topk −0.8 s,
     * dedup_ngram_jaccard −0.6 s), so those call sites opt in here. */
   def tSpread(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (spreadAll(spark)) t(spark, dir, name) // t has spread it already
-    else spreadScan(spark, t(spark, dir, name), s"$dir/$name.parquet")
+    spreadScan(spark, t(spark, dir, name), s"$dir/$name.parquet")
 
   /** Scale-adaptive scan SPREAD (optimization guide §2.5 "input skew: one
     * huge unsplittable file — repartition immediately after the read",

@@ -15,8 +15,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Same move here, one declarative plan: read every batch fileset under
   * `root`, re-run the SAME region-aligned total-order sort the batch sink
-  * uses (`BulkLoad.sorted` — exact split alignment under salt/splits, so
-  * the compacted layout obeys the identical file-i-⊆-region-i contract),
+  * uses (`BulkLoad.sorted` — the one region exchange, exactly aligned to
+  * the config's boundaries, so the compacted layout obeys the identical
+  * file-i-⊆-region-i contract),
   * land it at `dest` with a fresh manifest, and (optionally) retire the
   * input batch dirs. Cell content is the IDENTITY — compaction moves
   * bytes, never changes them (oracle-checked by `cells_compact_regions`).

@@ -29,7 +29,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Thin by design: `WriteBuilder` hands back a [[V1Write]] whose insert
   * applies the SAME exchange/sort/sink path the `BulkLoad` drivers use —
   * exact alignment via the [[graft.plans.RegionAlignedRowExchange]] Catalyst
-  * operator under `salt`/`splits`, Catalyst's sampled range exchange
+  * operator, to the `salt`/`splits` boundaries or to boundaries it samples
   * under `regions` — so there is exactly one implementation of the layout
   * contract. (A pure DSv2 `BatchWrite` cannot express EXACT boundaries:
   * `RequiresDistributionAndOrdering` plans a SAMPLED range exchange,
@@ -39,8 +39,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Options: `salt` (bucket count — salts row keys and aligns to the salt
   * digits' exact boundaries), `splits` (comma-separated hex split points
   * — exact alignment to those boundaries; see [[GraftCellsDataSource
-  * .splitsOption]]), `regions` (sampled range exchange fallback, default
-  * 10). `salt` and `splits` are mutually exclusive (`BulkLoad.Config`'s
+  * .splitsOption]]), `regions` (boundaries sampled from the keys into
+  * at most that many regions, default 10). `salt` and `splits` are mutually exclusive (`BulkLoad.Config`'s
   * rule). Overwrite mode only — HFile staging directories are
   * write-once-then-adopt, append has no bulk-load meaning.
   */

@@ -143,7 +143,7 @@ class CellPipelineSpec extends SparkSuite {
     val rowKey = keys.md5CompositeKey(Seq(col("c0"), col("c1"), col("c2"), col("c3")))
     val cells = CellOps.explodeIndexed(kept, rowKey, "c", (0 until 9).map(i => col(s"c$i")))
     assert(cells.count() === 36992L * 9)
-    val sorted = RegionSort.sortedByRange(cells, 10)
+    val sorted = BulkLoad.sorted(cells, BulkLoad.Config()) // 10 sampled regions
     assert(sorted.rdd.getNumPartitions === 10)
     // per-partition: sorted by (row, qualifier); across partitions: ranges disjoint
     val stats = sorted.rdd.mapPartitionsWithIndex { (i, it) =>
@@ -189,13 +189,13 @@ class CellPipelineSpec extends SparkSuite {
     assert(p.getPartition(Array[Byte](0x10, 0x00)) === 1) // longer key after prefix
   }
 
-  test("RegionAlignedSort (custom LogicalPlan/SparkPlan): exact alignment inside the DataFrame world") {
+  test("BulkLoad.sorted over salt splits (custom LogicalPlan/SparkPlan): exact alignment inside the DataFrame world") {
     val path = "/root/reference/src/main/resources/iouzipcodes2011.csv"
     val (kept, _) = Delimited.naiveSplit(spark, path, ",", 9)
     val rowKey = keys.saltedKey(crc32(col("c0")), 10,
       keys.md5CompositeKey(Seq(col("c0"), col("c1"), col("c2"), col("c3"))))
     val cells = CellOps.explodeIndexed(kept, rowKey, "c", (0 until 3).map(i => col(s"c$i")))
-    val sorted = graft.plans.RegionAlignedSort(cells, RegionSort.saltSplits(10))
+    val sorted = BulkLoad.sorted(cells, BulkLoad.Config(splits = Some(RegionSort.saltSplits(10).toSeq)))
     // still a DataFrame: downstream relational ops compose
     assert(sorted.schema === cells.schema)
     assert(sorted.groupBy().count().head().getLong(0) === 36992L * 3)
@@ -262,14 +262,7 @@ class CellPipelineSpec extends SparkSuite {
     val r2 = BulkLoad.fromPositional(wide, BulkLoad.emptyQuarantine(spark),
       BulkLoad.Config())
     r2.cells.collect()
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case _ => p +: p.children.flatMap(nodes)
-    }
-    val ex = nodes(r2.cells.queryExecution.executedPlan)
+    val ex = planNodes(r2.cells.queryExecution.executedPlan)
       .collect { case s: graft.plans.RegionAlignedRowExchangeExec => s }
     assert(ex.nonEmpty, "the default path plans a region exchange")
     val moved = ex.map(e => e.metrics.get("shuffleRecordsWritten")
@@ -325,31 +318,5 @@ class CellPipelineSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       BulkLoad.Config(saltBuckets = Some(10), splits = Some(splits))
     }
-  }
-
-  test("partitionByRegions: exact alignment + KV sort within each region") {
-    val path = "/root/reference/src/main/resources/iouzipcodes2011.csv"
-    val (kept, _) = Delimited.naiveSplit(spark, path, ",", 9)
-    val rowKey = keys.saltedKey(crc32(col("c0")), 10,
-      keys.md5CompositeKey(Seq(col("c0"), col("c1"), col("c2"), col("c3"))))
-    val cells = CellOps.explodeIndexed(kept, rowKey, "c", (0 until 3).map(i => col(s"c$i")))
-    val rdd = RegionSort.partitionByRegions(cells, RegionSort.saltSplits(10))
-    assert(rdd.getNumPartitions === 10)
-    val perPart = rdd.mapPartitionsWithIndex { (i, it) =>
-      var prev: Array[Byte] = null
-      var ok = true
-      var n = 0L
-      for (r <- it) {
-        val k = r.getAs[Array[Byte]]("row")
-        // salted keys: every key in partition i must start with digit i
-        ok &&= k(0) == ('0' + i).toByte
-        if (prev != null) ok &&= RegionSort.unsignedBytes.compare(prev, k) <= 0
-        prev = k
-        n += 1
-      }
-      Iterator.single((ok, n))
-    }.collect()
-    assert(perPart.forall(_._1), "salt-aligned and sorted within each region")
-    assert(perPart.map(_._2).sum === 36992L * 3)
   }
 }

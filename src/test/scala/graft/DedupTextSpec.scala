@@ -184,14 +184,7 @@ class DedupTextSpec extends SparkSuite {
     // through a BROADCAST LEFT-SEMI join on the batch's bucket set, and
     // the rows it lets through are batch-bounded — a tiny fraction of the
     // stored index (the round-11 window shuffled ALL of it, every batch)
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case _ => p +: p.children.flatMap(nodes)
-    }
-    val semis = nodes(touching.queryExecution.executedPlan).collect {
+    val semis = planNodes(touching.queryExecution.executedPlan).collect {
       case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
         if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
     }

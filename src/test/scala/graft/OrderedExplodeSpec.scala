@@ -13,8 +13,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{GenerateExec, SortExec}
 import org.apache.spark.sql.functions.{col, hex}
 
 /** The load path sorts source rows and emits cells in KeyValue order from
@@ -193,18 +192,13 @@ class OrderedExplodeSpec extends SparkSuite {
   test("plan: one row-only SortExec below the ordered explode, no Generate") {
     val in = uniqueCsv(200)
     val cells = BulkLoad.csv(spark, in).cells
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case _ => p +: p.children.flatMap(nodes)
-    }
-    val all = nodes(cells.queryExecution.executedPlan)
+    val all = planNodes(cells.queryExecution.executedPlan)
     val sorts = all.collect { case s: SortExec => s }
     assert(sorts.size === 1, all.mkString("\n"))
     assert(sorts.head.sortOrder.map(_.child.references.map(_.name).toSeq) === Seq(Seq("row")))
     val explode = all.collect { case e: OrderedExplodeExec => e }
     assert(explode.size === 1)
-    assert(nodes(explode.head.child).contains(sorts.head), "the row sort feeds the explode")
+    assert(planNodes(explode.head.child).contains(sorts.head), "the row sort feeds the explode")
     assert(!all.exists(_.isInstanceOf[GenerateExec]), all.mkString("\n"))
   }
 }

@@ -38,12 +38,13 @@ class PlanSpec extends SparkSuite {
     assert(aggs >= 2, s"expected partial+final HashAggregate, got:\n$p")
   }
 
-  test("ingest pipeline: single range exchange, sort within partitions only") {
+  test("ingest pipeline: one region exchange, no Catalyst exchange, sort within partitions only") {
     val p = plan("ingest_sorted_cells")
     // count physical nodes via their "(n) Name" detail headers
-    assert(p.linesIterator.count(_.matches("""\(\d+\) Exchange.*""")) === 1, p)
-    assert(p.contains("rangepartitioning"), p)
-    // sort is per-partition (global=false), no second global sort
+    assert(p.linesIterator.count(_.matches("""\(\d+\) RegionAlignedRowExchange.*""")) === 1, p)
+    assert(!p.linesIterator.exists(_.matches("""\(\d+\) Exchange.*""")), p)
+    assert(!p.toLowerCase.contains("rangepartitioning"), p)
+    // sort is per-partition (global=false), no global sort
     assert(p.contains("Sort") && !p.contains("global=true"), p)
   }
 

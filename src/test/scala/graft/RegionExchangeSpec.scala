@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.RegionSort
+import graft.operators.{CellOps, RegionSort}
 import graft.plans.{RegionAlignedRowExchange, RegionAlignedRowExchangeExec}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -22,9 +22,11 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructT
 
 import scala.jdk.CollectionConverters._
 
-/** The single-pass MD5-keyed load: fixed uniform region boundaries, one
-  * exact region exchange on Spark SQL's shuffle path, one Spark job per
-  * write — on generated CSV, no reference fixture. */
+/** The one region exchange, on generated data (no reference fixture): the
+  * single-pass MD5-keyed load (fixed uniform boundaries, Spark SQL's
+  * shuffle path, one Spark job per write) and the named-key feeds, whose
+  * boundaries are sampled from their keys and whose files are exactly
+  * aligned to them. */
 class RegionExchangeSpec extends SparkSuite {
   import spark.implicits._
 
@@ -84,26 +86,39 @@ class RegionExchangeSpec extends SparkSuite {
     * keys in unsigned (row, family, qualifier) order, row count). */
   private def alignment(cells: DataFrame, splits: Array[Array[Byte]]): Array[(Int, Boolean, Boolean, Long)] = {
     val part = new RegionSort.RegionPartitioner(splits)
-    cells.select("row", "family", "qualifier").rdd.mapPartitionsWithIndex { (i, it) =>
-      val c = RegionSort.unsignedBytes
-      var prev: (Array[Byte], Array[Byte], Array[Byte]) = null
+    cells.select("row", "family", "qualifier", "ts").rdd.mapPartitionsWithIndex { (i, it) =>
+      var prev: (Array[Byte], Array[Byte], Array[Byte], Long) = null
       var inRegion = true
       var ordered = true
       var n = 0L
       it.foreach { r =>
-        val k = (r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2))
+        val k = (r.getAs[Array[Byte]](0), r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2), r.getLong(3))
         inRegion &&= part.getPartition(k._1) == i
-        if (prev != null) {
-          val byRow = c.compare(prev._1, k._1)
-          val byFam = c.compare(prev._2, k._2)
-          ordered &&= byRow < 0 || (byRow == 0 && (byFam < 0 ||
-            (byFam == 0 && c.compare(prev._3, k._3) < 0)))
-        }
+        if (prev != null) ordered &&= CellOps.keyValueOrdering.lt(prev, k)
         prev = k
         n += 1
       }
       Iterator.single((i, inRegion, ordered, n))
     }.collect()
+  }
+
+  /** Named-key feed rows: random 12-character ids, whose reversed keys
+    * are far from MD5-uniform, and two value fields. */
+  private lazy val namedRows: DataFrame = {
+    val rnd = new scala.util.Random(23)
+    (0 until 12000).map(i => (rnd.alphanumeric.take(12).mkString, s"v$i", s"${rnd.nextInt(1000)}"))
+      .toDF("id", "v", "w").repartition(4)
+  }
+  private val namedDdl = "id STRING, v STRING, w STRING"
+  private lazy val jsonlInput: String = {
+    val dir = tmpDir() + "/named.jsonl"
+    namedRows.write.json(dir)
+    dir
+  }
+  private lazy val avroInput: String = {
+    val dir = tmpDir() + "/named.avro"
+    graft.sources.AvroSource.write(namedRows, dir)
+    dir
   }
 
   test("default BulkLoad.csv: fixed MD5 boundaries, one region exchange, no range sampling, one write job") {
@@ -114,18 +129,9 @@ class RegionExchangeSpec extends SparkSuite {
     val out = tmpDir()
     assert(jobsDuring(SortedParquetCellSink.writeData(r.cells, out)) === 1)
     // file i ⊆ region i of the uniform 10-region pre-split
-    val splits = RegionSort.uniformMd5Splits(10)
-    val part = new RegionSort.RegionPartitioner(splits)
-    val parts = new File(out).listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    assert(parts.length === 10)
-    var cells = 0L
-    parts.foreach { f =>
-      val idx = f.getName.stripPrefix("part-").take(5).toInt
-      val rows = spark.read.parquet(f.getPath).select("row").as[Array[Byte]].collect()
-      assert(rows.nonEmpty && rows.forall(k => part.getPartition(k) == idx), f.getName)
-      cells += rows.length
-    }
-    assert(cells === 9 * inputRows)
+    val perFile = alignedFileCells(out, RegionSort.uniformMd5Splits(10).toSeq)
+    assert(perFile.length === 10)
+    assert(perFile.sum === 9 * inputRows)
   }
 
   test("promoted default load is byte-identical to an explicit uniformMd5Splits(10) load") {
@@ -142,7 +148,7 @@ class RegionExchangeSpec extends SparkSuite {
     assert(promoted === explicit)
   }
 
-  test("named-key feeds and out-of-range region counts keep the sampled range exchange") {
+  test("named-key feeds and out-of-range region counts sample their boundaries in the region exchange") {
     assert(BulkLoad.withFixedSplits(BulkLoad.Config(regions = 1)).splits.isEmpty)
     assert(BulkLoad.withFixedSplits(BulkLoad.Config(saltBuckets = Some(4))).splits.isEmpty)
     val fixed = BulkLoad.withFixedSplits(BulkLoad.Config(regions = 7)).splits.get
@@ -151,8 +157,54 @@ class RegionExchangeSpec extends SparkSuite {
     Seq("""{"id":"a1","v":"x"}""", """{"id":"b2","v":"y"}""").toDF("value")
       .coalesce(1).write.text(dir)
     val r = BulkLoad.jsonl(spark, dir, "id STRING, v STRING")
-    assert(r.cells.queryExecution.executedPlan.toString.toLowerCase.contains("rangepartitioning"))
+    val plan = r.cells.queryExecution.executedPlan
+    assert(plan.collect { case e: RegionAlignedRowExchangeExec => e.fixedSplits }.toSeq === Seq(None),
+      plan.toString)
+    assert(!plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]), plan.toString)
+    assert(!plan.toString.toLowerCase.contains("rangepartitioning"), plan.toString)
     assert(r.cells.count() === 4)
+  }
+
+  Seq[(String, () => BulkLoad.Result)](
+    "JSONL" -> (() => BulkLoad.jsonl(spark, jsonlInput, namedDdl)),
+    "Avro" -> (() => BulkLoad.avro(spark, avroInput))
+  ).foreach { case (feed, load) =>
+    test(s"$feed load: sampled boundaries, every file inside its region in KeyValue order, balanced regions") {
+      load() // stage the input before counting jobs
+      var r: BulkLoad.Result = null
+      assert(jobsDuring { r = load() } === 0, "building the load's frame starts no job")
+      val out = tmpDir()
+      var jobs = 0
+      val ran = exchangesRun { jobs = jobsDuring(SortedParquetCellSink.writeData(r.cells, out)) }
+      // one key sample and the write; the sampled `repartitionByRange`
+      // this exchange replaces took 3 (sample, map stage, write)
+      assert(jobs === 2)
+      assert(ran.length === 1 && ran.head.fixedSplits.isEmpty)
+      val splits = ran.head.splits
+      assert(splits.length === 9)
+      val perFile = alignedFileCells(out, splits)
+      assert(perFile.length === 10)
+      assert(perFile.sum === 3L * 12000)
+      assert(perFile.max <= 2 * perFile.sum / perFile.length, perFile)
+    }
+  }
+
+  test("regions = 1 and an empty JSONL input each give one partition through the region exchange") {
+    val empty = tmpDir() + "/empty.jsonl"
+    Files.createDirectories(new File(empty).toPath)
+    Files.write(new File(empty, "part-00000.json").toPath, Array.emptyByteArray)
+    Seq(
+      BulkLoad.jsonl(spark, jsonlInput, namedDdl,
+        BulkLoad.Config(qualifiers = BulkLoad.NameQualifiers, regions = 1)) -> 3L * 12000,
+      BulkLoad.jsonl(spark, empty, namedDdl) -> 0L
+    ).foreach { case (r, cells) =>
+      val plan = r.cells.queryExecution.executedPlan
+      val exchanges = plan.collect { case e: RegionAlignedRowExchangeExec => e }
+      assert(exchanges.length === 1)
+      assert(plan.execute().getNumPartitions === 1)
+      assert(exchanges.head.splits.isEmpty)
+      assert(r.cells.count() === cells)
+    }
   }
 
   test("the exchange keeps every row and exact alignment on non-UnsafeRow input") {

@@ -229,14 +229,7 @@ class SimilaritySpec extends SparkSuite {
     val q = emb.where(col("vec_id") === 0)
     val topk = Similarity.ivfTopKStored(adv2, q, 5, nprobe = 2)
     topk.collect()
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
-      case qs: QueryStageExec => qs +: nodes(qs.plan)
-      case _ => p +: p.children.flatMap(nodes)
-    }
-    val scans = nodes(topk.queryExecution.executedPlan).collect {
+    val scans = planNodes(topk.queryExecution.executedPlan).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
         if f.relation.location.rootPaths.exists(_.toString.contains("lists.parquet")) => f
     }
@@ -261,14 +254,7 @@ class SimilaritySpec extends SparkSuite {
     // read its selected partitions — the contract is a plan property:
     // the explicit `cell IN (probed)` filter prunes statically, so a DPP
     // regression can never silently widen the read to the full index
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case _ => p +: p.children.flatMap(nodes)
-    }
-    val scans = nodes(served.queryExecution.executedPlan).collect {
+    val scans = planNodes(served.queryExecution.executedPlan).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
         if f.relation.location.rootPaths.exists(_.toString.contains("lists.parquet")) => f
     }

@@ -986,6 +986,17 @@ class SourceDriversSpec extends SparkSuite {
     assert(digits.toSeq === digits.sorted.toSeq)
     assert(digits.distinct.length === digits.length)
 
+    // an unsalted `regions` write goes through the same exchange, on
+    // boundaries sampled from the keys: file i ⊆ region i of the splits
+    // the exchange that ran carries (the input's own load exchange has
+    // fixed MD5 splits)
+    val sampledOut = tmpDir() + "/dsv2regions"
+    val sampled = exchangesRun(unaligned.write.format("graft-cells")
+      .option("regions", "4").mode("overwrite").save(sampledOut)).filter(_.fixedSplits.isEmpty)
+    assert(sampled.length === 1 && sampled.head.splits.length === 3)
+    val perFile = alignedFileCells(sampledOut, sampled.head.splits)
+    assert(perFile.length === 4 && perFile.sum === 1800)
+
     // append mode is rejected: staging dirs are write-once-then-adopt
     val err = intercept[Exception] {
       unaligned.write.format("graft-cells").option("salt", "10")
