@@ -12,7 +12,7 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The per-document MinHash kernel behind `Dedup.corpusDedup`: one pass
+/** The per-document MinHash kernel behind every `Dedup` MinHash path: one pass
   * over a document's text produces everything the near-dup pipeline needs
   * from it, so the plan never widens to one row per shingle.
   *

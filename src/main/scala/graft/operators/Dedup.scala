@@ -520,17 +520,6 @@ object Dedup {
   val Bands = 8
   val RowsPerBand = 4 // MinHashK / Bands
 
-  /** k MinHash values: sig(i) = min over shingles of md5(i + ":" + shingle).
-    * Hex-string min — lexicographic order on lowercase hex is consistent
-    * across engines. Column form (nested HOFs, interpreted) — kept for
-    * column-level composition; the pipeline uses [[minHashSignatures]]. */
-  def minHashSignature(text: Column, n: Int): Column = {
-    val sh = TextOps.shingles(text, n)
-    transform(sequence(lit(0), lit(MinHashK - 1)),
-      i => array_min(transform(sh,
-        s => md5(concat(i.cast(StringType), lit(":"), s).cast(BinaryType)))))
-  }
-
   /** One [[MinHashKernel]] struct `k` per input row with at least one
     * shingle: (doc_id, k = struct<nsh, sig, dg>). Null text and texts of
     * fewer than n tokens have no shingles and drop out, as they do from
@@ -549,20 +538,21 @@ object Dedup {
       min(element_at(col("k.sig"), i + 1)).as(s"h$i"))
     kernel(docs, n)
       .groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), sigArray)
+      .select(col("doc_id"), array((0 until MinHashK).map(i => col(s"h$i")): _*).as("sig"))
   }
 
-  /** The kernel frame of [[corpusDedup]] and its evals, one row per
-    * doc_id, materialized: (doc_id, k = struct<nsh, sig, dg>). Rows
-    * sharing a doc_id are folded by [[MinHashKernel.merge]] into the
-    * multiset the relational index builds for them (sizes add, digest
+  /** Kernel rows folded to one per doc_id by [[MinHashKernel.merge]] into
+    * the multiset the relational index builds for them (sizes add, digest
     * lists concatenate, signatures take the element-wise min), so a
     * duplicated doc_id keeps the relational formulation's results. */
-  private def kernelFrame(docs: DataFrame, n: Int): DataFrame =
-    kernel(docs, n)
-      .groupBy(col("doc_id"))
+  private def foldKernels(k: DataFrame): DataFrame =
+    k.groupBy(col("doc_id"))
       .agg(MinHashKernel.merge(collect_list(col("k"))).as("k"))
-      .materialized
+
+  /** The kernel frame of every MinHash pair path and of the dedup store,
+    * one row per doc_id, materialized: (doc_id, k = struct<nsh, sig, dg>). */
+  private[graft] def kernelFrame(docs: DataFrame, n: Int): DataFrame =
+    foldKernels(kernel(docs, n)).materialized
 
   /** (doc_id, sig) of a kernel frame — the candidate generator's input. */
   private def kernelSigs(k: DataFrame): DataFrame =
@@ -590,23 +580,18 @@ object Dedup {
         col("siga"), col("sigb"))
   }
 
+  /** [[kernelVerify]] at `threshold`: (a, b, jaccard), a < b. */
+  private def verifiedPairs(cand: DataFrame, k: DataFrame,
+                            threshold: Double): DataFrame =
+    kernelVerify(cand, k)
+      .where(col("jaccard") >= threshold)
+      .select(col("a"), col("b"), col("jaccard"))
+
   /** Signature-estimated Jaccard: share of equal MinHash positions. */
   private def estJaccard(siga: Column, sigb: Column): Column =
     size(filter(sequence(lit(0), lit(MinHashK - 1)),
       i => element_at(siga, i + lit(1)) === element_at(sigb, i + lit(1))))
       .cast(DoubleType) / lit(MinHashK.toDouble)
-
-  /** (doc_id, band, bkey) band keys from MinHash signatures. Band key =
-    * md5 of the band's r signature values joined with '|'. */
-  def bandKeys(sigd: DataFrame): DataFrame =
-    sigd.select(col("doc_id"),
-      explode(transform(sequence(lit(0), lit(Bands - 1)),
-        j => struct(j.as("band"),
-          md5(concat_ws("|",
-            transform(slice(col("sig"), j * lit(RowsPerBand) + lit(1), lit(RowsPerBand)),
-              x => x.cast(StringType)))
-            .cast(BinaryType)).as("bkey")))).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
 
   /** A band bucket with more than this many members contributes occ²/2
     * candidate pairs from ONE key — the quadratic term that sinks LSH on
@@ -622,29 +607,18 @@ object Dedup {
     * at sf0.1; 590 on the adversarial canonicalized-decade corpus). */
   val BandBucketCap = 10000
 
-  /** LSH band candidate pairs (a < b, distinct) from MinHash signatures
-    * (doc_id, sig) with one row per doc_id — the one generator shared by
-    * [[corpusDedup]], [[minHashPairs]], [[minHashEstVsExact]],
-    * [[lshRecallCurve]] and [[dedupStore]].
-    *
-    * Each (doc, band) row carries the band's [[RowsPerBand]] = 4 signature
-    * values packed exactly into two longs (each value is < 2^31), and ONE
-    * aggregate groups them into buckets: (band, k1, k2, occ, ids). Two
-    * documents share a bucket iff their band values are equal — the
-    * bucket relation of [[bandKeys]]' md5 `bkey`, without the hash.
-    * Buckets above `maxBucket` ([[BandBucketCap]]) are dropped, then each
-    * remaining bucket streams its member pairs ([[MinHashKernel.bucketPairs]])
-    * and `distinct` folds pairs found in several bands. No window and no
-    * self-join: one exchange of ~24 B per (doc, band) row, one of the
-    * pairs. A bucket's ids are collected by [[MinHashKernel.bucketIds]],
-    * which drops them as soon as the bucket's occupancy passes the cap,
-    * so a flooded bucket holds at most `maxBucket` ids however large its
-    * cohort. */
-  def minHashCandidates(sigd: DataFrame,
-                        maxBucket: Int = BandBucketCap,
-                        observeCap: Boolean = true): DataFrame = {
+  /** The band-bucket key columns of [[packedBands]]. */
+  private val BandKey = Seq("band", "k1", "k2")
+
+  /** (doc_id, band, k1, k2): one row per (document, band) of a (doc_id,
+    * sig) frame, the band's [[RowsPerBand]] = 4 signature values packed
+    * exactly into two longs (each value is < 2^31). Two documents share a
+    * band bucket iff their band values are equal. The one bucket key of
+    * every MinHash candidate relation: [[minHashCandidates]],
+    * [[touchingCandidates]], [[capCrossings]] and [[DedupStore.bands]]. */
+  private def packedBands(sigd: DataFrame): DataFrame = {
     def v(i: Int) = element_at(col("sig"), i + 1)
-    val banded = sigd.select(col("doc_id"),
+    sigd.select(col("doc_id"),
         explode(array((0 until Bands).map { j =>
           val r = j * RowsPerBand
           struct(lit(j).as("band"),
@@ -652,85 +626,97 @@ object Dedup {
             shiftleft(v(r + 2), 31).bitwiseOR(v(r + 3)).as("k2"))
         }: _*)).as("bk"))
       .select(col("doc_id"), col("bk.*"))
-    val buckets = banded.groupBy(col("band"), col("k1"), col("k2"))
+  }
+
+  /** LSH band candidate pairs (a < b, distinct) from MinHash signatures
+    * (doc_id, sig) with one row per doc_id — the one generator shared by
+    * [[corpusDedup]], [[minHashPairs]], [[minHashEstVsExact]],
+    * [[lshRecallCurve]] and [[dedupStore]].
+    *
+    * ONE aggregate groups the [[packedBands]] rows into buckets: (band,
+    * k1, k2, occ, ids). Buckets above `maxBucket` ([[BandBucketCap]]) are
+    * dropped, then each remaining bucket streams its member pairs
+    * ([[MinHashKernel.bucketPairs]]) and `distinct` folds pairs found in
+    * several bands. No window and no self-join: one exchange of ~24 B per
+    * (doc, band) row, one of the pairs. A bucket's ids are collected by
+    * [[MinHashKernel.bucketIds]], which drops them as soon as the
+    * bucket's occupancy passes the cap, so a flooded bucket holds at most
+    * `maxBucket` ids however large its cohort. */
+  def minHashCandidates(sigd: DataFrame,
+                        maxBucket: Int = BandBucketCap): DataFrame = {
+    val buckets = packedBands(sigd).groupBy(BandKey.map(col): _*)
       .agg(MinHashKernel.bucketIds(col("doc_id"), maxBucket).as("bk"))
       .select(col("band"), col("k1"), col("k2"), col("bk.occ").as("occ"), col("bk.ids").as("ids"))
-    // the cap carries the shared CapMetrics observation by default
-    // (binding drop counts + loud collapse detection, incl. AQE's
-    // empty-relation pruning of the metric node itself), weighted by
-    // occupancy so it still counts (doc, band) rows, and observed before
-    // the singleton filter. `observeCap = false` keeps an opt-out for
-    // metric-averse callers; the uncapped path has no observation, no
-    // listener and no metric name
-    val kept =
-      if (maxBucket == Int.MaxValue) buckets
-      else {
-        val metered =
-          if (!observeCap) buckets
-          else {
-            CapMetrics.ensureListener(sigd.sparkSession)
-            CapMetrics.observed(buckets, col("occ"), maxBucket, weight = col("occ"))
-          }
-        metered.where(col("occ") <= maxBucket)
-      }
-    kept.where(col("occ") >= 2)
+    // the cap carries the shared CapMetrics observation (binding drop
+    // counts + loud collapse detection, incl. AQE's empty-relation
+    // pruning of the metric node itself), weighted by occupancy so it
+    // still counts (doc, band) rows, and observed before the singleton
+    // filter
+    CapMetrics.ensureListener(sigd.sparkSession)
+    CapMetrics.observed(buckets, col("occ"), maxBucket, weight = col("occ"))
+      .where(col("occ") <= maxBucket)
+      .where(col("occ") >= 2)
       .select(MinHashKernel.bucketPairs(col("ids")))
       .distinct()
   }
 
-  /** The maintenance-side occupancy window, O(batch) in exchange volume:
-    * the incremental candidate join is batch-side × all-side on
-    * (band, bkey), so only buckets the BATCH TOUCHES can ever emit a
-    * candidate — the stored band index is restricted to those buckets by
-    * a broadcast left-semi join against the batch's distinct bucket set
-    * (batch-sized by construction: ≤ [[Bands]] · |batch| keys) BEFORE the
-    * [[BandBucketCap]] occupancy window runs. The semi-join keeps whole
-    * buckets, so occupancy over (touched stored rows ∪ batch rows) is
-    * still FULL-corpus occupancy inside every touched bucket and the cap
-    * binds exactly as a one-shot run would; untouched buckets simply
-    * never enter the exchange. Net per-batch window cost: O(batch-touched
-    * rows), independent of stored-index size — the stored scan itself is
-    * a broadcast-filtered projection, never a corpus-wide shuffle.
-    * (The HBase analog the store imitates consults META per write; it
-    * never re-aggregates META — BulkImporterFromText.java:105-111.)
+  /** Candidate pairs (a < b, distinct) with at least one side in the
+    * batch `newSig`, over the buckets of `oldSig` ∪ `newSig` — the probe
+    * of every incremental path ([[incrementalMinHashPairsFromSigs]],
+    * [[incrementalCorpusDedupStored]], [[dedupStoreAdvance]]). Both
+    * frames are (doc_id, sig), one row per doc_id, their doc sets
+    * disjoint.
+    *
+    * The occupancy window is O(batch) in exchange volume: only buckets
+    * the BATCH touches can emit a touching pair, so the stored bands are
+    * restricted to those buckets by a broadcast left-semi join against
+    * the batch's distinct bucket set (≤ [[Bands]] · |batch| keys) BEFORE
+    * the [[BandBucketCap]] window runs. The semi-join keeps whole
+    * buckets, so occupancy inside every touched bucket is still the
+    * full-corpus occupancy and the cap binds exactly as a one-shot run
+    * would; untouched buckets never enter the exchange. (The HBase
+    * analog the store imitates consults META per write; it never
+    * re-aggregates META — BulkImporterFromText.java:105-111.)
     *
     * BROADCAST BOUND — the build side is ≤ [[Bands]] · |batch| rows of
-    * (int band, fixed-width bkey digest) ≈ 40 B/row: a 1M-doc
-    * maintenance batch broadcasts ≤ ~[[Bands]]·40 MB, within executor
-    * memory but ABOVE the default 10 MB autoBroadcast threshold — which
-    * is fine, an explicit broadcast() hint ignores the threshold; the
-    * operational ceiling is driver/executor heap (~8 GB ≈ 200M batch
-    * docs). The documented maintenance posture is one drop at a time
-    * (the CLI advance path), far below that; a drop large enough to
-    * threaten the bound should be split into multiple advances, NOT fed
-    * through a shuffled semi-join — a shuffle here re-exchanges the
-    * stored index and forfeits the O(batch) property this join exists
-    * to provide (the executed-plan spec pins the broadcast form). */
-  private def touchedBandsWithCap(bandsNew: DataFrame,
-                                  bandsOld: DataFrame): DataFrame = {
+    * (int band, two longs) ≈ 20 B/row: a 1M-doc maintenance batch
+    * broadcasts ≤ ~[[Bands]]·20 MB, above the default 10 MB
+    * autoBroadcast threshold, which the explicit broadcast() hint
+    * ignores; the operational ceiling is driver/executor heap. A drop
+    * large enough to threaten it should be split into several advances,
+    * NOT fed through a shuffled semi-join — that re-exchanges the stored
+    * bands and forfeits the O(batch) property (the executed-plan spec
+    * pins the broadcast form). */
+  private def touchingCandidates(newSig: DataFrame, oldSig: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val touched = bandsNew.select(col("band"), col("bkey")).distinct()
-    bandsOld
-      .join(broadcast(touched), Seq("band", "bkey"), "left_semi")
+    val bandsNew = packedBands(newSig)
+    val touched = bandsNew.select(BandKey.map(col): _*).distinct()
+    val bandsAll = packedBands(oldSig)
+      .join(broadcast(touched), BandKey, "left_semi")
       .unionByName(bandsNew)
-      .withColumn("occ",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
+      .withColumn("occ", count(lit(1)).over(Window.partitionBy(BandKey.map(col): _*)))
       .where(col("occ") <= BandBucketCap)
       .drop("occ")
+    bandsNew.as("x").join(bandsAll.as("y"),
+        BandKey.map(c => col(s"x.$c") === col(s"y.$c")).reduce(_ && _) &&
+          col("x.doc_id") =!= col("y.doc_id"))
+      .select(least(col("x.doc_id"), col("y.doc_id")).as("a"),
+        greatest(col("x.doc_id"), col("y.doc_id")).as("b"))
+      .distinct()
   }
 
   /** INCREMENTAL near-dup detection — the operational form of corpus
     * dedup at 100 TB: a new batch is checked against the EXISTING corpus
     * without ever touching the existing corpus' text again. The corpus is
-    * represented by its persisted signature index ([[minHashSignatures]]
-    * output — k longs per document, ~0.1% of corpus bytes); each
-    * incoming batch computes its own signatures, band-joins against
-    * index ∪ batch, and emits every near-dup pair with at least one NEW
-    * side (new-vs-old contamination and new-vs-new dups in one pass).
+    * represented by its signature index ([[minHashSignatures]] output —
+    * k longs per document, ~0.1% of corpus bytes); each incoming batch
+    * computes its own signatures, probes index ∪ batch
+    * ([[touchingCandidates]]), and emits every near-dup pair with at
+    * least one NEW side (new-vs-old contamination and new-vs-new dups in
+    * one pass).
     *
-    * Per-batch cost: |batch| signature passes + a band equi-join whose
-    * left side is batch-sized — independent of corpus text size; the
-    * index side shuffles band keys only (fixed-width digests). Equals
+    * Per-batch cost: |batch| signature passes + a band probe whose left
+    * side is batch-sized — independent of corpus text size. Equals
     * `minHashPairs(existing ∪ new)` restricted to pairs touching a new
     * doc (band collision is symmetric), which is exactly the declared
     * oracle. Output: (a, b, est_jaccard), a < b. */
@@ -749,20 +735,7 @@ object Dedup {
   def incrementalMinHashPairsFromSigs(newSig: DataFrame, index: DataFrame,
                                       minEst: Double): DataFrame = {
     val allSig = index.union(newSig)
-    // the probe target carries the same [[BandBucketCap]] occupancy guard
-    // as every batch generator — an oversized bucket (boilerplate cohort)
-    // would otherwise cost |batch|·occ join rows per band — restricted to
-    // batch-touched buckets ([[touchedBandsWithCap]]): the index side is
-    // a broadcast-filtered projection, never an index-wide window
-    val bandsNew = bandKeys(newSig)
-    val bandsAll = touchedBandsWithCap(bandsNew, bandKeys(index))
-    val cand = bandsNew.as("x").join(bandsAll.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("a"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("b"))
-      .distinct()
-    cand
+    touchingCandidates(newSig, index)
       .join(allSig.select(col("doc_id").as("a"), col("sig").as("siga")), "a")
       .join(allSig.select(col("doc_id").as("b"), col("sig").as("sigb")), "b")
       .select(col("a"), col("b"),
@@ -824,85 +797,47 @@ object Dedup {
     * is O(|candidates| · shingles/doc), independent of corpus size.
     *
     * Rows are identical to the relational formulation this replaced
-    * (shingle-grain digest index, [[digestSignatures]], windowed band
-    * self-join, [[exactVerify]]; `MinHashKernelSpec` keeps it as the
-    * reference): same tokenization, same md5 digests, same signatures,
-    * same bucket relation and cap, same Jaccard expression — including
-    * its multiset semantics for rows that share a doc_id
-    * ([[kernelFrame]]). At cluster scale, swap the local checkpoint for
-    * a persisted one (`graft.fixpoint.dir`). */
-  def corpusDedup(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
-    val k = kernelFrame(docs, n)
-    kernelVerify(minHashCandidates(kernelSigs(k)), k)
-      .where(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
-  }
+    * (shingle-grain digest index, signature aggregate, windowed md5 band
+    * self-join, two-join exact verify; `MinHashKernelSpec` keeps it as
+    * the reference): same tokenization, same md5 digests, same
+    * signatures, same bucket relation and cap, same Jaccard expression —
+    * including its multiset semantics for rows that share a doc_id
+    * ([[foldKernels]]). The store and incremental paths run the same
+    * kernel frame, candidates and verify. At cluster scale, swap the
+    * local checkpoint for a persisted one (`graft.fixpoint.dir`). */
+  def corpusDedup(docs: DataFrame, n: Int, threshold: Double): DataFrame =
+    corpusPairs(kernelFrame(docs, n), threshold)
 
-  /** The shared exact-Jaccard verify tail of every corpus-dedup form:
-    * fan each candidate pair over the digest index on both sides, count
-    * common digests, compute exact Jaccard from the pre-aggregated set
-    * sizes. Cost O(|cand| · shingles/doc) — never corpus². */
-  private def exactVerify(cand: DataFrame, sh: DataFrame, sz: DataFrame,
-                          threshold: Double): DataFrame =
-    cand
-      .join(sh.select(col("doc_id").as("a"), col("s")), "a")
-      .join(sh.select(col("doc_id").as("b"), col("s")), Seq("b", "s"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
-      .join(sz.as("sa"), col("a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("b") === col("sb.doc_id"))
-      .select(col("a"), col("b"),
-        (col("common").cast(DoubleType) /
-          (col("sa.nsh") + col("sb.nsh") - col("common"))).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+  /** The pair step of [[corpusDedup]] and [[dedupStore]] over a kernel
+    * frame: all-pairs candidates, then the exact verify. */
+  private def corpusPairs(k: DataFrame, threshold: Double): DataFrame =
+    verifiedPairs(minHashCandidates(kernelSigs(k)), k, threshold)
 
-  /** INCREMENTAL [[corpusDedup]] — the pair generation for STORE
-    * MAINTENANCE: exact-verified near-dup pairs restricted to those
-    * TOUCHING a new document drop (new-vs-old and new-vs-new), never
-    * re-pairing the existing corpus with itself. Combined with the
-    * stored assignment's star edges, the component structure of
-    * (old assignment ∪ these pairs) provably equals a full recompute:
-    * old-old pairs connect exactly what the stored assignment already
-    * connects, so only pairs with a new endpoint can change anything.
+  /** Exact-verified near-dup pairs TOUCHING the batch kernel frame
+    * `kNew` (new-vs-old and new-vs-new), never re-pairing the stored
+    * kernel `kOld` with itself: [[touchingCandidates]] over the two
+    * frames' signatures, then [[kernelVerify]] over kNew ∪ kOld. Output:
+    * (a, b, jaccard), a < b, jaccard >= threshold. */
+  private def touchingPairs(kNew: DataFrame, kOld: DataFrame,
+                            threshold: Double): DataFrame =
+    verifiedPairs(touchingCandidates(kernelSigs(kNew), kernelSigs(kOld)),
+      kNew.unionByName(kOld), threshold)
+
+  /** INCREMENTAL [[corpusDedup]] against a PERSISTED [[DedupStore]] — the
+    * production maintenance path: exact-verified near-dup pairs
+    * restricted to those TOUCHING a new document drop (new-vs-old and
+    * new-vs-new). Combined with the stored assignment's star edges, the
+    * component structure of (old assignment ∪ these pairs) equals a full
+    * recompute: old-old pairs connect exactly what the stored assignment
+    * already connects, so only pairs with a new endpoint can change
+    * anything.
     *
-    * Scale shape: the old side contributes its shingle DIGEST index and
-    * signatures (~24 B/shingle + k longs/doc — the persisted companion
-    * index a production store keeps beside the assignment; recomputed
-    * here from text because the declared queries are self-contained).
-    * The band join is new-side × all-side with the [[BandBucketCap]]
-    * occupancy guard on the all side; exact verify fans only the
-    * surviving touching pairs over the digest index — O(|new batch|)
-    * band rows on the probe side, independent of corpus size.
-    * Output: (a, b, jaccard), a < b, jaccard >= threshold.
-    *
-    * The incremental and store paths ([[incrementalCorpusDedup]],
-    * [[incrementalCorpusDedupStored]], [[dedupStore]],
-    * [[dedupStoreAdvance]], [[capCrossings]]) keep the relational
-    * shingle-grain index and its persisted format — digest rows, signature
-    * rows, md5 band keys — rather than the [[corpusDedup]] kernel; their
-    * pairs are the same, and a stored index stays readable. */
-  def incrementalCorpusDedup(newDocs: DataFrame, oldDocs: DataFrame,
-                             n: Int, threshold: Double): DataFrame = {
-    def digests(docs: DataFrame) = shingleIndex(docs, n)
-      .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-      .materialized
-    val shOld = digests(oldDocs)
-    val sigOld = digestSignatures(shOld)
-    incrementalFromIndex(newDocs, shOld,
-      sigOld.select(col("doc_id"), sigArray, col("nsh")),
-      bandKeys(sigOld.select(col("doc_id"), sigArray)), n, threshold)
-  }
-
-  /** [[incrementalCorpusDedup]] probing a PERSISTED companion index — the
-    * production maintenance path: the old corpus contributes ONLY its
-    * stored artifacts (digest index, signatures+sizes, band keys), so a
-    * maintenance batch never re-reads or re-shingles old text. The store
-    * is built once per corpus drop by [[dedupStore]]; per-batch cost is
-    * |batch| signature passes + a batch-sized band probe + a verify
-    * restricted to touching pairs' digest rows. Bucket occupancy is
-    * re-computed over stored ∪ batch rows of batch-TOUCHED buckets only
-    * ([[touchedBandsWithCap]] — a broadcast semi-join keeps whole
-    * buckets, so the [[BandBucketCap]] still binds at FULL-corpus
-    * occupancy while the exchange stays O(batch), never O(stored index)).
+    * The old corpus contributes ONLY its stored kernel frame, so a
+    * maintenance batch never re-reads or re-shingles old text. Per-batch
+    * cost: one kernel pass over the batch + a batch-sized band probe
+    * ([[touchingCandidates]]: the [[BandBucketCap]] binds at FULL-corpus
+    * occupancy while the exchange stays O(batch)) + a verify restricted
+    * to touching pairs.
     *
     * Equivalence scope (full recompute ≡ stored-assignment ∪ this): exact
     * as long as no band bucket CROSSES the cap between drops — a bucket
@@ -911,46 +846,7 @@ object Dedup {
     * regime with [[capCrossings]] and rebuild the affected drop. */
   def incrementalCorpusDedupStored(newDocs: DataFrame, store: DedupStore,
                                    n: Int, threshold: Double): DataFrame =
-    incrementalFromIndex(newDocs, store.digests,
-      store.signatures, store.bands, n, threshold)
-
-  /** Shared maintenance core: exact-verified near-dup pairs touching a
-    * new doc, with the old side supplied as INDEX FRAMES (from a live
-    * computation or a persisted store — never text). */
-  private def incrementalFromIndex(newDocs: DataFrame, shOld: DataFrame,
-                                   sigOld: DataFrame, bandsOld: DataFrame,
-                                   n: Int, threshold: Double): DataFrame = {
-    val shNew = shingleIndex(newDocs, n)
-      .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-      .materialized
-    val sigNew = digestSignatures(shNew).materialized
-    incrementalPrepared(shNew, sigNew,
-      bandKeys(sigNew.select(col("doc_id"), sigArray)),
-      shOld, sigOld, bandsOld, threshold)
-  }
-
-  /** [[incrementalFromIndex]] with the new-batch index frames ALREADY
-    * computed — the entry point for callers that also persist them
-    * ([[dedupStoreAdvance]] derives the batch index exactly once for
-    * both the merged store write and the touching-pair probe).
-    * `sigNew` carries the h0..h(k-1)/nsh aggregate columns. */
-  private def incrementalPrepared(shNew: DataFrame, sigNew: DataFrame,
-                                  bandsNew: DataFrame, shOld: DataFrame,
-                                  sigOld: DataFrame, bandsOld: DataFrame,
-                                  threshold: Double): DataFrame = {
-    val bandsAll = touchedBandsWithCap(bandsNew, bandsOld)
-    val cand = bandsNew.as("x")
-      .join(bandsAll.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("a"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("b"))
-      .distinct()
-    val sh = shNew.unionByName(shOld)
-    val sz = sigNew.select(col("doc_id"), col("nsh"))
-      .unionByName(sigOld.select(col("doc_id"), col("nsh")))
-    exactVerify(cand, sh, sz, threshold)
-  }
+    touchingPairs(kernelFrame(newDocs, n), store.kernel, threshold)
 
   /** Band buckets that CROSS [[BandBucketCap]] only once `newDocs` land —
     * the one regime where stored-assignment ∪ incremental pairs can
@@ -958,43 +854,18 @@ object Dedup {
     * were generated under old-only occupancies). Empty output = the
     * incremental result is exactly the full recompute; non-empty names
     * the buckets whose member docs need a rebuild. Cost: two band-keyed
-    * aggregates, no text reads. Output: (band, bkey, occ_old, occ_all). */
+    * aggregates, no old-text reads. Output: (band, k1, k2, occ_old,
+    * occ_all). */
   def capCrossings(newDocs: DataFrame, store: DedupStore, n: Int,
                    cap: Int = BandBucketCap): DataFrame = {
-    val sigNew = digestSignatures(
-      shingleIndex(newDocs, n)
-        .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s")))
-    val bandsNew = bandKeys(sigNew.select(col("doc_id"), sigArray))
-    val occOld = store.bands.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("occ_old"))
-    val occNew = bandsNew.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("occ_new"))
-    occOld.join(occNew, Seq("band", "bkey"))
-      .select(col("band"), col("bkey"), col("occ_old"),
+    def occ(bands: DataFrame, name: String) =
+      bands.groupBy(BandKey.map(col): _*).agg(count(lit(1)).as(name))
+    occ(store.bands, "occ_old")
+      .join(occ(packedBands(minHashSignatures(newDocs, n)), "occ_new"), BandKey)
+      .select(col("band"), col("k1"), col("k2"), col("occ_old"),
         (col("occ_old") + col("occ_new")).as("occ_all"))
       .where(col("occ_old") <= cap && col("occ_all") > cap)
   }
-
-  /** MinHash signature aggregate over a checkpointed digest index
-    * (doc_id, s = 16-byte md5): the k universal-hash minima per doc over
-    * the digest's 7-hex-char prefix, FUSED with the shingle-set size —
-    * one doc_id exchange serves candidate generation and exact verify.
-    * The relational form behind the incremental and store paths (whose
-    * persisted digest index it reads); its values equal the
-    * [[MinHashKernel]] signature and size bit for bit. */
-  private def digestSignatures(sh: DataFrame): DataFrame = {
-    val hashMins = (0 until MinHashK).map { i =>
-      val (a, b) = (MinHashKernel.hashConstant(s"a$i"), MinHashKernel.hashConstant(s"b$i"))
-      min(pmod(col("base") * lit(a) + lit(b), lit(MinHashKernel.Prime))).as(s"h$i")
-    }
-    sh.withColumn("base", conv(substring(hex(col("s")), 1, 7), 16, 10).cast(LongType))
-      .groupBy(col("doc_id"))
-      .agg(hashMins.head, (hashMins.tail :+ count(lit(1)).as("nsh")): _*)
-  }
-
-  /** The h0..h(k-1) signature columns re-assembled as one array column. */
-  private def sigArray: Column =
-    array((0 until MinHashK).map(i => col(s"h$i")): _*).as("sig")
 
   /** LSH parameter-tuning evaluation: recall of the banded MinHash
     * candidate generator against EXACT n-gram Jaccard truth, per Jaccard
@@ -1014,10 +885,10 @@ object Dedup {
     * can judge the estimate's resolution.
     *
     * The candidates are exactly what [[corpusDedup]] generates: the same
-    * kernel frame (which also supplies the set sizes) and the same
-    * [[minHashCandidates]]. The truth side is independent of that path — the
-    * relational digest index's inverted self-join — and is checkpointed
-    * once for the totals and the candidate semi-join.
+    * kernel frame and the same [[minHashCandidates]]. The truth side is
+    * independent of that path — [[ngramJaccardPairs]]' inverted-index
+    * self-join — and is checkpointed once for the totals and the
+    * candidate semi-join.
     * Output: (sim_band, n_true, n_hit, recall, n_docs_sampled). */
   def lshRecallCurve(docs: DataFrame, n: Int, minJaccard: Double,
                      samplePermille: Int = 1000): DataFrame = {
@@ -1031,21 +902,8 @@ object Dedup {
     val nSampled = sampled.agg(count(lit(1)).as("n_docs_sampled"))
     // the PRODUCTION kernel frame and generator — sharing them is the
     // point: the eval must measure the generator corpusDedup actually runs
-    val k = kernelFrame(sampled, n)
-    val cand = minHashCandidates(kernelSigs(k))
-    val sz = k.select(col("doc_id"), col("k.nsh").as("nsh"))
-    val sh = shingleIndex(sampled, n)
-      .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-      .materialized
-    val truth = sh.as("x").join(sh.as("y"),
-        col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .agg(count(lit(1)).as("common"))
-      .join(sz.as("sa"), col("a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("b") === col("sb.doc_id"))
-      .select(col("a"), col("b"), (col("common").cast(DoubleType) /
-        (col("sa.nsh") + col("sb.nsh") - col("common"))).as("jaccard"))
-      .where(col("jaccard") >= minJaccard)
+    val cand = minHashCandidates(kernelSigs(kernelFrame(sampled, n)))
+    val truth = ngramJaccardPairs(sampled, n, minJaccard)
       .select(col("a"), col("b"),
         least(floor(round(col("jaccard"), 6) * 10), lit(9)).cast("int").as("sim_band"))
       .materialized
@@ -1298,9 +1156,12 @@ object Dedup {
     * the key itself cannot enforce. Version literals only move FORWARD:
     * rev=4 gives the same family decoupling (span stores keep
     * [[SpanLayoutVersion]]) while guaranteeing no artifact from any
-    * earlier code era can match the key. */
+    * earlier code era can match the key.
+    *
+    * rev=5 is the kernel-frame store (`clusters` + `kernel`); stores of
+    * the shingle-grain digest format (rev=4) are rebuilt, not served. */
   val StoreAlgoVersion: String =
-    s"minhash:k=$MinHashK,b=$Bands,r=$RowsPerBand,cap=$BandBucketCap,rev=4"
+    s"minhash:k=$MinHashK,b=$Bands,r=$RowsPerBand,cap=$BandBucketCap,rev=5"
 
   /** The span registries' OWN layout version, folded only into span-store
     * keys: rev=3 is the digest-bucketed per-bucket-sorted fileset
@@ -1309,43 +1170,28 @@ object Dedup {
   val SpanLayoutVersion: String = "spanlayout:rev=3"
 
   /** Handle over one persisted dedup store: the cluster assignment plus
-    * the COMPANION INDEX a production store keeps beside it (the HBase
-    * analog: the region index consulted per write, never rebuilt —
-    * BulkImporterFromText.java:105-111 reads boundaries once per job).
-    * Every frame is one parquet read; nothing re-derives from text.
-    *  - clusters:   (doc_id, cluster_id) — the assignment.
-    *  - digests:    (doc_id, s BINARY)   — the shingle md5 index
-    *                (~24 B/shingle; at cluster scale bucket by doc_id at
-    *                write time so verify joins co-locate for free).
-    *  - signatures: (doc_id, sig ARRAY<BIGINT>, nsh) — MinHash k-vector +
-    *                shingle-set size (k longs per doc).
-    *  - bands:      (doc_id, band, bkey) — LSH band keys, the probe
-    *                target for incremental maintenance (occupancy over
-    *                stored ∪ batch re-applies [[BandBucketCap]] at
-    *                full-corpus occupancy). */
+    * the kernel frame it was computed from, the index a production store
+    * keeps beside it (the HBase analog: the region index consulted per
+    * write, never rebuilt — BulkImporterFromText.java:105-111 reads
+    * boundaries once per job). Every frame is one parquet read; nothing
+    * re-derives from text.
+    *  - clusters: (doc_id, cluster_id) — the assignment.
+    *  - kernel:   (doc_id, k = struct<nsh, sig, dg>) — one
+    *              [[kernelFrame]] row per doc_id: shingle-set size,
+    *              MinHash signature, sorted shingle digests.
+    *  - bands:    the [[packedBands]] of the stored signatures, the probe
+    *              target of [[capCrossings]] (a projection, not a file). */
   final case class DedupStore(spark: org.apache.spark.sql.SparkSession,
                               dir: String) {
     def clusters: DataFrame =
       spark.read.schema("doc_id BIGINT, cluster_id BIGINT")
         .parquet(s"$dir/clusters.parquet")
-    def digests: DataFrame =
-      spark.read.schema("doc_id BIGINT, s BINARY")
-        .parquet(s"$dir/digests.parquet")
-    def signatures: DataFrame =
-      spark.read.schema("doc_id BIGINT, sig ARRAY<BIGINT>, nsh BIGINT")
-        .parquet(s"$dir/signatures.parquet")
-    def bands: DataFrame =
-      spark.read.schema("doc_id BIGINT, band INT, bkey STRING")
-        .parquet(s"$dir/bands.parquet")
+    def kernel: DataFrame =
+      spark.read.schema("doc_id BIGINT, k STRUCT<nsh: BIGINT, sig: ARRAY<BIGINT>, dg: ARRAY<BIGINT>>")
+        .parquet(s"$dir/kernel.parquet")
+    def bands: DataFrame = packedBands(kernelSigs(kernel))
   }
 
-  /** Build-once, serve-many dedup store (see [[clustersStore]] for the
-    * keying/immutability contract): first call for a (corpus drop,
-    * params, [[StoreAlgoVersion]]) key computes the digest index ONCE,
-    * derives signatures → band keys → capped candidates → exact verify →
-    * cluster fixpoint from it, and publishes all four artifacts with ONE
-    * atomic rename (a concurrent reader never sees a partial store).
-    * Subsequent calls return the handle without touching corpus text. */
   /** Writable store location for a (corpus drop, params) pair — the
     * keying contract shared by [[dedupStore]] and [[dedupStoreAdvance]]:
     * md5(corpusKey | file stamp | params | [[StoreAlgoVersion]]) under
@@ -1403,27 +1249,21 @@ object Dedup {
     }
   }
 
+  /** Build-once, serve-many dedup store (see [[clustersStore]] for the
+    * keying/immutability contract): the first call for a (corpus drop,
+    * params, [[StoreAlgoVersion]]) key computes the [[kernelFrame]] ONCE,
+    * persists it, runs [[corpusDedup]]'s own pair step on it and the
+    * cluster fixpoint, and publishes both artifacts with ONE atomic
+    * rename (a concurrent reader never sees a partial store). Subsequent
+    * calls return the handle without touching corpus text. */
   def dedupStore(docs: DataFrame, n: Int, threshold: Double,
                  corpusKey: String): DedupStore = {
     val spark = docs.sparkSession
     val path = storePath(spark, corpusKey, n, threshold)
     publishIfAbsent(spark, path) { tmp =>
-      // ONE text scan: the digest index is computed once, persisted, and
-      // every downstream artifact (signatures, bands, candidates, verify,
-      // fixpoint) derives from it
-      val sh = shingleIndex(docs, n)
-        .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-        .materialized
-      sh.write.mode("overwrite").parquet(s"$tmp/digests.parquet")
-      val sigsz = digestSignatures(sh).materialized
-      sigsz.select(col("doc_id"), sigArray, col("nsh"))
-        .write.mode("overwrite").parquet(s"$tmp/signatures.parquet")
-      bandKeys(sigsz.select(col("doc_id"), sigArray))
-        .write.mode("overwrite").parquet(s"$tmp/bands.parquet")
-      val cand = minHashCandidates(sigsz.select(col("doc_id"), sigArray))
-      val pairs = exactVerify(cand, sh,
-        sigsz.select(col("doc_id"), col("nsh")), threshold)
-      clusters(pairs.select(col("a"), col("b")))
+      val k = kernelFrame(docs, n)
+      k.write.mode("overwrite").parquet(s"$tmp/kernel.parquet")
+      clusters(corpusPairs(k, threshold).select(col("a"), col("b")))
         .write.mode("overwrite").parquet(s"$tmp/clusters.parquet")
     }
     DedupStore(spark, path.toString)
@@ -1431,43 +1271,31 @@ object Dedup {
 
   /** ADVANCE a dedup store by one corpus drop — the full production
     * maintenance cycle, closing the loop [[incrementalCorpusDedupStored]]
-    * opens: compute the batch's index frames ONCE, probe the stored
-    * index for exact-verified touching pairs, fold them into the stored
+    * opens: build the batch's kernel frame ONCE, probe the stored kernel
+    * for exact-verified touching pairs, fold them into the stored
     * assignment (components(star edges ∪ touching) ≡ a full recompute —
-    * the same equivalence `dedup_store_incremental`'s oracle proves),
-    * and publish the UPDATED store — merged digests / signatures / band
-    * keys + the new assignment — under `newCorpusKey` with the same
+    * the same equivalence `dedup_store_incremental`'s oracle proves), and
+    * publish the UPDATED store — the stored ∪ batch kernel (shared
+    * doc_ids folded by [[MinHashKernel.merge]], as [[kernelFrame]] folds
+    * them) + the new assignment — under `newCorpusKey` with the same
     * atomic-rename, build-once contract. The old corpus' TEXT is never
-    * read: its contribution is entirely the persisted index (the probe
-    * path is the spec-pinned zero-old-text-read plan). Per-advance cost:
-    * |batch| text scan + batch-sized band probe + touching-pair verify +
-    * index-sized union writes — no old-side recompute anywhere.
-    * Subsequent [[dedupStoreAdvance]]/[[dedupStore]] calls with
-    * `newCorpusKey` serve the published artifacts without recomputing. */
+    * read: its contribution is entirely the stored kernel. Per-advance
+    * cost: |batch| kernel pass + batch-sized band probe + touching-pair
+    * verify + a kernel-sized fold and write. Subsequent
+    * [[dedupStoreAdvance]]/[[dedupStore]] calls with `newCorpusKey` serve
+    * the published artifacts without recomputing. */
   def dedupStoreAdvance(store: DedupStore, newDocs: DataFrame, n: Int,
                         threshold: Double, newCorpusKey: String): DedupStore = {
     val spark = newDocs.sparkSession
     val path = storePath(spark, newCorpusKey, n, threshold)
     publishIfAbsent(spark, path) { tmp =>
-      // ONE batch text scan: digests → signatures → band keys, each
-      // persisted (merged with the stored frames) AND probed
-      val shNew = shingleIndex(newDocs, n)
-        .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-        .materialized
-      val sigNew = digestSignatures(shNew).materialized
-      val bandsNew = bandKeys(sigNew.select(col("doc_id"), sigArray))
-      shNew.unionByName(store.digests)
-        .write.mode("overwrite").parquet(s"$tmp/digests.parquet")
-      sigNew.select(col("doc_id"), sigArray, col("nsh"))
-        .unionByName(store.signatures)
-        .write.mode("overwrite").parquet(s"$tmp/signatures.parquet")
-      bandsNew.unionByName(store.bands)
-        .write.mode("overwrite").parquet(s"$tmp/bands.parquet")
-      val touching = incrementalPrepared(shNew, sigNew, bandsNew,
-        store.digests, store.signatures, store.bands, threshold)
+      val kNew = kernelFrame(newDocs, n)
+      foldKernels(kNew.unionByName(store.kernel))
+        .write.mode("overwrite").parquet(s"$tmp/kernel.parquet")
       val star = store.clusters
         .where(col("doc_id") =!= col("cluster_id"))
         .select(col("doc_id").as("a"), col("cluster_id").as("b"))
+      val touching = touchingPairs(kNew, store.kernel, threshold)
       clusters(star.unionByName(touching.select(col("a"), col("b"))))
         .write.mode("overwrite").parquet(s"$tmp/clusters.parquet")
     }

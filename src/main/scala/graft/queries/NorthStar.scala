@@ -224,8 +224,9 @@ object NorthStar {
     // 100 TB: a new 10% drop arrives; the stored assignment (built on
     // the old 90% and served from its own durable store) is updated
     // with ONLY the exact-verified pairs touching new docs. The old
-    // corpus contributes NOTHING but its persisted companion index
-    // (digests + signatures + band keys, written once at store build) —
+    // corpus contributes NOTHING but its persisted kernel frame
+    // (shingle-set sizes, signatures and sorted shingle digests, written
+    // once at store build; band keys are projected from it) —
     // the maintenance path never re-reads or re-shingles old TEXT, so
     // per-batch cost tracks batch size, not corpus size (spec-pinned:
     // every file scan in the maintenance plan reads the store).
@@ -248,7 +249,7 @@ object NorthStar {
 
     // the FULL maintenance cycle: advance the old-90% store by the 10%
     // drop and serve the UPDATED assignment from the published artifacts
-    // (merged digests/signatures/bands + new clusters, one atomic
+    // (merged kernel frame + new clusters, one atomic
     // rename). The oracle is the full-corpus clustering, so store-
     // advance ≡ full recompute is a hash-checked fact; and because the
     // advance never reads old text, this is the end-to-end proof that a

@@ -33,6 +33,15 @@ import org.apache.spark.sql.SparkSession
   * is wanted; this operator is the LAYOUT compaction. */
 object CellCompaction {
 
+  /** Region sort of cells already written under `cfg` ([[graft.BulkLoad
+    * .sorted]]). A salted config's persisted keys already carry their salt
+    * digit, so they are routed by the salt-digit boundaries
+    * ([[graft.operators.RegionSort.saltSplits]]) and never salted again. */
+  private def resorted(cells: org.apache.spark.sql.DataFrame,
+                       cfg: graft.BulkLoad.Config): org.apache.spark.sql.DataFrame =
+    graft.BulkLoad.sorted(cells, cfg.saltBuckets.fold(cfg)(b => cfg.copy(saltBuckets = None,
+      splits = Some(graft.operators.RegionSort.saltSplits(b).toSeq))))
+
   /** Directories named exactly `batch_<digits>` under `root`, sorted by
     * batch id (`batch_00003.quarantine` siblings are NOT cell filesets
     * and must never be swept into a compaction). */
@@ -64,7 +73,7 @@ object CellCompaction {
     if (dirs.isEmpty) return 0
     val cells = spark.read.schema(graft.operators.CellOps.cellSchema)
       .parquet(dirs: _*)
-    graft.SortedParquetCellSink.write(graft.BulkLoad.sorted(cells, cfg), dest)
+    graft.SortedParquetCellSink.write(resorted(cells, cfg), dest)
     if (retireInputs) {
       val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
       dirs.foreach(d => fs.delete(new Path(d), true))
@@ -180,7 +189,7 @@ object CellCompaction {
     // contract every scanner filters on)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(destPath.getParent, s"_minor_tmp_$stamp")
-    graft.SortedParquetCellSink.writeData(graft.BulkLoad.sorted(cells, cfg), tmp.toString)
+    graft.SortedParquetCellSink.writeData(resorted(cells, cfg), tmp.toString)
     installParts(fs, tmp, destPath, stamp)
     CellManifest.update(spark, dest)
     val newestId = newEntries.map(e => batchId(e._1)).max
@@ -333,7 +342,7 @@ object CellCompaction {
       .parquet(dir)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(dirPath.getParent, s"_major_tmp_$stamp")
-    graft.SortedParquetCellSink.writeData(graft.BulkLoad.sorted(cells, cfg), tmp.toString)
+    graft.SortedParquetCellSink.writeData(resorted(cells, cfg), tmp.toString)
     installParts(fs, tmp, dirPath, stamp)
     oldParts.foreach(p => fs.delete(p, false))
     CellManifest.write(spark, dir)

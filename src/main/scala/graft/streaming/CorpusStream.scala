@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * compose the same way: each dropped fileset is a batch against the
   * already-loaded table).
   *
-  * Each batch runs the RELATIONAL signature plan (explode → codegen md5 →
-  * map-side min agg) via `foreachBatch`, so the stream reuses the exact
-  * batch-optimized dataflow; the growing index holds k longs per seen
+  * Each batch runs the per-document MinHash kernel
+  * ([[Dedup.minHashSignatures]]: one pass per document, then a map-side
+  * per-position min per doc_id) and the packed-band touching-pair probe
+  * via `foreachBatch`, so the stream reuses the exact batch dataflow of
+  * [[Dedup.incrementalMinHashPairs]]; the growing index holds k longs per seen
   * document (~0.1% of corpus bytes) and is localCheckpoint-materialized
   * per batch so batch t+1 never recomputes batch t's signatures. At
   * cluster scale the index lives in a Delta/parquet table MERGEd per

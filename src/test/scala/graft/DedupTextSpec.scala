@@ -99,10 +99,10 @@ class DedupTextSpec extends SparkSuite {
     val newDocs = newRows.toDF("doc_id", "text")
     val key = s"incspec-${java.util.UUID.randomUUID()}"
     val store = Dedup.dedupStore(oldDocs, 3, 0.8, key)
-    // all four companion artifacts are persisted by the ONE build
+    // the ONE build persists exactly the assignment and the kernel frame
     def norm(p: String) = p.stripPrefix("file:")
-    for (a <- Seq("clusters", "digests", "signatures", "bands"))
-      assert(new java.io.File(norm(store.dir), s"$a.parquet").exists(), a)
+    assert(new java.io.File(norm(store.dir)).list().toSet ===
+      Set("clusters.parquet", "kernel.parquet"))
     val touching = Dedup.incrementalCorpusDedupStored(newDocs, store, 3, 0.8)
     // the zero-old-text-read pin: every file scan in the maintenance plan
     // reads from UNDER THE STORE (the old corpus' documents.parquet never
@@ -139,17 +139,13 @@ class DedupTextSpec extends SparkSuite {
     val store = Dedup.dedupStore(oldDocs, 3, 0.8, s"advspec-$tag#old")
     val adv = Dedup.dedupStoreAdvance(store, newDocs, 3, 0.8, s"advspec-$tag#all")
     def norm(p: String) = p.stripPrefix("file:")
-    // all four artifacts republished under the new key
-    for (a <- Seq("clusters", "digests", "signatures", "bands"))
+    // both artifacts republished under the new key
+    for (a <- Seq("clusters", "kernel"))
       assert(new java.io.File(norm(adv.dir), s"$a.parquet").exists(), a)
-    // the merged companion index carries old + batch exactly
+    // the merged kernel carries old + batch exactly (disjoint doc_ids)
     val newOnly = Dedup.dedupStore(newDocs, 3, 0.8, s"advspec-$tag#newonly")
-    assert(adv.digests.count() ===
-      store.digests.count() + newOnly.digests.count())
-    assert(adv.signatures.count() ===
-      store.signatures.count() + newOnly.signatures.count())
-    assert(adv.bands.count() ===
-      store.bands.count() + newOnly.bands.count())
+    assert(adv.kernel.count() ===
+      store.kernel.count() + newOnly.kernel.count())
     // advanced assignment equals the full-corpus recompute
     val full = Dedup.clusters(Dedup.corpusDedup(docs, 3, 0.8)
       .select(col("a"), col("b"))).as[(Long, Long)].collect().toMap
@@ -212,9 +208,9 @@ class DedupTextSpec extends SparkSuite {
     val store = Dedup.dedupStore(oldDocs, 3, 0.8,
       s"capspec-${java.util.UUID.randomUUID()}")
     val crossings = Dedup.capCrossings(newDocs, store, 3, cap = 5)
-      .as[(Int, String, Long, Long)].collect()
+      .as[(Int, Long, Long, Long, Long)].collect()
     assert(crossings.nonEmpty)
-    assert(crossings.forall { case (_, _, occOld, occAll) =>
+    assert(crossings.forall { case (_, _, _, occOld, occAll) =>
       occOld === 4L && occAll === 7L })
     assert(crossings.length === Dedup.Bands) // identical docs collide in every band
     // no batch → nothing can cross
@@ -294,13 +290,6 @@ class DedupTextSpec extends SparkSuite {
     val msgs = CapMetrics.warnings(
       pure.queryExecution.observedMetrics, declaredNames(pure))
     assert(msgs.exists(_._1), s"expected a collapse warning, got: $msgs")
-    // the opt-OUT path is metric-free (for metric-averse callers; the
-    // default meters — measured ~+30 ms per candidate pipeline in an
-    // alternating single-JVM A/B)
-    val optOut = Dedup.minHashCandidates(
-      Dedup.minHashSignatures(cohort.toDF("doc_id", "text"), 3),
-      maxBucket = 10, observeCap = false)
-    assert(declaredNames(optOut).isEmpty, "opt-out path must not carry the metric")
     // corpusDedup meters the same generator at the real cap: a cohort of
     // BandBucketCap + 1 identical short docs floods all 8 of its band
     // buckets past the cap. Buckets are grouped rows, but banded_rows /

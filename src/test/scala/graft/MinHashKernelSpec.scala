@@ -80,10 +80,22 @@ class MinHashKernelSpec extends SparkSuite {
         array((0 until Dedup.MinHashK).map(i => col(s"h$i")): _*).as("sig"), col("nsh"))
   }
 
+  /** (doc_id, band, bkey): bkey = md5 of the band's r signature values
+    * joined with '|' — the bucket key the oracle SQL computes. */
+  private def refBandKeys(sigd: DataFrame): DataFrame =
+    sigd.select(col("doc_id"),
+      explode(transform(sequence(lit(0), lit(Dedup.Bands - 1)),
+        j => struct(j.as("band"),
+          md5(concat_ws("|",
+            transform(slice(col("sig"), j * lit(Dedup.RowsPerBand) + lit(1), lit(Dedup.RowsPerBand)),
+              x => x.cast(StringType)))
+            .cast(BinaryType)).as("bkey")))).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+
   private def refCorpusDedup(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
     val sh = refIndex(docs, n).localCheckpoint()
     val sigsz = refSigs(sh)
-    val kept = Dedup.bandKeys(sigsz.select(col("doc_id"), col("sig")))
+    val kept = refBandKeys(sigsz.select(col("doc_id"), col("sig")))
       .withColumn("occ", count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
       .where(col("occ") <= Dedup.BandBucketCap)
     val cand = kept.as("x").join(kept.as("y"),
@@ -186,5 +198,26 @@ class MinHashKernelSpec extends SparkSuite {
     val hits = curve.map(_.getAs[Long]("n_hit")).sum
     assert(hits === rows(ref.where(col("jaccard") >= 0.3)).size)
     assert(curve.map(_.getAs[Long]("n_true")).sum >= hits)
+  }
+
+  test("dedup store: stored kernel = kernelFrame; stored assignment ∪ touching pairs ≡ full clustering") {
+    val docs = corpus(41, 150)
+    val tag = java.util.UUID.randomUUID().toString
+    val store = Dedup.dedupStore(docs, 3, 0.5, s"kernelspec-$tag#all")
+    // one row per doc_id, shared doc_ids folded, shingle-free texts absent
+    val stored = rows(store.kernel)
+    assert(stored === rows(Dedup.kernelFrame(docs, 3)))
+    assert(stored.size === store.kernel.select("doc_id").distinct().count())
+    // maintenance on a doc_id split (rows sharing a doc_id stay on one side)
+    val isNew = pmod(col("doc_id"), lit(4)) === 0
+    val oldStore = Dedup.dedupStore(docs.where(!isNew), 3, 0.5, s"kernelspec-$tag#old")
+    val touching = Dedup.incrementalCorpusDedupStored(docs.where(isNew), oldStore, 3, 0.5)
+    val star = oldStore.clusters.where(col("doc_id") =!= col("cluster_id"))
+      .select(col("doc_id").as("a"), col("cluster_id").as("b"))
+    val got = rows(Dedup.clusters(star.unionByName(touching.select(col("a"), col("b")))))
+    val full = rows(Dedup.clusters(Dedup.corpusDedup(docs, 3, 0.5).select(col("a"), col("b"))))
+    assert(full.nonEmpty)
+    assert(got === full)
+    assert(rows(store.clusters) === full)
   }
 }

@@ -118,6 +118,47 @@ class OrderedExplodeSpec extends SparkSuite {
     assert(pairs === 2 * BulkLoad.csv(spark, in).cells.count())
   }
 
+  test("salted compaction: every entry point routes persisted keys by their salt digit, never re-salting") {
+    val cfg = BulkLoad.Config(saltBuckets = Some(4))
+    val in = uniqueCsv(200)
+    def load(dir: String): Unit = {
+      val r = BulkLoad.csv(spark, in, cfg)
+      r.sink.write(r.cells, dir)
+    }
+    val loaded = tmpDir() + "/batch_00000"
+    load(loaded)
+    val cellsIn = partFiles(loaded).flatMap(_._2)
+    val keysIn = cellsIn.map(_._1.toSeq).toSet
+    assert(keysIn.size === 200 && keysIn.forall(_.length == 65))
+    // 64-byte md5 key + 1 salt digit; one salt region per file, each file
+    // inside its own region, key set and cell count unchanged
+    def check(dir: String, what: String): Unit = {
+      val files = partFiles(dir)
+      val cells = files.flatMap(_._2)
+      assert(cells.forall(_._1.length == 65), s"$what: re-salted keys")
+      assert(cells.size === cellsIn.size, what)
+      assert(cells.map(_._1.toSeq).toSet === keysIn, what)
+      val digits = files.map { case (name, fc) =>
+        val d = fc.map(_._1.head).distinct
+        assert(d.size === 1 && d.head >= '0' && d.head <= '3', s"$what: $name spans regions $d")
+        d.head
+      }
+      assert(digits.distinct.size === files.size, s"$what: two files share a region")
+    }
+    val root1 = tmpDir()
+    load(s"$root1/batch_00000")
+    val dest1 = tmpDir() + "/compacted"
+    assert(CellCompaction.compactBatches(spark, root1, dest1, cfg) === 1)
+    check(dest1, "compactBatches")
+    val root2 = tmpDir()
+    load(s"$root2/batch_00000")
+    val dest2 = s"$root2/serving"
+    assert(CellCompaction.compactMinor(spark, root2, dest2, cfg) === 1)
+    check(dest2, "compactMinor")
+    CellCompaction.compactMajor(spark, dest2, cfg)
+    check(dest2, "compactMajor")
+  }
+
   test("unique keys: the default csv load writes part files byte-identical to the cell-sort path") {
     val in = uniqueCsv(3000)
     val r = BulkLoad.csv(spark, in)
