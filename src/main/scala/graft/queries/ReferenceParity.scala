@@ -309,9 +309,10 @@ object ReferenceParity {
     }),
 
     // the same SCAN through the SQL-facing source: spark.read
-    // .format("graft-cells") + a WHERE on `row` — the V1 pushdown hands
-    // the binary range to the relation (vanilla parquet pushes no
-    // binary predicates), which prunes region files via the manifest
+    // .format("graft-cells") + a WHERE on `row` — the DSv2 scan builder's
+    // filter pushdown hands the binary range to CellScan.scanRange
+    // (vanilla parquet pushes no binary predicates), which prunes region
+    // files via the manifest
     "cells_scan_sql" -> ((s, dir) => {
       val path = cellScanTable(s, dir)
       hexBin(s.read.format("graft-cells").load(path)

@@ -135,50 +135,23 @@ object CellCompaction {
     val ledger = new Path(destPath, AbsorbedLedger)
     val absorbed = readLedger(fs, ledger)
     val (replayed, dirs) = all.partition(d => absorbed.contains(new Path(d).getName))
+    // a replay re-lands the same content, so its fingerprint equals the
+    // recorded one; anything else under an absorbed id is new data (a
+    // checkpoint reset, or a second stream compacting into this dest):
+    // fail loudly, before any dir is retired
     replayed.foreach { d =>
       val dp = new Path(d)
       val recorded = absorbed(dp.getName)
-      // three generations of ledger entries:
-      //  - name-only ("")     — predate fingerprints; retire on name alone
-      //  - bare hex           — written by earlier fingerprint FORMATS
-      //    (lengths-only, or unversioned tuples); indistinguishable from
-      //    each other, so a mismatch against today's format proves
-      //    nothing — retire on name with a warning (the pre-upgrade
-      //    guarantee), never wedge the sweep on a format change
-      //  - "v2:"-prefixed     — today's content fingerprint; a mismatch
-      //    here IS new data under a reused batch id: fail loudly
-      if (recorded.startsWith(FingerprintVersion)) {
-        val found = fingerprint(fs, dp)
-        if (found != recorded)
-          throw new IllegalStateException(
-            s"batch dir ${dp.getName} carries an already-absorbed batch id but " +
-              s"DIFFERENT content (ledger fingerprint $recorded, found $found) — " +
-              "not a streaming replay (checkpoint reset with new data, or a " +
-              "second stream compacting into this dest?). Refusing to retire it; " +
-              "compact into a fresh dest.")
-      } else if (recorded.nonEmpty) {
-        // bare-hex entry: written either by the immediately prior release
-        // (the SAME md5 tuple body as today's fingerprint, just without
-        // the version prefix) or by the older lengths-only format. The
-        // prior-release case is directly VERIFIABLE — compare against
-        // today's fingerprint with the prefix stripped: a match PROVES
-        // the replay and retires silently with the full content
-        // guarantee (pre-fix, every bare-hex entry skipped verification
-        // outright). A mismatch proves nothing on its own — it is either
-        // the lengths-only era (true replay, different formula) or new
-        // data under a reused id — so it keeps the pre-upgrade
-        // warn-and-retire-on-name behavior rather than wedging every
-        // lengths-only upgrade; the warning now names the reset risk.
-        val found = fingerprint(fs, dp).stripPrefix(FingerprintVersion)
-        if (found != recorded)
-          System.err.println(s"[graft] compactMinor: ledger entry for " +
-            s"${dp.getName} carries a pre-versioned fingerprint that does not " +
-            "match today's format (lengths-only era, or new data under a " +
-            "reused batch id); retiring the replay on batch id alone — if " +
-            "this followed a checkpoint reset with new data, use a fresh dest")
-      }
-      fs.delete(dp, true)
+      val found = fingerprint(fs, dp)
+      if (found != recorded)
+        throw new IllegalStateException(
+          s"batch dir ${dp.getName} carries an already-absorbed batch id but " +
+            s"DIFFERENT content (ledger fingerprint $recorded, found $found) — " +
+            "not a streaming replay (checkpoint reset with new data, or a " +
+            "second stream compacting into this dest?). Refusing to retire it; " +
+            "compact into a fresh dest.")
     }
+    replayed.foreach(d => fs.delete(new Path(d), true))
     if (dirs.isEmpty) return 0
     // fingerprint the inputs BEFORE they move (they are deleted below)
     val newEntries = dirs.map(d => new Path(d).getName -> fingerprint(fs, new Path(d)))
@@ -186,7 +159,7 @@ object CellCompaction {
       .parquet(dirs: _*)
     // land the merged fileset beside dest, then move the part files in
     // under round-unique names (still part-*.parquet — the flat-layout
-    // contract every scanner filters on)
+    // rule, CellManifest.partFiles, every reader lists by)
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     val tmp = new Path(destPath.getParent, s"_minor_tmp_$stamp")
     graft.SortedParquetCellSink.writeData(resorted(cells, cfg), tmp.toString)
@@ -200,12 +173,17 @@ object CellCompaction {
   }
 
   /** The absorbed-batch ledger's file name under a minor-compaction
-    * serving dir (not `part-*` — every scanner's flat-layout filter
-    * ignores it). */
+    * serving dir (not `part-*` — [[CellManifest.partFiles]] ignores
+    * it). */
   val AbsorbedLedger = "_absorbed"
 
   private def batchId(name: String): Long =
     name.stripPrefix("batch_").toLong
+
+  /** Ledger fingerprint FORMAT version, bumped whenever [[fingerprint]]'s
+    * input tuple changes. A recorded value of any other format never
+    * equals today's fingerprint, so its replay check fails loudly. */
+  private[graft] val FingerprintVersion = "v2:"
 
   /** Content fingerprint of a landed batch fileset: md5 over the SORTED
     * per-file (length, rowCount, loKeyHex, hiKeyHex) tuples — names
@@ -214,39 +192,25 @@ object CellCompaction {
     * enough: a checkpoint-reset batch whose NEW data coincidentally lands
     * the same sorted length multiset would be indistinguishable from a
     * replay and silently retired; row counts and row-key bounds are
-    * content-derived and free (the batch's own manifest already records
-    * them — one small-file read; a missing/stale manifest entry costs one
-    * footer open for that file only, metadata pages, no data read). */
-  /** Ledger fingerprint FORMAT version. Bumped whenever [[fingerprint]]'s
-    * input tuple changes: a recorded value from a different format is
-    * unverifiable (not wrong), and the replay check degrades to
-    * name-based retirement for it instead of wedging the sweep. */
-  private[graft] val FingerprintVersion = "v2:"
-
+    * content-derived and free (they come from [[CellScan]]'s metadata
+    * walk: the batch's own manifest — one small-file read — or one
+    * footer open per file the manifest cannot vouch for, metadata pages,
+    * no data read). */
   private[graft] def fingerprint(fs: org.apache.hadoop.fs.FileSystem,
                                  dir: Path): String = {
-    val conf = fs.getConf
-    val manifest = CellManifest.read(conf, dir.toString).getOrElse(Map.empty)
-    val sigs = fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val len = s.getLen
-        val (rows, bounds) = manifest.get(s.getPath.getName)
-          .filter(e => e.length == len && e.rows >= 0) match {
-          case Some(e) => (e.rows, e.bounds)
-          case None    => CellManifest.footerStats(s.getPath.toString, conf)
-        }
-        val b = bounds.map { case (lo, hi) =>
+    val sigs = CellScan.regionFiles(fs.getConf, dir.toString).getOrElse(Seq.empty)
+      .map { f =>
+        val b = f.bounds.map { case (lo, hi) =>
           CellManifest.toHex(lo) + "/" + CellManifest.toHex(hi) }.getOrElse("-")
-        s"$len:$rows:$b"
+        s"${f.length}:${f.rows}:$b"
       }.sorted
     val body = sigs.length + ":" + sigs.mkString(",")
     FingerprintVersion + java.security.MessageDigest.getInstance("MD5")
       .digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  /** name → fingerprint ("" for legacy name-only lines). Falls back to
+  /** name → fingerprint ("" for a line without one, which therefore
+    * matches no batch's fingerprint). Falls back to
     * the temp sibling when a crash landed between the old ledger's
     * retirement and the new one's rename-in. Lines whose name is not a
     * `batch_<digits>` id are DROPPED: such a name can never match a batch
@@ -296,23 +260,19 @@ object CellCompaction {
   }
 
   /** Move tmp's part files into `dest` under round-unique stamped names
-    * (still `part-*.parquet` — the flat-layout contract every scanner
-    * filters on), then drop tmp. A failed rename aborts LOUDLY before
+    * (still `part-*.parquet` — [[CellManifest.partFiles]], the rule
+    * every reader lists by), then drop tmp. A failed rename aborts LOUDLY before
     * any old data is retired — the caller's install-first/delete-second
     * ordering depends on it. */
   private def installParts(fs: org.apache.hadoop.fs.FileSystem,
                            tmp: Path, dest: Path, stamp: String): Unit = {
-    fs.listStatus(tmp)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .zipWithIndex.foreach { case (s, i) =>
-        val to = new Path(dest, f"part-$stamp-$i%05d.parquet")
-        if (!fs.rename(s.getPath, to))
-          throw new java.io.IOException(
-            s"compaction install failed: rename ${s.getPath} -> $to " +
-              "(no old file has been retired; the serving dir is intact)")
-      }
+    CellManifest.partFiles(fs, tmp).zipWithIndex.foreach { case (s, i) =>
+      val to = new Path(dest, f"part-$stamp-$i%05d.parquet")
+      if (!fs.rename(s.getPath, to))
+        throw new java.io.IOException(
+          s"compaction install failed: rename ${s.getPath} -> $to " +
+            "(no old file has been retired; the serving dir is intact)")
+    }
     fs.delete(tmp, true)
   }
 
@@ -333,10 +293,7 @@ object CellCompaction {
     val hc = spark.sessionState.newHadoopConf()
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(hc)
-    val oldParts = fs.listStatus(dirPath)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
+    val oldParts = CellManifest.partFiles(fs, dirPath).map(_.getPath)
     if (oldParts.isEmpty) return
     val cells = spark.read.schema(graft.operators.CellOps.cellSchema)
       .parquet(dir)

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.operators.RegionSort
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
@@ -37,27 +37,28 @@ import scala.jdk.CollectionConverters._
   * live footer stats instead of trusting stale bounds. The ROW COUNT
   * rides along because the same footer open yields it for free, and it
   * turns the streaming sink's per-batch count readback into one
-  * manifest read instead of N footer opens. Legacy 3-field lines (no
-  * length/rows) parse with −1 = unverifiable, trusted as before. The
-  * leading underscore keeps the file invisible to Spark's parquet
-  * source, so `spark.read.parquet(dir)` over the staged layout is
-  * unchanged.
+  * manifest read instead of N footer opens. Damaged lines parse to
+  * −1 = unverifiable, which no reader trusts. The leading underscore
+  * keeps the file invisible to Spark's parquet source, so
+  * `spark.read.parquet(dir)` over the staged layout is unchanged.
   *
   * Trust contract: the manifest is advisory metadata maintained by the
   * sink that wrote the directory. Readers intersect it with the live
-  * file listing — a part file missing from the manifest is kept
-  * unpruned, stale entries for deleted files are never consulted, and a
-  * listed file whose live length disagrees with the recorded one is
-  * re-statted from its own footer — so a manually modified directory
-  * degrades to weaker pruning, never to wrong results. (The one residual
-  * trust assumption: a same-name, same-LENGTH in-place rewrite with
-  * different contents is indistinguishable without checksums.) */
+  * file listing ([[CellScan]]'s one metadata walk): an entry is used
+  * only when it is listed, its recorded length matches the live file
+  * and it carries a row count; a part file missing from the manifest,
+  * rewritten in place or with a damaged entry is statted from its own
+  * footer, and stale entries for deleted files are never consulted — so
+  * a manually modified directory costs footer opens, never wrong
+  * results. (The one residual trust assumption: a same-name,
+  * same-LENGTH in-place rewrite with different contents is
+  * indistinguishable without checksums.) */
 object CellManifest {
 
   val FileName = "_graft_region_manifest.tsv"
 
   /** One manifest line: recorded file length and row count (−1 =
-    * unknown, legacy format) and row bounds (None = stat-less, keep
+    * unknown: a damaged line) and row bounds (None = stat-less, keep
     * conservatively). */
   final case class Entry(length: Long, rows: Long,
                          bounds: Option[(Array[Byte], Array[Byte])])
@@ -78,8 +79,7 @@ object CellManifest {
     val hc = spark.sessionState.newHadoopConf()
     val p = new Path(dir)
     val fs = p.getFileSystem(hc)
-    val files = listParts(spark, dir)
-    persist(fs, p, statFiles(spark, dir, files))
+    persist(fs, p, statFiles(spark, dir, listParts(fs, p)))
   }
 
   /** INCREMENTAL manifest maintenance: stat ONLY the part files that are
@@ -95,7 +95,7 @@ object CellManifest {
     val p = new Path(dir)
     val fs = p.getFileSystem(hc)
     val existing = read(spark, dir).getOrElse(Map.empty)
-    val live = listParts(spark, dir)
+    val live = listParts(fs, p)
     val (kept, fresh) = live.partition { case (name, len) =>
       existing.get(name).exists(e => e.length == len)
     }
@@ -109,21 +109,24 @@ object CellManifest {
   /** Total recorded row count across the manifest's files, if EVERY
     * entry carries one — the no-Spark-job, no-footer-open count readback
     * for a directory this sink just wrote. None when the manifest is
-    * absent or any entry predates the rows field. */
+    * absent or any entry is damaged. */
   def totalRows(spark: SparkSession, dir: String): Option[Long] =
     read(spark, dir).filter(m => m.nonEmpty && m.values.forall(_.rows >= 0))
       .map(_.values.map(_.rows).sum)
 
-  /** Live `part-*.parquet` files under `dir` as (name, length), sorted. */
-  private def listParts(spark: SparkSession, dir: String): Seq[(String, Long)] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).toSeq
+  /** The flat region files of a staged directory: the `part-*.parquet`
+    * files directly under `dir`, sorted by name. Every reader, the
+    * manifest and compaction list the layout through this one rule;
+    * anything else in the directory (the manifest, the `_absorbed`
+    * ledger, temps, nested dirs) is not a region file. */
+  private[sources] def partFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
         s.getPath.getName.endsWith(".parquet"))
-      .map(s => (s.getPath.getName, s.getLen))
-      .sortBy(_._1)
-  }
+      .sortBy(_.getPath.getName)
+
+  private def listParts(fs: FileSystem, dir: Path): Seq[(String, Long)] =
+    partFiles(fs, dir).map(s => (s.getPath.getName, s.getLen))
 
   /** Driver-side footer opens are metadata latency (a few ms each), not
     * CPU: they overlap on this small bounded pool of daemon threads. */
@@ -288,8 +291,7 @@ object CellManifest {
 
   /** Parse the manifest if present: part-file name → [[Entry]]. Returns
     * None when the directory carries no manifest — callers fall back to
-    * footer reads. 3-field lines (the legacy format, indistinguishable
-    * from a torn 5-field line) parse to the conservative no-stats entry.
+    * footer reads.
     *
     * TRUST CONTRACT — a damaged manifest degrades, never aborts. Two
     * distinct failure layers, both covered:
@@ -300,13 +302,14 @@ object CellManifest {
     *     "no manifest at all", which [[CellScan]] already handles.
     *   - parse-level corruption (wrong arity, truncated number, bad
     *     hex): the damaged LINE maps to the conservative
-    *     Entry(-1,-1,None) — weaker pruning + a live re-stat for that
-    *     file only. */
+    *     Entry(-1,-1,None) — a live footer re-stat for that file
+    *     only. */
   def read(spark: SparkSession, dir: String): Option[Map[String, Entry]] =
     read(spark.sessionState.newHadoopConf(), dir)
 
   /** Configuration-based variant (no SparkSession) — usable from executor
-    * tasks and non-Spark call sites (the compaction replay fingerprint). */
+    * tasks and non-Spark call sites ([[CellScan]]'s metadata walk, which
+    * the compaction replay fingerprint runs without a session). */
   private[graft] def read(conf: Configuration, dir: String): Option[Map[String, Entry]] =
     scala.util.Try(readOrThrow(conf, dir)).toOption.flatten
 
@@ -345,19 +348,11 @@ object CellManifest {
     Some((terminated.iterator.map { line =>
       // any damaged field (wrong arity, truncated number, bad hex) maps
       // to the conservative Entry(-1, -1, None) — a corrupted manifest
-      // degrades to weaker pruning + a live re-stat, never to an aborted
+      // degrades to a live footer re-stat, never to an aborted
       // scan (the directory's trust contract)
       val fields = line.split('\t')
       val parsed = scala.util.Try {
         fields match {
-          // a 3-field line is AMBIGUOUS: it is either the legacy bounds
-          // format (name, loHex, hiHex) or a 5-field line torn after the
-          // rows field (decimal lengths parse as valid hex!) — trusting
-          // bounds from it could prune a live file on garbage, so both
-          // readings collapse to the conservative no-stats entry (the
-          // file is kept and re-statted; legacy dirs lose manifest
-          // pruning, never rows)
-          case Array(name, _, _) => name -> Entry(-1L, -1L, None)
           case Array(name, len, rows, "-", "-") =>
             name -> Entry(len.toLong, rows.toLong, None)
           case Array(name, len, rows, lo, hi) =>
@@ -369,14 +364,10 @@ object CellManifest {
       line.split('\t').head -> Entry(-1L, -1L, None))).toMap)
   }
 
-  /** Unsigned min/max of the `row` column across a file's row groups,
-    * from the parquet footer only (no data pages read). None when any
-    * row group lacks exact stats. Standalone-Configuration variant of
-    * [[CellScan.rowStats]] so it runs inside executor tasks. */
-  private[graft] def footerRowStats(file: String, conf: Configuration)
-      : Option[(Array[Byte], Array[Byte])] = footerStats(file, conf)._2
-
-  /** (record count, row bounds) from ONE footer open. */
+  /** (record count, unsigned min/max of the `row` column across the
+    * file's row groups) from ONE footer open — metadata pages only, no
+    * data read. Bounds are None when any row group lacks exact stats.
+    * Takes a plain Configuration so it runs inside executor tasks. */
   private[graft] def footerStats(file: String, conf: Configuration)
       : (Long, Option[(Array[Byte], Array[Byte])]) = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))

@@ -1,8 +1,9 @@
 package graft.sources
 
 import graft.operators.RegionSort
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** HBase-SCAN analog over a staged cell directory: a row-range read that
@@ -29,25 +30,35 @@ import org.apache.spark.sql.functions._
   * Files without usable `row` stats are conservatively kept — pruning is
   * an optimization, never a correctness gate.
   *
-  * Boundary metadata, in preference order:
+  * Every read — scan, get, multi-get, count, the metadata aggregates and
+  * the compaction replay fingerprint — runs on ONE metadata walk
+  * ([[regionFiles]]). Per live file, in preference order:
   *  1. the sink-written [[CellManifest]] (`_graft_region_manifest.tsv`) —
   *     ONE small file read, the META-lookup analog; at 100k regions this
   *     is the only shape that keeps a point scan a point scan;
-  *  2. per-file footer min/max read on the driver — correct fallback for
-  *     directories written before the manifest existed;
+  *  2. the file's own footer, read on the driver, when its manifest
+  *     entry is missing, stale (recorded length ≠ live length) or
+  *     damaged (no row count) — or when there is no manifest at all;
   *  3. no flat `part-*.parquet` layout at all (nested/partitioned
   *     parquet) → an unpruned `spark.read.parquet(dir)` with the residual
   *     range filter: pruning silently disabled, results still right. */
 object CellScan {
 
-  /** Driver-side footer opens performed by this object — observable so
-    * tests can pin "manifest present ⇒ zero footer reads". */
+  /** Driver-side footer opens performed by the metadata walk —
+    * observable so tests can pin "manifest present ⇒ zero footer reads". */
   val footerOpens = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Region files kept by the most recent [[scanRange]] prune (-1 before
-    * any scan; flat-layout scans only) — observable so tests can pin the
-    * pruning itself, independent of how Spark packs files into splits. */
+  /** Region files kept by the most recent pruned read ([[scanRange]],
+    * [[multiGet]]; -1 before any; flat-layout reads only) — observable so
+    * tests can pin the pruning itself, independent of how Spark packs
+    * files into splits. */
   val lastKeptFiles = new java.util.concurrent.atomic.AtomicLong(-1L)
+
+  /** One live region file: path, live byte length, row count and unsigned
+    * [lo, hi] row-key bounds (None = no exact stats). */
+  private[sources] final case class RegionFile(
+      path: String, length: Long, rows: Long,
+      bounds: Option[(Array[Byte], Array[Byte])])
 
   /** Point GET — the HBase `Get` analog: exactly the cells of one row
     * key. The stop bound is the key's immediate unsigned successor
@@ -62,50 +73,8 @@ object CellScan {
   /** [startRow, stopRow) range scan; None = unbounded on that side. */
   def scanRange(spark: SparkSession, dir: String,
                 startRow: Option[Array[Byte]],
-                stopRow: Option[Array[Byte]]): DataFrame = {
-    val fromStart = startRow.map(s => col("row") >= lit(s)).getOrElse(lit(true))
-    val toStop = stopRow.map(e => col("row") < lit(e)).getOrElse(lit(true))
-    val all = partFiles(spark, dir)
-    if (all.isEmpty)
-      // Not the flat staged layout this scanner understands (nested or
-      // hive-partitioned parquet): pruning is an optimization, never a
-      // correctness gate — read everything, filter in codegen.
-      return spark.read.parquet(dir).where(fromStart && toStop)
-    val manifest = CellManifest.read(spark, dir)
-    def bounds(f: String, liveLen: Long): Option[(Array[Byte], Array[Byte])] =
-      manifest match {
-        // manifest is authoritative when present AND the recorded length
-        // matches the live file (or is unknown — legacy format); a length
-        // MISMATCH means the file was rewritten in place under the same
-        // name, so its recorded bounds may be stale — re-stat from the
-        // live footer rather than risk pruning a file that now matches.
-        // A file the manifest does not list (externally added) is kept
-        // conservatively; stale entries for deleted files are never
-        // consulted.
-        case Some(m) => m.get(new Path(f).getName) match {
-          case Some(e) if e.length < 0 || e.length == liveLen => e.bounds
-          case Some(_) => rowStats(spark, f) // in-place rewrite detected
-          case None => None
-        }
-        case None => rowStats(spark, f)
-      }
-    val kept = all.collect { case (f, liveLen) if (
-      bounds(f, liveLen) match {
-        case Some((lo, hi)) =>
-          // keep iff [lo, hi] intersects [start, stop)
-          startRow.forall(s => RegionSort.unsignedBytes.compare(hi, s) >= 0) &&
-            stopRow.forall(e => RegionSort.unsignedBytes.compare(lo, e) < 0)
-        case None => true // no stats → cannot prune safely
-      }) => f
-    }
-    lastKeptFiles.set(kept.size.toLong)
-    val base =
-      if (kept.isEmpty)
-        spark.read.schema(graft.operators.CellOps.cellSchema).parquet(dir)
-          .where(lit(false))
-      else spark.read.parquet(kept: _*)
-    base.where(fromStart && toStop)
-  }
+                stopRow: Option[Array[Byte]]): DataFrame =
+    pruned(spark, dir, inRange(startRow, stopRow))(intersects(startRow, stopRow))
 
   /** Prefix scan: all rows whose key starts with `prefix` — the
     * [prefix, prefix+1) range (HBase `PrefixFilter` + scan-range setup). */
@@ -127,39 +96,44 @@ object CellScan {
     * frame with the cell schema. */
   def multiGet(spark: SparkSession, dir: String,
                keys: Seq[Array[Byte]]): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    if (keys.isEmpty)
-      return spark.read.schema(graft.operators.CellOps.cellSchema)
-        .parquet(dir).where(lit(false))
-    val inSet = keys.map(k => col("row") === lit(k)).reduce(_ || _)
-    val all = partFiles(spark, dir)
-    if (all.isEmpty) return spark.read.parquet(dir).where(inSet)
-    val manifest = CellManifest.read(spark, dir)
-    def bounds(f: String, liveLen: Long): Option[(Array[Byte], Array[Byte])] =
-      manifest match {
-        case Some(m) => m.get(new Path(f).getName) match {
-          case Some(e) if e.length < 0 || e.length == liveLen => e.bounds
-          case Some(_) => rowStats(spark, f) // in-place rewrite detected
-          case None => None
-        }
-        case None => rowStats(spark, f)
-      }
-    val kept = all.collect { case (f, liveLen) if (
-      bounds(f, liveLen) match {
-        case Some((lo, hi)) => keys.exists(k =>
-          RegionSort.unsignedBytes.compare(k, lo) >= 0 &&
-            RegionSort.unsignedBytes.compare(k, hi) <= 0)
-        case None => true // no stats → cannot prune safely
-      }) => f
+    val cmp = RegionSort.unsignedBytes
+    val inSet = keys.map(k => col("row") === lit(k)).reduceOption(_ || _)
+      .getOrElse(lit(false))
+    pruned(spark, dir, inSet) { case (lo, hi) =>
+      keys.exists(k => cmp.compare(k, lo) >= 0 && cmp.compare(k, hi) <= 0)
     }
-    lastKeptFiles.set(kept.size.toLong)
-    val base =
-      if (kept.isEmpty)
-        spark.read.schema(graft.operators.CellOps.cellSchema).parquet(dir)
-          .where(lit(false))
-      else spark.read.parquet(kept: _*)
-    base.where(inSet)
   }
+
+  /** The one pruned read: keep a region file iff it has no bounds or its
+    * bounds pass `keep`, then apply the `residual` filter in codegen (so
+    * results never depend on the pruning). A layout the walk does not
+    * understand is read whole under the same residual. */
+  private def pruned(spark: SparkSession, dir: String, residual: Column)(
+      keep: ((Array[Byte], Array[Byte])) => Boolean): DataFrame =
+    regionFiles(spark, dir) match {
+      case None => spark.read.parquet(dir).where(residual)
+      case Some(files) =>
+        val kept = files.filter(_.bounds.forall(keep)).map(_.path)
+        lastKeptFiles.set(kept.size.toLong)
+        val base =
+          if (kept.isEmpty)
+            spark.read.schema(graft.operators.CellOps.cellSchema).parquet(dir)
+              .where(lit(false))
+          else spark.read.parquet(kept: _*)
+        base.where(residual)
+    }
+
+  /** The [startRow, stopRow) residual filter (binary ordering is unsigned). */
+  private def inRange(startRow: Option[Array[Byte]],
+                      stopRow: Option[Array[Byte]]): Column =
+    startRow.map(s => col("row") >= lit(s)).getOrElse(lit(true)) &&
+      stopRow.map(e => col("row") < lit(e)).getOrElse(lit(true))
+
+  /** [lo, hi] intersects [startRow, stopRow). */
+  private def intersects(startRow: Option[Array[Byte]], stopRow: Option[Array[Byte]])(
+      b: (Array[Byte], Array[Byte])): Boolean =
+    startRow.forall(s => RegionSort.unsignedBytes.compare(b._2, s) >= 0) &&
+      stopRow.forall(e => RegionSort.unsignedBytes.compare(b._1, e) < 0)
 
   /** Smallest key strictly greater than every key with this prefix:
     * increment the last non-0xff byte, dropping the tail (all-0xff →
@@ -172,28 +146,15 @@ object CellScan {
   }
 
   /** EXACT row count of a staged cell directory from METADATA only —
-    * no data pages read, no Spark job: live part files × (manifest
-    * `rows` when the entry is FRESH — recorded length matches the live
-    * file — else one footer open for the file's record count). The trust
-    * rules are [[scanRange]]'s exactly: an unlisted or in-place-rewritten
-    * file falls back to its own footer, a deleted file's stale entry is
-    * never consulted, so the count always describes the LIVE fileset.
-    * None for layouts this scanner doesn't understand (nested /
-    * hive-partitioned) — the caller scans instead. At 100 TB this is the
-    * difference between a `SELECT count(*)` that reads every region file
-    * and one answered from ~100k manifest lines. */
+    * no data pages read, no Spark job: the sum of the metadata walk's
+    * per-file row counts, so the count always describes the LIVE
+    * fileset under the same trust rules every scan uses. None for
+    * layouts this scanner doesn't understand (nested / hive-partitioned)
+    * — the caller scans instead. At 100 TB this is the difference
+    * between a `SELECT count(*)` that reads every region file and one
+    * answered from ~100k manifest lines. */
   def countRows(spark: SparkSession, dir: String): Option[Long] =
-    metaStats(spark, dir).map(_._1)
-
-  /** EXACT global MIN/MAX of the `row` key from the same metadata walk:
-    * fold of per-file [lo, hi] bounds (manifest when fresh, footer
-    * statistics otherwise). None when any live file lacks usable bounds
-    * — like the scan's pruning, metadata answers are an optimization,
-    * never a correctness gamble. Empty tables have no min/max → None
-    * (the caller's ordinary aggregate returns SQL NULL from a scan). */
-  def rowBoundsExact(spark: SparkSession, dir: String)
-      : Option[(Array[Byte], Array[Byte])] =
-    metaStats(spark, dir).filter(_._1 > 0).flatMap(_._2)
+    regionFiles(spark, dir).map(_.map(_.rows).sum)
 
   /** EXACT row count of the [startRow, stopRow) key range: region files
     * FULLY inside the range contribute their metadata row count (no data
@@ -205,88 +166,66 @@ object CellScan {
     * doesn't understand. */
   def countRowsInRange(spark: SparkSession, dir: String,
                        startRow: Option[Array[Byte]],
-                       stopRow: Option[Array[Byte]]): Option[Long] = {
-    val all = partFiles(spark, dir)
-    if (all.isEmpty) return None
-    val manifest = CellManifest.read(spark, dir)
-    val hc = spark.sessionState.newHadoopConf()
-    val cmp = RegionSort.unsignedBytes
-    var contained = 0L
-    val straddling = scala.collection.mutable.ArrayBuffer.empty[String]
-    all.foreach { case (f, liveLen) =>
-      val (rows, bounds) = manifest.flatMap(_.get(new Path(f).getName))
-        .collect { case e if (e.length < 0 || e.length == liveLen) && e.rows >= 0 =>
-          (e.rows, e.bounds) }
-        .getOrElse { footerOpens.incrementAndGet(); CellManifest.footerStats(f, hc) }
-      bounds match {
-        case _ if rows == 0L => () // nothing to count either way
-        case Some((lo, hi))
-          if startRow.exists(s => cmp.compare(hi, s) < 0) ||
-             stopRow.exists(e => cmp.compare(lo, e) >= 0) => () // outside
-        case Some((lo, hi))
-          if startRow.forall(s => cmp.compare(lo, s) >= 0) &&
-             stopRow.forall(e => cmp.compare(hi, e) < 0) => contained += rows
-        case _ => straddling += f // boundary file, or no usable bounds
-      }
-    }
-    val boundary =
-      if (straddling.isEmpty) 0L
-      else {
-        val fromStart = startRow.map(s => col("row") >= lit(s)).getOrElse(lit(true))
-        val toStop = stopRow.map(e => col("row") < lit(e)).getOrElse(lit(true))
-        spark.read.parquet(straddling.toSeq: _*).where(fromStart && toStop).count()
-      }
-    Some(contained + boundary)
-  }
-
-  /** One metadata walk: (total rows, folded [lo, hi] bounds — None when
-    * any file lacks them). Manifest entries are trusted under
-    * [[scanRange]]'s freshness rule; everything else opens one footer. */
-  private[sources] def metaStats(spark: SparkSession, dir: String)
-      : Option[(Long, Option[(Array[Byte], Array[Byte])])] = {
-    val all = partFiles(spark, dir)
-    if (all.isEmpty) None
-    else {
-      val manifest = CellManifest.read(spark, dir)
-      val hc = spark.sessionState.newHadoopConf()
+                       stopRow: Option[Array[Byte]]): Option[Long] =
+    regionFiles(spark, dir).map { files =>
       val cmp = RegionSort.unsignedBytes
-      val perFile = all.map { case (f, liveLen) =>
-        manifest.flatMap(_.get(new Path(f).getName))
-          .collect { case e if (e.length < 0 || e.length == liveLen) && e.rows >= 0 =>
-            (e.rows, e.bounds) }
-          .getOrElse { footerOpens.incrementAndGet(); CellManifest.footerStats(f, hc) }
-      }
-      val total = perFile.map(_._1).sum
-      val bounds = perFile.filter(_._1 > 0).map(_._2) match {
-        case bs if bs.nonEmpty && bs.forall(_.isDefined) =>
-          val known = bs.flatten
-          val ord = scala.math.Ordering.comparatorToOrdering(cmp)
-          Some((known.map(_._1).min(ord), known.map(_._2).max(ord)))
-        case _ => None
-      }
-      Some((total, bounds))
+      val touched = files.filter(f =>
+        f.rows > 0 && f.bounds.forall(intersects(startRow, stopRow)))
+      val (inside, straddling) = touched.partition(_.bounds.exists { case (lo, hi) =>
+        startRow.forall(s => cmp.compare(lo, s) >= 0) &&
+          stopRow.forall(e => cmp.compare(hi, e) < 0)
+      })
+      inside.map(_.rows).sum +
+        (if (straddling.isEmpty) 0L
+         else spark.read.parquet(straddling.map(_.path): _*)
+           .where(inRange(startRow, stopRow)).count())
     }
-  }
 
-  /** (path, live byte length) of the flat region files — the length
-    * rides along so the manifest's recorded length can be validated
-    * without a second listing. */
-  private def partFiles(spark: SparkSession, dir: String): Seq[(String, Long)] = {
+  /** (total rows, folded [lo, hi] bounds) from the metadata walk. The
+    * bounds are None when any non-empty file lacks them, or the table
+    * is empty. */
+  private[sources] def metaStats(spark: SparkSession, dir: String)
+      : Option[(Long, Option[(Array[Byte], Array[Byte])])] =
+    regionFiles(spark, dir).map { files =>
+      val ord = scala.math.Ordering.comparatorToOrdering(RegionSort.unsignedBytes)
+      val bs = files.filter(_.rows > 0).map(_.bounds)
+      val bounds =
+        if (bs.isEmpty || bs.exists(_.isEmpty)) None
+        else {
+          val known = bs.flatten
+          Some((known.map(_._1).min(ord), known.map(_._2).max(ord)))
+        }
+      (files.map(_.rows).sum, bounds)
+    }
+
+  private[sources] def regionFiles(spark: SparkSession,
+                                   dir: String): Option[Seq[RegionFile]] =
+    regionFiles(spark.sessionState.newHadoopConf(), dir)
+
+  /** THE metadata walk: the live flat region files of `dir` with their
+    * row counts and bounds; None when `dir` has no flat `part-*.parquet`
+    * files. A file's manifest entry is used iff it is listed, its
+    * recorded length equals the live length (a mismatch means an in-place
+    * rewrite) and it carries a row count (a damaged line does not);
+    * otherwise the file's own footer is opened once, counted in
+    * [[footerOpens]]. Stale entries for deleted files are never
+    * consulted. */
+  private[sources] def regionFiles(conf: Configuration,
+                                   dir: String): Option[Seq[RegionFile]] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-      .map(s => (s.getPath.toString, s.getLen))
-  }
-
-  /** Unsigned min/max of the `row` column across a file's row groups,
-    * from the parquet footer only (no data pages read). None when any
-    * row group lacks exact stats. */
-  private[sources] def rowStats(spark: SparkSession,
-                                file: String): Option[(Array[Byte], Array[Byte])] = {
-    footerOpens.incrementAndGet()
-    CellManifest.footerRowStats(file, spark.sessionState.newHadoopConf())
+    val live = CellManifest.partFiles(p.getFileSystem(conf), p)
+    if (live.isEmpty) None
+    else {
+      val manifest = CellManifest.read(conf, dir).getOrElse(Map.empty)
+      Some(live.map { s =>
+        val (rows, bounds) = manifest.get(s.getPath.getName)
+          .filter(e => e.length == s.getLen && e.rows >= 0)
+          .fold {
+            footerOpens.incrementAndGet()
+            CellManifest.footerStats(s.getPath.toString, conf)
+          }(e => (e.rows, e.bounds))
+        RegionFile(s.getPath.toString, s.getLen, rows, bounds)
+      })
+    }
   }
 }

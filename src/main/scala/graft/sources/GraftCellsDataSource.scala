@@ -44,8 +44,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * rule). Overwrite mode only — HFile staging directories are
   * write-once-then-adopt, append has no bulk-load meaning.
   */
-class GraftCellsDataSource extends TableProvider with DataSourceRegister
-    with org.apache.spark.sql.sources.RelationProvider {
+class GraftCellsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-cells"
 
   /** Write-side schema is the engine-wide cell contract. */
@@ -59,23 +58,11 @@ class GraftCellsDataSource extends TableProvider with DataSourceRegister
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
     new GraftCellsTable(schema, properties)
-
-  /** Legacy V1 read seam: kept so `spark.sql.sources.useV1SourceList`
-    * can force the old path; the default read route is the DSv2 scan on
-    * [[GraftCellsTable]] (same [[CellScan]] execution, same pushdown
-    * rules — ONE implementation, [[GraftCellsFilters]]). */
-  override def createRelation(
-      sqlContext: org.apache.spark.sql.SQLContext,
-      parameters: Map[String, String]): org.apache.spark.sql.sources.BaseRelation = {
-    val path = parameters.getOrElse("path",
-      throw new IllegalArgumentException("graft-cells read requires a path"))
-    new GraftCellsRelation(sqlContext, path)
-  }
 }
 
-/** The row-bound extraction shared by the DSv2 scan and the legacy V1
-  * relation — the piece vanilla parquet cannot provide (`ParquetFilters`
-  * creates no binary-column predicates, so a plain
+/** The row-bound extraction behind the DSv2 scan's filter pushdown —
+  * the piece vanilla parquet cannot provide (`ParquetFilters` creates no
+  * binary-column predicates, so a plain
   * `spark.read.parquet(dir).where(row >= …)` scans every region file). */
 private[sources] object GraftCellsFilters {
   import org.apache.spark.sql.sources._
@@ -107,36 +94,6 @@ private[sources] object GraftCellsFilters {
          EqualTo("row", _: Array[Byte]) => true
     case _ => false
   }
-
-  /** The one execution path both APIs share: manifest-pruned region scan
-    * with the residual range filter, projected to the required columns
-    * (empty = 0-column rows for count-only scans). */
-  def buildScan(spark: org.apache.spark.sql.SparkSession, path: String,
-                requiredColumns: Seq[String], filters: Array[Filter])
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val (lo, hi) = rowBounds(filters)
-    CellScan.scanRange(spark, path, lo, hi)
-      .select(requiredColumns.toIndexedSeq
-        .map(org.apache.spark.sql.functions.col): _*).rdd
-  }
-}
-
-/** Legacy V1 region-pruned relation (see [[GraftCellsDataSource
-  * .createRelation]]); delegates to [[GraftCellsFilters]]. */
-private[sources] class GraftCellsRelation(
-    override val sqlContext: org.apache.spark.sql.SQLContext, path: String)
-    extends org.apache.spark.sql.sources.BaseRelation
-    with org.apache.spark.sql.sources.PrunedFilteredScan {
-
-  override def schema: StructType = CellOps.cellSchema
-
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters.filterNot(GraftCellsFilters.recognized)
-
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-    GraftCellsFilters.buildScan(sqlContext.sparkSession, path,
-      requiredColumns.toSeq, filters)
 }
 
 /** DSv2 scan builder: `row`-range filters push down (fully handled —
@@ -144,8 +101,8 @@ private[sources] class GraftCellsRelation(
   * [[CellScan]]), required-column pruning trims the projection;
   * everything else is re-evaluated by Spark above the scan. Execution
   * rides the [[V1Scan]] seam — the same posture as the write side's
-  * [[V1Write]]: DSv2 pushdown/catalog surface, the proven relation
-  * underneath, one implementation of both contracts.
+  * [[V1Write]]: DSv2 pushdown/catalog surface, [[CellScan.scanRange]]
+  * underneath. This is the source's only read route.
   *
   * COUNT(*), MIN(row) and MAX(row) additionally push down COMPLETELY
   * when unfiltered and ungrouped: the answers come from
@@ -279,13 +236,17 @@ private[sources] class GraftCellsScanBuilder(path: String)
       override def readSchema(): StructType = required
       override def toV1TableScan[T <: BaseRelation with TableScan](
           context: org.apache.spark.sql.SQLContext): T = {
-        val (p, filters, cols) = (path, pushed, required)
+        val (p, (lo, hi), cols) = (path, GraftCellsFilters.rowBounds(pushed), required)
         new BaseRelation with TableScan {
           override def sqlContext: org.apache.spark.sql.SQLContext = context
           override def schema: StructType = cols
+          // manifest-pruned region scan with the residual range filter,
+          // projected to the required columns (empty = 0-column rows for
+          // count-only scans)
           override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
-            GraftCellsFilters.buildScan(context.sparkSession, p,
-              cols.fieldNames.toSeq, filters)
+            CellScan.scanRange(context.sparkSession, p, lo, hi)
+              .select(cols.fieldNames.toIndexedSeq
+                .map(org.apache.spark.sql.functions.col): _*).rdd
         }.asInstanceOf[T]
       }
     }

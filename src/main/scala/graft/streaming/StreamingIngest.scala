@@ -34,8 +34,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the reference's once-per-job `RegionLocator` read (a live table's
   *     regions don't move between micro-batches). Compaction sweeps use
   *     the same boundaries;
-  *   - the per-batch cell count is read from the written parquet FOOTERS
-  *     on the driver (a few metadata pages), never a Spark count job;
+  *   - the per-batch cell count is read from metadata on the driver —
+  *     the batch's manifest row counts, or a footer per file it cannot
+  *     vouch for ([[graft.sources.CellScan.countRows]]) — never a Spark
+  *     count job;
   *   - what remains per batch — offset/commit log writes, one write job
   *     per output (cells + quarantine), postCommit — is the floor;
   *     `bench_out.json` records per-batch seconds so a regression is
@@ -55,24 +57,12 @@ object StreamingIngest {
                          phases: Map[String, Double] = Map.empty,
                          deferredSecs: Double = 0.0)
 
-  /** Per-batch cell-count readback, cheapest first: the sink's manifest
-    * already records per-file row counts (ONE small-file read, zero
-    * footer opens), else sum the parquet footers, else a distributed
-    * count for sinks that did not land flat parquet. */
-  private def footerCount(spark: SparkSession, dir: String): Long =
-    graft.sources.CellManifest.totalRows(spark, dir).getOrElse {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val parts = fs.listStatus(p).filter(s => s.isFile &&
-        s.getPath.getName.startsWith("part-") && s.getPath.getName.endsWith(".parquet"))
-      if (parts.isEmpty) spark.read.parquet(dir).count()
-      else parts.map { s =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-            s, spark.sessionState.newHadoopConf()))
-        try r.getRecordCount finally r.close()
-      }.sum
-    }
+  /** Per-batch cell-count readback from metadata
+    * ([[graft.sources.CellScan.countRows]]: the sink's manifest, or the
+    * footers of the files it cannot vouch for), else a distributed count
+    * for sinks that did not land flat parquet. */
+  private def cellCount(spark: SparkSession, dir: String): Long =
+    graft.sources.CellScan.countRows(spark, dir).getOrElse(spark.read.parquet(dir).count())
 
   /** Stream `delim`-separated text files from `inputDir` through the cell
     * pipeline. Runs until all currently-available input is drained, then
@@ -210,7 +200,7 @@ object StreamingIngest {
               catch { case scala.util.control.NonFatal(e) => System.err.println(
                 s"[graft] deferred manifest for $dest failed " +
                   s"(${e.getClass.getSimpleName}); readers fall back to footers") }
-            (footerCount(spark, dest), lap(td))
+            (cellCount(spark, dest), lap(td))
           }
           val completed = results.synchronized {
             results += BatchResult(batchId, dest, -1L, lap(t0),

@@ -383,7 +383,7 @@ class SourceDriversSpec extends SparkSuite {
       s.getPath.getName.startsWith("part-") && s.getPath.getName.endsWith(".parquet"))
     assert(m.keySet === parts.map(_.getPath.getName).toSet)
     parts.foreach { p =>
-      val direct = CellManifest.footerRowStats(p.getPath.toString, new Configuration())
+      val direct = CellManifest.footerStats(p.getPath.toString, new Configuration())._2
       val recorded = m(p.getPath.getName)
       // the recorded length matches the live file (in-place-rewrite guard)
       assert(recorded.length === p.getLen, p.getPath.getName)
@@ -758,6 +758,60 @@ class SourceDriversSpec extends SparkSuite {
     assert(got.count() === 9)
     assert(got.select("row").distinct().count() === 1)
     assert(got.select("row").head().getAs[Array[Byte]]("row").toSeq === key.toSeq)
+  }
+
+  test("CellScan: a region file the manifest does not list is pruned by its own footer in every read") {
+    import graft.sources.CellScan
+    val wide = (0 until 200).map { i =>
+      val r = (0 until 9).map(c => s"ul${i}_$c")
+      (r(0), r(1), r(2), r(3), r(4), r(5), r(6), r(7), r(8))
+    }.toDF((0 until 9).map(i => s"c$i"): _*)
+    val r = BulkLoad.fromPositional(wide, BulkLoad.emptyQuarantine(spark),
+      BulkLoad.Config(saltBuckets = Some(10)))
+    val out = tmpDir() + "/cells"
+    SortedParquetCellSink.write(r.cells, out)
+    val parts = new java.io.File(out).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .sortBy(_.getName)
+    assert(parts.length === 10)
+    // copy the salt-digit-'0' region file in under a name the manifest
+    // does not list (an externally added file)
+    assert(spark.read.parquet(parts.head.getPath).select("row").as[Array[Byte]]
+      .collect().forall(_.head == '0'.toByte))
+    java.nio.file.Files.copy(parts.head.toPath,
+      new java.io.File(out, "part-99999-extra.parquet").toPath)
+
+    // a range that misses region '0': the copy is statted by ONE footer
+    // open and pruned, so only the '3' region file is kept
+    val before = CellScan.footerOpens.get()
+    val lo = Array('3'.toByte)
+    val hi = Array('4'.toByte)
+    val scan = CellScan.scanRange(spark, out, Some(lo), Some(hi))
+    assert(CellScan.lastKeptFiles.get() === 1L,
+      s"the unlisted copy must be pruned, kept ${CellScan.lastKeptFiles.get()}")
+    assert(CellScan.footerOpens.get() === before + 1)
+    val expect = spark.read.parquet(out)
+      .where(col("row") >= lit(lo) && col("row") < lit(hi)).count()
+    assert(scan.count() === expect && expect > 0)
+
+    // multi-get and get of keys in other regions exclude it too
+    val rows = spark.read.parquet(out).select("row").distinct().as[Array[Byte]].collect()
+    val keys = (rows.filter(_.head == '2'.toByte).take(2) ++
+      rows.filter(_.head == '7'.toByte).take(1)).toSeq
+    assert(keys.size === 3)
+    val got = CellScan.multiGet(spark, out, keys)
+    assert(CellScan.lastKeptFiles.get() === 2L)
+    assert(got.count() === 27)
+    val one = CellScan.get(spark, out, keys.head)
+    assert(CellScan.lastKeptFiles.get() === 1L)
+    assert(one.count() === 9)
+
+    // the metadata count and the unfiltered scan describe the same live
+    // fileset (the copy's rows included)
+    val all = CellScan.scanRange(spark, out, None, None)
+    assert(CellScan.lastKeptFiles.get() === 11L)
+    assert(CellScan.countRows(spark, out) === Some(all.count()))
+    assert(all.count() === spark.read.parquet(out).count())
   }
 
   test("graft-cells READ: row-range pushdown prunes region files through the manifest") {
@@ -1429,29 +1483,20 @@ class SourceDriversSpec extends SparkSuite {
       "the mismatched fileset must NOT be deleted")
     assert(spark.read.parquet(dest).count() === rowsBefore,
       "nothing may be absorbed past a fingerprint mismatch")
-    // a PRE-VERSIONED (bare-hex) recorded fingerprint cannot be verified
-    // across a format upgrade: the replay retires on batch id alone
-    // (warning, no wedge) instead of throwing a spurious mismatch — the
-    // pre-upgrade, name-based replay guarantee, never a stuck sweep
+    // a recorded value that is not a v2 fingerprint (here the same md5
+    // body without its prefix) never matches, even under a true replay
+    // of the original content: it fails loudly and retires nothing
     val bareHex = lines.head.split('\t') match {
       case Array(n, fp) => s"$n\t${fp.stripPrefix("v2:")}\n"
     }
     java.nio.file.Files.writeString(ledger.toPath, bareHex)
     // the raw rewrite invalidates the local-FS checksum sidecar
     new java.io.File(dest, "." + CellCompaction.AbsorbedLedger + ".crc").delete()
-    assert(CellCompaction.compactMinor(spark, root, dest, cfg) === 0)
-    assert(CellCompaction.batchDirs(spark, root).isEmpty,
-      "v1-era ledger entry retires the replayed id on name alone")
-    assert(spark.read.parquet(dest).count() === rowsBefore, "nothing re-absorbed")
-    // a bare-hex entry from the IMMEDIATELY PRIOR release carries today's
-    // md5 body unprefixed — a TRUE replay is therefore PROVABLE: the
-    // deterministic re-land matches the stripped fingerprint and retires
-    // with the full content guarantee (not the name-only degradation)
     writeBatch(1, 40) // the original batch_00001 content, re-landed
-    assert(CellCompaction.compactMinor(spark, root, dest, cfg) === 0)
-    assert(CellCompaction.batchDirs(spark, root).isEmpty,
-      "prior-release bare-hex entry with matching content must retire the replay")
-    assert(spark.read.parquet(dest).count() === rowsBefore, "nothing re-absorbed")
+    intercept[IllegalStateException](CellCompaction.compactMinor(spark, root, dest, cfg))
+    assert(CellCompaction.batchDirs(spark, root).nonEmpty &&
+      spark.read.parquet(dest).count() === rowsBefore,
+      "a non-v2 ledger entry must leave the batch dir in place, nothing absorbed")
   }
 
   test("batch fileset fingerprint: deterministic across identical re-writes, different for different content") {
