@@ -200,14 +200,9 @@ object Bench {
         val out = Files.createTempDirectory(s"graft-bench-streamout$tag$p")
         val ck = Files.createTempDirectory(s"graft-bench-streamck$tag$p")
         val t0 = System.nanoTime()
-        // SPARK_GRAFT_STREAM_ASYNC=1 measures the asyncProgressTracking
-        // posture (offset/commit logs off the critical path; at-least-once
-        // restart for the newest triggers — see StreamingIngest.run's
-        // scaladoc). Evaluation lever only; the standing artifact is sync.
         val batches = graft.streaming.StreamingIngest.run(
           spark, in.toString, out.toString, ck.toString,
-          BulkLoad.Config(compatNaiveSplit = true), maxFilesPerTrigger = mft,
-          asyncProgress = sys.env.get("SPARK_GRAFT_STREAM_ASYNC").contains("1"))
+          BulkLoad.Config(compatNaiveSplit = true), maxFilesPerTrigger = mft)
         val secs = (System.nanoTime() - t0) / 1e9
         require(batches.length == (10 + mft - 1) / mft,
           s"expected ${(10 + mft - 1) / mft} micro-batches, got ${batches.length}")

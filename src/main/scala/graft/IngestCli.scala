@@ -38,11 +38,7 @@ object IngestCli {
       .asScala.iterator
       .map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { l =>
-        require(l.length % 2 == 0 && l.forall(c => Character.digit(c, 16) >= 0),
-          s"split line is not even-length hex: $l")
-        java.util.HexFormat.of().parseHex(l.toLowerCase)
-      }
+      .map(graft.operators.RegionSort.splitKey)
       .toSeq
   }
 
@@ -116,23 +112,20 @@ object IngestCli {
 
   /** ADMIN verb: layout compaction of a staged/serving cell directory —
     * the background-sweep entry point an operator schedules beside the
-    * ingest jobs. `batches` merges `input`'s batch filesets into a fresh
-    * `output` (one file per region); `minor` absorbs them into an
-    * existing serving dir as one extra fileset + incremental manifest
-    * refresh; `major` rewrites `input` in place to one file per region
+    * ingest jobs. `minor` absorbs `input`'s batch filesets into the
+    * serving dir `output` as one extra fileset + incremental manifest
+    * refresh (into a fresh `output`: one file per region) and retires
+    * them; `major` rewrites `input` in place to one file per region
     * (`output` ignored). Returns filesets absorbed (−1 for major). */
   def compactCommand(spark: SparkSession, mode: String, input: String,
                      output: String, cfg: BulkLoad.Config): Int = mode match {
-    case "batches" =>
-      graft.sources.CellCompaction.compactBatches(spark, input, output, cfg,
-        retireInputs = true)
     case "minor" =>
       graft.sources.CellCompaction.compactMinor(spark, input, output, cfg)
     case "major" =>
       graft.sources.CellCompaction.compactMajor(spark, input, cfg); -1
     case other =>
       throw new IllegalArgumentException(
-        s"--compact-mode must be batches|minor|major, got: $other")
+        s"--compact-mode must be minor|major, got: $other")
   }
 
   /** ADMIN verbs for the DURABLE STORES — the maintenance loop driven
@@ -210,15 +203,8 @@ object IngestCli {
     def norm(s: String): String = {
       val p = new Path(s); fsOf(p).makeQualified(p).toString
     }
-    def readPtr(dir: String, name: String): Option[String] = {
-      val p = new Path(s"$dir/$name"); val fs = fsOf(p)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-        finally in.close()
-      }
-    }
+    def readPtr(dir: String, name: String): Option[String] =
+      graft.sources.Publish.readText(conf, new Path(s"$dir/$name"))
     val head = readPtr(compactedDir, "COMPACTED_FROM").getOrElse(
       throw new IllegalArgumentException(s"'$compactedDir' carries no " +
         "COMPACTED_FROM provenance — not a compacted ANN store; refusing " +
@@ -375,7 +361,7 @@ object IngestCli {
         "[--arity N] [--salt BUCKETS] [--regions N] [--conf FILE] [--splits FILE] " +
         "[--key-fields I,J,..] [--family NAME] [--qualifiers index|name] " +
         "[--load-ts TS] [--stream-checkpoint DIR] [--stream-compact-every N] " +
-        "[--schema DDL (jsonl)] [--compact-mode batches|minor|major]\n" +
+        "[--schema DDL (jsonl)] [--compact-mode minor|major]\n" +
         "   or: IngestCli dedup-build <docsParquet> <corpusKey> [--ngram N] [--threshold T]\n" +
         "       IngestCli dedup-advance <newDocsParquet> <newCorpusKey> --from-key KEY [--ngram N] [--threshold T]\n" +
         "       IngestCli ann-build <embeddingsParquet> <corpusKey> [--nlist N]\n" +
@@ -417,10 +403,10 @@ object IngestCli {
       // continuous-ingestion mode: watch `input` as a file-source stream
       // and bulk-load each micro-batch independently (csv-compat/hivetext
       // parse semantics; exactly-once via the checkpoint)
-      // admin verb: layout compaction (batch-fileset merge / minor sweep /
-      // in-place major) driven from the same CLI that ingests
+      // admin verb: layout compaction (minor sweep / in-place major)
+      // driven from the same CLI that ingests
       if (format == "compact") {
-        val mode = opts.getOrElse("--compact-mode", "batches")
+        val mode = opts.getOrElse("--compact-mode", "minor")
         val absorbed = compactCommand(spark, mode, input, output, base)
         println(s"""{"format":"compact","mode":"$mode","filesets":$absorbed}""")
         return // finally still stops the session
@@ -468,7 +454,7 @@ object IngestCli {
       r.sink.write(r.cells, output)
       r.sink.postCommit(output)
       val secs = (System.nanoTime() - t0) / 1e9
-      val cells = spark.read.parquet(output).count()
+      val cells = graft.sources.CellScan.rowCount(spark, output)
       val quarantined = r.quarantined.count()
       println(s"""{"format":"$format","cells":$cells,"quarantined":$quarantined,""" +
         s""""regions":${base.regions},"write_sec":$secs}""")

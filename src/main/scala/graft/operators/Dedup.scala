@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.MinHashKernel
+import graft.sources.Publish
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -290,16 +291,14 @@ object Dedup {
     * [[SpanBucketsFile]] sidecar) fall back to a plain parquet scan. */
   final case class SpanStore(spark: org.apache.spark.sql.SparkSession,
                              dir: String) {
-    def spans: DataFrame = {
-      val side = new org.apache.hadoop.fs.Path(s"$dir/$SpanBucketsFile")
-      val fs = side.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(side))
+    def spans: DataFrame = Publish.readText(
+        spark.sessionState.newHadoopConf(),
+        new org.apache.hadoop.fs.Path(s"$dir/$SpanBucketsFile")) match {
+      case None =>
         spark.read.schema("s BINARY, keeper BIGINT, ndocs BIGINT")
           .parquet(s"$dir/spans.parquet")
-      else {
-        val in = fs.open(side)
-        val n = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-        finally in.close()
+      case Some(buckets) =>
+        val n = buckets.toInt
         // bucket metadata lives in the catalog, not the files — register
         // an external bucketed table over the published location once per
         // session. The name keys on (dir, bucket count): the dir is
@@ -308,7 +307,7 @@ object Dedup {
         // otherwise reuse a stale catalog entry whose bucket spec no
         // longer matches the files — the zero-exchange join would then
         // read wrong partitioning silently
-        val tbl = "graft_spanstore_" + md5Hex(s"$dir|$n")
+        val tbl = "graft_spanstore_" + Publish.md5Hex(s"$dir|$n")
         if (!spark.catalog.tableExists(tbl))
           spark.sql(
             s"""CREATE TABLE IF NOT EXISTS `$tbl` (s BINARY, keeper BIGINT, ndocs BIGINT)
@@ -316,7 +315,6 @@ object Dedup {
                |CLUSTERED BY (s) SORTED BY (s) INTO $n BUCKETS
                |LOCATION '$dir/spans.parquet'""".stripMargin)
         spark.table(tbl)
-      }
     }
   }
 
@@ -329,10 +327,6 @@ object Dedup {
     * executor's join hash table (`-Dgraft.spanstore.buckets=N`). */
   private[graft] def spanRegistryBuckets: Int =
     sys.props.get("graft.spanstore.buckets").map(_.toInt).getOrElse(32)
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Land a registry frame as the digest-bucketed `spans.parquet` fileset
     * under `tmp` (staging table → drop keeps the files → sidecar). The
@@ -348,10 +342,8 @@ object Dedup {
       .bucketBy(n, "s").sortBy("s")
       .saveAsTable(stage)
     spark.sql(s"DROP TABLE IF EXISTS `$stage`")
-    val side = new org.apache.hadoop.fs.Path(s"$tmp/$SpanBucketsFile")
-    val fs = side.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(side, true)
-    try out.write(n.toString.getBytes("UTF-8")) finally out.close()
+    Publish.writeText(spark.sessionState.newHadoopConf(),
+      new org.apache.hadoop.fs.Path(s"$tmp/$SpanBucketsFile"), n.toString)
   }
 
   /** Resolve the PUBLISHED span store for a (corpusKey, k) pair, if one
@@ -370,7 +362,7 @@ object Dedup {
   def spanStore(docs: DataFrame, k: Int, corpusKey: String): SpanStore = {
     val spark = docs.sparkSession
     val path = storePath(spark, s"$corpusKey#spanstore:$SpanLayoutVersion", k, 0.0)
-    publishIfAbsent(spark, path) { tmp =>
+    Publish.publishIfAbsent(spark.sessionState.newHadoopConf(), path) { tmp =>
       writeSpanRegistry(spark,
         spanWindows(docs, k).groupBy(col("s"))
           .agg(min(col("doc_id")).as("keeper"),
@@ -510,7 +502,7 @@ object Dedup {
                        newCorpusKey: String): SpanStore = {
     val spark = newDocs.sparkSession
     val path = storePath(spark, s"$newCorpusKey#spanstore:$SpanLayoutVersion", k, 0.0)
-    publishIfAbsent(spark, path) { tmp =>
+    Publish.publishIfAbsent(spark.sessionState.newHadoopConf(), path) { tmp =>
       writeSpanRegistry(spark, spanRegistryMerge(store.spans, newDocs, k), tmp)
     }
     SpanStore(spark, path.toString)
@@ -1063,10 +1055,6 @@ object Dedup {
     var prevChanged = Long.MaxValue
     var stalled = false
     var round = 0
-    // session off-switch for the adaptive trigger (measurement harness +
-    // deployment escape hatch); the 8-round backstop always stands
-    val adaptive =
-      pairs.sparkSession.conf.get("graft.cc.adaptive", "true").toBoolean
     while (changed > 0 && !stalled && round < CcEscalateAfterRounds) {
       round += 1
       val nbrMin = und
@@ -1083,7 +1071,7 @@ object Dedup {
           (coalesce(col("nbr_min"), col("cluster_id")) < col("cluster_id")).as("chg")),
         storage)
       changed = next.where(col("chg")).count()
-      stalled = adaptive && ccStalled(round, changed, prevChanged)
+      stalled = ccStalled(round, changed, prevChanged)
       prevChanged = changed
       labels = next.select(col("id"), col("cluster_id"))
     }
@@ -1123,8 +1111,8 @@ object Dedup {
     *
     * The store key is the caller's corpus identity (`corpusKey` — the
     * corpus drop's path, possibly read-only; the store itself lands
-    * under the engine's writable store root, `graft.store.dir` or the
-    * JVM temp dir, keyed by md5(corpusKey)). The contract is an
+    * under the engine's writable store root, keyed by md5(corpusKey) —
+    * [[Publish.storePath]]). The contract is an
     * immutable corpus drop, the same contract HFile bulk loads make: a
     * changed corpus is a NEW drop with a new key.
     *
@@ -1195,7 +1183,7 @@ object Dedup {
   /** Writable store location for a (corpus drop, params) pair — the
     * keying contract shared by [[dedupStore]] and [[dedupStoreAdvance]]:
     * md5(corpusKey | file stamp | params | [[StoreAlgoVersion]]) under
-    * the engine's store root (`graft.store.dir` or the JVM temp dir). */
+    * the engine's store root ([[Publish.storePath]]). */
   private def storePath(spark: org.apache.spark.sql.SparkSession,
                         corpusKey: String, n: Int,
                         threshold: Double): org.apache.hadoop.fs.Path = {
@@ -1210,14 +1198,13 @@ object Dedup {
     // any other stamp-read fault ⇒ error, never a silent stale serve
     val stamp = StoreStamp.read(spark, stampDir, "documents.parquet",
       "dedupStore")
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$corpusKey|$stamp|n=$n|thr=$threshold|$StoreAlgoVersion"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val root = sys.props.getOrElse("graft.store.dir",
-      sys.props("java.io.tmpdir") + "/graft-cluster-store")
-    new org.apache.hadoop.fs.Path(s"$root/$keyHex", "store")
+    Publish.storePath(StoreFamily,
+      s"$corpusKey|$stamp|n=$n|thr=$threshold|$StoreAlgoVersion")
   }
+
+  /** Store-root family of the dedup and span stores
+    * ([[Publish.storePath]]). */
+  private val StoreFamily = "graft-cluster-store"
 
   /** Resolve the PUBLISHED store for a (corpusKey, n, threshold) triple,
     * if one exists — the admin/CLI entry point: a maintenance job names
@@ -1228,25 +1215,6 @@ object Dedup {
     val path = storePath(spark, corpusKey, n, threshold)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(path)) Some(DedupStore(spark, path.toString)) else None
-  }
-
-  /** Build-once atomic publish shared by every durable store: when
-    * `path` is absent, `write` lands the artifacts in a UUID temp
-    * sibling which is renamed in whole. Losing the rename race to a
-    * concurrent identical build keeps theirs (the computations are
-    * deterministic). ONE implementation of the install protocol — a fix
-    * to the rename-failure handling applies to every store at once. */
-  private def publishIfAbsent(spark: org.apache.spark.sql.SparkSession,
-                              path: org.apache.hadoop.fs.Path)
-                             (write: String => Unit): Unit = {
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) {
-      fs.mkdirs(path.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(path.getParent,
-        s"_store_tmp_${java.util.UUID.randomUUID()}")
-      write(tmp.toString)
-      if (!fs.rename(tmp, path)) fs.delete(tmp, true)
-    }
   }
 
   /** Build-once, serve-many dedup store (see [[clustersStore]] for the
@@ -1260,7 +1228,7 @@ object Dedup {
                  corpusKey: String): DedupStore = {
     val spark = docs.sparkSession
     val path = storePath(spark, corpusKey, n, threshold)
-    publishIfAbsent(spark, path) { tmp =>
+    Publish.publishIfAbsent(spark.sessionState.newHadoopConf(), path) { tmp =>
       val k = kernelFrame(docs, n)
       k.write.mode("overwrite").parquet(s"$tmp/kernel.parquet")
       clusters(corpusPairs(k, threshold).select(col("a"), col("b")))
@@ -1288,7 +1256,7 @@ object Dedup {
                         threshold: Double, newCorpusKey: String): DedupStore = {
     val spark = newDocs.sparkSession
     val path = storePath(spark, newCorpusKey, n, threshold)
-    publishIfAbsent(spark, path) { tmp =>
+    Publish.publishIfAbsent(spark.sessionState.newHadoopConf(), path) { tmp =>
       val kNew = kernelFrame(newDocs, n)
       foldKernels(kNew.unionByName(store.kernel))
         .write.mode("overwrite").parquet(s"$tmp/kernel.parquet")

@@ -42,6 +42,16 @@ object RegionSort {
   implicit val unsignedBytesOrdering: Ordering[Array[Byte]] =
     Ordering.comparatorToOrdering(unsignedBytes)
 
+  /** One explicit split key from its hex text (either case) — the parser
+    * behind the CLI's `--splits` file and the `graft-cells` `splits`
+    * option. A non-hex character or an odd length is an error, never a
+    * silently shifted boundary. */
+  def splitKey(hex: String): Array[Byte] =
+    try java.util.HexFormat.of().parseHex(hex)
+    catch { case e: IllegalArgumentException =>
+      throw new IllegalArgumentException(s"split key is not even-length hex: $hex", e)
+    }
+
   /** Exact-boundary region partitioner: `splits(i)` is the FIRST key of
     * region i+1 (region 0 is `(-inf, splits(0))`), mirroring HBase's
     * `RegionLocator.getStartKeys` contract used by TotalOrderPartitioner. */

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TopKPairs
 import graft.operators.Dedup.MaterializeSyntax
+import graft.sources.Publish
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -366,17 +367,10 @@ object Similarity {
       base.map(_.driftBase.unionByName(ownDriftBase)).getOrElse(ownDriftBase)
 
     /** The base index this store advances, if any. */
-    def base: Option[AnnIndexStore] = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$AnnBaseFile")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val baseDir = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        Some(AnnIndexStore(spark, baseDir, nlist))
-      }
-    }
+    def base: Option[AnnIndexStore] =
+      Publish.readText(spark.sessionState.newHadoopConf(),
+          new org.apache.hadoop.fs.Path(s"$dir/$AnnBaseFile"))
+        .map(AnnIndexStore(spark, _, nlist))
   }
 
   /** Pointer file inside an ADVANCED index dir naming the base index dir
@@ -439,6 +433,19 @@ object Similarity {
     writeDriftSidecar(corpus.sparkSession, tmp)
   }
 
+  /** Store-root family of the ANN index stores
+    * ([[Publish.storePath]]). */
+  private val StoreFamily = "graft-ann-store"
+
+  /** Publish (build once) the ANN store keyed by `key` — `write` stages
+    * its filesets into the temp dir it is given — and open it. */
+  private def publishAnn(spark: org.apache.spark.sql.SparkSession, key: String,
+                         nlist: Int)(write: String => Unit): AnnIndexStore = {
+    val path = Publish.storePath(StoreFamily, key)
+    Publish.publishIfAbsent(spark.sessionState.newHadoopConf(), path)(write)
+    AnnIndexStore(spark, path.toString, nlist)
+  }
+
   /** DURABLE IVF index — build-once/serve-many for the ANN family (the
     * dedup cluster store's posture applied to retrieval serving): first
     * call for a (corpus drop, nlist, [[AnnStoreVersion]]) key derives the
@@ -458,21 +465,8 @@ object Similarity {
     // any other stamp-read fault ⇒ error, never a silent stale serve
     val stamp = StoreStamp.read(spark, stampDir, "embeddings.parquet",
       "annIndexStore")
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$corpusKey|$stamp|nlist=$nlist|$AnnStoreVersion".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val root = sys.props.getOrElse("graft.store.dir",
-      sys.props("java.io.tmpdir") + "/graft-ann-store")
-    val path = new org.apache.hadoop.fs.Path(s"$root/$keyHex", "store")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) {
-      fs.mkdirs(path.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(path.getParent,
-        s"_store_tmp_${java.util.UUID.randomUUID()}")
-      writeIndexFilesets(corpus, nlist, tmp.toString)
-      if (!fs.rename(tmp, path)) fs.delete(tmp, true)
-    }
-    AnnIndexStore(spark, path.toString, nlist)
+    publishAnn(spark, s"$corpusKey|$stamp|nlist=$nlist|$AnnStoreVersion", nlist)(
+      writeIndexFilesets(corpus, nlist, _))
   }
 
   /** The advance's ONLY computation, factored for the spec to pin its
@@ -516,18 +510,9 @@ object Similarity {
     // place (the r16 review's flagged edge)
     val stamp = StoreStamp.read(spark, stampDir, "embeddings.parquet",
       "annIndexStoreAdvance")
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"advance|${store.dir}|$newKey|$stamp|nlist=${store.nlist}|$AnnStoreVersion"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val root = sys.props.getOrElse("graft.store.dir",
-      sys.props("java.io.tmpdir") + "/graft-ann-store")
-    val path = new org.apache.hadoop.fs.Path(s"$root/$keyHex", "store")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) {
-      fs.mkdirs(path.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(path.getParent,
-        s"_store_tmp_${java.util.UUID.randomUUID()}")
+    publishAnn(spark,
+        s"advance|${store.dir}|$newKey|$stamp|nlist=${store.nlist}|$AnnStoreVersion",
+        store.nlist) { tmp =>
       store.centroids.write.mode("overwrite").parquet(s"$tmp/centroids.parquet")
       annIndexAdvanceDelta(store, batch)
         .write.mode("overwrite").partitionBy("cell")
@@ -535,12 +520,10 @@ object Similarity {
       // the link's OWN drift partials (delta lists only — the chain
       // monitor sums sidecars across links): one O(batch) pass over the
       // just-staged delta, so the advance stays O(batch) at any index size
-      writeDriftSidecar(spark, tmp.toString)
-      val ptr = fs.create(new org.apache.hadoop.fs.Path(s"$tmp/$AnnBaseFile"), true)
-      try ptr.write(store.dir.getBytes("UTF-8")) finally ptr.close()
-      if (!fs.rename(tmp, path)) fs.delete(tmp, true)
+      writeDriftSidecar(spark, tmp)
+      Publish.writeText(spark.sessionState.newHadoopConf(),
+        new org.apache.hadoop.fs.Path(s"$tmp/$AnnBaseFile"), store.dir)
     }
-    AnnIndexStore(spark, path.toString, store.nlist)
   }
 
   /** COMPACTION for an advanced index chain: fold every link's inverted
@@ -557,18 +540,9 @@ object Similarity {
     * assignments were all made against the same pinned centroids. */
   def annIndexStoreCompact(store: AnnIndexStore, newKey: String): AnnIndexStore = {
     val spark = store.spark
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"compact|${store.dir}|$newKey|nlist=${store.nlist}|$AnnStoreVersion"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val root = sys.props.getOrElse("graft.store.dir",
-      sys.props("java.io.tmpdir") + "/graft-ann-store")
-    val path = new org.apache.hadoop.fs.Path(s"$root/$keyHex", "store")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) {
-      fs.mkdirs(path.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(path.getParent,
-        s"_store_tmp_${java.util.UUID.randomUUID()}")
+    publishAnn(spark,
+        s"compact|${store.dir}|$newKey|nlist=${store.nlist}|$AnnStoreVersion",
+        store.nlist) { tmp =>
       store.centroids.write.mode("overwrite").parquet(s"$tmp/centroids.parquet")
       store.lists.write.mode("overwrite").partitionBy("cell")
         .parquet(s"$tmp/lists.parquet")
@@ -582,12 +556,9 @@ object Similarity {
         .write.mode("overwrite").parquet(s"$tmp/$DriftSidecarFile")
       // provenance for retention tooling (`ann-gc`): which chain head
       // this compaction superseded — never read on the serve path
-      val prov = fs.create(
-        new org.apache.hadoop.fs.Path(s"$tmp/$CompactedFromFile"), true)
-      try prov.write(store.dir.getBytes("UTF-8")) finally prov.close()
-      if (!fs.rename(tmp, path)) fs.delete(tmp, true)
+      Publish.writeText(spark.sessionState.newHadoopConf(),
+        new org.apache.hadoop.fs.Path(s"$tmp/$CompactedFromFile"), store.dir)
     }
-    AnnIndexStore(spark, path.toString, store.nlist)
   }
 
   /** REBUILD for a drifted index — the operator [[annIndexDrift]]'s
@@ -614,24 +585,11 @@ object Similarity {
     // keyed on the chain head dir: a published chain is an immutable
     // fileset whose dir name already folds in corpus stamps and
     // [[AnnStoreVersion]] transitively, so no live-table stamp is needed
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"rebuild|${store.dir}|$newKey|nlist=${store.nlist}|$AnnStoreVersion"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val root = sys.props.getOrElse("graft.store.dir",
-      sys.props("java.io.tmpdir") + "/graft-ann-store")
-    val path = new org.apache.hadoop.fs.Path(s"$root/$keyHex", "store")
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) {
-      fs.mkdirs(path.getParent)
-      val tmp = new org.apache.hadoop.fs.Path(path.getParent,
-        s"_store_tmp_${java.util.UUID.randomUUID()}")
-      writeIndexFilesets(
-        store.lists.select(col("nid").as("vec_id"), col("nv").as("embedding")),
-        store.nlist, tmp.toString)
-      if (!fs.rename(tmp, path)) fs.delete(tmp, true)
-    }
-    AnnIndexStore(spark, path.toString, store.nlist)
+    publishAnn(spark,
+        s"rebuild|${store.dir}|$newKey|nlist=${store.nlist}|$AnnStoreVersion",
+        store.nlist)(writeIndexFilesets(
+      store.lists.select(col("nid").as("vec_id"), col("nv").as("embedding")),
+      store.nlist, _))
   }
 
   /** CENTROID-DRIFT MONITOR for the pinned-centroid IVF posture (the

@@ -182,10 +182,14 @@ object ReferenceParity {
        FROM supplier) """ + branches.mkString(" UNION ALL ")
   }
 
-  /** Staging guard: run `write` once per fixture path (deterministic
-    * content — same immutable-input contract as [[Layout.bucketedTable]]). */
-  private def staged(path: String)(write: => Unit): String = {
-    if (!new java.io.File(path).exists()) write
+  /** Stage a fixture once per path (deterministic content — same
+    * immutable-input contract as [[Layout.bucketedTable]]): `write` lands
+    * it at the temp path it is given and [[graft.sources.Publish
+    * .publishIfAbsent]] renames it in, so a write that fails midway
+    * leaves no fixture for a later run to reuse. Returns `path`. */
+  private[graft] def staged(path: String)(write: String => Unit): String = {
+    graft.sources.Publish.publishIfAbsent(
+      new org.apache.hadoop.conf.Configuration(), new org.apache.hadoop.fs.Path(path))(write)
     path
   }
 
@@ -200,21 +204,21 @@ object ReferenceParity {
   /** [[sortedCustCells]] staged once as the `cellscan` cell table. */
   private def cellScanTable(s: SparkSession, dir: String): String =
     staged(fixturePath(dir, "cellscan")) {
-      graft.SortedParquetCellSink.write(sortedCustCells(s, dir), fixturePath(dir, "cellscan"))
+      graft.SortedParquetCellSink.write(sortedCustCells(s, dir), _)
     }
 
   val defs: Map[String, Q] = Map(
     // S3: avro container round-trip → reversed-id key + name qualifiers +
     // nullable-field cell guard, byte-checked against the oracle
     "source_avro_cells" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "avro")) {
+      val path = staged(fixturePath(dir, "avro")) { tmp =>
         graft.sources.AvroSource.write(t(s, dir, "supplier").select(
           col("s_suppkey").cast(StringType).as("id"),
           col("s_name").as("name"),
           col("s_nationkey").cast(StringType).as("nationkey"),
           when(col("s_acctbal") < 0, lit(null).cast(StringType))
             .otherwise(col("s_acctbal").cast(DecimalType(18, 2)).cast(StringType))
-            .as("acctbal")), fixturePath(dir, "avro"))
+            .as("acctbal")), tmp)
       }
       hexBin(graft.BulkLoad.avro(s, path).cells)
     }),
@@ -223,14 +227,14 @@ object ReferenceParity {
     // (explicit-schema read — no inference scan, no alphabetized columns)
     // over the feed format modern pipelines actually ship
     "source_jsonl_cells" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "jsonl")) {
+      val path = staged(fixturePath(dir, "jsonl")) { tmp =>
         graft.sources.JsonLines.write(t(s, dir, "supplier").select(
           col("s_suppkey").cast(StringType).as("id"),
           col("s_name").as("name"),
           col("s_nationkey").cast(StringType).as("nationkey"),
           when(col("s_acctbal") < 0, lit(null).cast(StringType))
             .otherwise(col("s_acctbal").cast(DecimalType(18, 2)).cast(StringType))
-            .as("acctbal")), fixturePath(dir, "jsonl"), shards = 1)
+            .as("acctbal")), tmp, shards = 1)
       }
       hexBin(graft.BulkLoad.jsonl(s, path,
         "id STRING, name STRING, nationkey STRING, acctbal STRING").cells)
@@ -240,8 +244,7 @@ object ReferenceParity {
     // pipeline — same cells as the csv/hivetext drivers on this content
     "source_rcfile_cells" -> ((s, dir) => {
       val path = staged(fixturePath(dir, "rcfile")) {
-        graft.sources.RCFileSource.write(
-          supplierPositional(t(s, dir, "supplier")), fixturePath(dir, "rcfile"))
+        graft.sources.RCFileSource.write(supplierPositional(t(s, dir, "supplier")), _)
       }
       hexBin(graft.BulkLoad.rcFile(s, path,
         graft.BulkLoad.Config(arity = 4)).cells)
@@ -250,8 +253,7 @@ object ReferenceParity {
     // S4 (modern): ORC round-trip through the same positional pipeline
     "source_orc_cells" -> ((s, dir) => {
       val path = staged(fixturePath(dir, "orc")) {
-        graft.sources.OrcSource.write(
-          supplierPositional(t(s, dir, "supplier")), fixturePath(dir, "orc"))
+        graft.sources.OrcSource.write(supplierPositional(t(s, dir, "supplier")), _)
       }
       hexBin(graft.BulkLoad.orc(s, path,
         graft.BulkLoad.Config(arity = 4)).cells)
@@ -368,14 +370,15 @@ object ReferenceParity {
 
     // the HBase minor/major-compaction analog on the SERVING layout:
     // three per-batch region-aligned filesets (the layout streaming
-    // ingest accumulates) merge into ONE fileset with exactly one file
-    // per region + a fresh manifest; the oracle is the plain cell
+    // ingest accumulates) merge, by a minor compaction into an empty
+    // serving dir, into ONE fileset with exactly one file per region + a
+    // fresh manifest; the oracle is the plain cell
     // rendering of the whole table — a green hash proves compaction is
     // the identity on cell content (it moves bytes, never changes them)
     "cells_compact_regions" -> ((s, dir) => {
       val root = fixturePath(dir, "compactroot")
       val dest = s"$root/compacted"
-      staged(root) {
+      staged(root) { tmp =>
         val cust = t(s, dir, "customer")
         val cfg = md5Regions
         (0 until 3).foreach { b =>
@@ -383,9 +386,9 @@ object ReferenceParity {
             cust.where(pmod(col("c_custkey"), lit(3)) === b),
             custKey, "c", custValueCols)
           graft.SortedParquetCellSink.write(
-            graft.BulkLoad.sorted(cells, cfg), f"$root/batch_$b%05d")
+            graft.BulkLoad.sorted(cells, cfg), f"$tmp/batch_$b%05d")
         }
-        graft.sources.CellCompaction.compactBatches(s, root, dest, cfg)
+        graft.sources.CellCompaction.compactMinor(s, tmp, s"$tmp/compacted", cfg)
         ()
       }
       hexBin(graft.sources.CellScan.scanRange(s, dest, None, None))
@@ -400,18 +403,19 @@ object ReferenceParity {
     "cells_compact_minor" -> ((s, dir) => {
       val root = fixturePath(dir, "compactminor")
       val dest = s"$root/serving"
-      staged(root) {
+      staged(root) { tmp =>
         val cust = t(s, dir, "customer")
         val cfg = md5Regions
+        val serving = s"$tmp/serving"
         def batch(b: Int): Unit = graft.SortedParquetCellSink.write(
           graft.BulkLoad.sorted(CellOps.explodeIndexed(
             cust.where(pmod(col("c_custkey"), lit(3)) === b),
-            custKey, "c", custValueCols), cfg), f"$root/batch_$b%05d")
+            custKey, "c", custValueCols), cfg), f"$tmp/batch_$b%05d")
         batch(0); batch(1)
-        graft.sources.CellCompaction.compactMinor(s, root, dest, cfg)
+        graft.sources.CellCompaction.compactMinor(s, tmp, serving, cfg)
         batch(2)
-        graft.sources.CellCompaction.compactMinor(s, root, dest, cfg)
-        graft.sources.CellCompaction.compactMajor(s, dest, cfg)
+        graft.sources.CellCompaction.compactMinor(s, tmp, serving, cfg)
+        graft.sources.CellCompaction.compactMajor(s, serving, cfg)
         ()
       }
       hexBin(graft.sources.CellScan.scanRange(s, dest, None, None))
@@ -437,14 +441,14 @@ object ReferenceParity {
     // a requested key — K keys read <= K files at ANY region count
     "cells_index_lookup" -> ((s, dir) => {
       val primaryPath = cellScanTable(s, dir)
-      val idxPath = staged(fixturePath(dir, "cellindex")) {
+      val idxPath = staged(fixturePath(dir, "cellindex")) { tmp =>
         graft.SortedParquetCellSink.write(graft.BulkLoad.sorted(
           t(s, dir, "customer").select(
             concat(keys.utf8(col("c_mktsegment")), keys.utf8(lit(":")), custKey).as("row"),
             keys.utf8(lit("i")).as("family"),
             keys.utf8(lit("pk")).as("qualifier"),
             custKey.as("value"),
-            lit(0L).as("ts")), graft.BulkLoad.Config()), fixturePath(dir, "cellindex"))
+            lit(0L).as("ts")), graft.BulkLoad.Config()), tmp)
       }
       val page = graft.sources.CellScan
         .scanPrefix(s, idxPath, "BUILDING:".getBytes("UTF-8"))
@@ -664,16 +668,11 @@ object ReferenceParity {
         rate(4), rate(12), rate(20)).mkString(",")
     }
 
-    /** The staged file's path, writing it first if absent (through a
-      * temporary file and an atomic rename, so a concurrent reader never
-      * sees a partial file). */
-    def stage(): String = staged(path) {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val target = Paths.get(path)
-      val tmp = Files.createTempFile(target.getParent, "graft_ref_shaped_csv", ".tmp")
-      Files.write(tmp, (0 until Rows).map(i => line(i) + "\n").mkString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    /** The staged file's path, writing it first if absent ([[staged]]). */
+    def stage(): String = staged(path) { tmp =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(tmp),
+        (0 until Rows).map(i => line(i) + "\n").mkString
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
   }
 

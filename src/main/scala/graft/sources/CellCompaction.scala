@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
   * uses (`BulkLoad.sorted` — the one region exchange, exactly aligned to
   * the config's boundaries, so the compacted layout obeys the identical
   * file-i-⊆-region-i contract),
-  * land it at `dest` with a fresh manifest, and (optionally) retire the
-  * input batch dirs. Cell content is the IDENTITY — compaction moves
+  * land it in `dest` with a refreshed manifest, and retire the input
+  * batch dirs. Cell content is the IDENTITY — compaction moves
   * bytes, never changes them (oracle-checked by `cells_compact_regions`).
   *
   * Scale shape: ONE total-order exchange over the union of batch files —
@@ -54,39 +54,14 @@ object CellCompaction {
       .map(_.getPath.toString).sorted
   }
 
-  /** Merge the per-micro-batch filesets under `root` into ONE
-    * region-aligned fileset at `dest` (fresh manifest included — the
-    * sink writes it). `cfg` must carry the SAME salt/splits the batches
-    * were written with (the boundaries of a live table don't move
-    * between batches — [[graft.streaming.StreamingIngest]] fixes them
-    * once per run for exactly this reason). When `retireInputs`, the
-    * input batch dirs are deleted AFTER the compacted fileset (and its
-    * manifest) are fully landed — the crash window leaves duplicates
-    * visible to a root-level reader, never missing data; production
-    * wraps the swap in whatever atomic-rename / catalog-pointer move
-    * the serving layer uses, exactly like HBase swaps store files.
-    * Returns the number of batch filesets compacted. */
-  def compactBatches(spark: SparkSession, root: String, dest: String,
-                     cfg: graft.BulkLoad.Config,
-                     retireInputs: Boolean = false): Int = {
-    val dirs = batchDirs(spark, root)
-    if (dirs.isEmpty) return 0
-    val cells = spark.read.schema(graft.operators.CellOps.cellSchema)
-      .parquet(dirs: _*)
-    graft.SortedParquetCellSink.write(resorted(cells, cfg), dest)
-    if (retireInputs) {
-      val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-      dirs.foreach(d => fs.delete(new Path(d), true))
-    }
-    dirs.size
-  }
-
-  /** MINOR compaction — the tiered counterpart of [[compactBatches]]:
-    * absorb the CURRENT batch filesets into an existing (or new) serving
-    * directory `dest` as ONE additional region-aligned fileset, refresh
-    * `dest`'s manifest INCREMENTALLY ([[CellManifest.update]] — footer
-    * stats only for the moved-in files, existing entries kept verbatim),
-    * and retire the inputs. `dest` accumulates one fileset per minor
+  /** MINOR compaction: absorb the CURRENT batch filesets into an
+    * existing (or new) serving directory `dest` as ONE additional
+    * region-aligned fileset, refresh `dest`'s manifest INCREMENTALLY
+    * ([[CellManifest.update]] — footer stats only for the moved-in
+    * files, existing entries kept verbatim), and retire the inputs. Into an empty `dest` this is the full merge:
+    * one file per region plus a fresh manifest (and an `_absorbed`
+    * ledger, which Spark's parquet source never reads — the leading
+    * underscore hides it). `dest` accumulates one fileset per minor
     * round; scans stay manifest-pruned throughout (files from different
     * rounds may overlap in key range — the manifest prunes per FILE, so
     * a bounded range touches intersecting files from each round, which
@@ -112,8 +87,8 @@ object CellCompaction {
     * FAILS LOUDLY rather than silently deleting new data. The residual
     * crash window (fileset installed, ledger not yet rewritten) degrades
     * to the transient duplicate contract above, never to loss: the
-    * ledger lands (atomically — temp sibling + rename, with a tmp-file
-    * recovery path on read) before the inputs are deleted.
+    * ledger lands ([[Publish.replace]] — temp sibling + rename, with the
+    * newest-temp fallback on read) before the inputs are deleted.
     *
     * BOUNDED LEDGER: only entries for batch ids ≥ the newest absorbed id
     * are retained. Structured Streaming commits batch N's checkpoint
@@ -132,8 +107,7 @@ object CellCompaction {
     val destPath = new Path(dest)
     val fs = destPath.getFileSystem(hc)
     fs.mkdirs(destPath)
-    val ledger = new Path(destPath, AbsorbedLedger)
-    val absorbed = readLedger(fs, ledger)
+    val absorbed = readLedger(fs, destPath)
     val (replayed, dirs) = all.partition(d => absorbed.contains(new Path(d).getName))
     // a replay re-lands the same content, so its fingerprint equals the
     // recorded one; anything else under an absorbed id is new data (a
@@ -155,19 +129,13 @@ object CellCompaction {
     if (dirs.isEmpty) return 0
     // fingerprint the inputs BEFORE they move (they are deleted below)
     val newEntries = dirs.map(d => new Path(d).getName -> fingerprint(fs, new Path(d)))
-    val cells = spark.read.schema(graft.operators.CellOps.cellSchema)
-      .parquet(dirs: _*)
-    // land the merged fileset beside dest, then move the part files in
-    // under round-unique names (still part-*.parquet — the flat-layout
-    // rule, CellManifest.partFiles, every reader lists by)
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(destPath.getParent, s"_minor_tmp_$stamp")
-    graft.SortedParquetCellSink.writeData(resorted(cells, cfg), tmp.toString)
-    installParts(fs, tmp, destPath, stamp)
+    rewrite(spark, fs, dirs, destPath, cfg)
     CellManifest.update(spark, dest)
     val newestId = newEntries.map(e => batchId(e._1)).max
-    writeLedger(fs, ledger,
-      (absorbed ++ newEntries).filter { case (n, _) => batchId(n) >= newestId })
+    Publish.replace(fs, destPath, AbsorbedLedger,
+      (absorbed ++ newEntries).filter { case (n, _) => batchId(n) >= newestId }
+        .toSeq.sorted.map { case (n, fp) => s"$n\t$fp" }
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
     dirs.foreach(d => fs.delete(new Path(d), true))
     dirs.size
   }
@@ -205,58 +173,41 @@ object CellCompaction {
         s"${f.length}:${f.rows}:$b"
       }.sorted
     val body = sigs.length + ":" + sigs.mkString(",")
-    FingerprintVersion + java.security.MessageDigest.getInstance("MD5")
-      .digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    FingerprintVersion + Publish.md5Hex(body)
   }
 
-  /** name → fingerprint ("" for a line without one, which therefore
-    * matches no batch's fingerprint). Falls back to
-    * the temp sibling when a crash landed between the old ledger's
-    * retirement and the new one's rename-in. Lines whose name is not a
+  /** The `_absorbed` ledger under `dest` ([[Publish.readReplaced]]):
+    * name → fingerprint ("" for a line without one, which therefore
+    * matches no batch's fingerprint). Lines whose name is not a
     * `batch_<digits>` id are DROPPED: such a name can never match a batch
     * dir ([[batchDirs]] admits only that shape), so it carries no replay
     * protection — and keeping it would crash every subsequent sweep's
     * bounded-retention filter ([[batchId]] toLong) on a hand-edited or
     * corrupted ledger line. Degrade, don't abort. */
   private def readLedger(fs: org.apache.hadoop.fs.FileSystem,
-                         p: Path): Map[String, String] = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val src = if (fs.exists(p)) Some(p)
-              else if (fs.exists(tmp)) Some(tmp)
-              else None
-    src.fold(Map.empty[String, String]) { f =>
-      val in = fs.open(f)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.split('\n').iterator.map(_.trim).filter(_.nonEmpty).map { line =>
+                         dest: Path): Map[String, String] =
+    Publish.readReplaced(fs, dest, AbsorbedLedger).fold(Map.empty[String, String]) {
+      _.split('\n').iterator.map(_.trim).filter(_.nonEmpty).map { line =>
         line.split('\t') match {
           case Array(n, fp) => n -> fp
           case fields       => fields.head -> ""
         }
       }.filter { case (n, _) => n.matches("batch_\\d+") }.toMap
     }
-  }
 
-  /** Atomic rewrite: temp sibling + rename — a crash mid-write can never
-    * truncate the live ledger (which would forget absorbed batches and
-    * let a replay permanently duplicate cells). If the FS refuses a
-    * rename onto an existing destination (HDFS semantics), the old
-    * ledger is retired first; the [ledger-missing, tmp-present] crash
-    * window between those two steps is recovered by [[readLedger]]'s
-    * tmp fallback. */
-  private def writeLedger(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                          entries: Map[String, String]): Unit = {
-    val tmp = new Path(p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(entries.toSeq.sorted.map { case (n, fp) => s"$n\t$fp" }
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, p)) {
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"ledger install failed: $tmp -> $p")
-    }
+  /** The rewrite every compaction shares: read `inputs`, re-run the
+    * region sort ([[resorted]]), land the data files beside `dest` and
+    * move them in ([[installParts]]). The caller refreshes the manifest
+    * and retires what the new files replace. */
+  private def rewrite(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                      inputs: Seq[String], dest: Path,
+                      cfg: graft.BulkLoad.Config): Unit = {
+    val cells = spark.read.schema(graft.operators.CellOps.cellSchema)
+      .parquet(inputs: _*)
+    val stamp = java.util.UUID.randomUUID().toString.take(8)
+    val tmp = new Path(dest.getParent, s"_compact_tmp_$stamp")
+    graft.SortedParquetCellSink.writeData(resorted(cells, cfg), tmp.toString)
+    installParts(fs, tmp, dest, stamp)
   }
 
   /** Move tmp's part files into `dest` under round-unique stamped names
@@ -295,12 +246,7 @@ object CellCompaction {
     val fs = dirPath.getFileSystem(hc)
     val oldParts = CellManifest.partFiles(fs, dirPath).map(_.getPath)
     if (oldParts.isEmpty) return
-    val cells = spark.read.schema(graft.operators.CellOps.cellSchema)
-      .parquet(dir)
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(dirPath.getParent, s"_major_tmp_$stamp")
-    graft.SortedParquetCellSink.writeData(resorted(cells, cfg), tmp.toString)
-    installParts(fs, tmp, dirPath, stamp)
+    rewrite(spark, fs, Seq(dir), dirPath, cfg)
     oldParts.foreach(p => fs.delete(p, false))
     CellManifest.write(spark, dir)
   }

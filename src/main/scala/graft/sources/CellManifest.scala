@@ -185,109 +185,15 @@ object CellManifest {
         throw new java.io.IOException(s"injected manifest write failure (test seam): $dir")
     }
 
-  /** ATOMIC install — temp sibling + rename, never an in-place overwrite.
-    * The deferred manifest lane ([[graft.streaming.StreamingIngest]])
-    * made writer/reader overlap routine: a reader racing this rewrite
-    * must see either the old manifest or the new one, never a prefix of
-    * a torn in-place write. If the FS refuses a rename onto an existing
-    * destination (HDFS semantics), the old file is retired first; the
-    * [live-missing, tmp-present] crash/race window between those steps is
-    * covered by [[readOrThrow]]'s tmp fallback (the tmp is always
-    * complete by then — it is fully written and closed before the live
-    * file is touched). Same posture as the compaction ledger install
-    * ([[CellCompaction]]). */
-  private def persist(fs: org.apache.hadoop.fs.FileSystem, p: Path,
-                      entries: Seq[(String, Entry)]): Unit = {
-    val body = entries.map {
+  /** Install the TSV through [[Publish.replace]]: a reader racing the
+    * rewrite (the deferred manifest lane made that routine) sees the old
+    * manifest or the new one, never a prefix of a torn write. */
+  private def persist(fs: FileSystem, p: Path, entries: Seq[(String, Entry)]): Unit =
+    Publish.replace(fs, p, FileName, entries.map {
       case (name, Entry(len, rows, Some((lo, hi)))) =>
         s"$name\t$len\t$rows\t${toHex(lo)}\t${toHex(hi)}"
       case (name, Entry(len, rows, None)) => s"$name\t$len\t$rows\t-\t-"
-    }.mkString("", "\n", "\n")
-    val live = new Path(p, FileName)
-    // epoch+UUID-suffixed temp sibling: two concurrent persist() calls
-    // (an operator-run compaction racing a stream's deferred lane on the
-    // same dir) each write their OWN temp — a fixed ".tmp" name would
-    // let one writer truncate the other's half-written file and then
-    // rename those torn bytes in as the live manifest. The leading
-    // epoch is the WRITER's clock, embedded so the sweep below ages
-    // temps by it instead of filesystem mtime (object stores with
-    // skewed clocks made the mtime grace a narrowed window, not a
-    // closed one)
-    val tmp = new Path(p,
-      s"$FileName.tmp-${System.currentTimeMillis()}-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, live)) {
-      // re-check OUR temp before retiring the live file: if the temp has
-      // vanished (external sweep, crash cleanup), deleting live would
-      // leave the directory with no manifest at all and the retry rename
-      // would still fail — the lose-lose end state of the sweep race.
-      // A vanished temp with a live file present means a concurrent
-      // writer won the install; their manifest may lack our newest
-      // entries, but a missing entry only degrades that file to a footer
-      // re-stat (the same trust contract as a damaged line) — accept it.
-      if (!fs.exists(tmp)) {
-        if (fs.exists(live)) {
-          // LOGGED, not silent: the winner's manifest may lack this
-          // writer's newest entries — each missing entry degrades that
-          // file to a footer re-stat (the documented trust contract),
-          // but an operator chasing slow reads deserves the breadcrumb
-          System.err.println(s"[graft] manifest install for $live lost its " +
-            s"temp ($tmp) to a concurrent writer/sweep and accepted the " +
-            "winner's manifest; entries from this writer may be missing " +
-            "until the next update (missing entries degrade to footer " +
-            "re-stats, never wrong data)")
-          return
-        }
-        throw new java.io.IOException(
-          s"manifest install lost its temp with no live manifest present: $tmp -> $live")
-      }
-      fs.delete(live, false)
-      if (!fs.rename(tmp, live))
-        throw new java.io.IOException(s"manifest install failed: $tmp -> $live")
-    }
-    // best-effort sweep of crashed writers' leftovers, now shadowed by
-    // the live file we just installed. GRACE-GUARDED: a temp younger
-    // than the window may be a CONCURRENT writer's in-flight file —
-    // deleting it would fail their first rename and (pre-guard) made
-    // them retire the just-installed live manifest before failing too,
-    // leaving no manifest at all. Only temps old enough to be crashed
-    // writers' leftovers are swept.
-    val sweepGraceMs = 10 * 60 * 1000L
-    val now = System.currentTimeMillis()
-    // each candidate is judged and deleted under its OWN Try: one
-    // malformed name (or one delete fault) must not veto the rest of
-    // the sweep — a single all-Try around the loop would abort on the
-    // first bad entry and silently leak every remaining stale temp
-    // flatMap(Option(_)): several FileSystem implementations return NULL
-    // from globStatus instead of an empty array — Some(null) would NPE the
-    // foreach outside the narrowed Try and fail the write after the live
-    // manifest was already installed
-    scala.util.Try(fs.globStatus(new Path(p, FileName + ".tmp-*"))).toOption
-      .flatMap(Option(_))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .foreach { s =>
-        scala.util.Try {
-          if (now - tempAgeBasis(s) > sweepGraceMs) fs.delete(s.getPath, false)
-        }
-      }
-  }
-
-  /** Age basis for sweeping a leftover temp: the writer's epoch embedded
-    * in the name (`manifest.tmp-<epochMs>-<uuid>`) when present —
-    * writer-clock-to-writer-clock comparison, immune to store-side mtime
-    * skew — falling back to filesystem mtime for legacy UUID-only names. */
-  private[graft] def tempAgeBasis(s: org.apache.hadoop.fs.FileStatus): Long = {
-    val rest = s.getPath.getName.stripPrefix(s"$FileName.tmp-")
-    val head = rest.takeWhile(_ != '-')
-    // a UUID segment is 8 hex chars and can be all digits; a real epoch
-    // is 13+ digits for any modern date and ≤18 fits a Long — a 19+
-    // digit all-digit head is NOT a writer epoch (and would overflow
-    // `toLong`), so it falls back to mtime like any other foreign name
-    if (head.length >= 13 && head.length <= 18 && head.forall(_.isDigit))
-      head.toLong
-    else s.getModificationTime
-  }
+    }.mkString("", "\n", "\n").getBytes("UTF-8"))
 
   /** Parse the manifest if present: part-file name → [[Entry]]. Returns
     * None when the directory carries no manifest — callers fall back to
@@ -313,28 +219,15 @@ object CellManifest {
   private[graft] def read(conf: Configuration, dir: String): Option[Map[String, Entry]] =
     scala.util.Try(readOrThrow(conf, dir)).toOption.flatten
 
+  // the newest-temp fallback of [[Publish.readReplaced]] covers the
+  // retire-then-rename window; a half-written leftover temp parses to
+  // conservative entries, never to a wrong prune
   private def readOrThrow(conf: Configuration, dir: String): Option[Map[String, Entry]] = {
-    val live = new Path(dir, FileName)
-    val fs = live.getFileSystem(conf)
-    // tmp fallback: persist() on an HDFS-semantics FS retires the live
-    // file before renaming the (complete, closed) temp sibling in — a
-    // reader landing in that window reads the tmp instead of degrading
-    // to footer stats. Same recovery the compaction ledger uses.
-    val p =
-      if (fs.exists(live)) live
-      else {
-        // temps are UUID-suffixed (concurrent-writer safety) — glob for
-        // them and take the newest; a half-written leftover parses to
-        // conservative entries, never to a wrong prune
-        val tmps = scala.util.Try(
-          fs.globStatus(new Path(dir, FileName + ".tmp-*")).toSeq).getOrElse(Seq.empty)
-        if (tmps.isEmpty) return None
-        tmps.maxBy(_.getModificationTime).getPath
-      }
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val p = new Path(dir)
+    Publish.readReplaced(p.getFileSystem(conf), p, FileName).map(parse)
+  }
+
+  private def parse(text: String): Map[String, Entry] = {
     // [[persist]] always terminates the body with '\n', so a file that
     // does NOT end in a newline was torn mid-line — and a line torn
     // inside its LAST hex field still parses as valid (shorter) bounds,
@@ -345,7 +238,7 @@ object CellManifest {
     val (terminated, torn) =
       if (text.isEmpty || text.endsWith("\n")) (lines, Seq.empty[String])
       else (lines.dropRight(1), lines.takeRight(1))
-    Some((terminated.iterator.map { line =>
+    (terminated.iterator.map { line =>
       // any damaged field (wrong arity, truncated number, bad hex) maps
       // to the conservative Entry(-1, -1, None) — a corrupted manifest
       // degrades to a live footer re-stat, never to an aborted
@@ -361,7 +254,7 @@ object CellManifest {
       }
       parsed.getOrElse(fields.head -> Entry(-1L, -1L, None))
     } ++ torn.iterator.map(line =>
-      line.split('\t').head -> Entry(-1L, -1L, None))).toMap)
+      line.split('\t').head -> Entry(-1L, -1L, None))).toMap
   }
 
   /** (record count, unsigned min/max of the `row` column across the
@@ -394,28 +287,14 @@ object CellManifest {
     try (reader.getRecordCount, bounds) finally reader.close()
   }
 
-  private val HexChars = "0123456789ABCDEF".toCharArray
-
+  /** Uppercase hex of a row-key bound; `0x` is the empty key (never a
+    * valid hex body). */
   private[graft] def toHex(b: Array[Byte]): String =
-    if (b.isEmpty) "0x" // sentinel: empty byte array (never a valid hex body)
-    else {
-      val sb = new java.lang.StringBuilder(b.length * 2)
-      b.foreach { x =>
-        sb.append(HexChars((x >> 4) & 0xf)); sb.append(HexChars(x & 0xf))
-      }
-      sb.toString
-    }
+    if (b.isEmpty) "0x" else java.util.HexFormat.of().withUpperCase().formatHex(b)
 
+  /** Inverse of [[toHex]]. Throws on a non-hex character or an odd
+    * length, so a damaged bound parses to the conservative entry instead
+    * of a wrong one. */
   private[graft] def fromHex(s: String): Array[Byte] =
-    if (s == "0x") Array.empty
-    else {
-      val out = new Array[Byte](s.length / 2)
-      var i = 0
-      while (i < out.length) {
-        out(i) = ((Character.digit(s.charAt(2 * i), 16) << 4) |
-          Character.digit(s.charAt(2 * i + 1), 16)).toByte
-        i += 1
-      }
-      out
-    }
+    if (s == "0x") Array.empty else java.util.HexFormat.of().parseHex(s)
 }

@@ -156,6 +156,12 @@ object CellScan {
   def countRows(spark: SparkSession, dir: String): Option[Long] =
     regionFiles(spark, dir).map(_.map(_.rows).sum)
 
+  /** Row count of a directory a sink just wrote: [[countRows]] from
+    * metadata, else a distributed count for a layout that is not flat
+    * parquet region files. */
+  def rowCount(spark: SparkSession, dir: String): Long =
+    countRows(spark, dir).getOrElse(spark.read.parquet(dir).count())
+
   /** EXACT row count of the [startRow, stopRow) key range: region files
     * FULLY inside the range contribute their metadata row count (no data
     * read), files that straddle a boundary — or carry no usable bounds —

@@ -257,11 +257,10 @@ object GraftCellsDataSource {
   /** Render explicit split points for `.option("splits", ...)`:
     * comma-separated hex (the inverse is [[parseSplits]]). */
   def splitsOption(splits: Seq[Array[Byte]]): String =
-    splits.map(_.map("%02x".format(_)).mkString).mkString(",")
+    splits.map(java.util.HexFormat.of().formatHex(_)).mkString(",")
 
   private[sources] def parseSplits(s: String): Seq[Array[Byte]] =
-    s.split(",").toSeq.filter(_.nonEmpty).map(hex =>
-      hex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+    s.split(",").toSeq.filter(_.nonEmpty).map(graft.operators.RegionSort.splitKey)
 }
 
 private[sources] class GraftCellsTable(schema0: StructType,

@@ -57,13 +57,6 @@ object StreamingIngest {
                          phases: Map[String, Double] = Map.empty,
                          deferredSecs: Double = 0.0)
 
-  /** Per-batch cell-count readback from metadata
-    * ([[graft.sources.CellScan.countRows]]: the sink's manifest, or the
-    * footers of the files it cannot vouch for), else a distributed count
-    * for sinks that did not land flat parquet. */
-  private def cellCount(spark: SparkSession, dir: String): Long =
-    graft.sources.CellScan.countRows(spark, dir).getOrElse(spark.read.parquet(dir).count())
-
   /** Stream `delim`-separated text files from `inputDir` through the cell
     * pipeline. Runs until all currently-available input is drained, then
     * returns the per-batch results (ordered by batch id). `sinkOverride`
@@ -78,32 +71,11 @@ object StreamingIngest {
     * O(batches / N) filesets instead of one per batch. Runs INSIDE the
     * sequential foreachBatch turn, after postCommit (adoption first,
     * sweep second — the server compacts what it has adopted). */
-  /** `asyncProgress` opts into Spark's asynchronous progress tracking
-    * (SPARK-39591: offset-log and commit-log writes move off the trigger
-    * critical path onto a background thread) — the remaining per-trigger
-    * engine floor after the deferred-manifest and quarantine-overlap
-    * lanes is mostly these two durable-log writes plus trigger
-    * bookkeeping. CONTRACT INTERACTION: async tracking relaxes restart
-    * semantics from exactly-once to at-least-once for the most recent
-    * trigger(s) — a crash can REPLAY batch ids whose foreachBatch body
-    * already completed (their offset entries were not yet durable). This
-    * pipeline tolerates exactly that replay class by construction: a
-    * replayed id deterministically recreates the same fileset
-    * `mode("overwrite")` into the same `batch_NNNNN` dir, the compaction
-    * ledger's content fingerprint retires it without re-absorbing
-    * ([[graft.sources.CellCompaction.compactMinor]]), and postCommit
-    * re-fires only for those ids (HBase `doBulkLoad` of already-adopted
-    * files is server-side idempotent). foreachBatch is deliberately NOT
-    * on Spark's supported-sink allowlist because most foreachBatch bodies
-    * are not replay-idempotent; this one is, so the override option is
-    * set alongside the enable flag. Default OFF — the standing posture
-    * stays exactly-once; see BASELINE.md (r14) for the measured decision. */
   def run(spark: SparkSession, inputDir: String, outDir: String,
           checkpointDir: String, cfg: BulkLoad.Config = BulkLoad.Config(),
           delim: String = ",", maxFilesPerTrigger: Int = 1,
           sinkOverride: Option[CellSink] = None,
-          compactEvery: Int = 0,
-          asyncProgress: Boolean = false): Seq[BatchResult] = {
+          compactEvery: Int = 0): Seq[BatchResult] = {
     // the batches fix their boundaries in BulkLoad.fromPositional; the
     // compaction sweeps below must use the same ones
     val fixedCfg = BulkLoad.withFixedSplits(cfg)
@@ -139,14 +111,8 @@ object StreamingIngest {
     val lines = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .text(inputDir)
-    var writer = lines.writeStream
+    val q = lines.writeStream
       .option("checkpointLocation", checkpointDir)
-    if (asyncProgress) writer = writer
-      .option("asyncProgressTrackingEnabled", "true")
-      // foreachBatch is off the allowlist (most bodies are not
-      // replay-idempotent); this body is — see the run() scaladoc
-      .option("_asyncProgressTrackingOverrideSinkSupportCheck", "true")
-    val q = writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val t0 = System.nanoTime()
         def lap(since: Long): Double = (System.nanoTime() - since) / 1e9
@@ -200,7 +166,7 @@ object StreamingIngest {
               catch { case scala.util.control.NonFatal(e) => System.err.println(
                 s"[graft] deferred manifest for $dest failed " +
                   s"(${e.getClass.getSimpleName}); readers fall back to footers") }
-            (cellCount(spark, dest), lap(td))
+            (graft.sources.CellScan.rowCount(spark, dest), lap(td))
           }
           val completed = results.synchronized {
             results += BatchResult(batchId, dest, -1L, lap(t0),

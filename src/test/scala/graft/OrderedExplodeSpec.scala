@@ -102,7 +102,7 @@ class OrderedExplodeSpec extends SparkSuite {
       r.sink.write(r.cells, f"$root/batch_$b%05d")
     }
     val dest = tmpDir() + "/serving"
-    assert(CellCompaction.compactBatches(spark, root, dest, fixed) === 3)
+    assert(CellCompaction.compactMinor(spark, root, dest, fixed) === 3)
     CellCompaction.compactMajor(spark, dest, fixed)
     var pairs = 0
     partFiles(dest).foreach { case (name, cells) =>
@@ -145,18 +145,13 @@ class OrderedExplodeSpec extends SparkSuite {
       }
       assert(digits.distinct.size === files.size, s"$what: two files share a region")
     }
-    val root1 = tmpDir()
-    load(s"$root1/batch_00000")
-    val dest1 = tmpDir() + "/compacted"
-    assert(CellCompaction.compactBatches(spark, root1, dest1, cfg) === 1)
-    check(dest1, "compactBatches")
-    val root2 = tmpDir()
-    load(s"$root2/batch_00000")
-    val dest2 = s"$root2/serving"
-    assert(CellCompaction.compactMinor(spark, root2, dest2, cfg) === 1)
-    check(dest2, "compactMinor")
-    CellCompaction.compactMajor(spark, dest2, cfg)
-    check(dest2, "compactMajor")
+    val root = tmpDir()
+    load(s"$root/batch_00000")
+    val dest = s"$root/serving"
+    assert(CellCompaction.compactMinor(spark, root, dest, cfg) === 1)
+    check(dest, "compactMinor")
+    CellCompaction.compactMajor(spark, dest, cfg)
+    check(dest, "compactMajor")
   }
 
   test("unique keys: the default csv load writes part files byte-identical to the cell-sort path") {

@@ -360,7 +360,7 @@ class PropertySpec extends SparkSuite {
   }
 
   test("manifest temp sweep: writer-epoch names age by embedded epoch, legacy names by filesystem mtime") {
-    import graft.sources.CellManifest
+    import graft.sources.{CellManifest, Publish}
     val dir = java.nio.file.Files.createTempDirectory("graft-manifest-sweep")
     val now = System.currentTimeMillis()
     val hourAgo = now - 3600L * 1000
@@ -386,14 +386,14 @@ class PropertySpec extends SparkSuite {
     def st(name: String, mtime: Long) = new org.apache.hadoop.fs.FileStatus(
       1L, false, 1, 1L, mtime,
       new org.apache.hadoop.fs.Path(dir.toString, name))
-    assert(CellManifest.tempAgeBasis(
-      st(s"${CellManifest.FileName}.tmp-$hourAgo-u", now)) === hourAgo)
-    assert(CellManifest.tempAgeBasis(
-      st(s"${CellManifest.FileName}.tmp-12345678-u", now)) === now)
+    assert(Publish.tempAgeBasis(
+      st(s"${CellManifest.FileName}.tmp-$hourAgo-u", now), CellManifest.FileName) === hourAgo)
+    assert(Publish.tempAgeBasis(
+      st(s"${CellManifest.FileName}.tmp-12345678-u", now), CellManifest.FileName) === now)
     // a 19+-digit all-digit head is NOT a writer epoch (it would overflow
     // Long): ages by mtime instead of throwing
-    assert(CellManifest.tempAgeBasis(
-      st(s"${CellManifest.FileName}.tmp-9999999999999999999-u", now)) === now)
+    assert(Publish.tempAgeBasis(
+      st(s"${CellManifest.FileName}.tmp-9999999999999999999-u", now), CellManifest.FileName) === now)
     // and one such name must never veto the rest of the sweep: the old
     // single Try around the whole glob aborted on the first bad head,
     // silently leaking every remaining stale temp (r16 advice) — now

@@ -423,6 +423,10 @@ class SourceDriversSpec extends SparkSuite {
     val bytes = Array(0x00.toByte, 0x7f.toByte, 0x80.toByte, 0xff.toByte)
     assert(CellManifest.fromHex(CellManifest.toHex(bytes)).toSeq === bytes.toSeq)
     assert(CellManifest.fromHex(CellManifest.toHex(Array.empty[Byte])).isEmpty)
+    assert(CellManifest.toHex(bytes) === "007F80FF")
+    // damaged hex is an error, never a silently decoded bound
+    Seq("zz!", "ABC", "7g").foreach(h =>
+      intercept[IllegalArgumentException](CellManifest.fromHex(h)))
 
     // 5) 3-field lines (legacy format OR a 5-field line torn after the
     //    rows field — decimal lengths parse as valid hex, so the two are
@@ -527,23 +531,25 @@ class SourceDriversSpec extends SparkSuite {
         BulkLoad.emptyQuarantine(spark), cfg).cells
       SortedParquetCellSink.write(cells, f"$root/batch_$b%05d")
     }
+    // content identity: exactly the union of the batches
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.select(lower(hex(col("row"))), lower(hex(col("qualifier"))),
+        lower(hex(col("value")))).collect().map(_.toString).sorted.toSeq
     val union = spark.read.parquet(CellCompaction.batchDirs(spark, root): _*)
     val nBefore = union.count()
     val filesBefore = union.inputFiles.length
+    val keyedBefore = keyed(union)
 
+    // a minor compaction into a fresh dest is the full merge
     val dest = tmpDir() + "/compacted"
-    assert(CellCompaction.compactBatches(spark, root, dest, cfg) === 3)
+    assert(CellCompaction.compactMinor(spark, root, dest, cfg) === 3)
     val fs = FileSystem.get(new Configuration())
     val destParts = fs.listStatus(new Path(dest)).filter(s =>
       s.getPath.getName.startsWith("part-") && s.getPath.getName.endsWith(".parquet"))
     // post-compaction file count = region count (10), down from 3x that
     assert(destParts.length === 10, s"got ${destParts.length} files")
     assert(filesBefore > destParts.length)
-    // content identity: exactly the union of the batches
-    def keyed(df: org.apache.spark.sql.DataFrame) =
-      df.select(lower(hex(col("row"))), lower(hex(col("qualifier"))),
-        lower(hex(col("value")))).collect().map(_.toString).sorted.toSeq
-    assert(keyed(spark.read.parquet(dest)) === keyed(union))
+    assert(keyed(spark.read.parquet(dest)) === keyedBefore)
     assert(spark.read.parquet(dest).count() === nBefore)
     // the compacted dir serves manifest-pruned scans: zero footer opens,
     // bounded range touches a strict subset of region files
@@ -554,9 +560,7 @@ class SourceDriversSpec extends SparkSuite {
     assert(scan.count() > 0)
     assert(CellScan.footerOpens.get() === before)
     assert(CellScan.lastKeptFiles.get() < 10)
-    // retire pass: inputs deleted only after the compacted set is live
-    assert(CellCompaction.compactBatches(spark, root, tmpDir() + "/c2", cfg,
-      retireInputs = true) === 3)
+    // inputs are retired once the compacted set is live
     assert(CellCompaction.batchDirs(spark, root).isEmpty)
   }
 
@@ -672,15 +676,24 @@ class SourceDriversSpec extends SparkSuite {
     val total = all.count()
     val expect = all.where(col("row") >= lit(Array(0x40.toByte)) &&
       col("row") < lit(Array(0x80.toByte))).count()
-    // damage the first line's rows field (truncated number) and the
-    // second line's hex bounds — a torn write, not a wrong-arity line
+    // damage the first line's rows field (truncated number), the
+    // second line's hex bounds, and the lo bound of a file INSIDE the
+    // scanned range — a torn write, not a wrong-arity line. Decoded
+    // leniently, "zz!" would read as lo = 0xFF, above the range, and the
+    // scan would drop that file's rows.
     val mf = new java.io.File(dir, CellManifest.FileName)
     val lines = scala.io.Source.fromFile(mf, "UTF-8").getLines().toSeq
     assert(lines.size >= 3)
+    def firstByte(h: String) = Integer.parseInt(h.take(2), 16)
+    val inRange = lines.lastIndexWhere { l =>
+      val f = l.split('\t')
+      firstByte(f(3)) >= 0x40 && firstByte(f(4)) < 0x80
+    }
+    assert(inRange > 1, "some region file must lie inside [0x40, 0x80)")
     val damaged = lines.zipWithIndex.map {
       case (l, 0) =>
         val f = l.split('\t'); f(2) = "12x9"; f.mkString("\t")
-      case (l, 1) =>
+      case (l, i) if i == 1 || i == inRange =>
         val f = l.split('\t'); f(3) = "zz!"; f.mkString("\t")
       case (l, _) => l
     }
@@ -703,10 +716,15 @@ class SourceDriversSpec extends SparkSuite {
     val m = CellManifest.read(spark, dir).get
     val name0 = lines.head.split('\t').head
     assert(m(name0).rows === -1L && m(name0).bounds.isEmpty)
+    val nameIn = lines(inRange).split('\t').head
+    assert(m(nameIn).rows === -1L && m(nameIn).bounds.isEmpty,
+      "a damaged hex bound must parse to the conservative entry")
     // and scans still serve, exact: conservative entries re-stat/keep
     assert(CellScan.scanRange(spark, dir, None, None).count() === total)
     assert(CellScan.scanRange(spark, dir,
       Some(Array(0x40.toByte)), Some(Array(0x80.toByte))).count() === expect)
+    assert(CellScan.countRowsInRange(spark, dir,
+      Some(Array(0x40.toByte)), Some(Array(0x80.toByte))) === Some(expect))
   }
 
   test("CellScan.multiGet: K keys open only the touched region files, zero footer reads") {
@@ -1059,6 +1077,32 @@ class SourceDriversSpec extends SparkSuite {
     val messages = Iterator.iterate[Throwable](err)(_.getCause)
       .takeWhile(_ != null).map(_.getMessage).mkString("; ")
     assert(messages.contains("overwrite"), messages)
+  }
+
+  test("graft-cells splits option: one hex split-key parser; odd-length or non-hex keys are rejected") {
+    import graft.operators.RegionSort
+    import graft.sources.GraftCellsDataSource
+    val cells = BulkLoad.fromPositional(
+      rows9.toDF((0 until 9).map(i => s"c$i"): _*),
+      BulkLoad.emptyQuarantine(spark), BulkLoad.Config()).cells
+    def iaeIn(t: Throwable): Boolean = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null).exists(_.isInstanceOf[IllegalArgumentException])
+    Seq("abc", "zz", "40,7g").foreach { bad =>
+      val e = intercept[Exception](cells.write.format("graft-cells")
+        .option("splits", bad).mode("overwrite").save(tmpDir() + "/badsplits"))
+      assert(iaeIn(e), s"splits '$bad' must be rejected: $e")
+    }
+    // the CLI's split file reads through the same parser
+    val f = java.nio.file.Files.createTempFile("graft-splits", ".txt")
+    java.nio.file.Files.writeString(f, "40\nabc\n")
+    intercept[IllegalArgumentException](IngestCli.loadSplits(f.toString))
+    // either case parses; the option renders lowercase and round-trips
+    val keys = Seq(RegionSort.splitKey("3F"), RegionSort.splitKey("a0ff"))
+    assert(GraftCellsDataSource.splitsOption(keys) === "3f,a0ff")
+    val out = tmpDir() + "/oksplits"
+    cells.write.format("graft-cells").option("splits", "3F,a0ff")
+      .mode("overwrite").save(out)
+    assert(spark.read.parquet(out).count() === 27)
   }
 
   test("DSv2 via SQL DDL: CREATE TABLE USING graft-cells + INSERT OVERWRITE lands the golden layout") {
@@ -1420,7 +1464,7 @@ class SourceDriversSpec extends SparkSuite {
     assert(CellScan.footerOpens.get() === before)
   }
 
-  test("IngestCli compact verb: dispatches batches/minor/major; unknown mode is an error") {
+  test("IngestCli compact verb: dispatches minor/major; unknown mode is an error") {
     import graft.sources.CellCompaction
     val root = tmpDir() + "/cliroot"
     val cfg = BulkLoad.Config(splits =
@@ -1435,7 +1479,7 @@ class SourceDriversSpec extends SparkSuite {
         f"$root/batch_$b%05d")
     }
     val dest = tmpDir() + "/clidest"
-    assert(IngestCli.compactCommand(spark, "batches", root, dest, cfg) === 2)
+    assert(IngestCli.compactCommand(spark, "minor", root, dest, cfg) === 2)
     assert(CellCompaction.batchDirs(spark, root).isEmpty, "batches retired")
     val n = spark.read.parquet(dest).count()
     assert(n === 2 * 30 * 9)
@@ -1444,6 +1488,8 @@ class SourceDriversSpec extends SparkSuite {
     assert(spark.read.parquet(dest).count() === n)
     intercept[IllegalArgumentException](
       IngestCli.compactCommand(spark, "bogus", root, dest, cfg))
+    intercept[IllegalArgumentException](
+      IngestCli.compactCommand(spark, "batches", root, dest, cfg))
   }
 
   test("compactMinor ledger: a re-used batch id with DIFFERENT content fails loudly; the ledger stays bounded") {
@@ -1723,30 +1769,6 @@ class SourceDriversSpec extends SparkSuite {
       .reduce(_ unionByName _)
     val batch = BulkLoad.csv(spark, in, BulkLoad.Config(compatNaiveSplit = true))
     assert(key(streamed) === key(batch.cells))
-  }
-
-  test("streaming ingest under asyncProgressTracking: content identical to the batch pipeline (the override plumbing works)") {
-    import graft.streaming.StreamingIngest
-    val in = tmpDir() + "/in"
-    new java.io.File(in).mkdirs()
-    def put(name: String, rows: Seq[Product]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(in, name),
-        rows.map(_.productIterator.mkString(",")).mkString("\n").getBytes("UTF-8"))
-    put("f1.txt", Seq(rows9(0), rows9(1)))
-    put("f2.txt", Seq(rows9(2)))
-    val out = tmpDir() + "/out"
-    val batches = StreamingIngest.run(spark, in, out, tmpDir() + "/ckpt",
-      cfg = BulkLoad.Config(compatNaiveSplit = true), asyncProgress = true)
-    assert(batches.length === 2,
-      "foreachBatch must be accepted under the sink-support override")
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(hex(col("row")), hex(col("qualifier")), hex(col("value")))
-      .as[(String, String, String)].collect().sorted.toSeq
-    val streamed = batches.map(b => spark.read.parquet(b.path))
-      .reduce(_ unionByName _)
-    val batch = BulkLoad.csv(spark, in, BulkLoad.Config(compatNaiveSplit = true))
-    assert(key(streamed) === key(batch.cells))
-    assert(batches.map(_.cells).sum === batch.cells.count())
   }
 
   test("streaming ingest: a failed cells write fails the batch LOUDLY with the quarantine job joined, not orphaned") {
