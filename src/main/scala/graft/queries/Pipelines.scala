@@ -123,10 +123,9 @@ object Pipelines {
         .drop("grp")
     }),
 
-    // Structured Streaming: tumbling 1h windows, run to completion
-    // append-mode file-sink form (watermark-driven emission, sentinel
-    // closes trailing windows) — the scale shape; the complete-mode
-    // memory-sink windowedAgg stays as the interactive operator
+    // Structured Streaming: tumbling 1h windows, run to completion in
+    // the append-mode file-sink form (watermark-driven emission, sentinel
+    // closes trailing windows) — the scale shape
     "stream_windowed_agg" -> ((s, dir) => EventStream.windowedAggAppendAll(s, dir)),
     // sliding 2h/1h streaming windows: every event in exactly two
     // overlapping windows, watermark-evicted state, append file sink

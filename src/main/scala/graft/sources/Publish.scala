@@ -32,16 +32,20 @@ object Publish {
     hex.formatHex(java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")))
 
+  private def storeDir: Option[String] = sys.props.get("graft.store.dir")
+
+  /** Root of what the engine writes for itself on the job's file system:
+    * `graft.store.dir` when set, else `java.io.tmpdir`. */
+  def root: String = storeDir.getOrElse(sys.props("java.io.tmpdir"))
+
   /** Location of the keyed store `key` of a store `family`:
-    * `<root>/<md5(key)>/store`, where the root is `graft.store.dir` or
-    * `java.io.tmpdir/<family>`. The key string is the caller's whole
-    * identity (corpus drop, its stamp, parameters, version literal), so a
-    * changed input is a new key, never an overwrite. */
-  def storePath(family: String, key: String): Path = {
-    val root = sys.props.getOrElse("graft.store.dir",
-      sys.props("java.io.tmpdir") + "/" + family)
-    new Path(s"$root/${md5Hex(key)}", "store")
-  }
+    * `<graft.store.dir>/<md5(key)>/store`, or under
+    * `java.io.tmpdir/<family>` when no store dir is set. The key string
+    * is the caller's whole identity (corpus drop, its stamp, parameters,
+    * version literal), so a changed input is a new key, never an
+    * overwrite. */
+  def storePath(family: String, key: String): Path =
+    new Path(s"${storeDir.getOrElse(s"$root/$family")}/${md5Hex(key)}", "store")
 
   /** Build-once publish: when `path` is absent, `write` lands the artifact
     * (a directory or a single file) at the temp path it is given, a UUID

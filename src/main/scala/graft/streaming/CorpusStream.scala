@@ -88,7 +88,7 @@ object CorpusStream {
     val docs = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .schema(schema).parquet(inputDir)
-    val q = docs.writeStream
+    StreamHarness.drain(spark, docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val (folded, pre, post) = handoff.get()
@@ -114,9 +114,7 @@ object CorpusStream {
             BatchResult(batchId, dest, spark.read.parquet(dest).count())
         }
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      }, sessionWidth(spark))
     results.synchronized(results.values.toSeq).sortBy(_.batchId)
   }
 
@@ -127,22 +125,21 @@ object CorpusStream {
     * cross-batch index handoff with minimal fixed stream overhead; the
     * PipelineSpec test drives the 4-batch form. */
   def dedupIncrementalAll(spark: SparkSession, dir: String,
-                          n: Int, minEst: Double): DataFrame = {
-    val staging = java.nio.file.Files.createTempDirectory("graft-docs-stream").toString
-    spark.read.parquet(s"$dir/documents.parquet")
-      .repartition(2).write.mode("overwrite").parquet(s"$staging/in")
-    // two staged files on a fresh checkpoint → batch ids 0 and 1; the
-    // final batch's index handoff is skipped (no consumer)
-    val batches = run(spark, s"$staging/in", s"$staging/out", s"$staging/ckpt",
-      n, minEst, lastBatchHint = Some(1L))
-    // materialize before deleting the staging tree (same leak fix as
-    // [[spanRemovalAll]]: a lazy frame would read deleted files, and
-    // without cleanup every call leaks a corpus copy + checkpoint)
-    val result = batches.map(b => spark.read.parquet(b.path))
-      .reduce(_ unionByName _).materialized
-    EventStream.deleteStaging(staging)
-    result
-  }
+                          n: Int, minEst: Double): DataFrame =
+    StreamHarness.scratch(spark) { scratch =>
+      spark.read.parquet(s"$dir/documents.parquet")
+        .repartition(2).write.parquet(s"$scratch/in")
+      // two staged files on a fresh checkpoint → batch ids 0 and 1; the
+      // final batch's index handoff is skipped (no consumer)
+      run(spark, s"$scratch/in", s"$scratch/out", s"$scratch/ckpt",
+        n, minEst, lastBatchHint = Some(1L))
+        .map(b => spark.read.parquet(b.path)).reduce(_ unionByName _)
+    }
+
+  /** The session's shuffle width: the foreachBatch drivers are stateless,
+    * so their per-batch jobs keep the batch session's sizing. */
+  private def sessionWidth(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Streaming exact-substring removal — the continuous form of
     * [[graft.operators.Dedup.removeRepeatedSpansStored]]: each document
@@ -164,100 +161,75 @@ object CorpusStream {
     * (`stream_span_removal`), making the cross-batch registry handoff a
     * hash-checked fact. */
   def spanRemovalAll(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    import java.nio.file.Files
-    val staging = Files.createTempDirectory("graft-span-stream")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // empty corpus → NULL max; stage two empty files and let the fold run
     val mid = Option(docs.agg(max(col("doc_id"))).head().get(0))
       .map(_.asInstanceOf[Long] / 2).getOrElse(0L)
-    val inDir = staging.resolve("in"); Files.createDirectory(inDir)
-    def stage(name: String, part: DataFrame, mtime: Long): Unit = {
-      val tmp = staging.resolve(s"build_$name").toString
-      part.coalesce(1).write.parquet(tmp)
-      val f = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      val dst = inDir.resolve(s"$name.parquet")
-      Files.move(f.toPath, dst)
-      dst.toFile.setLastModified(mtime)
+    StreamHarness.scratch(spark) { scratch =>
+      // fixed mtimes: the file source orders by (mtime, path), so batch
+      // order — and therefore keeper resolution — is deterministic. The
+      // two halves' staging writes are independent single-file jobs — run
+      // them CONCURRENTLY (Spark schedules both jobs' tasks at once), so
+      // staging wall time is the larger half, not the sum; the trigger
+      // contract is untouched because each half's file lands in `in` only
+      // after its write completes, one file per half, mtimes fixed.
+      val t0 = 1700000000000L
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      Seq(
+        Future(StreamHarness.stageFile(docs.where(col("doc_id") <= mid),
+          s"$scratch/in/00_low.parquet", t0)),
+        Future(StreamHarness.stageFile(docs.where(col("doc_id") > mid),
+          s"$scratch/in/01_high.parquet", t0 + 60000L)))
+        .foreach(Await.result(_, Duration.Inf))
+      // RETRY-SAFE registry handoff: a transient failure can re-run
+      // foreachBatch for the SAME batch id, and a replay that reads a
+      // registry already advanced by the failed attempt would judge the
+      // batch against ITSELF — every within-batch singleton window reaches
+      // ndocs ≥ 2 and gets removed, a wrong answer, not just wasted work.
+      // The handoff therefore carries (foldedUpTo, preFold, postFold): a
+      // replayed id rewrites against the PRE-fold registry and never folds
+      // twice.
+      val handoff = new java.util.concurrent.atomic.AtomicReference[
+        (Long, DataFrame, DataFrame)](
+        (-1L, Dedup.emptySpanRegistry(spark), Dedup.emptySpanRegistry(spark)))
+      // keyed by batch id so a replayed id REPLACES its result (the r15
+      // ADVICE double-count class); each batch's output is handed over as
+      // a lineage-severed localCheckpoint frame instead of a parquet write
+      // + read-back, so the frames outlive the micro-batch
+      val results = scala.collection.mutable.LinkedHashMap.empty[Long, DataFrame]
+      StreamHarness.drain(spark, spark.readStream
+        .option("maxFilesPerTrigger", 1)
+        .schema(docs.schema).parquet(s"$scratch/in")
+        .writeStream
+        .option("checkpointLocation", s"$scratch/ckpt")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val (folded, pre, post) = handoff.get()
+          val reg = replaySafeFrame(batchId, folded, pre, post)
+          // rewrite + advance share one window pass and one digest
+          // aggregate; this driver staged exactly two files on a fresh
+          // checkpoint, so batch 1 is final and its advanced registry has
+          // no consumer — skip the fold (a standing stream keeps it)
+          val kept =
+            if (batchId >= 1) Dedup.materialize(Dedup.removeRepeatedSpansVs(batch, reg, k))
+            else {
+              val (out, advanced) = Dedup.removeRepeatedSpansAndAdvance(batch, reg, k)
+              val m = Dedup.materialize(out)
+              // hand the advanced registry over LAZILY: it depends only on
+              // materialized inputs (the batch digest aggregate is
+              // localCheckpointed inside the advance), so the next batch's
+              // single consumption computes the small digest fold inline —
+              // cheaper than eagerly checkpointing a frame the final batch
+              // would never read
+              if (batchId > folded) handoff.set((batchId, reg, advanced))
+              m
+            }
+          results.synchronized { results(batchId) = kept }
+          ()
+        }, sessionWidth(spark))
+      results.synchronized(results.values.toSeq).reduce(_ unionByName _)
     }
-    // fixed mtimes: the file source orders by (mtime, path), so batch
-    // order — and therefore keeper resolution — is deterministic. The
-    // two halves' staging writes are independent single-file jobs — run
-    // them CONCURRENTLY (Spark schedules both jobs' tasks at once), so
-    // staging wall time is the larger half, not the sum; the trigger
-    // contract is untouched because files land in inDir only after each
-    // half's write completes, one file per half, mtimes fixed.
-    val t0 = 1700000000000L
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val tStage0 = System.nanoTime()
-    val staged = Seq(
-      Future(stage("00_low", docs.where(col("doc_id") <= mid), t0)),
-      Future(stage("01_high", docs.where(col("doc_id") > mid), t0 + 60000L)))
-    staged.foreach(Await.result(_, Duration.Inf))
-    System.err.println(f"[spanstream] staging ${(System.nanoTime()-tStage0)/1e9}%.2f s")
-    // RETRY-SAFE registry handoff: a transient failure can re-run
-    // foreachBatch for the SAME batch id, and a replay that reads a
-    // registry already advanced by the failed attempt would judge the
-    // batch against ITSELF — every within-batch singleton window reaches
-    // ndocs ≥ 2 and gets removed, a wrong answer, not just wasted work.
-    // The handoff therefore carries (foldedUpTo, preFold, postFold): a
-    // replayed id rewrites against the PRE-fold registry and never folds
-    // twice.
-    val handoff = new java.util.concurrent.atomic.AtomicReference[
-      (Long, DataFrame, DataFrame)](
-      (-1L, Dedup.emptySpanRegistry(spark), Dedup.emptySpanRegistry(spark)))
-    // keyed by batch id so a replayed id REPLACES its result (the r15
-    // ADVICE double-count class); each batch's output is handed over as
-    // a lineage-severed localCheckpoint frame instead of a parquet write
-    // + read-back — the rewritten corpus is materialized ONCE into the
-    // block store rather than three times (write, re-read, union
-    // checkpoint), and the frames outlive both the micro-batch and the
-    // staging tree's deletion
-    val results = scala.collection.mutable.LinkedHashMap.empty[Long, DataFrame]
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .schema(docs.schema).parquet(inDir.toString)
-      .writeStream
-      .option("checkpointLocation", staging.resolve("ckpt").toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (folded, pre, post) = handoff.get()
-        val reg = replaySafeFrame(batchId, folded, pre, post)
-        // rewrite + advance share one window pass and one digest
-        // aggregate; this driver staged exactly two files on a fresh
-        // checkpoint, so batch 1 is final and its advanced registry has
-        // no consumer — skip the fold (a standing stream keeps it)
-        val tB = System.nanoTime()
-        val last = batchId >= 1
-        val kept =
-          if (last) Dedup.materialize(Dedup.removeRepeatedSpansVs(batch, reg, k))
-          else {
-            val (out, advanced) = Dedup.removeRepeatedSpansAndAdvance(batch, reg, k)
-            val m = Dedup.materialize(out)
-            // hand the advanced registry over LAZILY: it depends only on
-            // materialized inputs (the batch digest aggregate is
-            // localCheckpointed inside the advance), so the next batch's
-            // single consumption computes the small digest fold inline —
-            // cheaper than eagerly checkpointing a frame the final batch
-            // would never read
-            if (batchId > folded) handoff.set((batchId, reg, advanced))
-            m
-          }
-        System.err.println(f"[spanstream] batch $batchId ${(System.nanoTime()-tB)/1e9}%.2f s")
-        results.synchronized { results(batchId) = kept }
-        ()
-      }
-      .start()
-    val tQ = System.nanoTime()
-    try q.processAllAvailable() finally q.stop()
-    System.err.println(f"[spanstream] stream ${(System.nanoTime()-tQ)/1e9}%.2f s")
-    // the per-batch frames are checkpointed (no lineage into the staged
-    // files), so the staging tree can go before the union is consumed
-    val result = results.synchronized(results.values.toSeq)
-      .reduce(_ unionByName _)
-    EventStream.deleteStaging(staging.toString)
-    result
   }
 
   /** Epoch base of [[qualityMonitor]]'s synthetic ingest clock (micros). */
@@ -288,55 +260,36 @@ object CorpusStream {
     * Output: (window_start, source, n_docs, avg_tokens, short_frac). */
   def qualityMonitor(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    val staging = java.nio.file.Files.createTempDirectory("graft_doc_stage")
-    java.nio.file.Files.copy(src, staging.resolve("docs.parquet"))
-    val raw = spark.read.parquet(src.toString)
+    val src = s"$dir/documents.parquet"
+    val raw = spark.read.parquet(src)
     val maxId = raw.agg(max(col("doc_id"))).head().getLong(0)
-    // sentinel doc far enough ahead (id minutes >> watermark + window) to
-    // close every real window; excluded from results by the maxTs filter
-    val sentinelDir = staging.resolve("sentinel_build").toString
-    raw.limit(1).select(raw.columns.map {
-      case "doc_id" => lit(maxId + 10000L).as("doc_id")
-      case "source" => lit("__sentinel__").as("source")
-      case "text"   => lit("").as("text")
-      case other    => col(other)
-    }.toIndexedSeq: _*).coalesce(1).write.parquet(sentinelDir)
-    val part = new java.io.File(sentinelDir).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath, staging.resolve("sentinel.parquet"))
-
     def ingestTs(id: org.apache.spark.sql.Column) =
       timestamp_micros(lit(EpochBaseMicros) + id * lit(60000000L))
-    val maxTs = ingestTs(lit(maxId))
-
-    val stream = spark.readStream.schema(raw.schema).parquet(staging.toString)
-      .withColumn("ts", ingestTs(col("doc_id")))
-      .withColumn("n_tokens",
-        size(regexp_extract_all(col("text"), lit("\\S+"), lit(0))).cast("long"))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        (sum(col("n_tokens").cast(DecimalType(18, 4))).cast(DoubleType) /
-          count(lit(1))).as("avg_tokens"),
-        round(sum(when(col("n_tokens") < ShortDocTokens, 1).otherwise(0))
-          .cast(DoubleType) / count(lit(1)), 6).as("short_frac"))
-      .select(col("window.start").as("window_start"), col("source"),
-        col("n_docs"), col("avg_tokens"), col("short_frac"))
-
-    val sink = java.nio.file.Files.createTempDirectory("graft_doc_sink")
-    val out = sink.resolve("out").toString
-    EventStream.withStreamPartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("checkpointLocation", sink.resolve("ckpt").toString)
-        .start(out)
-      try q.processAllAvailable() finally q.stop()
+    StreamHarness.scratch(spark) { scratch =>
+      StreamHarness.copyFile(spark, src, s"$scratch/in/docs.parquet")
+      // sentinel doc far enough ahead (id minutes >> watermark + window) to
+      // close every real window; excluded from results by the maxTs filter
+      StreamHarness.stageFile(StreamHarness.sentinelRow(raw,
+          "doc_id" -> lit(maxId + 10000L), "source" -> lit("__sentinel__"),
+          "text" -> lit("")),
+        s"$scratch/in/sentinel.parquet", System.currentTimeMillis())
+      val stream = spark.readStream.schema(raw.schema).parquet(s"$scratch/in")
+        .withColumn("ts", ingestTs(col("doc_id")))
+        .withColumn("n_tokens",
+          size(regexp_extract_all(col("text"), lit("\\S+"), lit(0))).cast("long"))
+      val agg = stream
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          (sum(col("n_tokens").cast(DecimalType(18, 4))).cast(DoubleType) /
+            count(lit(1))).as("avg_tokens"),
+          round(sum(when(col("n_tokens") < ShortDocTokens, 1).otherwise(0))
+            .cast(DoubleType) / count(lit(1)), 6).as("short_frac"))
+        .select(col("window.start").as("window_start"), col("source"),
+          col("n_docs"), col("avg_tokens"), col("short_frac"))
+      StreamHarness.appendToFiles(agg, scratch)
+        .where(col("window_start") <= ingestTs(lit(maxId)))
     }
-    EventStream.deleteStaging(staging.toString)
-    spark.read.parquet(out).where(col("window_start") <= maxTs)
   }
 
   /** Streaming IVF index MAINTENANCE: embedding micro-batches are routed
@@ -363,7 +316,7 @@ object CorpusStream {
     * over_count), top k. */
   def cmsHeavyHittersAll(spark: SparkSession, dir: String): DataFrame = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    EventStream.replayFold(spark, docs, 3)(
+    StreamHarness.replayFold(spark, docs, 3)(
       batch => graft.operators.TextOps.cmsGrid(batch)) { store =>
       val folded = store
         .groupBy(col("j"), col("bucket")).agg(sum(col("cnt")).as("cnt"))
@@ -373,7 +326,7 @@ object CorpusStream {
 
   def annAssignAll(spark: SparkSession, dir: String, nlist: Int): DataFrame = {
     val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
-    EventStream.replayFold(spark, corpus, 2)(
+    StreamHarness.replayFold(spark, corpus, 2)(
       batch => graft.operators.Similarity.ivfAssign(corpus, batch, nlist)) {
       store => store.groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
     }
@@ -401,7 +354,7 @@ object CorpusStream {
     val oldV = corpus.where(pmod(col("vec_id"), lit(10)) =!= 0)
     val newV = corpus.where(pmod(col("vec_id"), lit(10)) === 0)
     val store = Similarity.annIndexStore(oldV, 16, s"$dir#emb-old90")
-    EventStream.replayFold(spark, newV, 2)(
+    StreamHarness.replayFold(spark, newV, 2)(
       batch => Similarity.annIndexDriftBatchPartials(store, batch)) { parts =>
       Similarity.annIndexDriftFinish(store,
         parts.groupBy(col("cell")).agg(

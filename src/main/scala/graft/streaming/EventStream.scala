@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Structured Streaming surface: the engine's stream path for the `events`
   * table (`readStream` → watermark → tumbling-window agg → sink).
@@ -19,12 +17,10 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
   * table is staged next to one watermark-advancing sentinel event
   * ([[stageEventsWithSentinel]]), so the closing no-data micro-batch
   * flushes every open window/session/join-state and the sink holds the
-  * exact batch answer. The complete-mode memory-sink [[windowedAgg]]
-  * remains as the interactive form (no staging, results on the driver).
+  * exact batch answer. Staging, checkpoint and sink live in one
+  * [[StreamHarness.scratch]] directory per call.
   */
 object EventStream {
-
-  private val counter = new AtomicInteger()
 
   case class Ev(user_id: Long, event_id: Long, ts: java.sql.Timestamp)
   case class OpenSession(start: Long, last: Long, n: Long) // epoch micros
@@ -81,66 +77,6 @@ object EventStream {
       }
   }
 
-  /** Tumbling 1-hour windows per event_type: (window_start, event_type, n,
-    * sum_value). Runs the stream to completion and returns the result. */
-  def windowedAgg(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    // events.ts is TIMESTAMP(NANOS): stream it as long, convert to micros
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(path).schema
-    // file-stream source wants a directory: stream the sf dir, globbed
-    // down to the events table
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .withColumn("ts", graft.queries.Tables.normTs(schema("ts").dataType))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
-
-  /** Append-mode, watermark-driven form of [[windowedAgg]] writing to a
-    * parquet FILE sink — the deployment shape at 100 TB: no complete-mode
-    * driver materialization, each closed window appended exactly once when
-    * the watermark passes its end, output partitioned across executors.
-    *
-    * On a finite source the trailing windows stay open by design (append
-    * only emits below-watermark windows); producers close them by appending
-    * a sentinel event past max(ts) + watermark, which is what the test
-    * harness does. Returns the file-sink contents after draining all
-    * currently-available input (the no-data micro-batch that follows the
-    * final watermark advance flushes the newly-closed windows). */
-  def windowedAggAppend(spark: SparkSession, inputDir: String,
-                        outDir: String, checkpointDir: String): DataFrame = {
-    val schema = spark.read.parquet(inputDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("checkpointLocation", checkpointDir)
-      .start(outDir)
-    try q.processAllAvailable() finally q.stop()
-    spark.read.parquet(outDir)
-  }
-
   /** Declared-query driver for [[sessionizeIncremental]] over a finite
     * events table: stages the parquet file alongside a single
     * watermark-advancing SENTINEL event (ts far past max(ts) + gap for a
@@ -155,67 +91,33 @@ object EventStream {
   def sessionizeIncrementalAll(spark: SparkSession, dir: String,
                                gapMinutes: Int): DataFrame = {
     import spark.implicits._
-    val (staging, _, schema) =
-      stageEventsWithSentinel(spark, dir, gapMinutes + 120L)
-    val stream = spark.readStream.schema(schema).parquet(staging)
-      .withColumn("ts", graft.queries.Tables.normTs(schema("ts").dataType))
-      .select(col("user_id"), col("event_id"), col("ts")).as[Ev]
-    val name = s"graft_sess_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, 8) {
-      val q = sessionizeIncremental(stream, gapMinutes).writeStream
-        .outputMode("append").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
+    StreamHarness.scratch(spark) { scratch =>
+      val (stream, _) = stageEventsWithSentinel(spark, dir, scratch, gapMinutes + 120L)
+      val sessions = sessionizeIncremental(
+        stream.select(col("user_id"), col("event_id"), col("ts")).as[Ev], gapMinutes)
+      StreamHarness.appendToFiles(sessions.toDF(), scratch).where(col("user_id") >= 0)
     }
-    deleteStaging(staging)
-    spark.table(name).where(col("user_id") >= 0)
-      .select(col("user_id"), col("session_start"), col("n_events"))
   }
 
-  /** Best-effort recursive delete of a finished staging directory — the
-    * returned DataFrames read SINK output, never the staged input, so the
-    * copies are dead weight once the stream stops. */
-  private[streaming] def deleteStaging(dir: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(dir)
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverseIterator
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered
-    * for a stream START: stateful operators pin their state-store
-    * partition count from this conf at the first batch (it lives in the
-    * checkpoint thereafter), and each state partition pays per-batch
-    * open/flush overhead — so the state partition count should be sized
-    * to the STREAM's key cardinality, not inherited from the batch
-    * session. The session value is restored afterwards; batch queries
-    * are unaffected. */
-  private[streaming] def withStreamPartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Stage the events table into a temp directory next to ONE
+  /** Stage the events table under `scratch/in` next to ONE
     * watermark-advancing sentinel event (reserved user/event id -1, ts =
     * max(ts) + `deltaMinutes`). Streaming the staging directory makes any
     * watermarked operator over a FINITE table run to completion: the
     * sentinel advances the global watermark past every open
     * session/window, and the no-data micro-batch that follows flushes
-    * them. Returns (stagingDir, maxTsMicros, schema). */
-  private def stageEventsWithSentinel(spark: SparkSession, dir: String,
+    * them. Returns the staged stream (ts normalized to a timestamp) and
+    * max(ts) in epoch micros. */
+  private def stageEventsWithSentinel(spark: SparkSession, dir: String, scratch: String,
                                       deltaMinutes: Long,
-                                      copies: Int = 1): (String, Long, StructType) = {
+                                      copies: Int = 1): (DataFrame, Long) = {
     // legacy fixtures ship ts as TIMESTAMP(NANOS) — read as long; newer
     // ones as timestamp[us]. Normalize via Tables.normTs; the sentinel row
     // is written back in the RAW encoding so it streams with the copies.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val staging = java.nio.file.Files.createTempDirectory("graft_evt_stage")
+    val src = s"$dir/events.parquet"
     (0 until copies).foreach(i =>
-      java.nio.file.Files.copy(src, staging.resolve(s"events_$i.parquet")))
-    val raw = spark.read.parquet(src.toString)
+      StreamHarness.copyFile(spark, src, s"$scratch/in/events_$i.parquet"))
+    val raw = spark.read.parquet(src)
     val tsType = raw.schema("ts").dataType
     val maxTs = raw // epoch micros
       .agg(unix_micros(max(graft.queries.Tables.normTs(tsType)))).head().getLong(0)
@@ -224,20 +126,15 @@ object EventStream {
       case org.apache.spark.sql.types.LongType => lit(sentinelUs * 1000L) // nanos
       case other => timestamp_micros(lit(sentinelUs)).cast(other)
     }
-    val sentinelDir = staging.resolve("sentinel_build").toString
-    raw.limit(1).select(raw.columns.map {
-      case "user_id"  => lit(-1L).as("user_id")
-      case "event_id" => lit(-1L).as("event_id")
-      case "ts"       => sentinelTs.as("ts")
-      case other      => col(other)
-    }.toIndexedSeq: _*).coalesce(1).write.parquet(sentinelDir)
-    val part = new java.io.File(sentinelDir).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    java.nio.file.Files.move(part.toPath, staging.resolve("sentinel.parquet"))
-    (staging.toString, maxTs, raw.schema)
+    StreamHarness.stageFile(StreamHarness.sentinelRow(raw,
+        "user_id" -> lit(-1L), "event_id" -> lit(-1L), "ts" -> sentinelTs),
+      s"$scratch/in/sentinel.parquet", System.currentTimeMillis())
+    val stream = spark.readStream.schema(raw.schema).parquet(s"$scratch/in")
+      .withColumn("ts", graft.queries.Tables.normTs(tsType))
+    (stream, maxTs)
   }
 
-  /** The DECLARED scale-shaped form of [[windowedAgg]]: append output
+  /** The DECLARED scale-shaped tumbling-window aggregate: append output
     * mode, parquet FILE sink, watermark-driven emission — no complete-mode
     * driver materialization anywhere. The sentinel staged by
     * [[stageEventsWithSentinel]] closes every real window (its own window
@@ -272,57 +169,33 @@ object EventStream {
     * make the boundary case measure-zero in practice but the mirror is
     * exact about it. Output: (user_id, session_start, n_events). */
   def sessionWindowAggAll(spark: SparkSession, dir: String,
-                          gapMinutes: Int): DataFrame = {
-    val (staging, _, schema) = stageEventsWithSentinel(spark, dir, 240L)
-    val stream = spark.readStream.schema(schema).parquet(staging)
-      .withColumn("ts", graft.queries.Tables.normTs(schema("ts").dataType))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("user_id"),
-        session_window(col("ts"), s"$gapMinutes minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"), col("n_events"))
-    val sink = java.nio.file.Files.createTempDirectory("graft_sess_sink")
-    val out = sink.resolve("out").toString
-    withStreamPartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("checkpointLocation", sink.resolve("ckpt").toString)
-        .start(out)
-      try q.processAllAvailable() finally q.stop()
+                          gapMinutes: Int): DataFrame =
+    StreamHarness.scratch(spark) { scratch =>
+      val (stream, _) = stageEventsWithSentinel(spark, dir, scratch, 240L)
+      val agg = stream
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"),
+          session_window(col("ts"), s"$gapMinutes minutes"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"),
+          col("session_window.start").as("session_start"), col("n_events"))
+      StreamHarness.appendToFiles(agg, scratch).where(col("user_id") >= 0)
     }
-    deleteStaging(staging)
-    spark.read.parquet(out).where(col("user_id") >= 0)
-  }
 
   private def windowedAggAppendImpl(spark: SparkSession, dir: String,
-                                    duration: String, slide: String): DataFrame = {
-    val (staging, maxTs, schema) = stageEventsWithSentinel(spark, dir, 240L)
-    val stream = spark.readStream.schema(schema).parquet(staging)
-      .withColumn("ts", graft.queries.Tables.normTs(schema("ts").dataType))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), duration, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-    val sink = java.nio.file.Files.createTempDirectory("graft_evt_sink")
-    val out = sink.resolve("out").toString
-    withStreamPartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("checkpointLocation", sink.resolve("ckpt").toString)
-        .start(out)
-      try q.processAllAvailable() finally q.stop()
+                                    duration: String, slide: String): DataFrame =
+    StreamHarness.scratch(spark) { scratch =>
+      val (stream, maxTs) = stageEventsWithSentinel(spark, dir, scratch, 240L)
+      val agg = stream
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), duration, slide), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
+        .select(col("window.start").as("window_start"), col("event_type"),
+          col("n"), col("sum_value"))
+      StreamHarness.appendToFiles(agg, scratch)
+        .where(col("window_start") <= timestamp_micros(lit(maxTs)))
     }
-    deleteStaging(staging)
-    spark.read.parquet(out)
-      .where(col("window_start") <= timestamp_micros(lit(maxTs)))
-  }
 
   /** WATERMARK LATE-DATA semantics as a declared, oracle-checkable
     * query. The stream arrives in DETERMINISTIC micro-batches (3-day
@@ -362,87 +235,51 @@ object EventStream {
       return ev.limit(0).select(col("ts").as("window_start"),
         col("event_type"), lit(0L).as("n"))
     val maxTs = maxTsRow.getLong(0)
-    val staged = ev.withColumn("batch", batchCol)
-    val staging = java.nio.file.Files.createTempDirectory("graft_late_stage")
-    val in = staging.resolve("in")
-    java.nio.file.Files.createDirectory(in)
-    val t0 = (System.currentTimeMillis() / 1000L) * 1000L
-    // one file per batch, strictly increasing mtimes: the file source
-    // processes oldest-first, so arrival order is the batch order. ALL
-    // batch files land in ONE repartition(batch)+partitionBy pass (one
-    // scan, one task per batch ⇒ one file per batch dir) — the previous
-    // per-batch coalesce(1) writes re-scanned the events table once per
-    // batch, which WAS most of this query's wall-clock
-    def adoptBatch(b: Int, mtime: Long): Unit = {
-      val src = new java.io.File(staging.resolve(s"stage_build/batch=$b").toString)
-      if (!src.isDirectory) return // empty batch: contributes no file
-      val part = src.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      val dest = in.resolve(f"b$b%02d.parquet").toFile
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(mtime)
-    }
     val nBatches = maxTsRow.getInt(1) + 1
-    staged.repartition(nBatches, col("batch"))
-      .write.partitionBy("batch").mode("overwrite")
-      .parquet(staging.resolve("stage_build").toString)
-    (0 until nBatches).foreach(b => adoptBatch(b, t0 + b * 1000L))
-    // sentinel LAST: advances the watermark past every real window so the
-    // append sink flushes them; its own window is excluded by the filter
-    val sentinelUs = maxTs + 240L * 60L * 1000000L
-    val sentTmp = staging.resolve("tmp_sentinel").toString
-    ev.limit(1).select(ev.columns.map {
-        case "event_id" => lit(-1L).as("event_id")
-        case "user_id"  => lit(-1L).as("user_id")
-        case "ts"       => timestamp_micros(lit(sentinelUs)).as("ts")
-        case other      => col(other)
-      }: _*).coalesce(1).write.mode("overwrite").parquet(sentTmp)
-    val sentPart = new java.io.File(sentTmp).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-    val sentDest = in.resolve(f"b$nBatches%02d.parquet").toFile
-    java.nio.file.Files.move(sentPart.toPath, sentDest.toPath)
-    sentDest.setLastModified(t0 + nBatches * 1000L)
-    val schema = spark.read.parquet(in.toString).schema
-    val stream = spark.readStream.option("maxFilesPerTrigger", 1)
-      .schema(schema).parquet(in.toString)
-    val agg = stream
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-    val out = staging.resolve("out").toString
-    // 3 state partitions, not the stream default 8: per-trigger cost
-    // scales with partition count (state commits, sink files, tasks)
-    // while the answer does not depend on it. Measured floor (r15): the
-    // ~13 triggers ARE the semantics (one watermark advancement per
-    // staged arrival batch — the oracle models eviction per batch index,
-    // so triggers cannot fold), and each costs ~0.4 s of microbatch
-    // machinery (incremental re-plan + offset/commit log + sink commit;
-    // state partitions 8→3→1 moved nothing beyond noise, and async
-    // progress tracking is structurally unavailable — Spark's
-    // checkNotStatefulStreamingQuery refuses stateful queries). The
-    // query is therefore fixed-cost-bound: decade α ≈ 0 (SCALESTRESS.md),
-    // a harness floor, not a scale risk. The parquet FILE SINK is kept
-    // deliberately: a foreachBatch per-batch-dir sink was measured 40%
-    // SLOWER here (r15) — thirteen standalone FileFormatWriter jobs with
-    // their commit protocols cost more than the file sink's incremental
-    // _spark_metadata maintenance.
-    withStreamPartitions(spark, 3) {
-      val tQ = System.nanoTime()
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("checkpointLocation", staging.resolve("ckpt").toString)
-        .start(out)
-      try q.processAllAvailable() finally q.stop()
-      System.err.println(f"[latedrop] stream ${(System.nanoTime()-tQ)/1e9}%.2f s over $nBatches+1 triggers")
+    StreamHarness.scratch(spark) { scratch =>
+      val in = s"$scratch/in"
+      val t0 = (System.currentTimeMillis() / 1000L) * 1000L
+      // one file per batch, strictly increasing mtimes: the file source
+      // processes oldest-first, so arrival order is the batch order. ALL
+      // batch files land in ONE repartition(batch)+partitionBy pass (one
+      // scan, one task per batch ⇒ one file per batch dir) — per-batch
+      // single-file writes would re-scan the events table once per batch
+      ev.withColumn("batch", batchCol).repartition(nBatches, col("batch"))
+        .write.partitionBy("batch").parquet(s"$scratch/build")
+      (0 until nBatches).foreach(b => StreamHarness.adopt(spark,
+        s"$scratch/build/batch=$b", f"$in/b$b%02d.parquet", t0 + b * 1000L))
+      // sentinel LAST: advances the watermark past every real window so the
+      // append sink flushes them; its own window is excluded by the filter
+      StreamHarness.stageFile(StreamHarness.sentinelRow(ev,
+          "event_id" -> lit(-1L), "user_id" -> lit(-1L),
+          "ts" -> timestamp_micros(lit(maxTs + 240L * 60L * 1000000L))),
+        f"$in/b$nBatches%02d.parquet", t0 + nBatches * 1000L)
+      val stream = spark.readStream.option("maxFilesPerTrigger", 1)
+        .schema(spark.read.parquet(in).schema).parquet(in)
+      val agg = stream
+        .withWatermark("ts", "30 minutes")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("window_start"), col("event_type"), col("n"))
+      // 3 state partitions, not the stream default 8: per-trigger cost
+      // scales with partition count (state commits, sink files, tasks)
+      // while the answer does not depend on it. Measured floor (r15): the
+      // ~13 triggers ARE the semantics (one watermark advancement per
+      // staged arrival batch — the oracle models eviction per batch index,
+      // so triggers cannot fold), and each costs ~0.4 s of microbatch
+      // machinery (incremental re-plan + offset/commit log + sink commit;
+      // state partitions 8→3→1 moved nothing beyond noise, and async
+      // progress tracking is structurally unavailable — Spark's
+      // checkNotStatefulStreamingQuery refuses stateful queries). The
+      // query is therefore fixed-cost-bound: decade α ≈ 0 (SCALESTRESS.md),
+      // a harness floor, not a scale risk. The parquet FILE SINK is kept
+      // deliberately: a foreachBatch per-batch-dir sink was measured 40%
+      // SLOWER here (r15) — thirteen standalone FileFormatWriter jobs with
+      // their commit protocols cost more than the file sink's incremental
+      // _spark_metadata maintenance.
+      StreamHarness.appendToFiles(agg, scratch, width = 3)
+        .where(col("window_start") <= timestamp_micros(lit(maxTs)))
     }
-    import graft.operators.Dedup.MaterializeSyntax
-    val res = spark.read.parquet(out)
-      .where(col("window_start") <= timestamp_micros(lit(maxTs)))
-      .materialized
-    deleteStaging(staging.toString)
-    res
   }
 
   /** DuckDB mirror of [[lateDropAudit]] (oracle builder): the explicit
@@ -478,34 +315,22 @@ object EventStream {
     * The sentinel (user_id = -1) matches no customer and its window is
     * excluded by the `window_start <= max(ts)` filter.
     * Output: (window_start, c_nationkey, n, sum_value). */
-  def enrichedWindowedAgg(spark: SparkSession, dir: String): DataFrame = {
-    val (staging, maxTs, schema) = stageEventsWithSentinel(spark, dir, 240L)
-    val stream = spark.readStream.schema(schema).parquet(staging)
-      .withColumn("ts", graft.queries.Tables.normTs(schema("ts").dataType))
-    val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
-      .select(col("c_custkey"), col("c_nationkey")))
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .join(dim, col("user_id") === col("c_custkey"))
-      .groupBy(window(col("ts"), "1 hour"), col("c_nationkey"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("c_nationkey"),
-        col("n"), col("sum_value"))
-    val sink = java.nio.file.Files.createTempDirectory("graft_enr_sink")
-    val out = sink.resolve("out").toString
-    withStreamPartitions(spark, 8) {
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("checkpointLocation", sink.resolve("ckpt").toString)
-        .start(out)
-      try q.processAllAvailable() finally q.stop()
+  def enrichedWindowedAgg(spark: SparkSession, dir: String): DataFrame =
+    StreamHarness.scratch(spark) { scratch =>
+      val (stream, maxTs) = stageEventsWithSentinel(spark, dir, scratch, 240L)
+      val dim = broadcast(spark.read.parquet(s"$dir/customer.parquet")
+        .select(col("c_custkey"), col("c_nationkey")))
+      val agg = stream
+        .withWatermark("ts", "1 hour")
+        .join(dim, col("user_id") === col("c_custkey"))
+        .groupBy(window(col("ts"), "1 hour"), col("c_nationkey"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("sum_value"))
+        .select(col("window.start").as("window_start"), col("c_nationkey"),
+          col("n"), col("sum_value"))
+      StreamHarness.appendToFiles(agg, scratch)
+        .where(col("window_start") <= timestamp_micros(lit(maxTs)))
     }
-    deleteStaging(staging)
-    spark.read.parquet(out)
-      .where(col("window_start") <= timestamp_micros(lit(maxTs)))
-  }
 
   /** Declared stream-stream INTERVAL JOIN over the finite events table:
     * purchases attributed to the same user's click within the PRECEDING 30
@@ -516,38 +341,26 @@ object EventStream {
     * joins emit eagerly per micro-batch, so the file sink holds the exact
     * batch answer once the input drains. Output:
     * (user_id, click_id, purchase_id, c_ts, b_ts, amount). */
-  def clickAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val (staging, _, schema) = stageEventsWithSentinel(spark, dir, 240L)
-    val ev = spark.readStream.schema(schema).parquet(staging)
-      .withColumn("ts", graft.queries.Tables.normTs(schema("ts").dataType))
-    val clicks = ev.withWatermark("ts", "1 hour")
-      .where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-    val buys = ev.withWatermark("ts", "1 hour")
-      .where(col("event_type") === "purchase")
-      .select(col("user_id").as("b_user"), col("event_id").as("purchase_id"),
-        col("ts").as("b_ts"), col("value").as("amount"))
-    val joined = clicks.join(buys,
-      col("c_user") === col("b_user") &&
-        col("b_ts") >= col("c_ts") &&
-        col("b_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-    val sink = java.nio.file.Files.createTempDirectory("graft_ssj_sink")
-    val out = sink.resolve("out").toString
-    withStreamPartitions(spark, 8) {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("checkpointLocation", sink.resolve("ckpt").toString)
-        .start(out)
-      try q.processAllAvailable() finally q.stop()
+  def clickAttribution(spark: SparkSession, dir: String): DataFrame =
+    StreamHarness.scratch(spark) { scratch =>
+      val (ev, _) = stageEventsWithSentinel(spark, dir, scratch, 240L)
+      val clicks = ev.withWatermark("ts", "1 hour")
+        .where(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
+          col("ts").as("c_ts"))
+      val buys = ev.withWatermark("ts", "1 hour")
+        .where(col("event_type") === "purchase")
+        .select(col("user_id").as("b_user"), col("event_id").as("purchase_id"),
+          col("ts").as("b_ts"), col("value").as("amount"))
+      val joined = clicks.join(buys,
+        col("c_user") === col("b_user") &&
+          col("b_ts") >= col("c_ts") &&
+          col("b_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
+      StreamHarness.appendToFiles(joined, scratch)
+        .where(col("c_user") >= 0)
+        .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"),
+          col("c_ts"), col("b_ts"), col("amount"))
     }
-    deleteStaging(staging)
-    spark.read.parquet(out)
-      .where(col("c_user") >= 0)
-      .select(col("c_user").as("user_id"), col("click_id"), col("purchase_id"),
-        col("c_ts"), col("b_ts"), col("amount"))
-  }
 
   /** Declared EXACTLY-ONCE dedup over an at-least-once stream: the events
     * table is staged TWICE (every event delivered twice, the way a
@@ -558,58 +371,15 @@ object EventStream {
     * horizon, not the stream's history. The file sink then holds exactly
     * the batch events table (sentinel filtered).
     * Output: (event_id, user_id, ts, event_type). */
-  def dedupEventsAll(spark: SparkSession, dir: String): DataFrame = {
-    val (staging, _, schema) = stageEventsWithSentinel(spark, dir, 240L, copies = 2)
-    val ev = spark.readStream.schema(schema).parquet(staging)
-      .withColumn("ts", graft.queries.Tables.normTs(schema("ts").dataType))
-      .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-    val sink = java.nio.file.Files.createTempDirectory("graft_dup_sink")
-    val out = sink.resolve("out").toString
-    withStreamPartitions(spark, 8) {
-      val q = ev.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("checkpointLocation", sink.resolve("ckpt").toString)
-        .start(out)
-      try q.processAllAvailable() finally q.stop()
+  def dedupEventsAll(spark: SparkSession, dir: String): DataFrame =
+    StreamHarness.scratch(spark) { scratch =>
+      val (stream, _) = stageEventsWithSentinel(spark, dir, scratch, 240L, copies = 2)
+      val ev = stream
+        .select(col("event_id"), col("user_id"), col("ts"), col("event_type"))
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark("event_id")
+      StreamHarness.appendToFiles(ev, scratch).where(col("event_id") >= 0)
     }
-    deleteStaging(staging)
-    spark.read.parquet(out).where(col("event_id") >= 0)
-  }
-
-  /** Shared replay harness for the streaming-maintenance queries — every
-    * mergeable-state stream (quantile/HLL sketches, CMS grids, CDC
-    * snapshots, IVF lists) is this one shape: stage `source` as `parts`
-    * parquet files, stream them one per micro-batch, APPEND
-    * `perBatch(batch)` partials to a store, then return `fold(store)`
-    * materialized (the result must not outlive the staging files) with
-    * the staging cleaned up. */
-  private[streaming] def replayFold(spark: SparkSession, source: DataFrame,
-      parts: Int)(perBatch: DataFrame => DataFrame)(
-      fold: DataFrame => DataFrame): DataFrame = {
-    import graft.operators.Dedup.MaterializeSyntax
-    val staging = java.nio.file.Files.createTempDirectory("graft-replay").toString
-    source.repartition(parts).write.mode("overwrite").parquet(s"$staging/in")
-    val schema = spark.read.parquet(s"$staging/in").schema
-    val stream = spark.readStream.option("maxFilesPerTrigger", 1)
-      .schema(schema).parquet(s"$staging/in")
-    val store = s"$staging/store"
-    withStreamPartitions(spark, 8) {
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$staging/ckpt")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          perBatch(batch).write.mode("append").parquet(store)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val out = fold(spark.read.parquet(store)).materialized
-    deleteStaging(staging)
-    out
-  }
 
   /** Streaming HLL maintenance — the incremental form of the batch
     * [[graft.operators.Sketches]] register sketch: event micro-batches
@@ -626,7 +396,7 @@ object EventStream {
     import graft.operators.Sketches
     val events = graft.queries.Tables.events(spark, dir)
     val day = date_format(col("ts").cast("date"), "yyyy-MM-dd")
-    replayFold(spark, events, 3)(
+    StreamHarness.replayFold(spark, events, 3)(
       batch => Sketches.hllRegisters(batch, day, col("user_id"))) { store =>
       val regs = store
         .groupBy(col("g"), col("reg")).agg(max(col("mx")).as("mx"))
@@ -665,7 +435,7 @@ object EventStream {
         struct(col("ts"), col("event_id"))).as("l"))
       .select(col("user_id"), col("l.ts").as("ts"), col("l.event_id").as("event_id"),
         col("l.event_type").as("event_type"), col("l.value").as("value"))
-    replayFold(spark, events, 3)(argmax) { store =>
+    StreamHarness.replayFold(spark, events, 3)(argmax) { store =>
       argmax(store)
         .where(col("event_type") =!= tombstoneType)
         .select(col("user_id"), col("ts").as("last_ts"),
@@ -693,7 +463,7 @@ object EventStream {
         expr("shiftleft(CAST(1 AS BIGINT), day(ts) - 1)").as("bm"))
       .groupBy(col("mon"), col("user_id"))
       .agg(expr("bit_or(bm)").as("bm"))
-    replayFold(spark, events, 3)(partial) { store =>
+    StreamHarness.replayFold(spark, events, 3)(partial) { store =>
       store.groupBy(col("mon"), col("user_id"))
         .agg(expr("bit_or(bm)").as("bm"))
         .select(col("mon"), expr("CAST(bit_count(bm) AS INT)").as("active_days"))
@@ -717,7 +487,7 @@ object EventStream {
                         width: Double): DataFrame = {
     import graft.operators.Dedup.MaterializeSyntax
     val events = graft.queries.Tables.events(spark, dir)
-    replayFold(spark, events, 3)(batch =>
+    StreamHarness.replayFold(spark, events, 3)(batch =>
       graft.operators.Sketches.histRegisters(batch,
         date_format(col("ts").cast("date"), "yyyy-MM-dd"),
         col("value"), width)) { store =>

@@ -35,26 +35,15 @@ object StateBackend {
   private val ChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 
-  /** Point every subsequently STARTED streaming query at RocksDB state
-    * with changelog checkpointing. (The provider is bound per-query at
-    * start from the session conf; running queries are unaffected.) */
-  def useRocksDB(spark: SparkSession): Unit = {
-    spark.conf.set(ProviderKey, RocksDBProvider)
-    spark.conf.set(ChangelogKey, "true")
-  }
-
-  /** Restore the session default (HDFS-backed heap store). */
-  def useDefault(spark: SparkSession): Unit = {
-    spark.conf.unset(ProviderKey)
-    spark.conf.unset(ChangelogKey)
-  }
-
-  /** Run `body` with the RocksDB backend bound, restoring the prior
-    * provider conf afterwards (exception-safe). */
+  /** Run `body` with every streaming query it STARTS bound to RocksDB
+    * state with changelog checkpointing (the provider is bound per query
+    * at start from the session conf; running queries are unaffected),
+    * restoring the prior provider conf afterwards (exception-safe). */
   def withRocksDB[A](spark: SparkSession)(body: => A): A = {
     val prior = spark.conf.getOption(ProviderKey)
     val priorLog = spark.conf.getOption(ChangelogKey)
-    useRocksDB(spark)
+    spark.conf.set(ProviderKey, RocksDBProvider)
+    spark.conf.set(ChangelogKey, "true")
     try body
     finally {
       prior.fold(spark.conf.unset(ProviderKey))(spark.conf.set(ProviderKey, _))

@@ -190,15 +190,16 @@ class CellPipelineSpec extends SparkSuite {
   }
 
   test("BulkLoad.sorted over salt splits (custom LogicalPlan/SparkPlan): exact alignment inside the DataFrame world") {
-    val path = "/root/reference/src/main/resources/iouzipcodes2011.csv"
-    val (kept, _) = Delimited.naiveSplit(spark, path, ",", 9)
+    import graft.queries.ReferenceParity.CsvSample
+    val kept9 = (CsvSample.Rows - CsvSample.Quoted).toLong // naive split drops the quoted rows
+    val (kept, _) = Delimited.naiveSplit(spark, CsvSample.stage(), ",", 9)
     val rowKey = keys.saltedKey(crc32(col("c0")), 10,
       keys.md5CompositeKey(Seq(col("c0"), col("c1"), col("c2"), col("c3"))))
     val cells = CellOps.explodeIndexed(kept, rowKey, "c", (0 until 3).map(i => col(s"c$i")))
     val sorted = BulkLoad.sorted(cells, BulkLoad.Config(splits = Some(RegionSort.saltSplits(10).toSeq)))
     // still a DataFrame: downstream relational ops compose
     assert(sorted.schema === cells.schema)
-    assert(sorted.groupBy().count().head().getLong(0) === 36992L * 3)
+    assert(sorted.groupBy().count().head().getLong(0) === kept9 * 3)
     // physical plan contains the custom exchange node
     assert(sorted.queryExecution.executedPlan
       .exists(_.isInstanceOf[graft.plans.RegionAlignedRowExchangeExec]),
@@ -218,7 +219,7 @@ class CellPipelineSpec extends SparkSuite {
     }.collect()
     assert(perPart.length === 10)
     assert(perPart.forall(_._1))
-    assert(perPart.map(_._2).sum === 36992L * 3)
+    assert(perPart.map(_._2).sum === kept9 * 3)
   }
 
   test("two-phase ingest sort: cell-identical to the cell-level sort; exact alignment; the exchange moves ROWS not cells") {
@@ -289,8 +290,8 @@ class CellPipelineSpec extends SparkSuite {
       IngestCli.loadSplits(bad.toString)
     }
 
-    val path = "/root/reference/src/main/resources/iouzipcodes2011.csv"
-    val r = BulkLoad.csv(spark, path,
+    import graft.queries.ReferenceParity.CsvSample
+    val r = BulkLoad.csv(spark, CsvSample.stage(),
       BulkLoad.Config(compatNaiveSplit = true, splits = Some(splits)))
     assert(r.cells.queryExecution.executedPlan
       .exists(_.isInstanceOf[graft.plans.RegionAlignedRowExchangeExec]),
@@ -312,7 +313,8 @@ class CellPipelineSpec extends SparkSuite {
     }.collect()
     assert(perPart.length === 16)
     assert(perPart.forall(_._1), "file i must hold region i's range, KV-sorted")
-    assert(perPart.map(_._2).sum === 36992L * 9)
+    // the naive split drops the sample's quoted rows
+    assert(perPart.map(_._2).sum === (CsvSample.Rows - CsvSample.Quoted) * 9L)
 
     // salting and explicit splits are mutually exclusive boundary sources
     intercept[IllegalArgumentException] {

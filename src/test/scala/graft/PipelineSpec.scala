@@ -120,7 +120,7 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("streaming windowed agg equals the batch plan over the same data") {
-    val streamed = EventStream.windowedAgg(spark, sf001)
+    val streamed = EventStream.windowedAggAppendAll(spark, sf001)
       .orderBy("window_start", "event_type")
       .collect().toSeq
     val batch = graft.queries.Tables.events(spark, sf001)
@@ -130,6 +130,7 @@ class PipelineSpec extends SparkSuite {
       .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
       .orderBy("window_start", "event_type")
       .collect().toSeq
+    assert(streamed.nonEmpty)
     assert(streamed === batch)
   }
 
@@ -138,12 +139,16 @@ class PipelineSpec extends SparkSuite {
     // the provider conf is HONORED on this path — a bogus class must fail
     // the query, so the parity run below provably exercised RocksDB
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", "graft.NoSuchProvider")
-    try intercept[Exception] { EventStream.windowedAgg(spark, sf001).collect() }
+    try intercept[Exception] { EventStream.windowedAggAppendAll(spark, sf001).collect() }
     finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    val default = EventStream.windowedAgg(spark, sf001)
+    // the failed query's staged input, checkpoint and sink went with it
+    val scratchRoot = new java.io.File(graft.sources.Publish.root, "graft-scratch")
+    assert(scratchRoot.isDirectory, s"no scratch root at $scratchRoot")
+    assert(scratchRoot.list().isEmpty, scratchRoot.list().mkString(", "))
+    val default = EventStream.windowedAggAppendAll(spark, sf001)
       .orderBy("window_start", "event_type").collect().toSeq
     val rocks = StateBackend.withRocksDB(spark) {
-      EventStream.windowedAgg(spark, sf001)
+      EventStream.windowedAggAppendAll(spark, sf001)
         .orderBy("window_start", "event_type").collect().toSeq
     }
     assert(rocks === default)
@@ -164,18 +169,26 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("append-mode file-sink windowed agg: watermark-closed windows equal the batch result") {
+    import graft.streaming.StreamHarness
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_append").toString
     val evs = graft.queries.Tables.events(spark, sf001)
       .select(col("ts"), col("event_type"), col("value"))
     // sentinel 10.5 h past the last event: advances the watermark beyond
     // every real window's end; its own window stays open and is never
     // emitted, so the appended output covers exactly the real events
+    // (no filter on the sink's contents)
     val maxTs = evs.agg(max("ts")).as[Timestamp].head()
     val sentinel = Seq((new Timestamp(maxTs.getTime + 37800000L), "sentinel", 0.0))
       .toDF("ts", "event_type", "value")
     evs.write.parquet(s"$tmp/in")
     sentinel.write.mode("append").parquet(s"$tmp/in")
-    val got = EventStream.windowedAggAppend(spark, s"$tmp/in", s"$tmp/out", s"$tmp/ckpt")
+    val agg = spark.readStream.schema(spark.read.parquet(s"$tmp/in").schema).parquet(s"$tmp/in")
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
+      .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
+    val got = StreamHarness.appendToFiles(agg, tmp)
       .orderBy("window_start", "event_type").collect().toSeq
     val batch = evs
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -183,6 +196,7 @@ class PipelineSpec extends SparkSuite {
         sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
       .orderBy("window_start", "event_type").collect().toSeq
+    assert(got.nonEmpty)
     assert(got === batch)
   }
 
