@@ -392,6 +392,10 @@ object CorpusPipeline {
           .otherwise(lit("test")).as("split"))
   }
 
+  /** The distinct word n-gram strings of an eval set: (s). */
+  private def evalGrams(evalDocs: DataFrame, n: Int): DataFrame =
+    TextOps.distinctShingleRows(evalDocs, n, "s").distinct()
+
   /** Benchmark decontamination by n-gram overlap — the GPT-3/PaLM-style
     * eval-set filter: drop every training document that shares ANY word
     * n-gram with the held-out evaluation set (the published recipes use
@@ -406,15 +410,8 @@ object CorpusPipeline {
     * semi-join. Output: the surviving documents (all input columns). */
   def evalNgramDecontaminate(docs: DataFrame, evalDocs: DataFrame,
                              n: Int): DataFrame = {
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(TextOps.shingleStructs(col("text"), n))).as("t"))
-      .select(TextOps.shingleString(col("t"), n).as("s"))
-      .distinct()
-    val contaminated = docs
-      .select(col("doc_id"),
-        explode(array_distinct(TextOps.shingleStructs(col("text"), n))).as("t"))
-      .select(col("doc_id"), TextOps.shingleString(col("t"), n).as("s"))
-      .join(broadcast(evalGrams), Seq("s"), "left_semi")
+    val contaminated = TextOps.distinctShingleRows(docs, n, "s", "doc_id")
+      .join(broadcast(evalGrams(evalDocs, n)), Seq("s"), "left_semi")
       .select(col("doc_id")).distinct()
     docs.join(contaminated, Seq("doc_id"), "left_anti")
   }
@@ -441,19 +438,13 @@ object CorpusPipeline {
                                   n: Int, numBits: Int = 1 << 20,
                                   numHashes: Int = 5): DataFrame = {
     import graft.functions.{keys, BloomSet}
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(TextOps.shingleStructs(col("text"), n))).as("t"))
-      .select(TextOps.shingleString(col("t"), n).as("s"))
-      .distinct()
-    val bloomRow = evalGrams.agg(
+    val grams = evalGrams(evalDocs, n)
+    val bloomRow = grams.agg(
       BloomSet.bloomAgg(keys.md5Raw(col("s")), numBits, numHashes).as("bloom"))
-    val contaminated = docs
-      .select(col("doc_id"),
-        explode(array_distinct(TextOps.shingleStructs(col("text"), n))).as("t"))
-      .select(col("doc_id"), TextOps.shingleString(col("t"), n).as("s"))
+    val contaminated = TextOps.distinctShingleRows(docs, n, "s", "doc_id")
       .crossJoin(broadcast(bloomRow))
       .where(BloomSet.mightContain(col("bloom"), keys.md5Raw(col("s")), numHashes))
-      .join(broadcast(evalGrams), Seq("s"), "left_semi")
+      .join(broadcast(grams), Seq("s"), "left_semi")
       .select(col("doc_id")).distinct()
     docs.join(contaminated, Seq("doc_id"), "left_anti")
   }
@@ -470,15 +461,8 @@ object CorpusPipeline {
     * Documents too short to shingle carry no score (no evidence).
     * Output: (doc_id, n_grams, n_shared, overlap_frac). */
   def evalNgramOverlap(docs: DataFrame, evalDocs: DataFrame, n: Int): DataFrame = {
-    val evalGrams = evalDocs
-      .select(explode(array_distinct(TextOps.shingleStructs(col("text"), n))).as("t"))
-      .select(TextOps.shingleString(col("t"), n).as("s"))
-      .distinct()
-    docs
-      .select(col("doc_id"),
-        explode(array_distinct(TextOps.shingleStructs(col("text"), n))).as("t"))
-      .select(col("doc_id"), TextOps.shingleString(col("t"), n).as("s"))
-      .join(broadcast(evalGrams.withColumn("hit", lit(1))), Seq("s"), "left")
+    TextOps.distinctShingleRows(docs, n, "s", "doc_id")
+      .join(broadcast(evalGrams(evalDocs, n).withColumn("hit", lit(1))), Seq("s"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("hit"), lit(0))).cast(org.apache.spark.sql.types.LongType)
@@ -633,10 +617,7 @@ object CorpusPipeline {
       .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(col("h"))))
       .where(col("doc_id") === col("keep_id"))
       .drop("h", "keep_id")
-    val fp = kept.select(col("doc_id"), col("source"),
-        explode(array_distinct(TextOps.shingleStructs(col("text"), shingleN))).as("t"))
-      .select(col("doc_id"), col("source"),
-        TextOps.shingleString(col("t"), shingleN).as("sh"))
+    val fp = TextOps.distinctShingleRows(kept, shingleN, "sh", "doc_id", "source")
       .groupBy(col("doc_id"), col("source"))
       .agg(min(md5(col("sh").cast(BinaryType))).as("f"))
     val contaminated = fp.as("x").join(fp.as("y"),

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types._
   *
   *  - [[exact]]: hash-groupBy — one shuffle on the 32-char digest.
   *  - [[ngramJaccardPairs]]: EXACT set-similarity via an inverted shingle
-  *    index (explode → self-join on shingle → count intersections). Cost is
-  *    quadratic in per-shingle document frequency, so at 100 TB it is the
-  *    *verification* stage, not the candidate generator.
+  *    index (explode digests → self-join on digest → count
+  *    intersections). Cost is quadratic in per-shingle document frequency,
+  *    so at 100 TB it is the *verification* stage, not the candidate
+  *    generator.
   *  - [[minHashPairs]]: MinHash + LSH banding — the scale path. Signatures
   *    are per-document (no shuffle), banding buckets candidates so the
   *    self-join touches only probable pairs. k=32 hashes, 8 bands × 4 rows
@@ -23,12 +24,16 @@ import org.apache.spark.sql.types._
   *
   * All hashing derives from md5 (deterministic across engines/sessions —
   * no seed state), all math from integer counts, so every operator is
-  * oracle-checkable bit-for-bit. No UDFs anywhere: the shingle-grain
-  * operators are relational plans of codegen'd built-ins, and the
-  * MinHash path ([[minHashSignatures]], [[corpusDedup]]) runs the native
-  * per-document kernel [[graft.functions.MinHashKernel]] — Catalyst
-  * expressions, like `array_dot` — so it never widens to one row per
-  * shingle.
+  * oracle-checkable bit-for-bit. No UDFs anywhere. Every word-shingle SET
+  * operator reads its shingle digests from ONE source, the native
+  * per-document kernel [[graft.functions.MinHashKernel]] (Catalyst
+  * expressions, like `array_dot`), which md5s each distinct shingle once:
+  * the MinHash path ([[minHashSignatures]], [[corpusDedup]]) keeps them
+  * in one row per document, while the exact Jaccard, containment and
+  * prefix operators and [[lshRecallCurve]]'s truth explode them into one
+  * row per (document, digest) for their inverted index. Only the span
+  * operators, which need window POSITIONS, hash their own k-token
+  * windows.
   */
 object Dedup {
 
@@ -38,70 +43,77 @@ object Dedup {
     docs.groupBy(md5(col(textCol).cast(BinaryType)).as("h"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n"))
 
-  /** Distinct (doc_id, shingle) pairs — the inverted index. Built from the
-    * codegen struct shingles ([[TextOps.shingleStructs]]); the string form
-    * materializes only after explode, where concat_ws is codegen'd. */
-  private def shingleIndex(docs: DataFrame, n: Int): DataFrame =
-    docs.select(col("doc_id"),
-        explode(array_distinct(TextOps.shingleStructs(col("text"), n))).as("t"))
-      .select(col("doc_id"), TextOps.shingleString(col("t"), n).as("s"))
-
   /** Exact n-gram Jaccard near-dup pairs with similarity >= threshold.
     * Output: (a, b, jaccard), a < b.
     *
-    * The inverted-index self-join needs no singleton (df = 1) prefilter: a
-    * singleton shingle matches only itself and dies on `a < b`, so pruning
-    * it saves hash-probe work ONLY — the exchange on the shingle key is
-    * byte-identical with or without it — while costing a whole extra
-    * aggregate + join-back. Cost is quadratic in per-shingle document
-    * frequency, so at corpus scale this is the *verification* stage of
-    * [[corpusDedup]]. Running it standalone on a real corpus needs `maxDf`:
-    * shingles appearing in more than `maxDf` documents (boilerplate) are
-    * dropped from the index BEFORE the self-join — and symmetrically from
-    * the set sizes, so the result is the exact Jaccard over each document's
-    * df-filtered shingle set. A boilerplate shingle shared by d documents
-    * would otherwise alone contribute d·(d-1)/2 join rows.
+    * An inverted-index self-join over the shingle digests of
+    * [[MinHashKernel]] ([[digests]] of the unfolded kernel rows): one row
+    * per (input row, distinct shingle), joined on the digest. It needs no
+    * singleton (df = 1) prefilter: a singleton digest matches only itself
+    * and dies on `a < b`, so pruning it saves hash-probe work ONLY — the
+    * exchange on the digest key is byte-identical with or without it —
+    * while costing a whole extra aggregate + join-back. Cost is quadratic
+    * in per-shingle document frequency, so at corpus scale this is the
+    * *verification* stage of [[corpusDedup]]. Running it standalone on a
+    * real corpus needs `maxDf`: shingles appearing in more than `maxDf`
+    * documents (boilerplate) are dropped from the index BEFORE the
+    * self-join — and symmetrically from the set sizes, so the result is
+    * the exact Jaccard over each document's df-filtered shingle set. A
+    * boilerplate shingle shared by d documents would otherwise alone
+    * contribute d·(d-1)/2 join rows.
     *
     * "Exact" is hash-exact: shingles are compared by md5 digest, so an
     * adversarially constructed md5 collision could merge two distinct
     * shingles (set sizes/intersections off by the collision count). Benign
-    * corpora are unaffected; swap in `sha2(…, 256)` if adversarial inputs
-    * are in scope. */
+    * corpora are unaffected. */
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
                         maxDf: Option[Long] = None): DataFrame =
-    overlapCounts(docs, n, maxDf)
-      .select(col("a"), col("b"),
-        (col("common").cast(DoubleType) /
-          (col("nsh_a") + col("nsh_b") - col("common"))).as("jaccard"))
+    jaccardAtLeast(overlapCounts(digests(kernel(docs, n)), maxDf), threshold)
+
+  /** The Jaccard ratio of an overlap frame's (common, nsh_a, nsh_b) — the
+    * one expression every exact pair path reports. */
+  private val Jaccard: Column =
+    col("common").cast(DoubleType) / (col("nsh_a") + col("nsh_b") - col("common"))
+
+  /** (a, b, jaccard) of an overlap frame, pairs below `threshold` dropped. */
+  private def jaccardAtLeast(overlaps: DataFrame, threshold: Double): DataFrame =
+    overlaps.select(col("a"), col("b"), Jaccard.as("jaccard"))
       .where(col("jaccard") >= threshold)
 
-  /** The shared inverted-index machinery of [[ngramJaccardPairs]] and
-    * [[containmentPairs]]: (a, b, common, nsh_a, nsh_b), a < b, over the
-    * (optionally df-capped) distinct-shingle sets. */
-  private def overlapCounts(docs: DataFrame, n: Int,
-                            maxDf: Option[Long]): DataFrame = {
-    // shingles join on their 16-byte md5 instead of the raw string: the
-    // inverted-index shuffle and self-join carry fixed-width binary keys
-    // rather than arbitrary-length n-grams (distinct-per-doc shingles map
-    // 1:1 to digests, so set sizes and intersections are unchanged).
-    // Materialized once — the size aggregate and both self-join sides read
-    // the ~24 B/row index instead of re-running scan → shingle → md5.
-    val raw = shingleIndex(docs, n)
-      .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-    val sh = maxDf.fold(raw) { cap =>
+  /** The shingle digests of a kernel frame (doc_id, k), one row per
+    * digest: (doc_id, hi, lo), the md5's two signed 64-bit halves as
+    * `k.dg` stores them. Unfolded kernel rows give one row per (input row,
+    * distinct shingle); a folded frame keeps its repeated digests, so it
+    * gives the same multiset for rows that share a doc_id. */
+  private def digests(k: DataFrame): DataFrame =
+    // explode the digest ordinals, then read both halves with plain
+    // codegen'd array access — no per-digest lambda
+    k.select(col("doc_id"), col("k.dg").as("dg"),
+        explode(sequence(lit(0), shiftright(size(col("k.dg")), 1) - 1)).as("i"))
+      .select(col("doc_id"), col("dg").getItem(col("i") * 2).as("hi"),
+        col("dg").getItem(col("i") * 2 + 1).as("lo"))
+
+  /** The inverted-index machinery of [[ngramJaccardPairs]],
+    * [[containmentPairs]] and [[lshRecallCurve]]'s truth over a
+    * [[digests]] frame: (a, b, common, nsh_a, nsh_b), a < b, over the
+    * (optionally df-capped) shingle sets — the shape [[kernelVerify]]
+    * returns. The index is materialized once: the size aggregate and both
+    * self-join sides read its ~24 B rows instead of re-running scan →
+    * shingle → md5. */
+  private def overlapCounts(sh: DataFrame, maxDf: Option[Long]): DataFrame = {
+    val idx = maxDf.fold(sh) { cap =>
       // df per digest over the SAME partitioning the self-join needs; the
       // window avoids a groupBy + join-back on the digest key
       import org.apache.spark.sql.expressions.Window
-      raw.withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
+      sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("hi"), col("lo"))))
         .where(col("df") <= cap)
         .drop("df")
     }.materialized
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-    val common = sh.as("x").join(sh.as("y"),
-        col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
+    val sz = idx.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
+    idx.as("x").join(idx.as("y"), col("x.hi") === col("y.hi") &&
+        col("x.lo") === col("y.lo") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .agg(count(lit(1)).as("common"))
-    common
       .join(sz.as("sa"), col("a") === col("sa.doc_id"))
       .join(sz.as("sb"), col("b") === col("sb.doc_id"))
       .select(col("a"), col("b"), col("common"),
@@ -111,55 +123,46 @@ object Dedup {
   /** PREFIX-FILTERED exact Jaccard pairs (the PPJoin family's prefix
     * principle — Chaudhuri et al. 2006, Xiao et al. 2008): for
     * J(A,B) ≥ t, A and B MUST share a shingle within the first
-    * |d| − ⌈t·|d|⌉ + 1 entries of their df-ascending-sorted shingle
-    * lists — so only that PREFIX enters the candidate self-join, and
-    * recall is exactly 100% by the pigeonhole bound, not a tuning
-    * accident. Rarest-first ordering makes prefixes collide on the
-    * rarest evidence available: candidate volume is quadratic in the
-    * df of PREFIX shingles only — the df-cap variant's sub-quadratic
-    * bound without its "verify stage only" asterisk, since no true
-    * pair is ever dropped.
+    * |d| − ⌈t·|d|⌉ + 1 entries of their shingle lists sorted in any one
+    * global order — so only that PREFIX enters the candidate self-join,
+    * and recall is exactly 100% by the pigeonhole bound, not a tuning
+    * accident. The order here is rarest first, (df, hi, lo) over the
+    * [[digests]] of the [[kernelFrame]]: prefixes collide on the rarest
+    * evidence available, so candidate volume is quadratic in the df of
+    * PREFIX shingles only — the df-cap variant's sub-quadratic bound
+    * without its "verify stage only" asterisk, since no true pair is ever
+    * dropped.
     *
     * The threshold is the rational tNum/tDen and the prefix length and
     * final acceptance (`common·tDen ≥ (|A|+|B|−common)·tNum`) are pure
     * integer arithmetic — nothing about candidate generation or
     * acceptance touches a float (the reported jaccard double is render
-    * only). Verification joins each candidate pair against the two
-    * full digest sets restricted to the pair — cost |cand|·avg-set,
-    * never corpus². Output: (a, b, jaccard), a < b — identical rows to
-    * [[ngramJaccardPairs]] at threshold = tNum/tDen. */
+    * only). Candidates are verified by [[kernelVerify]], the merge-intersect
+    * of the two kernel digest lists [[corpusDedup]] runs — cost
+    * |cand|·avg-set, never corpus². Output: (a, b, jaccard), a < b —
+    * identical rows to [[ngramJaccardPairs]] at threshold = tNum/tDen.
+    * The bound holds for sets: input rows that share a doc_id pool into a
+    * multiset whose shared digests count r·s, and such a pair may be
+    * missed, never added. */
   def ngramJaccardPrefixPairs(docs: DataFrame, n: Int,
                               tNum: Int, tDen: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(0 < tNum && tNum < tDen, "threshold must be in (0,1)")
-    // digest index feeds the df window, the prefix join and both verify
-    // sides — materialized once (the overlapCounts posture)
-    val sh = shingleIndex(docs, n)
-      .select(col("doc_id"), unhex(md5(col("s").cast(BinaryType))).as("s"))
-      .materialized
-    val ranked = sh
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
+    val k = kernelFrame(docs, n)
+    val ranked = digests(k)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("hi"), col("lo"))))
       .withColumn("rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("s"))))
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("hi"), col("lo"))))
       .withColumn("nsh", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
     val prefix = ranked
       .where(col("rn") <= expr(s"nsh - ((nsh * $tNum + ${tDen - 1}) div $tDen) + 1"))
-      .select(col("doc_id"), col("s"))
-    val cand = prefix.as("x").join(prefix.as("y"),
-        col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("doc_id"), col("hi"), col("lo"))
+    val cand = prefix.as("x").join(prefix.as("y"), col("x.hi") === col("y.hi") &&
+        col("x.lo") === col("y.lo") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
-    val common = cand
-      .join(sh.as("xa"), col("a") === col("xa.doc_id"))
-      .join(sh.as("xb"), col("b") === col("xb.doc_id") && col("xa.s") === col("xb.s"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-    common
-      .join(sz.as("sa"), col("a") === col("sa.doc_id"))
-      .join(sz.as("sb"), col("b") === col("sb.doc_id"))
-      .where(col("common") * tDen >= (col("sa.nsh") + col("sb.nsh") - col("common")) * tNum)
-      .select(col("a"), col("b"),
-        (col("common").cast(DoubleType) /
-          (col("sa.nsh") + col("sb.nsh") - col("common"))).as("jaccard"))
+    kernelVerify(cand, k)
+      .where(col("common") * tDen >= (col("nsh_a") + col("nsh_b") - col("common")) * tNum)
+      .select(col("a"), col("b"), Jaccard.as("jaccard"))
   }
 
   /** Exact n-gram CONTAINMENT pairs: C(A→B) = |A∩B| / |A|. Jaccard misses
@@ -169,14 +172,14 @@ object Dedup {
     * (a, b, cont_a, cont_b), a < b, cont_a = share of a's shingles also in
     * b.
     *
-    * Same inverted-index shape (and the same md5 hash-exactness caveat and
-    * `maxDf` boilerplate cap — applied to both the self-join and the set
-    * sizes) as [[ngramJaccardPairs]]; the two differ only in the final
-    * ratio projection, so the scale posture is identical: candidate cost
-    * quadratic in per-shingle df, which `maxDf` bounds. */
+    * Same kernel-digest inverted index (and the same md5 hash-exactness
+    * caveat and `maxDf` boilerplate cap — applied to both the self-join
+    * and the set sizes) as [[ngramJaccardPairs]]; the two differ only in
+    * the final ratio projection, so the scale posture is identical:
+    * candidate cost quadratic in per-shingle df, which `maxDf` bounds. */
   def containmentPairs(docs: DataFrame, n: Int, threshold: Double,
                        maxDf: Option[Long] = None): DataFrame =
-    overlapCounts(docs, n, maxDf)
+    overlapCounts(digests(kernel(docs, n)), maxDf)
       .select(col("a"), col("b"),
         (col("common").cast(DoubleType) / col("nsh_a")).as("cont_a"),
         (col("common").cast(DoubleType) / col("nsh_b")).as("cont_b"))
@@ -553,8 +556,9 @@ object Dedup {
   /** Exact verify of candidate pairs against a [[kernelFrame]]: both
     * sides join the kernel frame, [[MinHashKernel.overlap]]
     * merge-intersects the two sorted digest lists, and pairs sharing no
-    * shingle drop out. Output: (a, b, jaccard, siga, sigb); unused
-    * signature columns are pruned. */
+    * shingle drop out. Output: (a, b, common, nsh_a, nsh_b, siga, sigb),
+    * the [[overlapCounts]] shape plus the signatures; unused columns are
+    * pruned. */
   private def kernelVerify(cand: DataFrame, k: DataFrame): DataFrame = {
     val side = k.select(col("doc_id"), col("k.nsh").as("nsh"),
       col("k.dg").as("dg"), col("k.sig").as("sig"))
@@ -566,18 +570,12 @@ object Dedup {
         col("ka.nsh").as("nsh_a"), col("kb.nsh").as("nsh_b"),
         col("ka.sig").as("siga"), col("kb.sig").as("sigb"))
       .where(col("common") > 0)
-      .select(col("a"), col("b"),
-        (col("common").cast(DoubleType) /
-          (col("nsh_a") + col("nsh_b") - col("common"))).as("jaccard"),
-        col("siga"), col("sigb"))
   }
 
   /** [[kernelVerify]] at `threshold`: (a, b, jaccard), a < b. */
   private def verifiedPairs(cand: DataFrame, k: DataFrame,
                             threshold: Double): DataFrame =
-    kernelVerify(cand, k)
-      .where(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
+    jaccardAtLeast(kernelVerify(cand, k), threshold)
 
   /** Signature-estimated Jaccard: share of equal MinHash positions. */
   private def estJaccard(siga: Column, sigb: Column): Column =
@@ -763,7 +761,7 @@ object Dedup {
   def minHashEstVsExact(docs: DataFrame, n: Int, minEst: Double): DataFrame = {
     val k = kernelFrame(docs, n)
     kernelVerify(minHashCandidates(kernelSigs(k)), k)
-      .select(col("a"), col("b"), col("jaccard"),
+      .select(col("a"), col("b"), Jaccard.as("jaccard"),
         estJaccard(col("siga"), col("sigb")).as("est_jaccard"))
       .where(col("est_jaccard") >= minEst)
       .select(col("a"), col("b"),
@@ -788,8 +786,10 @@ object Dedup {
     * no stage is wider than one row per (document, band), and verify cost
     * is O(|candidates| · shingles/doc), independent of corpus size.
     *
+    * The kernel's digests are the engine's one shingle digest: the exact
+    * Jaccard, containment and prefix operators read the same `dg` lists.
     * Rows are identical to the relational formulation this replaced
-    * (shingle-grain digest index, signature aggregate, windowed md5 band
+    * (string-shingle digest index, signature aggregate, windowed md5 band
     * self-join, two-join exact verify; `MinHashKernelSpec` keeps it as
     * the reference): same tokenization, same md5 digests, same
     * signatures, same bucket relation and cap, same Jaccard expression —
@@ -876,11 +876,14 @@ object Dedup {
     * the sample size rides in the output (`n_docs_sampled`) so a reader
     * can judge the estimate's resolution.
     *
-    * The candidates are exactly what [[corpusDedup]] generates: the same
-    * kernel frame and the same [[minHashCandidates]]. The truth side is
-    * independent of that path — [[ngramJaccardPairs]]' inverted-index
-    * self-join — and is checkpointed once for the totals and the
-    * candidate semi-join.
+    * ONE kernel pass over the sample feeds both sides. The candidates
+    * are exactly what [[corpusDedup]] generates: the same kernel frame and
+    * the same [[minHashCandidates]]. The truth reads the same frame's
+    * shingle digests but not its signatures or bands — it is
+    * [[ngramJaccardPairs]]' inverted-index self-join over the
+    * [[digests]] — so it stays independent of the candidate generator it
+    * grades; it is checkpointed once for the totals and the candidate
+    * semi-join.
     * Output: (sim_band, n_true, n_hit, recall, n_docs_sampled). */
   def lshRecallCurve(docs: DataFrame, n: Int, minJaccard: Double,
                      samplePermille: Int = 1000): DataFrame = {
@@ -894,8 +897,9 @@ object Dedup {
     val nSampled = sampled.agg(count(lit(1)).as("n_docs_sampled"))
     // the PRODUCTION kernel frame and generator — sharing them is the
     // point: the eval must measure the generator corpusDedup actually runs
-    val cand = minHashCandidates(kernelSigs(kernelFrame(sampled, n)))
-    val truth = ngramJaccardPairs(sampled, n, minJaccard)
+    val k = kernelFrame(sampled, n)
+    val cand = minHashCandidates(kernelSigs(k))
+    val truth = jaccardAtLeast(overlapCounts(digests(k), None), minJaccard)
       .select(col("a"), col("b"),
         least(floor(round(col("jaccard"), 6) * 10), lit(9)).cast("int").as("sim_band"))
       .materialized

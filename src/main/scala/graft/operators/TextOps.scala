@@ -142,6 +142,16 @@ object TextOps {
   def shingleString(sh: Column, n: Int): Column =
     concat_ws(" ", (0 until n).map(i => sh.getField(s"w$i")): _*)
 
+  /** One row per (input row, distinct word n-gram of its `text`): the
+    * `keep` columns, then the n-gram's space-joined string as `as`. The
+    * set is taken on the [[shingleStructs]] and the string formed after
+    * the explode. Rows with fewer than n tokens or a null text give none. */
+  def distinctShingleRows(docs: org.apache.spark.sql.DataFrame, n: Int, as: String,
+                          keep: String*): org.apache.spark.sql.DataFrame =
+    docs.select(keep.map(col) :+
+        explode(array_distinct(shingleStructs(col("text"), n))).as("t"): _*)
+      .select(keep.map(col) :+ shingleString(col("t"), n).as(as): _*)
+
   /** Quality-score feature vector: token count, type-token ratio, average
     * word length, stopword ratio. */
   val stopwords: Seq[String] = Seq("the", "a", "of", "and", "is", "to", "in")
@@ -519,10 +529,7 @@ object TextOps {
     * n_novel, novelty_ppm). */
   def ngramNovelty(docs: org.apache.spark.sql.DataFrame, n: Int): org.apache.spark.sql.DataFrame = {
     import graft.operators.Dedup.MaterializeSyntax
-    val sh = docs
-      .select(col("doc_id"),
-        explode(array_distinct(shingleStructs(col("text"), n))).as("t"))
-      .select(col("doc_id"), shingleString(col("t"), n).as("s"))
+    val sh = distinctShingleRows(docs, n, "s", "doc_id")
       .materialized // feeds the first-occurrence aggregate AND the per-doc fold
     val first = sh.groupBy(col("s")).agg(min(col("doc_id")).as("first_doc"))
     sh.join(first, "s")

@@ -1035,9 +1035,7 @@ object NorthStar {
 
     // corpus vocabulary statistics: bigram document frequency, top 50
     "text_top_bigrams" -> ((s, dir) => {
-      val sh = t(s, dir, "documents")
-        .select(explode(array_distinct(TextOps.shingleStructs(col("text"), 2))).as("t"))
-        .select(TextOps.shingleString(col("t"), 2).as("bigram"))
+      val sh = TextOps.distinctShingleRows(t(s, dir, "documents"), 2, "bigram")
       sh.groupBy(col("bigram")).agg(count(lit(1)).as("df"))
         .orderBy(col("df").desc, col("bigram").asc)
         .limit(50)
@@ -1511,9 +1509,7 @@ object NorthStar {
     * definition shared by doc_fingerprint and dedup_cross_source. */
   private def shingleMinFp(docs: org.apache.spark.sql.DataFrame,
                            groupCols: Seq[String]): org.apache.spark.sql.DataFrame =
-    docs.select(groupCols.map(col) :+
-        explode(array_distinct(TextOps.shingleStructs(col("text"), N))).as("t"): _*)
-      .select(groupCols.map(col) :+ TextOps.shingleString(col("t"), N).as("sh"): _*)
+    TextOps.distinctShingleRows(docs, N, "sh", groupCols: _*)
       .groupBy(groupCols.map(col): _*)
       .agg(min(md5(col("sh").cast("binary"))).as("fp"))
 

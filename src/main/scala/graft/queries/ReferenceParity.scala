@@ -185,17 +185,22 @@ object ReferenceParity {
   /** Stage a fixture once per path (deterministic content — same
     * immutable-input contract as [[Layout.bucketedTable]]): `write` lands
     * it at the temp path it is given and [[graft.sources.Publish
-    * .publishIfAbsent]] renames it in, so a write that fails midway
-    * leaves no fixture for a later run to reuse. Returns `path`. */
-  private[graft] def staged(path: String)(write: String => Unit): String = {
+    * .publishIfAbsent]] renames it in on the session's file system, so a
+    * write that fails midway leaves no fixture for a later run to reuse.
+    * Returns `path`. */
+  private[graft] def staged(s: SparkSession, path: String)(write: String => Unit): String = {
     graft.sources.Publish.publishIfAbsent(
-      new org.apache.hadoop.conf.Configuration(), new org.apache.hadoop.fs.Path(path))(write)
+      s.sessionState.newHadoopConf(), new org.apache.hadoop.fs.Path(path))(write)
     path
   }
 
+  /** Where the fixture `name` lives: under [[graft.sources.Publish.root]],
+    * the root keyed stores and stream scratch use. */
+  private def fixtureRoot(name: String): String =
+    new org.apache.hadoop.fs.Path(graft.sources.Publish.root, name).toString
+
   private def fixturePath(dir: String, fmt: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_src_${fmt}_${dir.replaceAll("[^A-Za-z0-9]", "_")}").getPath
+    fixtureRoot(s"graft_src_${fmt}_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
 
   /** customer's cells, region-sorted over [[md5Regions]]. */
   private def sortedCustCells(s: SparkSession, dir: String): DataFrame = graft.BulkLoad.sorted(
@@ -203,7 +208,7 @@ object ReferenceParity {
 
   /** [[sortedCustCells]] staged once as the `cellscan` cell table. */
   private def cellScanTable(s: SparkSession, dir: String): String =
-    staged(fixturePath(dir, "cellscan")) {
+    staged(s, fixturePath(dir, "cellscan")) {
       graft.SortedParquetCellSink.write(sortedCustCells(s, dir), _)
     }
 
@@ -211,7 +216,7 @@ object ReferenceParity {
     // S3: avro container round-trip → reversed-id key + name qualifiers +
     // nullable-field cell guard, byte-checked against the oracle
     "source_avro_cells" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "avro")) { tmp =>
+      val path = staged(s, fixturePath(dir, "avro")) { tmp =>
         graft.sources.AvroSource.write(t(s, dir, "supplier").select(
           col("s_suppkey").cast(StringType).as("id"),
           col("s_name").as("name"),
@@ -227,7 +232,7 @@ object ReferenceParity {
     // (explicit-schema read — no inference scan, no alphabetized columns)
     // over the feed format modern pipelines actually ship
     "source_jsonl_cells" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "jsonl")) { tmp =>
+      val path = staged(s, fixturePath(dir, "jsonl")) { tmp =>
         graft.sources.JsonLines.write(t(s, dir, "supplier").select(
           col("s_suppkey").cast(StringType).as("id"),
           col("s_name").as("name"),
@@ -243,7 +248,7 @@ object ReferenceParity {
     // S4 (legacy): RCFile columnar round-trip through the positional
     // pipeline — same cells as the csv/hivetext drivers on this content
     "source_rcfile_cells" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "rcfile")) {
+      val path = staged(s, fixturePath(dir, "rcfile")) {
         graft.sources.RCFileSource.write(supplierPositional(t(s, dir, "supplier")), _)
       }
       hexBin(graft.BulkLoad.rcFile(s, path,
@@ -252,7 +257,7 @@ object ReferenceParity {
 
     // S4 (modern): ORC round-trip through the same positional pipeline
     "source_orc_cells" -> ((s, dir) => {
-      val path = staged(fixturePath(dir, "orc")) {
+      val path = staged(s, fixturePath(dir, "orc")) {
         graft.sources.OrcSource.write(supplierPositional(t(s, dir, "supplier")), _)
       }
       hexBin(graft.BulkLoad.orc(s, path,
@@ -378,7 +383,7 @@ object ReferenceParity {
     "cells_compact_regions" -> ((s, dir) => {
       val root = fixturePath(dir, "compactroot")
       val dest = s"$root/compacted"
-      staged(root) { tmp =>
+      staged(s, root) { tmp =>
         val cust = t(s, dir, "customer")
         val cfg = md5Regions
         (0 until 3).foreach { b =>
@@ -403,7 +408,7 @@ object ReferenceParity {
     "cells_compact_minor" -> ((s, dir) => {
       val root = fixturePath(dir, "compactminor")
       val dest = s"$root/serving"
-      staged(root) { tmp =>
+      staged(s, root) { tmp =>
         val cust = t(s, dir, "customer")
         val cfg = md5Regions
         val serving = s"$tmp/serving"
@@ -441,7 +446,7 @@ object ReferenceParity {
     // a requested key — K keys read <= K files at ANY region count
     "cells_index_lookup" -> ((s, dir) => {
       val primaryPath = cellScanTable(s, dir)
-      val idxPath = staged(fixturePath(dir, "cellindex")) { tmp =>
+      val idxPath = staged(s, fixturePath(dir, "cellindex")) { tmp =>
         graft.SortedParquetCellSink.write(graft.BulkLoad.sorted(
           t(s, dir, "customer").select(
             concat(keys.utf8(col("c_mktsegment")), keys.utf8(lit(":")), custKey).as("row"),
@@ -582,17 +587,15 @@ object ReferenceParity {
     // join (AnalyticsLayoutSpec pins the exchange-free plan); staged once
     // per session, then read back through the catalog's bucket metadata
     "layout_bucketed_join" -> ((s, dir) => {
-      // collision-free per-dir table names (a 32-bit hash could alias two
-      // data dirs within one session and serve the wrong staged table)
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_bucketed_$tag")
-      val li = Layout.bucketedTable(s, s"li_bkt_$tag",
-          new java.io.File(base, "lineitem").getPath, "l_orderkey", 8)(
+      // collision-free table names per staged location (a 32-bit hash
+      // could alias two data dirs within one session and serve the wrong
+      // staged table; a new store root is a new location)
+      val base = fixtureRoot(s"graft_bucketed_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
+      val tag = graft.sources.Publish.md5Hex(base)
+      val li = Layout.bucketedTable(s, s"li_bkt_$tag", s"$base/lineitem", "l_orderkey", 8)(
         t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")))
-      val ord = Layout.bucketedTable(s, s"ord_bkt_$tag",
-          new java.io.File(base, "orders").getPath, "o_orderkey", 8)(
+      val ord = Layout.bucketedTable(s, s"ord_bkt_$tag", s"$base/orders", "o_orderkey", 8)(
         t(s, dir, "orders").select(col("o_orderkey"), col("o_orderpriority")))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
@@ -612,7 +615,7 @@ object ReferenceParity {
     // (36,992, 799) stays pinned by CellPipelineSpec on the real file.
     "source_csv_compat_skips" -> ((s, _) => {
       val (kept, rejected) =
-        graft.sources.Delimited.naiveSplit(s, CsvSample.stage(), ",", 9)
+        graft.sources.Delimited.naiveSplit(s, CsvSample.stage(s), ",", 9)
       // one union-tagged aggregate, not a cross join of two 1-row aggs
       // (a 1-row × 1-row BroadcastNestedLoopJoin is harmless here but
       // would need a standing lint adjudication — the union plans clean)
@@ -628,16 +631,18 @@ object ReferenceParity {
     * no header, 9 positional columns, 5-digit zips with leading zeros, and
     * exactly [[Quoted]] RFC-4180 quoted-comma utility names (one row in
     * [[QuotedEvery]], 2 % — the sample's 799 of 37,791 is 2.1 %). Staged
-    * once at a fixed path whose name carries [[Version]]: bump it whenever
-    * the content changes, so a stale file is never reused. */
+    * once under the fixture root at a fixed name that carries [[Version]]:
+    * bump it whenever the content changes, so a stale file is never
+    * reused. */
   private[graft] object CsvSample {
     private val Version = 1
     val Rows = 2000
     private val QuotedEvery = 50
     val Quoted: Int = Rows / QuotedEvery
 
-    val path: String = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ref_shaped_csv_v$Version.csv").getPath
+    /** Resolved per call, so the census and its oracle SQL name the
+      * same file under the current store root. */
+    def path: String = fixtureRoot(s"graft_ref_shaped_csv_v$Version.csv")
 
     private val Names = Array("Alabama Power Co", "Appalachian Power Co",
       "Pacific Gas & Electric Co", "Georgia Power Co", "Idaho Power Co",
@@ -669,14 +674,13 @@ object ReferenceParity {
     }
 
     /** The staged file's path, writing it first if absent ([[staged]]). */
-    def stage(): String = staged(path) { tmp =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(tmp),
-        (0 until Rows).map(i => line(i) + "\n").mkString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    def stage(s: SparkSession): String = staged(s, path) { tmp =>
+      graft.sources.Publish.writeText(s.sessionState.newHadoopConf(),
+        new org.apache.hadoop.fs.Path(tmp), (0 until Rows).map(i => line(i) + "\n").mkString)
     }
   }
 
-  val oracle: Map[String, String] = Map(
+  def oracle: Map[String, String] = Map(
     "source_avro_cells" -> suppCellsAvroSql,
     // raw-line census with the same unquoted split — DuckDB reads the
     // generated sample as one-column lines (a delimiter that never occurs

@@ -45,23 +45,18 @@ object Tables {
     * (measured: the r18 baseline bench held the 32-core machine ~90%
     * idle). When the layout under-splits the session — estimated scan
     * splits < half the default parallelism — and the table is big enough
-    * that one cheap exchange buys real parallelism (`graft.scan.spread
-    * .minBytes`, default 256 KiB; region/nation-sized lookups pass
-    * through), insert one round-robin repartition to defaultParallelism.
+    * that one cheap exchange buys real parallelism (at least 256 KiB;
+    * region/nation-sized lookups pass through), insert one round-robin
+    * repartition to defaultParallelism.
     * A cluster-scale layout (many files ⇒ splits ≥ parallelism) is
-    * untouched: the decision derives from the input layout and the
+    * untouched: the split estimate derives from the input layout and the
     * session, never from a local constant. Filters and column pruning
     * push through a Repartition node, so PushedFilters/ReadSchema at the
-    * scan are unchanged (verified in plans/r18). Set
-    * `graft.scan.spread.minBytes=-1` to disable. */
+    * scan are unchanged (verified in plans/r18). A listing or footer
+    * fault leaves the scan as it is. */
   def spreadScan(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
+    val MinBytes = 256L * 1024
     try {
-      // conf parse inside the try (r19, ADVICE): a malformed value degrades
-      // to the default rather than failing query construction
-      val minBytes = spark.conf.getOption("graft.scan.spread.minBytes")
-        .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-        .getOrElse(256L * 1024)
-      if (minBytes < 0) return df
       val hconf = spark.sessionState.newHadoopConf()
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(hconf)
@@ -89,7 +84,7 @@ object Tables {
         math.min(bySize, rowGroups(f, hconf).getOrElse(bySize))
       }.sum
       val par = spark.sparkContext.defaultParallelism
-      if (files.map(_.getLen).sum >= minBytes && splits * 2 <= par)
+      if (files.map(_.getLen).sum >= MinBytes && splits * 2 <= par)
         df.repartition(par)
       else df
     } catch { case scala.util.control.NonFatal(_) => df }

@@ -140,8 +140,9 @@ object Publish {
     src.map(slurp(fs, _))
   }
 
-  /** Write a one-line sidecar (`BASE`, `COMPACTED_FROM`, `SPAN_BUCKETS`)
-    * into a fileset being staged: no temp of its own, the fileset's
+  /** Write a small text file — a one-line sidecar (`BASE`,
+    * `COMPACTED_FROM`, `SPAN_BUCKETS`) or a generated fixture — into an
+    * artifact being staged: no temp of its own, the artifact's
     * [[publishIfAbsent]] makes it visible. */
   def writeText(conf: Configuration, p: Path, text: String): Unit = {
     val out = p.getFileSystem(conf).create(p, true)

@@ -192,7 +192,7 @@ class CellPipelineSpec extends SparkSuite {
   test("BulkLoad.sorted over salt splits (custom LogicalPlan/SparkPlan): exact alignment inside the DataFrame world") {
     import graft.queries.ReferenceParity.CsvSample
     val kept9 = (CsvSample.Rows - CsvSample.Quoted).toLong // naive split drops the quoted rows
-    val (kept, _) = Delimited.naiveSplit(spark, CsvSample.stage(), ",", 9)
+    val (kept, _) = Delimited.naiveSplit(spark, CsvSample.stage(spark), ",", 9)
     val rowKey = keys.saltedKey(crc32(col("c0")), 10,
       keys.md5CompositeKey(Seq(col("c0"), col("c1"), col("c2"), col("c3"))))
     val cells = CellOps.explodeIndexed(kept, rowKey, "c", (0 until 3).map(i => col(s"c$i")))
@@ -291,7 +291,7 @@ class CellPipelineSpec extends SparkSuite {
     }
 
     import graft.queries.ReferenceParity.CsvSample
-    val r = BulkLoad.csv(spark, CsvSample.stage(),
+    val r = BulkLoad.csv(spark, CsvSample.stage(spark),
       BulkLoad.Config(compatNaiveSplit = true, splits = Some(splits)))
     assert(r.cells.queryExecution.executedPlan
       .exists(_.isInstanceOf[graft.plans.RegionAlignedRowExchangeExec]),

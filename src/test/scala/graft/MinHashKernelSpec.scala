@@ -7,15 +7,19 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The per-document MinHash kernel against the relational formulation it
-  * replaced in `Dedup.corpusDedup` (shingle-grain digest index, signature
-  * aggregate, windowed band self-join, two-join exact verify), written out
-  * here as the reference. Corpora are generated, with the edge cases the
-  * two must agree on: null text and null doc_id, fewer than n tokens,
-  * double / leading / trailing spaces and the empty string, non-ASCII
-  * words, repeated shingles inside a document, and rows sharing a doc_id
-  * (both formulations pool such rows: sizes add, shared digests count
-  * once per pair of rows, signatures take the element-wise min). */
+/** The per-document MinHash kernel — the engine's one source of shingle
+  * digests — against the relational formulations it replaced, written out
+  * here as the reference: the string-shingle md5 index (`refIndex`), and
+  * over it the signature aggregate, windowed band self-join and two-join
+  * exact verify of `Dedup.corpusDedup`, and the inverted-index self-join
+  * that `ngramJaccardPairs`, `containmentPairs` and
+  * `ngramJaccardPrefixPairs` ran before they read the kernel's digests.
+  * Corpora are generated, with the edge cases the two must agree on: null
+  * text and null doc_id, fewer than n tokens, double / leading / trailing
+  * spaces and the empty string, non-ASCII words, repeated shingles inside
+  * a document, and rows sharing a doc_id (both formulations pool such
+  * rows: sizes add, shared digests count once per pair of rows, signatures
+  * take the element-wise min). */
 class MinHashKernelSpec extends SparkSuite {
 
   private val vocab = Seq("the", "a", "of", "fox", "dog", "river", "stone", "light",
@@ -115,6 +119,31 @@ class MinHashKernelSpec extends SparkSuite {
       .where(col("jaccard") >= threshold)
   }
 
+  /** (a, b, common, nsh_a, nsh_b), a < b, of the reference index with
+    * digests held by more than `maxDf` rows dropped before the sizes are
+    * counted. */
+  private def refOverlaps(docs: DataFrame, n: Int, maxDf: Option[Long]): DataFrame = {
+    val raw = refIndex(docs, n)
+    val sh = maxDf.fold(raw) { cap =>
+      raw.join(raw.groupBy(col("s")).agg(count(lit(1)).as("df"))
+        .where(col("df") <= cap).select(col("s")), "s")
+    }.localCheckpoint()
+    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
+    sh.as("x").join(sh.as("y"), col("x.s") === col("y.s") && col("x.doc_id") < col("y.doc_id"))
+      .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
+      .agg(count(lit(1)).as("common"))
+      .join(sz.as("sa"), col("a") === col("sa.doc_id"))
+      .join(sz.as("sb"), col("b") === col("sb.doc_id"))
+      .select(col("a"), col("b"), col("common"),
+        col("sa.nsh").as("nsh_a"), col("sb.nsh").as("nsh_b"))
+  }
+
+  private def refJaccard(overlaps: DataFrame, t: Double): DataFrame =
+    overlaps.select(col("a"), col("b"),
+        (col("common").cast(DoubleType) /
+          (col("nsh_a") + col("nsh_b") - col("common"))).as("jaccard"))
+      .where(col("jaccard") >= t)
+
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
@@ -177,6 +206,44 @@ class MinHashKernelSpec extends SparkSuite {
         val got = rows(Dedup.corpusDedup(docs, 3, t))
         assert(got.nonEmpty, s"seed=$seed t=$t")
         assert(got === rows(refCorpusDedup(docs, 3, t)), s"seed=$seed t=$t")
+      }
+    }
+  }
+
+  test("exact Jaccard, containment and prefix pairs on kernel digests equal the string-shingle index join; nsh = |dg|/2") {
+    for (seed <- Seq(51L, 52L)) {
+      val docs = corpus(seed, 150)
+      for (maxDf <- Seq(None, Some(2L))) {
+        val ref = refOverlaps(docs, 3, maxDf)
+        for (t <- Seq(0.0, 0.5, 0.8)) {
+          val got = rows(Dedup.ngramJaccardPairs(docs, 3, t, maxDf))
+          assert(got.nonEmpty, s"seed=$seed maxDf=$maxDf t=$t")
+          assert(got === rows(refJaccard(ref, t)), s"seed=$seed maxDf=$maxDf t=$t")
+        }
+        val cont = rows(Dedup.containmentPairs(docs, 3, 0.5, maxDf))
+        assert(cont.nonEmpty, s"seed=$seed maxDf=$maxDf")
+        assert(cont === rows(ref.select(col("a"), col("b"),
+            (col("common").cast(DoubleType) / col("nsh_a")).as("cont_a"),
+            (col("common").cast(DoubleType) / col("nsh_b")).as("cont_b"))
+          .where(greatest(col("cont_a"), col("cont_b")) >= 0.5)), s"seed=$seed maxDf=$maxDf")
+      }
+      // the prefix principle holds for sets: pairs of single-row doc_ids
+      // are exactly the reference's; a pooled doc_id is a multiset whose
+      // shared digests count r·s, so there it may miss a pair, never add one
+      val prefix = Dedup.ngramJaccardPrefixPairs(docs, 3, 4, 5)
+      val ref = refJaccard(refOverlaps(docs, 3, None), 0.8)
+      val pooled = docs.groupBy(col("doc_id")).count().where(col("count") > 1)
+        .where(col("doc_id").isNotNull).collect().map(_.getLong(0)).toSeq
+      assert(pooled.nonEmpty)
+      def sets(df: DataFrame) = df.where(!col("a").isin(pooled: _*) && !col("b").isin(pooled: _*))
+      assert(rows(sets(prefix)).nonEmpty, s"seed=$seed")
+      assert(rows(sets(prefix)) === rows(sets(ref)), s"seed=$seed")
+      assert(rows(prefix).toSet.subsetOf(rows(ref).toSet), s"seed=$seed")
+      // nsh counts exactly the digests dg holds, folded rows included
+      for (n <- Seq(1, 3)) {
+        val k = Dedup.kernelFrame(docs, n)
+        assert(k.count() > 0)
+        assert(k.where(col("k.nsh") =!= size(col("k.dg")) / 2).count() === 0, s"seed=$seed n=$n")
       }
     }
   }

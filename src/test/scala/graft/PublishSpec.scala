@@ -68,7 +68,7 @@ class PublishSpec extends SparkSuite {
     import graft.queries.ReferenceParity.staged
     val parent = tmpDir()
     val path = s"$parent/fixture"
-    val e = intercept[IllegalStateException](staged(path) { tmp =>
+    val e = intercept[IllegalStateException](staged(spark, path) { tmp =>
       Files.createDirectories(Paths.get(tmp))
       Files.writeString(Paths.get(tmp, "part-0"), "half")
       throw new IllegalStateException("write failed midway")
@@ -77,12 +77,12 @@ class PublishSpec extends SparkSuite {
     assert(!Files.exists(Paths.get(path)), "a failed write must leave no fixture")
     assert(new java.io.File(parent).list().isEmpty, "nor its temp")
     // the next call builds it; a later one reuses it without writing
-    assert(staged(path) { tmp =>
+    assert(staged(spark, path) { tmp =>
       Files.createDirectories(Paths.get(tmp))
       Files.writeString(Paths.get(tmp, "part-0"), "whole")
     } === path)
     assert(Files.readString(Paths.get(path, "part-0")) === "whole")
-    staged(path)(_ => fail("a staged fixture must not be rebuilt"))
+    staged(spark, path)(_ => fail("a staged fixture must not be rebuilt"))
   }
 
   test("compactMinor ledger crash window: live _absorbed missing, complete temp present — absorbed ids still honoured") {
