@@ -132,10 +132,11 @@ object BulkLoad {
   val ReferenceRcKeyFields: Seq[Int] = Seq(1, 3, 4, 20)
 
   /** RCFile driver (reference `BulkImporterFromRC`); default key fields
-    * normalized to in-range positions, [[ReferenceRcKeyFields]] opt-in. */
+    * normalized to in-range positions, [[ReferenceRcKeyFields]] opt-in.
+    * Records failing the arity guard join the quarantine. */
   def rcFile(spark: SparkSession, input: String, cfg: Config = Config()): Result = {
-    val kept = RCFileSource.read(spark, input, cfg.arity)
-    fromPositional(kept, emptyQuarantine(spark), cfg)
+    val (kept, rejected) = RCFileSource.read(spark, input, cfg.arity)
+    fromPositional(kept, rejected, cfg)
   }
 
   /** ORC driver — the modern columnar input (vectorized scan + column

@@ -14,9 +14,9 @@ import org.apache.spark.sql.SparkSession
   * `--conf FILE` merges a config file into the SparkConf: Hadoop-style XML
   * (the reference's `hbase-site.xml` first argument,
   * BulkImporterFromText.java:82-83) or a `key=value`-per-line properties
-  * file. Runs the bulk-load
-  * pipeline and prints one JSON stats line (cells, quarantined rows,
-  * regions). Plain args, dependency-free. */
+  * file. Runs the bulk-load pipeline — cells to `<output>`, quarantined
+  * rows to `<output>.quarantine` — and prints one JSON stats line (cells,
+  * quarantined rows, regions). Plain args, dependency-free. */
 object IngestCli {
 
   private val knownFlags =
@@ -109,6 +109,46 @@ object IngestCli {
           throw new IllegalArgumentException(s"--qualifiers must be index|name, got: $other")
       }.getOrElse(BulkLoad.Config().qualifiers),
       loadTs = opts.get("--load-ts").map(_.toLong).getOrElse(0L))
+
+  /** Batch load verb: runs the `format` driver over `input`, writes the
+    * cells to `output` and the quarantined rows to `<output>.quarantine`
+    * (the `batch_NNNNN.quarantine` convention of the streaming path —
+    * quarantine, not drop), then commits the cell directory. Returns the
+    * JSON stats line; `quarantined` is the row count read back from the
+    * quarantine directory. */
+  def loadCommand(spark: SparkSession, format: String, input: String,
+                  output: String, base: BulkLoad.Config,
+                  opts: Map[String, String]): String = {
+    val r = format match {
+      case "csv"        => BulkLoad.csv(spark, input, base)
+      case "csv-compat" => BulkLoad.csv(spark, input, base.copy(compatNaiveSplit = true))
+      case "hivetext"   => BulkLoad.hiveText(spark, input, base)
+      case "avro"       => BulkLoad.avro(spark, input, base.copy(qualifiers = BulkLoad.NameQualifiers))
+      case "jsonl" =>
+        val ddl = opts.getOrElse("--schema", throw new IllegalArgumentException(
+          "jsonl requires --schema \"id STRING, ...\" " +
+            "(explicit DDL — inference alphabetizes columns and costs a full scan)"))
+        BulkLoad.jsonl(spark, input, ddl,
+          base.copy(qualifiers = BulkLoad.NameQualifiers))
+      case "rcfile"     => BulkLoad.rcFile(spark, input, base)
+      case "orc"        => BulkLoad.orc(spark, input, base)
+      // reference-literal RC keys (1,3,4,20) incl. the field-20 bug:
+      // affected rows quarantine instead of killing the job
+      case "rcfile-compat" =>
+        BulkLoad.rcFile(spark, input, base.copy(keyFields = BulkLoad.ReferenceRcKeyFields))
+      case other => throw new IllegalArgumentException(s"unknown format: $other")
+    }
+    val quarantineDir = s"$output.quarantine"
+    val t0 = System.nanoTime()
+    r.sink.write(r.cells, output)
+    r.quarantined.write.mode("overwrite").parquet(quarantineDir)
+    r.sink.postCommit(output)
+    val secs = (System.nanoTime() - t0) / 1e9
+    val cells = graft.sources.CellScan.rowCount(spark, output)
+    val quarantined = spark.read.schema("value STRING").parquet(quarantineDir).count()
+    s"""{"format":"$format","cells":$cells,"quarantined":$quarantined,""" +
+      s""""regions":${base.regions},"write_sec":$secs}"""
+  }
 
   /** ADMIN verb: layout compaction of a staged/serving cell directory —
     * the background-sweep entry point an operator schedules beside the
@@ -428,36 +468,7 @@ object IngestCli {
           s""""cells":${batches.map(_.cells).sum}}""")
         return // finally still stops the session
       }
-      val r = format match {
-        case "csv"        => BulkLoad.csv(spark, input, base)
-        case "csv-compat" => BulkLoad.csv(spark, input, base.copy(compatNaiveSplit = true))
-        case "hivetext"   => BulkLoad.hiveText(spark, input, base)
-        case "avro"       => BulkLoad.avro(spark, input, base.copy(qualifiers = BulkLoad.NameQualifiers))
-        case "jsonl" =>
-          val ddl = opts.getOrElse("--schema", {
-            System.err.println("jsonl requires --schema \"id STRING, ...\" " +
-              "(explicit DDL — inference alphabetizes columns and costs a full scan)")
-            sys.exit(2)
-          })
-          BulkLoad.jsonl(spark, input, ddl,
-            base.copy(qualifiers = BulkLoad.NameQualifiers))
-        case "rcfile"     => BulkLoad.rcFile(spark, input, base)
-        case "orc"        => BulkLoad.orc(spark, input, base)
-        // reference-literal RC keys (1,3,4,20) incl. the field-20 bug:
-        // affected rows quarantine instead of killing the job
-        case "rcfile-compat" =>
-          BulkLoad.rcFile(spark, input, base.copy(keyFields = BulkLoad.ReferenceRcKeyFields))
-        case other =>
-          System.err.println(s"unknown format: $other"); sys.exit(2)
-      }
-      val t0 = System.nanoTime()
-      r.sink.write(r.cells, output)
-      r.sink.postCommit(output)
-      val secs = (System.nanoTime() - t0) / 1e9
-      val cells = graft.sources.CellScan.rowCount(spark, output)
-      val quarantined = r.quarantined.count()
-      println(s"""{"format":"$format","cells":$cells,"quarantined":$quarantined,""" +
-        s""""regions":${base.regions},"write_sec":$secs}""")
+      println(loadCommand(spark, format, input, output, base, opts))
     } finally spark.stop()
   }
 }

@@ -12,8 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * The full bulk-load pipeline: parse → MD5 composite rowkey → cell
-    * explode → region-range exchange → KeyValue sort (SURVEY.md §7.2). */
+    * The full bulk-load pipeline ([[BulkLoad.fromPositional]]): MD5
+    * composite rowkey → region-aligned exchange of wide rows →
+    * partition-local row sort → ordered cell explode, cells in KeyValue
+    * order with no cell sort (SURVEY.md §7.2). */
   def entry(spark: SparkSession): DataFrame =
     queries("ingest_sorted_cells")(spark, "/root/testdata/sf0.001")
 

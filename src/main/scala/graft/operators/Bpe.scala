@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * Each round is one vocab-sized pair aggregation + a 1-row top-1
   * (TakeOrdered — no global sort) broadcast-cross-joined into the
   * rewrite, and the vocab table is re-materialized per round
-  * ([[Dedup.materializeFixpoint]]) so the plan does not double per
+  * ([[Dedup.materialize]]) so the plan does not double per
   * iteration. The driver never holds row data.
   *
   * Output: one row per merge — (rank 1..k, lhs, rhs, pair_freq). */
@@ -62,12 +62,11 @@ object Bpe {
   /** The shared train loop: returns (final vocab (word, syms, freq), one
     * 1-row merge table per round). Each round's vocab and winning pair
     * are re-materialized so the lazy plan does not double per iteration. */
-  private def run(docs: DataFrame, rounds: Int,
-                  storage: Dedup.FixpointStorage): (DataFrame, Seq[DataFrame]) = {
+  private def run(docs: DataFrame, rounds: Int): (DataFrame, Seq[DataFrame]) = {
     val base = wordFreq(docs).select(col("word"),
       concat(lit(SEP), regexp_replace(col("word"), "(.)", "$1" + SEP)).as("syms"),
       col("freq"))
-    var vocab = Dedup.materializeFixpoint(base, storage)
+    var vocab = Dedup.materialize(base)
     val merges = Seq.newBuilder[DataFrame]
     for (r <- 1 to rounds) {
       val toks: Column = filter(split(col("syms"), SEP), _ =!= "")
@@ -77,34 +76,30 @@ object Bpe {
           slice(toks, lit(2), size(toks) - 1).as("r"))).as("p"))
         .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
         .agg(sum("freq").as("pair_freq"))
-      val top1 = Dedup.materializeFixpoint(
+      val top1 = Dedup.materialize(
         pairs.orderBy(col("pair_freq").desc, col("lhs"), col("rhs")).limit(1)
-          .select(lit(r).as("rank"), col("lhs"), col("rhs"), col("pair_freq")),
-        storage)
+          .select(lit(r).as("rank"), col("lhs"), col("rhs"), col("pair_freq")))
       merges += top1
       val pat = concat(lit(SEP), col("lhs"), lit(SEP), col("rhs"), lit(SEP))
       val rep = concat(lit(SEP), col("lhs"), col("rhs"), lit(SEP))
       val once = (s: Column) => replace(s, pat, rep)
-      vocab = Dedup.materializeFixpoint(
+      vocab = Dedup.materialize(
         vocab.crossJoin(broadcast(top1.select(col("lhs"), col("rhs"))))
-          .select(col("word"), once(once(once(col("syms")))).as("syms"), col("freq")),
-        storage)
+          .select(col("word"), once(once(once(col("syms")))).as("syms"), col("freq")))
     }
     (vocab, merges.result())
   }
 
   /** Top-k BPE merges over the corpus. Each returned row is one merge
     * rule in application order with the pair frequency that won it. */
-  def merges(docs: DataFrame, rounds: Int,
-             storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame =
-    run(docs, rounds, storage)._2.reduce(_ unionByName _)
+  def merges(docs: DataFrame, rounds: Int): DataFrame =
+    run(docs, rounds)._2.reduce(_ unionByName _)
       .select(col("rank"), col("lhs"), col("rhs"), col("pair_freq"))
 
   /** The trained tokenizer itself: each vocab word with its final symbol
     * string after `rounds` merges — (word, syms, freq). */
-  def encodedVocab(docs: DataFrame, rounds: Int,
-                   storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame =
-    run(docs, rounds, storage)._1
+  def encodedVocab(docs: DataFrame, rounds: Int): DataFrame =
+    run(docs, rounds)._1
 
   /** Train → APPLY: per-document subword fertility under the vocab the
     * corpus itself induced — n_subwords/n_words after `rounds` merges,
@@ -116,9 +111,8 @@ object Bpe {
     * against the word-keyed vocab (map-side combinable per-doc agg after
     * it); the vocab is corpus-derived and checkpointed by the train loop,
     * so applying costs one more corpus scan + one word-hash shuffle. */
-  def fertility(docs: DataFrame, rounds: Int,
-                storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
-    val vocab = encodedVocab(docs, rounds, storage).select(col("word"),
+  def fertility(docs: DataFrame, rounds: Int): DataFrame = {
+    val vocab = encodedVocab(docs, rounds).select(col("word"),
       size(filter(split(col("syms"), SEP), _ =!= "")).as("n_sub"))
     val words = docs
       .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z]+")).as("word"))

@@ -363,12 +363,11 @@ object CorpusPipeline {
     * per-row hash — no extra corpus exchange.
     * Output: (doc_id, rep, split). */
   def leakageSafeSplit(docs: DataFrame, pairs: DataFrame,
-                       trainRate: Double, valRate: Double,
-                       storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
+                       trainRate: Double, valRate: Double): DataFrame = {
     require(trainRate >= 0 && valRate >= 0 && trainRate + valRate <= 1.0,
       s"rates must be non-negative and sum <= 1, got ($trainRate, $valRate)")
     leakageSafeSplitFromClusters(docs,
-      Dedup.clusters(pairs.select(col("a"), col("b")), storage),
+      Dedup.clusters(pairs.select(col("a"), col("b"))),
       trainRate, valRate)
   }
 
@@ -617,11 +616,9 @@ object CorpusPipeline {
       .withColumn("keep_id", min(col("doc_id")).over(Window.partitionBy(col("h"))))
       .where(col("doc_id") === col("keep_id"))
       .drop("h", "keep_id")
-    val fp = TextOps.distinctShingleRows(kept, shingleN, "sh", "doc_id", "source")
-      .groupBy(col("doc_id"), col("source"))
-      .agg(min(md5(col("sh").cast(BinaryType))).as("f"))
+    val fp = TextOps.shingleMinFp(kept, shingleN, "doc_id", "source")
     val contaminated = fp.as("x").join(fp.as("y"),
-        col("x.f") === col("y.f") && col("x.source") =!= col("y.source") &&
+        col("x.fp") === col("y.fp") && col("x.source") =!= col("y.source") &&
           col("x.doc_id") > col("y.doc_id"))
       .select(col("x.doc_id").as("doc_id")).distinct()
     kept.join(contaminated, Seq("doc_id"), "left_anti")

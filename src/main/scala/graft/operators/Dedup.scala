@@ -282,7 +282,7 @@ object Dedup {
     * holding it (`ndocs`). ~40 B/digest, text never stored.
     *
     * The registry is BUCKETED BY DIGEST at write time
-    * ([[spanRegistryBuckets]] buckets, per-bucket sorted — the
+    * ([[SpanRegistryBuckets]] buckets, per-bucket sorted — the
     * [[graft.operators.Layout.writeBucketed]] contract): a bucketed scan
     * reports `HashPartitioning(s, n)`, so every digest-keyed store-side
     * operation — the incremental rewrite's registry probe, the advance's
@@ -290,63 +290,42 @@ object Dedup {
     * 100 TB the registry is corpus-duplication-sized; pre-bucketing it
     * moves the per-batch shuffle from O(registry) to O(batch), the same
     * amortize-the-shuffle-once trade the bucketed fact-table layout
-    * makes. Registries published by pre-bucketing code (no
-    * [[SpanBucketsFile]] sidecar) fall back to a plain parquet scan. */
+    * makes. */
   final case class SpanStore(spark: org.apache.spark.sql.SparkSession,
                              dir: String) {
-    def spans: DataFrame = Publish.readText(
-        spark.sessionState.newHadoopConf(),
-        new org.apache.hadoop.fs.Path(s"$dir/$SpanBucketsFile")) match {
-      case None =>
-        spark.read.schema("s BINARY, keeper BIGINT, ndocs BIGINT")
-          .parquet(s"$dir/spans.parquet")
-      case Some(buckets) =>
-        val n = buckets.toInt
-        // bucket metadata lives in the catalog, not the files — register
-        // an external bucketed table over the published location once per
-        // session. The name keys on (dir, bucket count): the dir is
-        // content-keyed, but a dir deleted and re-published in the same
-        // session under a different -Dgraft.spanstore.buckets would
-        // otherwise reuse a stale catalog entry whose bucket spec no
-        // longer matches the files — the zero-exchange join would then
-        // read wrong partitioning silently
-        val tbl = "graft_spanstore_" + Publish.md5Hex(s"$dir|$n")
-        if (!spark.catalog.tableExists(tbl))
-          spark.sql(
-            s"""CREATE TABLE IF NOT EXISTS `$tbl` (s BINARY, keeper BIGINT, ndocs BIGINT)
-               |USING PARQUET
-               |CLUSTERED BY (s) SORTED BY (s) INTO $n BUCKETS
-               |LOCATION '$dir/spans.parquet'""".stripMargin)
-        spark.table(tbl)
+    def spans: DataFrame = {
+      // bucket metadata lives in the catalog, not the files — register
+      // an external bucketed table over the published location once per
+      // session. The dir is content-keyed and folds [[SpanLayoutVersion]],
+      // so its files always carry [[SpanRegistryBuckets]] buckets
+      val tbl = "graft_spanstore_" + Publish.md5Hex(dir)
+      if (!spark.catalog.tableExists(tbl))
+        spark.sql(
+          s"""CREATE TABLE IF NOT EXISTS `$tbl` (s BINARY, keeper BIGINT, ndocs BIGINT)
+             |USING PARQUET
+             |CLUSTERED BY (s) SORTED BY (s) INTO $SpanRegistryBuckets BUCKETS
+             |LOCATION '$dir/spans.parquet'""".stripMargin)
+      spark.table(tbl)
     }
   }
 
-  /** Sidecar recording the bucket count a span registry's files were
-    * laid out with (written LAST, before the store's atomic publish). */
-  private[graft] val SpanBucketsFile = "SPAN_BUCKETS"
-
-  /** Span-registry bucket count. 32 matches the local session's shuffle
-    * width; a deployment sizes it so one bucket's digests fit an
-    * executor's join hash table (`-Dgraft.spanstore.buckets=N`). */
-  private[graft] def spanRegistryBuckets: Int =
-    sys.props.get("graft.spanstore.buckets").map(_.toInt).getOrElse(32)
+  /** Span-registry bucket count: the local session's shuffle width.
+    * Part of the span layout — a change bumps [[SpanLayoutVersion]]. */
+  private[graft] val SpanRegistryBuckets = 32
 
   /** Land a registry frame as the digest-bucketed `spans.parquet` fileset
-    * under `tmp` (staging table → drop keeps the files → sidecar). The
-    * stage table is external (explicit path), so DROP leaves the data;
-    * the UUID name keeps concurrent builders apart. */
+    * under `tmp` (staging table → drop keeps the files). The stage table
+    * is external (explicit path), so DROP leaves the data; the UUID name
+    * keeps concurrent builders apart. */
   private def writeSpanRegistry(spark: org.apache.spark.sql.SparkSession,
                                 registry: DataFrame, tmp: String): Unit = {
-    val n = spanRegistryBuckets
     val stage = s"graft_spanstore_stage_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    registry.repartition(n, col("s"))
+    registry.repartition(SpanRegistryBuckets, col("s"))
       .write.mode("overwrite")
       .option("path", s"$tmp/spans.parquet")
-      .bucketBy(n, "s").sortBy("s")
+      .bucketBy(SpanRegistryBuckets, "s").sortBy("s")
       .saveAsTable(stage)
     spark.sql(s"DROP TABLE IF EXISTS `$stage`")
-    Publish.writeText(spark.sessionState.newHadoopConf(),
-      new org.apache.hadoop.fs.Path(s"$tmp/$SpanBucketsFile"), n.toString)
   }
 
   /** Resolve the PUBLISHED span store for a (corpusKey, k) pair, if one
@@ -914,64 +893,31 @@ object Dedup {
       .crossJoin(broadcast(nSampled)) // 1-row scalar, documented pattern
   }
 
-  /** Connected components over a near-dup pair graph — the step that turns
-    * pairwise similarity into the dedup decision (one KEEPER per cluster).
-    * Output: (doc_id, cluster_id) for every doc appearing in `pairs`,
-    * cluster_id = smallest doc_id reachable through the pair graph (so the
-    * representative is canonical and deterministic).
-    *
-    * Hash-min label propagation: every iteration each node takes the min
-    * of its own label and its neighbors' labels; converges in
-    * graph-diameter iterations. Near-dup graphs are clique-ish (every
-    * member of a dup group pairs with most others), so the diameter — and
-    * the iteration count — is small and independent of corpus size; each
-    * iteration is one equi-join + min-agg, all executor-side, and
-    * `localCheckpoint` truncates the growing lineage. The driver holds
-    * only the per-iteration change COUNT, never row data. */
-  /** Storage strategy for fixpoint intermediates. `LocalCheckpoint` pins
-    * blocks to executor storage — fastest, but a lost executor kills the
-    * lineage-truncated dataset, so long cluster runs should use
-    * `ReliableCheckpoint(hdfsDir)` to land iteration state on durable
-    * storage instead (survives executor loss; one write per iteration of
-    * one label row per node).
-    *
-    * `SessionDefault` (the default everywhere) resolves from the session:
-    * when `graft.fixpoint.dir` is set (SparkConf or `spark.conf.set`),
-    * every materialization in the engine — fixpoint loops, multi-consumer
-    * frames, incremental indexes — lands there as a reliable checkpoint;
-    * unset means `LocalCheckpoint`. One conf line is the cluster
-    * deployment's durability switch; local runs need nothing. */
-  sealed trait FixpointStorage
-  case object SessionDefault extends FixpointStorage
-  case object LocalCheckpoint extends FixpointStorage
-  final case class ReliableCheckpoint(dir: String) extends FixpointStorage
-
-  /** The `graft.fixpoint.dir`-aware materializer for single-frame call
-    * sites (checkpoint-once shared frames, streaming index state). */
+  /** The engine's one materializer — fixpoint loops, multi-consumer
+    * frames and incremental indexes all truncate lineage here. The
+    * session conf `graft.fixpoint.dir` is its only switch: set
+    * (SparkConf or `spark.conf.set`), every materialization lands under
+    * it as a reliable checkpoint, which survives executor loss at one
+    * write per materialized frame; unset, it is a `localCheckpoint`
+    * (executor block storage — fastest, but a lost executor kills the
+    * truncated dataset). One conf line is the cluster deployment's
+    * durability switch; local runs need nothing. */
   private[graft] def materialize(df: DataFrame): DataFrame =
-    materializeFixpoint(df, SessionDefault)
-
-  /** [[materialize]] as postfix syntax (`df.materialized`) so
-    * checkpoint-once sites keep their operator-chain shape. */
-  private[graft] implicit class MaterializeSyntax(private val df: DataFrame) extends AnyVal {
-    def materialized: DataFrame = Dedup.materialize(df)
-  }
-
-  private[graft] def materializeFixpoint(df: DataFrame, storage: FixpointStorage): DataFrame =
-    storage match {
-      case SessionDefault =>
-        df.sparkSession.conf.getOption("graft.fixpoint.dir").filter(_.nonEmpty) match {
-          case Some(dir) => materializeFixpoint(df, ReliableCheckpoint(dir))
-          case None      => materializeFixpoint(df, LocalCheckpoint)
-        }
-      case LocalCheckpoint => df.localCheckpoint()
-      case ReliableCheckpoint(dir) =>
+    df.sparkSession.conf.getOption("graft.fixpoint.dir").filter(_.nonEmpty) match {
+      case None => df.localCheckpoint()
+      case Some(dir) =>
         val sc = df.sparkSession.sparkContext
         // setCheckpointDir appends a UUID subdir — only (re)set when the
         // current dir is not already under the requested root
         if (!sc.getCheckpointDir.exists(_.startsWith(dir))) sc.setCheckpointDir(dir)
         df.checkpoint()
     }
+
+  /** [[materialize]] as postfix syntax (`df.materialized`) so
+    * checkpoint-once sites keep their operator-chain shape. */
+  private[graft] implicit class MaterializeSyntax(private val df: DataFrame) extends AnyVal {
+    def materialized: DataFrame = Dedup.materialize(df)
+  }
 
   /** HARD BACKSTOP on cheap min-label propagation rounds in [[clusters]]
     * (any component of eccentricity ≤ 7 resolves inside it). Since
@@ -1035,8 +981,7 @@ object Dedup {
     * min-id per component is algorithm-independent on irreflexive
     * inputs (AnalyticsLayoutSpec pins star ≡ propagation equality), and
     * every declared pair generator emits strict a < b pairs. */
-  def clusters(pairs: DataFrame,
-               storage: FixpointStorage = SessionDefault): DataFrame = {
+  def clusters(pairs: DataFrame): DataFrame = {
     // materialize the edge list ONCE — without this every fixpoint
     // iteration re-runs the upstream pair pipeline (LSH + verify) from
     // scratch inside its join. The undirected doubling is an explode of a
@@ -1046,15 +991,15 @@ object Dedup {
     // hashpartitioning(b) survives materialization, so each iteration's
     // equi-join exchanges only the label rows — the (usually much larger)
     // edge list never moves again.
-    val und = materializeFixpoint(pairs
+    val und = materialize(pairs
       .select(explode(array(
         struct(col("a"), col("b")),
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .distinct()
-      .repartition(col("b")), storage)
-    var labels = materializeFixpoint(und.select(col("a").as("id")).distinct()
-      .withColumn("cluster_id", col("id")), storage)
+      .repartition(col("b")))
+    var labels = materialize(und.select(col("a").as("id")).distinct()
+      .withColumn("cluster_id", col("id")))
     var changed = 1L
     var prevChanged = Long.MaxValue
     var stalled = false
@@ -1067,13 +1012,12 @@ object Dedup {
       // convergence flag computed INLINE (the old label is already in the
       // row) — a join-based next-vs-old compare would cost an extra
       // shuffle per iteration just to count changes
-      val next = materializeFixpoint(labels
+      val next = materialize(labels
         .join(nbrMin.withColumnRenamed("a", "id"), Seq("id"), "left")
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("nbr_min"), col("cluster_id")))
             .as("cluster_id"),
-          (coalesce(col("nbr_min"), col("cluster_id")) < col("cluster_id")).as("chg")),
-        storage)
+          (coalesce(col("nbr_min"), col("cluster_id")) < col("cluster_id")).as("chg")))
       changed = next.where(col("chg")).count()
       stalled = ccStalled(round, changed, prevChanged)
       prevChanged = changed
@@ -1094,7 +1038,7 @@ object Dedup {
         .join(labels.select(col("id").as("b"), col("cluster_id").as("lb")), "b")
         .select(col("la").as("a"), col("lb").as("b"))
         .where(col("a") =!= col("b"))
-      val roots = GraphOps.connectedComponentsStar(contracted, storage)
+      val roots = GraphOps.connectedComponentsStar(contracted)
         .select(col("doc_id").as("cluster_id"), col("cluster_id").as("root"))
       labels.join(roots, Seq("cluster_id"), "left")
         .select(col("id").as("doc_id"),
@@ -1156,10 +1100,11 @@ object Dedup {
     s"minhash:k=$MinHashK,b=$Bands,r=$RowsPerBand,cap=$BandBucketCap,rev=5"
 
   /** The span registries' OWN layout version, folded only into span-store
-    * keys: rev=3 is the digest-bucketed per-bucket-sorted fileset
-    * (SPAN_BUCKETS sidecar). Future span-layout changes bump THIS, so
+    * keys: rev=4 is the digest-bucketed per-bucket-sorted fileset at the
+    * constant [[SpanRegistryBuckets]] (rev=3 recorded a configurable
+    * count in a sidecar file). Future span-layout changes bump THIS, so
     * dedup/cluster stores keep their cached builds. */
-  val SpanLayoutVersion: String = "spanlayout:rev=3"
+  val SpanLayoutVersion: String = "spanlayout:rev=4"
 
   /** Handle over one persisted dedup store: the cluster assignment plus
     * the kernel frame it was computed from, the index a production store

@@ -35,19 +35,16 @@ object GraphOps {
     * exactly (min-id representative) on irreflexive pair lists — the
     * near-dup generators' contract (self-pairs are dropped here, so a
     * node appearing ONLY as a self-pair emits no row). Edge frames
-    * materialize per round through the same [[Dedup.FixpointStorage]]
-    * knob. */
-  def connectedComponentsStar(pairs: DataFrame,
-      storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
-    import Dedup.materializeFixpoint
-    var edges = materializeFixpoint(
+    * materialize per round through [[Dedup.materialize]]. */
+  def connectedComponentsStar(pairs: DataFrame): DataFrame = {
+    var edges = Dedup.materialize(
       pairs.select(col("a").as("u"), col("b").as("v"))
-        .where(col("u") =!= col("v")).distinct(), storage)
+        .where(col("u") =!= col("v")).distinct())
     // node set off the materialized frame — the upstream pair pipeline
     // (often an LSH candidate search) must run exactly once; self-loop
     // pairs were dropped above and contribute no cluster anyway
-    val nodes = materializeFixpoint(edges
-      .select(explode(array(col("u"), col("v"))).as("id")).distinct(), storage)
+    val nodes = Dedup.materialize(edges
+      .select(explode(array(col("u"), col("v"))).as("id")).distinct())
     var converged = false
     var edgeCount = -1L // unknown until a round materializes a star frame
     var round = 0
@@ -71,11 +68,11 @@ object GraphOps {
       // no greatest/least re-orientation is needed — every neighbor here
       // is < u and the minimum is min(Γ⁻(u)); u itself re-parents too
       val ssMin = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val ss = materializeFixpoint(
+      val ss = Dedup.materialize(
         ls.join(ssMin, "u").where(col("v") =!= col("m"))
           .select(col("v").as("u"), col("m").as("v"))
           .unionByName(ssMin.select(col("u"), col("m").as("v")))
-          .where(col("u") =!= col("v")).distinct(), storage)
+          .where(col("u") =!= col("v")).distinct())
       // convergence: both frames are distinct sets, so equal counts plus
       // an empty one-sided difference ⟹ equality — one count (cheap over
       // the materialized frame) gates the single exceptAll; round 1 can
@@ -112,15 +109,15 @@ object GraphOps {
     * once; every iteration is one equi-join of the (nodes-sized) rank
     * frame against the edges plus one map-side-combined long-sum — the
     * edge list itself is never re-derived or re-shuffled per iteration
-    * (the [[Dedup.clusters]] posture; at cluster scale, pin the edge
-    * frame with the same checkpoint knob). The node count joins as a
-    * broadcast 1-row scalar. `iters` is fixed, not converged — rank
+    * (the [[Dedup.clusters]] posture; at cluster scale,
+    * `graft.fixpoint.dir` pins the edge frame durably). The node count
+    * joins as a broadcast 1-row scalar. `iters` is fixed, not converged — rank
     * deltas shrink geometrically and a fixed unrolling keeps the plan
     * finite and oracle-mirrorable. Output: (id, rank), Σ rank = 1 − the
     * shed floor remainders.
     *
     * The expanded edge frame is computed and materialized EXACTLY ONCE via
-    * `storage` (same knob as [[Dedup.clusters]]): the doubling is an
+    * [[Dedup.materialize]] (as in [[Dedup.clusters]]): the doubling is an
     * explode of a 2-element struct array (one scan of `edges` — a unionAll
     * of two selects would evaluate an expensive upstream edge derivation
     * once per branch), the per-node degree rides each edge row via one
@@ -131,8 +128,7 @@ object GraphOps {
     * list and count derive from the checkpointed frame — cheap rescans, no
     * second materialization. */
   def pageRank(edges: DataFrame, iters: Int,
-               dampNum: Int = 17, dampDen: Int = 20,
-               storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
+               dampNum: Int = 17, dampDen: Int = 20): DataFrame = {
     require(0 < dampNum && dampNum < dampDen, "damping must be in (0,1)")
     val raw = edges.select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
@@ -141,11 +137,10 @@ object GraphOps {
     // degree rides each edge row, so the per-iteration step is ONE
     // equi-join (ranks against this frame) + one long-sum — no separate
     // degree join inside the loop
-    val und = Dedup.materializeFixpoint(
+    val und = Dedup.materialize(
       raw.repartition(col("src"))
         .select(col("src"), col("dst"),
-          count(lit(1)).over(Window.partitionBy(col("src"))).as("deg")),
-      storage)
+          count(lit(1)).over(Window.partitionBy(col("src"))).as("deg")))
     // no exchange: und is already src-partitioned
     val nodes = und.select(col("src")).distinct()
     val n = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -216,18 +211,16 @@ object GraphOps {
     * seeds' neighborhood, not the node universe.
     * Output: (id, rank) for nodes with rank > 0. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
-                           dampNum: Int = 17, dampDen: Int = 20,
-                           storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
+                           dampNum: Int = 17, dampDen: Int = 20): DataFrame = {
     require(0 < dampNum && dampNum < dampDen, "damping must be in (0,1)")
     val raw = edges.select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val und = Dedup.materializeFixpoint(
+    val und = Dedup.materialize(
       raw.repartition(col("src"))
         .select(col("src"), col("dst"),
-          count(lit(1)).over(Window.partitionBy(col("src"))).as("deg")),
-      storage)
+          count(lit(1)).over(Window.partitionBy(col("src"))).as("deg")))
     // n_seeds counts only seeds PRESENT in the node universe: a seed id
     // absent from the edge list can receive no initial or restart mass,
     // so counting it would silently dilute every real seed's share and
@@ -323,20 +316,18 @@ object GraphOps {
     *
     * Scale shape (the [[pageRank]] posture): the doubled edge frame is
     * derived once via one explode-of-struct-array scan, src-partitioned
-    * and materialized through `storage`; each round is ONE equi-join of
+    * and materialized through [[Dedup.materialize]]; each round is ONE equi-join of
     * the nodes-sized label frame against it plus two grouped aggregates
     * ((dst, lbl) count, then the argmax) — the edges never re-shuffle,
     * and nothing is windowed (a per-dst row_number would sort every
     * message on the exchange). Output: (id, lbl). */
-  def labelPropagation(edges: DataFrame, iters: Int,
-                       storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
-    val und = Dedup.materializeFixpoint(
+  def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
+    val und = Dedup.materialize(
       edges.select(explode(array(
           struct(col("a").as("src"), col("b").as("dst")),
           struct(col("b").as("src"), col("a").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .repartition(col("src")),
-      storage)
+        .repartition(col("src")))
     var labels = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
     for (_ <- 1 to iters) {
@@ -455,26 +446,25 @@ object GraphOps {
     * the id-canonical wedge pair against the canonical edge set — no
     * OR-condition join, no DISTINCT over triangle triples. Output: one row
     * (n_triangles). */
-  def triangleCount(edges: DataFrame,
-                    storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
+  def triangleCount(edges: DataFrame): DataFrame = {
     // the canonical edge frame feeds four subtrees (degrees, orientation,
     // the closure probe) and the oriented frame both wedge sides —
     // materialize each once so an expensive upstream edge derivation
     // (e.g. basket-pair mining) is not re-run per consumer (4.1 -> 3.1 s
     // on the co-purchase graph at sf0.1, where mining the edges is ~2.4 s
     // of the total — the triangle counting itself is now sub-second)
-    val canon = Dedup.materializeFixpoint(edges
+    val canon = Dedup.materialize(edges
       .select(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y"))
-      .where(col("x") =!= col("y")).distinct(), storage)
+      .where(col("x") =!= col("y")).distinct())
     val deg = canon.select(col("x").as("v")).unionAll(canon.select(col("y").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     val withDeg = canon
       .join(deg.select(col("v").as("x"), col("d").as("dx")), "x")
       .join(deg.select(col("v").as("y"), col("d").as("dy")), "y")
     val fwd = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
-    val oriented = Dedup.materializeFixpoint(withDeg.select(
+    val oriented = Dedup.materialize(withDeg.select(
       when(fwd, col("x")).otherwise(col("y")).as("u"),
-      when(fwd, col("y")).otherwise(col("x")).as("v")), storage)
+      when(fwd, col("y")).otherwise(col("x")).as("v")))
     val wedges = oriented.as("p").join(oriented.as("q"),
         col("p.u") === col("q.u") && col("p.v") < col("q.v"))
       .select(col("p.v").as("wx"), col("q.v").as("wy"))
@@ -493,11 +483,10 @@ object GraphOps {
     * join at all — Σ_v d_v(d_v−1)/2 off the degree census. Exact integers
     * into one final division (try_divide: a wedge-free graph reads NULL).
     * Output: one row (n_triangles, n_wedges, global_cc). */
-  def clusteringCoefficient(edges: DataFrame,
-                            storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
-    val canon = Dedup.materializeFixpoint(edges
+  def clusteringCoefficient(edges: DataFrame): DataFrame = {
+    val canon = Dedup.materialize(edges
       .select(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y"))
-      .where(col("x") =!= col("y")).distinct(), storage)
+      .where(col("x") =!= col("y")).distinct())
     val deg = canon.select(col("x").as("v")).unionAll(canon.select(col("y").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     val wedgeTotal = deg.agg(sum(expr("d * (d - 1) div 2")).as("n_wedges"))
@@ -505,9 +494,9 @@ object GraphOps {
       .join(deg.select(col("v").as("x"), col("d").as("dx")), "x")
       .join(deg.select(col("v").as("y"), col("d").as("dy")), "y")
     val fwd = struct(col("dx"), col("x")) < struct(col("dy"), col("y"))
-    val oriented = Dedup.materializeFixpoint(withDeg.select(
+    val oriented = Dedup.materialize(withDeg.select(
       when(fwd, col("x")).otherwise(col("y")).as("u"),
-      when(fwd, col("y")).otherwise(col("x")).as("v")), storage)
+      when(fwd, col("y")).otherwise(col("x")).as("v")))
     val tri = oriented.as("p").join(oriented.as("q"),
         col("p.u") === col("q.u") && col("p.v") < col("q.v"))
       .select(col("p.v").as("wx"), col("q.v").as("wy"))
@@ -555,14 +544,13 @@ object GraphOps {
     * anti-join against the canonical edge frame; the ranking is a bounded
     * top-k. The adjacency frame is materialized once and feeds both wedge
     * sides and the degree aggregate. Output: (a, b, cn, score). */
-  def linkPrediction(edges: DataFrame, k: Int,
-                     storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
-    val canon = Dedup.materializeFixpoint(edges
+  def linkPrediction(edges: DataFrame, k: Int): DataFrame = {
+    val canon = Dedup.materialize(edges
       .select(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y"))
-      .where(col("x") =!= col("y")).distinct(), storage)
-    val adj = Dedup.materializeFixpoint(
+      .where(col("x") =!= col("y")).distinct())
+    val adj = Dedup.materialize(
       canon.select(col("x").as("v"), col("y").as("n"))
-        .unionAll(canon.select(col("y").as("v"), col("x").as("n"))), storage)
+        .unionAll(canon.select(col("y").as("v"), col("x").as("n"))))
     val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("d"))
     val common = adj.as("p").join(adj.as("q"),
         col("p.n") === col("q.n") && col("p.v") < col("q.v"))
@@ -617,17 +605,15 @@ object GraphOps {
     * frame (nodes-sized, shrinking) is the only per-round exchange.
     * Output: (id, core_deg) for survivors, core_deg = degree within the
     * surviving subgraph. */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-            storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
-    val adj = Dedup.materializeFixpoint(
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val adj = Dedup.materialize(
       edges.select(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y"))
         .where(col("x") =!= col("y")).distinct()
         .select(explode(array(
           struct(col("x").as("v"), col("y").as("n")),
           struct(col("y").as("v"), col("x").as("n")))).as("e"))
         .select(col("e.v").as("v"), col("e.n").as("n"))
-        .repartition(col("v")),
-      storage)
+        .repartition(col("v")))
     var surv = adj.select(col("v")).distinct()
     for (_ <- 1 to rounds) {
       surv = adj
@@ -678,17 +664,15 @@ object GraphOps {
     * are absent rather than approximated, which is the honest contract for
     * a bounded relaxation. Output: (id, dist), dist ∈ [0, maxHops]. */
   def bfsDistances(edges: DataFrame, isSource: org.apache.spark.sql.Column,
-                   maxHops: Int,
-                   storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
-    val adj = Dedup.materializeFixpoint(
+                   maxHops: Int): DataFrame = {
+    val adj = Dedup.materialize(
       edges.select(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y"))
         .where(col("x") =!= col("y")).distinct()
         .select(explode(array(
           struct(col("x").as("v"), col("y").as("n")),
           struct(col("y").as("v"), col("x").as("n")))).as("e"))
         .select(col("e.v").as("v"), col("e.n").as("n"))
-        .repartition(col("v")),
-      storage)
+        .repartition(col("v")))
     var dist = adj.select(col("v").as("id")).distinct()
       .where(isSource).select(col("id"), lit(0).as("dist"))
     for (_ <- 1 to maxHops) {
@@ -754,17 +738,15 @@ object GraphOps {
     * infinite — harmonic centrality is exactly the closeness variant that
     * stays well-defined under disconnection. Output: (id, reached,
     * harmonic), reached = seeds whose ball covers the node. */
-  def harmonicCentrality(edges: DataFrame, seeds: Int, maxHops: Int,
-                         storage: Dedup.FixpointStorage = Dedup.SessionDefault): DataFrame = {
-    val adj = Dedup.materializeFixpoint(
+  def harmonicCentrality(edges: DataFrame, seeds: Int, maxHops: Int): DataFrame = {
+    val adj = Dedup.materialize(
       edges.select(least(col("a"), col("b")).as("x"), greatest(col("a"), col("b")).as("y"))
         .where(col("x") =!= col("y")).distinct()
         .select(explode(array(
           struct(col("x").as("v"), col("y").as("n")),
           struct(col("y").as("v"), col("x").as("n")))).as("e"))
         .select(col("e.v").as("v"), col("e.n").as("n"))
-        .repartition(col("v")),
-      storage)
+        .repartition(col("v")))
     val seedRows = adj.select(col("v").as("id")).distinct()
       .orderBy(md5(col("id").cast(StringType)), col("id")).limit(seeds)
     var dist = seedRows.select(col("id").as("seed"), col("id"), lit(0).as("dist"))

@@ -1329,40 +1329,34 @@ object Similarity {
 
   /** Sized-layout defaults and their VALIDITY ENVELOPE: the plane count
     * is clamped at [[RpMaxPlanes]], so above
-    * 2^maxPlanes · targetOccupancy vectors (≈ 2.1 B at the defaults)
-    * per-bucket occupancy grows LINEARLY with n again — the layout is
-    * slow there, not collapsed, and the cap-binding metric will not
-    * warn (nothing is dropped). Deployments past the envelope raise the
-    * session confs [[RpTargetOccupancyConf]] / [[RpMaxPlanesConf]],
-    * which every sized-default consumer reads; [[sizedRpPlanes]] logs
+    * 2^RpMaxPlanes · RpTargetOccupancy vectors (≈ 2.1 B) per-bucket
+    * occupancy grows LINEARLY with n again — the layout is slow there,
+    * not collapsed, and the cap-binding metric will not warn (nothing is
+    * dropped). Callers past the envelope pass an explicit layout
+    * ([[rpPlanesFor]] with a larger `maxPlanes`); [[sizedRpPlanes]] logs
     * the estimated occupancy next to each layout decision and warns
     * when n exceeds the envelope, so the regime change is never
     * silent. */
   val RpTargetOccupancy: Int = 125
   val RpMaxPlanes: Int = 24
-  val RpTargetOccupancyConf = "graft.rp.targetOccupancy"
-  val RpMaxPlanesConf = "graft.rp.maxPlanes"
 
-  /** The sized default's layout decision: conf-aware [[rpPlanesFor]]
-    * plus the occupancy log line (and the loud past-the-envelope
-    * warning) — every declared RP consumer routes its sizing through
-    * here. */
-  private[graft] def sizedRpPlanes(spark: org.apache.spark.sql.SparkSession,
-                                   n: Long): Int = {
-    val occ = spark.conf.get(RpTargetOccupancyConf, RpTargetOccupancy.toString).toInt
-    val maxP = spark.conf.get(RpMaxPlanesConf, RpMaxPlanes.toString).toInt
-    val r = rpPlanesFor(n, occ, maxP)
+  /** The sized default's layout decision: [[rpPlanesFor]] at the
+    * default constants plus the occupancy log line (and the loud
+    * past-the-envelope warning) — every declared RP consumer routes its
+    * sizing through here. */
+  private[graft] def sizedRpPlanes(n: Long): Int = {
+    val r = rpPlanesFor(n)
     val est = if (n <= 0) 0L else ((n - 1) >> r) + 1 // ceil(n/2^r), overflow-free
-    // BigInt keeps the envelope computation (and its log line) exact where
-    // (1L << maxP) * occ wraps Long (maxP >= 57 at the default occupancy)
-    val envelope = (BigInt(1) << maxP) * occ
+    val envelope = (1L << RpMaxPlanes) * RpTargetOccupancy
     System.err.println(s"[graft] RP sized layout: n=$n -> $r planes/band, " +
-      s"estimated bucket occupancy ~$est (target $occ, clamp [4,$maxP])")
-    if (BigInt(n) > envelope)
+      s"estimated bucket occupancy ~$est (target $RpTargetOccupancy, " +
+      s"clamp [4,$RpMaxPlanes])")
+    if (n > envelope)
       System.err.println(s"[graft] RP sized layout: n=$n EXCEEDS the " +
-        s"2^$maxP*$occ=$envelope validity envelope — occupancy now grows " +
-        s"linearly with n (slow, not collapsed; the cap metric will not " +
-        s"warn). Raise $RpMaxPlanesConf / $RpTargetOccupancyConf.")
+        s"2^$RpMaxPlanes*$RpTargetOccupancy=$envelope validity envelope — " +
+        "occupancy now grows linearly with n (slow, not collapsed; the cap " +
+        "metric will not warn). Pass an explicit rpPlanesFor layout with a " +
+        "larger maxPlanes.")
     r
   }
 
@@ -1398,7 +1392,7 @@ object Similarity {
     require(planesPerBand >= 0, "planesPerBand: 0 = size from corpus count")
     val planesPerBand0 =
       if (planesPerBand > 0) planesPerBand
-      else sizedRpPlanes(corpus.sparkSession, corpus.count())
+      else sizedRpPlanes(corpus.count())
     // listener + metric only when a cap can bind: the uncapped path
     // stays side-effect-free (no listener install, no metric name burned)
     if (maxBucket != Int.MaxValue) CapMetrics.ensureListener(corpus.sparkSession)
@@ -1508,7 +1502,7 @@ object Similarity {
     // one planning count serves the layout, and — under the
     // [[BindingOccupancyCap]] sentinel — the scale-invariant cap too
     val nReps = reps.count()
-    val r = sizedRpPlanes(corpus.sparkSession, nReps)
+    val r = sizedRpPlanes(nReps)
     val cap =
       if (maxBucket == BindingOccupancyCap) derivedBindingCap(nReps, r)
       else maxBucket

@@ -20,14 +20,9 @@ import org.apache.spark.sql.SparkSession
   *    half-down filesystem) → FAIL HARD. Degrading here is the unsafe
   *    case the round-16 review flagged: the drop exists but could not
   *    be stamped, so a path-only key would silently serve a stale store
-  *    for a corpus that HAS changed in place. A deployment that
-  *    explicitly accepts that risk can restore the old degrade with
-  *    `-Dgraft.store.allowPathOnlyKey=true` (still logged loudly).
+  *    for a corpus that HAS changed in place.
   */
 private[graft] object StoreStamp {
-
-  /** sys-prop escape hatch restoring degrade-on-any-failure. */
-  val AllowPathOnlyKeyProp = "graft.store.allowPathOnlyKey"
 
   /** Stamp of `<stampDir>/<table>` (file or directory of part files);
     * see the object scaladoc for the failure contract. `site` names the
@@ -49,20 +44,12 @@ private[graft] object StoreStamp {
         ""
       // NonFatal only: a fatal throwable (OutOfMemoryError, interruption,
       // linkage failure) is neither a degradable stamp fault nor something
-      // to wrap — it propagates unchanged, escape hatch or not
-      case scala.util.control.NonFatal(e)
-          if sys.props.get(AllowPathOnlyKeyProp).contains("true") =>
-        System.err.println(s"[graft] $site: corpus stamp read failed for " +
-          s"'$stampDir' (${e.getClass.getSimpleName}: ${e.getMessage}); " +
-          s"$AllowPathOnlyKeyProp=true — key degrades to path-only " +
-          "(a regenerated drop at this path would serve a STALE store)")
-        ""
+      // to wrap — it propagates unchanged
       case scala.util.control.NonFatal(e) =>
         throw new IllegalStateException(s"[graft] $site: corpus stamp read " +
           s"failed for '$stampDir' (${e.getClass.getSimpleName}: " +
           s"${e.getMessage}). Refusing to key the store path-only: a " +
           "regenerated corpus at an unchanged path would silently serve a " +
-          s"stale artifact. Fix the filesystem fault, or set " +
-          s"-D$AllowPathOnlyKeyProp=true to accept path-only keying.", e)
+          "stale artifact. Fix the filesystem fault.", e)
     }
 }

@@ -113,11 +113,6 @@ object TextOps {
       .otherwise(array())
   }
 
-  /** Distinct word n-gram shingles (order preserved, duplicates dropped).
-    * Requires docs with >= n tokens (shorter docs yield an empty array). */
-  def shingles(text: Column, n: Int): Column =
-    array_distinct(positionalShingles(text, n))
-
   /** Positional word n-grams as an array of n-field structs (w0..w{n-1}) —
     * pure codegen (`arrays_zip` of the token array with its shifted
     * selves + `slice`), unlike the column forms above whose `transform`
@@ -943,12 +938,20 @@ object TextOps {
               (col("n1p_pred").cast("double") / col("btypes")), 6).as("p_kn"))
   }
 
-  /** Whole-document fingerprint (md5 of the exact text) plus a shingle-min
-    * fingerprint (min of per-shingle md5s — a 1-hash MinHash, robust to
-    * local edits the way winnowing fingerprints are). */
+  /** Whole-document fingerprint: md5 of the exact text. */
   def fingerprintMd5(text: Column): Column = md5(text.cast(BinaryType))
-  def fingerprintShingleMin(text: Column, n: Int): Column =
-    array_min(transform(shingles(text, n), s => md5(s.cast(BinaryType))))
+
+  /** Shingle-min fingerprint per `groupCols` group: the min of its
+    * distinct word n-gram md5s — a 1-hash MinHash, robust to local edits
+    * the way winnowing fingerprints are. Relational: explode shingles →
+    * codegen'd md5 → map-side-combinable min aggregate. Groups whose
+    * texts all have fewer than n tokens give no row. Output:
+    * (groupCols…, fp). */
+  def shingleMinFp(docs: org.apache.spark.sql.DataFrame, n: Int,
+                   groupCols: String*): org.apache.spark.sql.DataFrame =
+    distinctShingleRows(docs, n, "sh", groupCols: _*)
+      .groupBy(groupCols.map(col): _*)
+      .agg(min(md5(col("sh").cast(BinaryType))).as("fp"))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken — "Winnowing:
     * Local Algorithms for Document Fingerprinting", SIGMOD 2003): hash

@@ -943,12 +943,10 @@ object NorthStar {
         .limit(20)
     }),
 
-    // relational form: explode shingles → codegen'd md5 → map-side min agg
-    // (the HOF column form TextOps.fingerprintShingleMin runs interpreted)
     "doc_fingerprint" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       docs.select(col("doc_id"), TextOps.fingerprintMd5(col("text")).as("fp_md5"))
-        .join(shingleMinFp(docs, Seq("doc_id")).withColumnRenamed("fp", "fp_shingle"),
+        .join(TextOps.shingleMinFp(docs, N, "doc_id").withColumnRenamed("fp", "fp_shingle"),
           "doc_id")
     }),
 
@@ -1099,7 +1097,7 @@ object NorthStar {
     // decontamination: near-identical docs appearing under DIFFERENT
     // sources (shingle-min fingerprint collision across source labels)
     "dedup_cross_source" -> ((s, dir) => {
-      val fp = shingleMinFp(t(s, dir, "documents"), Seq("doc_id", "source"))
+      val fp = TextOps.shingleMinFp(t(s, dir, "documents"), N, "doc_id", "source")
       fp.as("x").join(fp.as("y"),
           col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id") &&
             col("x.source") =!= col("y.source"))
@@ -1112,7 +1110,7 @@ object NorthStar {
     // pair) — the aggregate a curator reads before deciding which feed to
     // cut; same fingerprint grain as dedup_cross_source
     "corpus_source_overlap" -> ((s, dir) => {
-      val fp = shingleMinFp(t(s, dir, "documents"), Seq("doc_id", "source"))
+      val fp = TextOps.shingleMinFp(t(s, dir, "documents"), N, "doc_id", "source")
       fp.as("x").join(fp.as("y"),
           col("x.fp") === col("y.fp") && col("x.source") < col("y.source"))
         .select(col("x.source").as("source_a"), col("y.source").as("source_b"))
@@ -1503,15 +1501,6 @@ object NorthStar {
       Similarity.pqAdcTopK(e, e.where(col("vec_id") < 5), 10)
     }),
   )
-
-  /** Shingle-min fingerprint (1-hash MinHash) per group, relationally:
-    * explode shingles → codegen'd md5 → map-side min agg. Single
-    * definition shared by doc_fingerprint and dedup_cross_source. */
-  private def shingleMinFp(docs: org.apache.spark.sql.DataFrame,
-                           groupCols: Seq[String]): org.apache.spark.sql.DataFrame =
-    TextOps.distinctShingleRows(docs, N, "sh", groupCols: _*)
-      .groupBy(groupCols.map(col): _*)
-      .agg(min(md5(col("sh").cast("binary"))).as("fp"))
 
   // ---- oracle SQL ----------------------------------------------------
 

@@ -202,14 +202,23 @@ object ReferenceParity {
   private def fixturePath(dir: String, fmt: String): String =
     fixtureRoot(s"graft_src_${fmt}_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
 
-  /** customer's cells, region-sorted over [[md5Regions]]. */
-  private def sortedCustCells(s: SparkSession, dir: String): DataFrame = graft.BulkLoad.sorted(
-    CellOps.explodeIndexed(t(s, dir, "customer"), custKey, "c", custValueCols), md5Regions)
+  /** `cust`'s cells through the production load path
+    * ([[graft.BulkLoad.fromPositional]]): the five [[custValueCols]] as
+    * `c0..c4`, key fields (0, 1, 2, 4) = [[custKey]], so the cells are
+    * byte-identical to [[CellOps.explodeIndexed]] over the same columns,
+    * region-sorted over [[md5Regions]] through
+    * [[graft.plans.OrderedExplode]]. */
+  private def loadedCustCells(cust: DataFrame): DataFrame =
+    graft.BulkLoad.fromPositional(
+      cust.select(custValueCols.zipWithIndex.map { case (c, i) => c.as(s"c$i") }: _*),
+      graft.BulkLoad.emptyQuarantine(cust.sparkSession),
+      graft.BulkLoad.Config(arity = 5, keyFields = Seq(0, 1, 2, 4))).cells
 
-  /** [[sortedCustCells]] staged once as the `cellscan` cell table. */
+  /** customer's [[loadedCustCells]] staged once as the `cellscan` cell
+    * table. */
   private def cellScanTable(s: SparkSession, dir: String): String =
     staged(s, fixturePath(dir, "cellscan")) {
-      graft.SortedParquetCellSink.write(sortedCustCells(s, dir), _)
+      graft.SortedParquetCellSink.write(loadedCustCells(t(s, dir, "customer")), _)
     }
 
   val defs: Map[String, Q] = Map(
@@ -298,12 +307,13 @@ object ReferenceParity {
         .select(col("p_partkey"), col("t").getItem(0).as("tok0"), col("t").getItem(1).as("tok1"))
     }),
 
-    // X1-X3: the flagship pipeline — explode + region-range exchange +
-    // per-partition KeyValue sort (rows identical to cells_explode_indexed;
+    // X1-X3: the flagship pipeline — the production load path: MD5
+    // composite key → region exchange of wide rows → partition-local row
+    // sort → OrderedExplode (rows identical to cells_explode_indexed;
     // partitioning/order is asserted by CellPipelineSpec, the driver
     // hash-checks the row set)
     "ingest_sorted_cells" -> ((s, dir) =>
-      hexBin(sortedCustCells(s, dir))),
+      hexBin(loadedCustCells(t(s, dir, "customer")))),
 
     // HBase-scan analog over the STAGED layout: range read [0x40, 0x80)
     // that prunes non-intersecting region files via footer stats before
@@ -385,15 +395,12 @@ object ReferenceParity {
       val dest = s"$root/compacted"
       staged(s, root) { tmp =>
         val cust = t(s, dir, "customer")
-        val cfg = md5Regions
         (0 until 3).foreach { b =>
-          val cells = CellOps.explodeIndexed(
-            cust.where(pmod(col("c_custkey"), lit(3)) === b),
-            custKey, "c", custValueCols)
           graft.SortedParquetCellSink.write(
-            graft.BulkLoad.sorted(cells, cfg), f"$tmp/batch_$b%05d")
+            loadedCustCells(cust.where(pmod(col("c_custkey"), lit(3)) === b)),
+            f"$tmp/batch_$b%05d")
         }
-        graft.sources.CellCompaction.compactMinor(s, tmp, s"$tmp/compacted", cfg)
+        graft.sources.CellCompaction.compactMinor(s, tmp, s"$tmp/compacted", md5Regions)
         ()
       }
       hexBin(graft.sources.CellScan.scanRange(s, dest, None, None))
@@ -413,9 +420,8 @@ object ReferenceParity {
         val cfg = md5Regions
         val serving = s"$tmp/serving"
         def batch(b: Int): Unit = graft.SortedParquetCellSink.write(
-          graft.BulkLoad.sorted(CellOps.explodeIndexed(
-            cust.where(pmod(col("c_custkey"), lit(3)) === b),
-            custKey, "c", custValueCols), cfg), f"$tmp/batch_$b%05d")
+          loadedCustCells(cust.where(pmod(col("c_custkey"), lit(3)) === b)),
+          f"$tmp/batch_$b%05d")
         batch(0); batch(1)
         graft.sources.CellCompaction.compactMinor(s, tmp, serving, cfg)
         batch(2)

@@ -141,7 +141,7 @@ object Publish {
   }
 
   /** Write a small text file — a one-line sidecar (`BASE`,
-    * `COMPACTED_FROM`, `SPAN_BUCKETS`) or a generated fixture — into an
+    * `COMPACTED_FROM`) or a generated fixture — into an
     * artifact being staged: no temp of its own, the artifact's
     * [[publishIfAbsent]] makes it visible. */
   def writeText(conf: Configuration, p: Path, text: String): Unit = {

@@ -4,6 +4,8 @@ import org.apache.hadoop.hive.ql.io.{RCFile, RCFileInputFormat}
 import org.apache.hadoop.hive.serde2.columnar.{BytesRefArrayWritable, BytesRefWritable}
 import org.apache.hadoop.io.LongWritable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, to_json}
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Hive RCFile source — reference S4 path (BulkImporterFromRC.java:94-95).
   *
@@ -20,25 +22,34 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 object RCFileSource {
 
   /** Read an RCFile of `arity` string columns into the engine's positional
-    * schema (`c0..c{arity-1}`). Rows with a different column count are
-    * dropped, mirroring the reference's arity guard (`…RC.java:53`). */
-  def read(spark: SparkSession, path: String, arity: Int): DataFrame = {
-    val rows = spark.sparkContext
+    * schema (`c0..c{arity-1}`), returned as (kept, rejected). Records with
+    * a different column count fail the reference's arity guard
+    * (`…RC.java:53`) and are quarantined, not dropped: each rejected
+    * record is the JSON array of its columns in the single `value`
+    * column every quarantine frame carries. */
+  def read(spark: SparkSession, path: String, arity: Int): (DataFrame, DataFrame) = {
+    val records = spark.sparkContext
       .hadoopFile(path,
         classOf[RCFileInputFormat[LongWritable, BytesRefArrayWritable]],
         classOf[LongWritable], classOf[BytesRefArrayWritable])
-      .flatMap { case (_, v) =>
-        // eager copy: Hadoop reuses the Writable between records
-        if (v.size() != arity) None
-        else Some(Row.fromSeq((0 until arity).map { i =>
-          // empty bytes decode to "" (not null) — the same record through
-          // the text drivers yields an empty-string cell, and nulling key
-          // fields here would silently void the row key
+      .map { case (_, v) =>
+        // eager copy: Hadoop reuses the Writable between records. Empty
+        // bytes decode to "" (not null) — the same record through the
+        // text drivers yields an empty-string cell, and nulling key
+        // fields here would silently void the row key
+        (0 until v.size()).map { i =>
           val ref = v.get(i)
           new String(ref.getData, ref.getStart, ref.getLength, "UTF-8")
-        }))
+        }
       }
-    spark.createDataFrame(rows, Delimited.positionalSchema(arity))
+    val kept = spark.createDataFrame(
+      records.filter(_.length == arity).map(Row.fromSeq),
+      Delimited.positionalSchema(arity))
+    val rejected = spark.createDataFrame(
+        records.filter(_.length != arity).map(f => Row(f)),
+        StructType(Seq(StructField("f", ArrayType(StringType)))))
+      .select(to_json(col("f")).as("value"))
+    (kept, rejected)
   }
 
   /** Write a DataFrame of STRING columns as an RCFile directory — the

@@ -489,22 +489,6 @@ class DedupTextSpec extends SparkSuite {
     assert(hammingNear < hammingFar)
   }
 
-  test("clusters: ReliableCheckpoint storage lands fixpoint state on disk, same labels") {
-    val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("a", "b")
-    val ckptRoot = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val reliable = Dedup.clusters(pairs, Dedup.ReliableCheckpoint(ckptRoot))
-      .as[(Long, Long)].collect().toMap
-    val default = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
-    assert(reliable === default)
-    assert(reliable === Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 5L -> 5L, 6L -> 5L))
-    // the durable path actually wrote RDD checkpoints under the root
-    def rddFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
-        if (f.isDirectory) rddFiles(f) else Seq(f))
-    assert(rddFiles(new java.io.File(ckptRoot)).nonEmpty,
-      "reliable checkpoint must materialize files on durable storage")
-  }
-
   test("simhashSigs widens to the full 64-bit signature the scaladoc advertises") {
     // md5Prefix64(w, 16) — the widening the pair-search scaladoc points to
     val sigs = Dedup.simhashSigs(docs, 64).collect()
@@ -976,7 +960,7 @@ class DedupTextSpec extends SparkSuite {
   }
 
   test("shingle-min fingerprint is edit-local: near-dups often collide, distinct docs don't") {
-    val fp = docs.select(col("doc_id"), TextOps.fingerprintShingleMin(col("text"), 3).as("f"))
+    val fp = TextOps.shingleMinFp(docs, 3, "doc_id")
       .as[(Long, String)].collect().toMap
     assert(fp(0L) === fp(1L))
     assert(fp(0L) !== fp(3L))
@@ -1206,28 +1190,6 @@ class DedupTextSpec extends SparkSuite {
       .where(col("doc_id") >= 100L)
       .as[(Long, String, Long, Long)].collect().sortBy(_._1)
     assert(inc === full)
-  }
-
-  test("span store: a pre-bucketing registry (no SPAN_BUCKETS sidecar) is served through the plain-scan fallback") {
-    // layouts published by pre-r15 code: plain parquet, no sidecar — the
-    // open path must degrade to an ordinary scan, and the incremental
-    // rewrite against it must still match the full recompute
-    val shared = "one two three four five six seven eight"
-    val old = Seq((1L, s"$shared legacy tail")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-legacy-span")
-      .toString + "/legacy-spanstore"
-    Dedup.spanRegistryMerge(Dedup.emptySpanRegistry(spark), old, 8)
-      .write.parquet(s"$dir/spans.parquet")
-    val store = Dedup.SpanStore(spark, dir)
-    assert(store.spans.count() > 0)
-    val batch = Seq((10L, s"lead $shared")).toDF("doc_id", "text")
-    val inc = Dedup.removeRepeatedSpansStored(batch, store, 8)
-      .as[(Long, String, Long, Long)].collect().toSeq
-    val full = Dedup.removeRepeatedSpans(old.unionByName(batch), 8)
-      .where(col("doc_id") === 10L)
-      .as[(Long, String, Long, Long)].collect().toSeq
-    assert(inc === full)
-    assert(inc.head._4 === 8L, "the shared span must be removed from the batch doc")
   }
 
   test("knBigramProbs: hand-computed KN probabilities; per-context mass ≤ 1") {

@@ -42,6 +42,8 @@ class PlanSpec extends SparkSuite {
     val p = plan("ingest_sorted_cells")
     // count physical nodes via their "(n) Name" detail headers
     assert(p.linesIterator.count(_.matches("""\(\d+\) RegionAlignedRowExchange.*""")) === 1, p)
+    // the production load path: cells come out of one ordered explode
+    assert(p.linesIterator.count(_.matches("""\(\d+\) OrderedExplode.*""")) === 1, p)
     assert(!p.linesIterator.exists(_.matches("""\(\d+\) Exchange.*""")), p)
     assert(!p.toLowerCase.contains("rangepartitioning"), p)
     // sort is per-partition (global=false), no global sort

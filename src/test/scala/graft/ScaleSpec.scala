@@ -301,14 +301,16 @@ class ScaleSpec extends SparkSuite {
 
   test("graft.fixpoint.dir flips every materialization to reliable checkpoints") {
     import graft.operators.Dedup
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    val local = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
     val root = java.nio.file.Files.createTempDirectory("graft-fixpoint").toFile
     spark.conf.set("graft.fixpoint.dir", root.getAbsolutePath)
     try {
       // a fixpoint consumer (clusters iterates label propagation through
-      // materializeFixpoint) — same call, no per-site knob passed
-      val cl = Dedup.clusters(Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b"))
-        .as[(Long, Long)].collect().toMap
+      // Dedup.materialize) — same call, same labels as the local path
+      val cl = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap
       assert(cl === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      assert(cl === local)
       // iteration state landed under the configured root as RELIABLE
       // checkpoint files (rdd-*/part-*), not executor-local blocks
       def walk(f: java.io.File): Seq[java.io.File] =

@@ -602,20 +602,16 @@ class SimilaritySpec extends SparkSuite {
       uncapped.queryExecution.observedMetrics, declaredNames(uncapped)).isEmpty)
   }
 
-  test("rpPlanesFor: parameterized ceiling + conf-aware sized default (the validity envelope is movable)") {
+  test("rpPlanesFor: parameterized ceiling + constant sized default (the validity envelope is movable)") {
     // past the default 2^24*125 envelope the plane count saturates (the
     // linear-occupancy regime); raising maxPlanes restores the
     // constant-occupancy layout
     assert(Similarity.rpPlanesFor(1L << 40) === Similarity.RpMaxPlanes)
     assert(Similarity.rpPlanesFor(1L << 40, 125, 34) === 34)
     assert(Similarity.rpPlanesFor(2000, 1) === 11)
-    // session confs reach the sized default every declared RP consumer
-    // routes through (and the decision is logged with its estimated
-    // occupancy — the envelope is never silently exceeded)
-    spark.conf.set(Similarity.RpTargetOccupancyConf, "1")
-    try assert(Similarity.sizedRpPlanes(spark, 2000) === 11)
-    finally spark.conf.unset(Similarity.RpTargetOccupancyConf)
-    assert(Similarity.sizedRpPlanes(spark, 2000) === 4)
+    // the sized default every declared RP consumer routes through reads
+    // the RpTargetOccupancy / RpMaxPlanes constants
+    assert(Similarity.sizedRpPlanes(2000) === 4)
   }
 
   test("embeddingDedupComposed: the identity aggregate executes exactly ONCE across the whole pipeline") {
@@ -784,7 +780,6 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("StoreStamp: a stamp-read FAULT fails hard — no silent path-only key; opaque keys still work") {
-    import graft.operators.StoreStamp
     // no FileSystem handles the scheme → a non-FileNotFound Throwable,
     // the transient-fault shape that previously degraded the key to
     // path-only and could serve a STALE store for a corpus changed in
@@ -799,13 +794,6 @@ class SimilaritySpec extends SparkSuite {
       Similarity.annIndexStoreAdvance(base, emb.limit(3), "graft-nofs://nohost/adv")
     }
     assert(e2.getMessage.contains("stamp"))
-    // the explicit escape hatch restores the old degrade (still logged)
-    sys.props(StoreStamp.AllowPathOnlyKeyProp) = "true"
-    try {
-      val hatch = Similarity.annIndexStore(emb, 16,
-        s"graft-nofs://nohost/drop#hatch-${java.util.UUID.randomUUID()}")
-      assert(hatch.lists.count() > 0)
-    } finally sys.props -= StoreStamp.AllowPathOnlyKeyProp
     // an OPAQUE key (no embeddings.parquet under the key path) is NOT a
     // fault: path-only keying by contract — spec fixtures depend on it
     val opaque = Similarity.annIndexStore(emb, 16,

@@ -107,9 +107,15 @@ class SourceDriversSpec extends SparkSuite {
   }
 
   test("rcFile driver: columnar read, arity guard, same cells as csv path") {
-    val file = writeRcFixture(rows9 :+ (("short", "row", "", "", "", "", "", "", "")),
-      tmpDir())
-    val r = BulkLoad.rcFile(spark, file.toString)
+    val dir = tmpDir()
+    writeRcFixture(rows9 :+ (("short", "row", "", "", "", "", "", "", "")), dir)
+    // a second RCFile of 3-column records in the same input: the arity
+    // guard rejects them into the quarantine, rendered as JSON arrays
+    graft.sources.RCFileSource.write(
+      Seq(("x1", "x2", "x3"), ("y1", "y2", "y3")).toDF("c0", "c1", "c2").coalesce(1), dir)
+    val r = BulkLoad.rcFile(spark, dir)
+    assert(r.quarantined.as[String].collect().toSet ===
+      Set("""["x1","x2","x3"]""", """["y1","y2","y3"]"""))
     // 3 full rows ×9 cells + the 9-col "short" row (empty strings → null-ish?)
     assert(r.cells.where(length(col("row")) =!= 64).count() === 0)
     val csvEquivalent = BulkLoad.fromPositional(
@@ -147,7 +153,7 @@ class SourceDriversSpec extends SparkSuite {
     val df = rows9.toDF((0 until 9).map(i => s"c$i"): _*).repartition(2)
     graft.sources.RCFileSource.write(df, dir)
     assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("part-")) === 2)
-    val back = graft.sources.RCFileSource.read(spark, dir, 9)
+    val back = graft.sources.RCFileSource.read(spark, dir, 9)._1
     assert(back.orderBy("c0").collect().map(_.toSeq).toSeq ===
       rows9.sortBy(_._1).map(_.productIterator.toSeq).toSeq)
     // null cells write as empty bytes and read back as "" (the serde's
@@ -155,7 +161,7 @@ class SourceDriversSpec extends SparkSuite {
     val withNull = Seq(("1", null: String, "x")).toDF("c0", "c1", "c2")
     val nd = tmpDir() + "/rcn"
     graft.sources.RCFileSource.write(withNull, nd)
-    assert(graft.sources.RCFileSource.read(spark, nd, 3).collect().map(_.toSeq).toSeq ===
+    assert(graft.sources.RCFileSource.read(spark, nd, 3)._1.collect().map(_.toSeq).toSeq ===
       Seq(Seq("1", "", "x")))
   }
 
@@ -1490,6 +1496,24 @@ class SourceDriversSpec extends SparkSuite {
       IngestCli.compactCommand(spark, "bogus", root, dest, cfg))
     intercept[IllegalArgumentException](
       IngestCli.compactCommand(spark, "batches", root, dest, cfg))
+  }
+
+  test("IngestCli batch load: csv-compat wrong-arity lines land verbatim in <output>.quarantine") {
+    val in = tmpDir() + "/in"
+    val good = (0 until 40).map(i => (0 until 9).map(c => s"q${i}_$c").mkString(","))
+    val planted = Seq(
+      "short,row,of,eight,fields,only,here,x",                  // 8 fields
+      "long,row,of,ten,fields,one,two,three,four,five",         // 10 fields
+      "p0,p1,\"quoted, comma\",p3,p4,p5,p6,p7,p8")              // naive split: 10
+    (good.take(20) ++ planted ++ good.drop(20)).toDF("value")
+      .coalesce(1).write.mode("overwrite").text(in)
+    val out = tmpDir() + "/cells"
+    val line = IngestCli.loadCommand(spark, "csv-compat", in, out,
+      IngestCli.configFrom(Map.empty), Map.empty)
+    assert(line.contains(s""""cells":${40 * 9},"quarantined":3,"""), line)
+    assert(spark.read.parquet(s"$out.quarantine").as[String].collect().sorted.toSeq ===
+      planted.sorted)
+    assert(spark.read.parquet(out).count() === 40 * 9)
   }
 
   test("compactMinor ledger: a re-used batch id with DIFFERENT content fails loudly; the ledger stays bounded") {
