@@ -75,19 +75,15 @@ object BulkLoad {
     * default; `cfg.compatNaiveSplit` reproduces the reference's naive
     * `split(",")` skip semantics. */
   def csv(spark: SparkSession, input: String, cfg: Config = Config()): Result =
-    if (cfg.compatNaiveSplit) {
-      val (kept, rejected) = Delimited.naiveSplit(spark, input, ",", cfg.arity)
-      fromPositional(kept, rejected, cfg)
-    } else {
+    if (cfg.compatNaiveSplit) naiveLines(spark.read.text(input), ",", cfg)
+    else {
       val kept = Delimited.strictCsv(spark, input, cfg.arity)
       fromPositional(kept, emptyQuarantine(spark), cfg)
     }
 
   /** Hive `\u0001`-delimited text driver (reference `BulkImporterFromText`). */
-  def hiveText(spark: SparkSession, input: String, cfg: Config = Config()): Result = {
-    val (kept, rejected) = Delimited.hiveText(spark, input, cfg.arity)
-    fromPositional(kept, rejected, cfg)
-  }
+  def hiveText(spark: SparkSession, input: String, cfg: Config = Config()): Result =
+    naiveLines(spark.read.text(input), Delimited.HiveDelimiter, cfg)
 
   /** Avro driver (reference `BulkImporterFromAvro`): key = reverse(first
     * field), field-name qualifiers, null `id` quarantined (the reference
@@ -155,17 +151,45 @@ object BulkLoad {
     * where the reference would crash (see [[ReferenceRcKeyFields]]). */
   def fromPositional(kept: DataFrame, quarantined: DataFrame, config: Config): Result = {
     val cfg = withFixedSplits(config)
-    def field(i: Int): Column =
-      if (i < cfg.arity) col(s"c$i")
-      else lit(null).cast(org.apache.spark.sql.types.StringType)
-    val keyOk = cfg.keyFields.map(field(_).isNotNull).reduce(_ && _)
-    val keyable = kept.where(keyOk)
-    val unkeyable = kept.where(!keyOk)
-      .select(to_json(struct(kept.columns.map(col): _*)).as("value"))
-    val rowKey = keys.md5CompositeKey(cfg.keyFields.map(field))
-    val wide = keyable.select((rowKey.as("row") +: (0 until cfg.arity).map(i => col(s"c$i"))): _*)
-    Result(sortedFromRows(wide, cfg),
-      quarantined.unionByName(unkeyable), SortedParquetCellSink)
+    val ok = keyable(cfg)
+    Result(positionalCells(kept.where(ok), cfg),
+      quarantined.unionByName(kept.where(!ok).select(asJson(kept.columns.toSeq.map(col)).as("value"))),
+      SortedParquetCellSink)
+  }
+
+  /** The naive-split loads ([[csv]] in compat mode, [[hiveText]], every
+    * streaming micro-batch) over a raw `value` lines frame: ONE token
+    * frame ([[Delimited.naiveFields]]) feeds the cells and the
+    * quarantine, and the quarantine is one filter and projection over it —
+    * arity rejects keep their raw line, un-keyable rows their JSON, as in
+    * [[fromPositional]] — so writing it scans the lines once. */
+  private[graft] def naiveLines(lines: DataFrame, delim: String, config: Config): Result = {
+    val cfg = withFixedSplits(config)
+    val fields = Delimited.naiveFields(lines, delim, cfg.arity)
+    val positional = (0 until cfg.arity).map(i => col(s"c$i"))
+    val fits = col(Delimited.TokenCount) === cfg.arity
+    val ok = fits && keyable(cfg)
+    Result(positionalCells(fields.where(ok).select(positional: _*), cfg),
+      fields.where(!ok).select(when(fits, asJson(positional)).otherwise(col("value")).as("value")),
+      SortedParquetCellSink)
+  }
+
+  /** Positional field `i` of a `c0..` frame; beyond the arity, null. */
+  private def field(cfg: Config, i: Int): Column =
+    if (i < cfg.arity) col(s"c$i")
+    else lit(null).cast(org.apache.spark.sql.types.StringType)
+
+  /** True for rows whose key fields are all present. */
+  private def keyable(cfg: Config): Column =
+    cfg.keyFields.map(field(cfg, _).isNotNull).reduce(_ && _)
+
+  /** The quarantine rendering of a row the pipeline could not key. */
+  private def asJson(fields: Seq[Column]): Column = to_json(struct(fields: _*))
+
+  /** Keyable positional rows → MD5 row key → cells. */
+  private def positionalCells(rows: DataFrame, cfg: Config): DataFrame = {
+    val rowKey = keys.md5CompositeKey(cfg.keyFields.map(field(cfg, _)))
+    sortedFromRows(rows.select((rowKey.as("row") +: (0 until cfg.arity).map(i => col(s"c$i"))): _*), cfg)
   }
 
   /** MD5-keyed config with fixed region boundaries: no salt, no splits
@@ -287,25 +311,30 @@ trait CellSink {
   * byte-verifiable without HBase jars (SURVEY.md §7.4). Writing real
   * HFiles is a drop-in alternative implementation of this trait via
   * `saveAsNewAPIHadoopFile[HFileOutputFormat2]` when hbase-mapreduce is on
-  * the classpath. */
+  * the classpath. Both phases ride on [[graft.sources.RegionWriter]]: one
+  * parquet file per region, written by that region's task, and the
+  * region manifest from the writer's own statistics — no file is opened
+  * after it is written. */
 object SortedParquetCellSink extends CellSink {
-  /** Data files only — [[write]] = writeData + manifest. The streaming
-    * harness drives the two phases separately so the manifest (a CACHE
-    * by contract — every reader falls back to footer stats when it is
-    * absent) can land off the micro-batch critical path. */
-  def writeData(cells: DataFrame, path: String): Unit =
-    cells.write.mode("overwrite")
-      // `value` mixes every column's values: its dictionary costs encode
-      // CPU and left the files larger, not smaller. `row` keeps its
-      // dictionary and the min/max statistics the manifest reads.
-      .option("parquet.enable.dictionary#value", "false")
-      .parquet(path)
+  /** Data files only, replacing whatever `path` held: one file per
+    * non-empty region, the writer's manifest entries returned. */
+  def writeData(cells: DataFrame, path: String): Seq[graft.sources.RegionWriter.Written] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(cells.sparkSession.sessionState.newHadoopConf()).delete(p, true)
+    graft.sources.RegionWriter.write(cells, path)
+  }
 
+  /** [[writeData]], then the META-analog boundary index from the writer's
+    * entries (graft.sources.CellManifest), so every later CellScan is one
+    * small-file read. The manifest is a cache by contract — every reader
+    * falls back to footer stats without it — so a failure to write it
+    * is logged and the load, whose data files are complete, stands. */
   override def write(cells: DataFrame, path: String): Unit = {
-    writeData(cells, path)
-    // META-analog boundary index: one distributed footer-stat pass at
-    // write time so every later CellScan is one small-file read instead
-    // of N driver-side footer opens (graft.sources.CellManifest).
-    graft.sources.CellManifest.write(cells.sparkSession, path)
+    val written = writeData(cells, path)
+    // NonFatal only: OutOfMemoryError/InterruptedException propagate
+    try graft.sources.CellManifest.write(cells.sparkSession, path, written)
+    catch { case scala.util.control.NonFatal(e) => System.err.println(
+      s"[graft] manifest for $path failed (${e.getClass.getSimpleName}); " +
+        "readers fall back to footers") }
   }
 }

@@ -84,7 +84,7 @@ object IngestCli {
   def streamConfig(format: String, base: BulkLoad.Config): Option[(BulkLoad.Config, String)] =
     format match {
       case "csv-compat" => Some((base.copy(compatNaiveSplit = true), ","))
-      case "hivetext"   => Some((base, "\u0001"))
+      case "hivetext"   => Some((base, graft.sources.Delimited.HiveDelimiter))
       case _            => None
     }
 

@@ -26,7 +26,8 @@ import org.apache.spark.sql.SparkSession
   * the same cost one big batch would have paid, amortized to whenever the
   * operator runs; the scan side is a plain multi-path parquet read
   * (splittable, no driver materialization), and the manifest refresh
-  * stats only the regions-count output files. Version-resolution
+  * takes the region writer's entries for the regions-count output files —
+  * it opens no footer. Version-resolution
   * compaction (TTL / max-versions / tombstones) is deliberately NOT fused
   * here — that is [[graft.operators.CellOps.compactVersions]] /
   * `compactWithTombstones`, composable upstream of the sort when a purge
@@ -57,8 +58,9 @@ object CellCompaction {
   /** MINOR compaction: absorb the CURRENT batch filesets into an
     * existing (or new) serving directory `dest` as ONE additional
     * region-aligned fileset, refresh `dest`'s manifest INCREMENTALLY
-    * ([[CellManifest.update]] — footer stats only for the moved-in
-    * files, existing entries kept verbatim), and retire the inputs. Into an empty `dest` this is the full merge:
+    * ([[CellManifest.update]] — the writer's entries for the new files,
+    * existing entries kept verbatim, no footer opened), and retire the
+    * inputs. Into an empty `dest` this is the full merge:
     * one file per region plus a fresh manifest (and an `_absorbed`
     * ledger, which Spark's parquet source never reads — the leading
     * underscore hides it). `dest` accumulates one fileset per minor
@@ -129,8 +131,7 @@ object CellCompaction {
     if (dirs.isEmpty) return 0
     // fingerprint the inputs BEFORE they move (they are deleted below)
     val newEntries = dirs.map(d => new Path(d).getName -> fingerprint(fs, new Path(d)))
-    rewrite(spark, fs, dirs, destPath, cfg)
-    CellManifest.update(spark, dest)
+    CellManifest.update(spark, dest, rewrite(spark, dirs, destPath, cfg))
     val newestId = newEntries.map(e => batchId(e._1)).max
     Publish.replace(fs, destPath, AbsorbedLedger,
       (absorbed ++ newEntries).filter { case (n, _) => batchId(n) >= newestId }
@@ -196,42 +197,25 @@ object CellCompaction {
     }
 
   /** The rewrite every compaction shares: read `inputs`, re-run the
-    * region sort ([[resorted]]), land the data files beside `dest` and
-    * move them in ([[installParts]]). The caller refreshes the manifest
-    * and retires what the new files replace. */
-  private def rewrite(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                      inputs: Seq[String], dest: Path,
-                      cfg: graft.BulkLoad.Config): Unit = {
+    * region sort ([[resorted]]) and land the new files straight in `dest`
+    * through [[RegionWriter]] — hidden temps renamed in under fresh
+    * `part-*` names, so they never collide with the files they replace and
+    * a failed rename aborts LOUDLY before any old data is retired (the
+    * caller's install-first/delete-second ordering depends on it).
+    * Returns the writer's manifest entries; the caller refreshes the
+    * manifest from them and retires what the new files replace. */
+  private def rewrite(spark: SparkSession, inputs: Seq[String], dest: Path,
+                      cfg: graft.BulkLoad.Config): Seq[RegionWriter.Written] = {
     val cells = spark.read.schema(graft.operators.CellOps.cellSchema)
       .parquet(inputs: _*)
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new Path(dest.getParent, s"_compact_tmp_$stamp")
-    graft.SortedParquetCellSink.writeData(resorted(cells, cfg), tmp.toString)
-    installParts(fs, tmp, dest, stamp)
-  }
-
-  /** Move tmp's part files into `dest` under round-unique stamped names
-    * (still `part-*.parquet` — [[CellManifest.partFiles]], the rule
-    * every reader lists by), then drop tmp. A failed rename aborts LOUDLY before
-    * any old data is retired — the caller's install-first/delete-second
-    * ordering depends on it. */
-  private def installParts(fs: org.apache.hadoop.fs.FileSystem,
-                           tmp: Path, dest: Path, stamp: String): Unit = {
-    CellManifest.partFiles(fs, tmp).zipWithIndex.foreach { case (s, i) =>
-      val to = new Path(dest, f"part-$stamp-$i%05d.parquet")
-      if (!fs.rename(s.getPath, to))
-        throw new java.io.IOException(
-          s"compaction install failed: rename ${s.getPath} -> $to " +
-            "(no old file has been retired; the serving dir is intact)")
-    }
-    fs.delete(tmp, true)
+    RegionWriter.write(resorted(cells, cfg), dest.toString)
   }
 
   /** MAJOR compaction IN PLACE: rewrite `dir`'s accumulated filesets as
-    * exactly one file per region (fresh full manifest — region-count
-    * lines, trivially cheap). Install-first, delete-second: the rewrite
-    * lands under a temp sibling, the stamped new part files are RENAMED
-    * IN (fresh-UUID names cannot collide with the old parts), and only
+    * exactly one file per region (fresh full manifest from the writer's
+    * entries). Install-first, delete-second: the rewrite lands under
+    * hidden temps, the new part files are RENAMED IN (fresh-UUID names
+    * cannot collide with the old parts), and only
     * then are the old parts deleted and the manifest rewritten — so the
     * crash window at every point shows a root-level reader duplicates,
     * never loss, and a failed rename aborts with the old fileset (and
@@ -246,8 +230,8 @@ object CellCompaction {
     val fs = dirPath.getFileSystem(hc)
     val oldParts = CellManifest.partFiles(fs, dirPath).map(_.getPath)
     if (oldParts.isEmpty) return
-    rewrite(spark, fs, Seq(dir), dirPath, cfg)
+    val written = rewrite(spark, Seq(dir), dirPath, cfg)
     oldParts.foreach(p => fs.delete(p, false))
-    CellManifest.write(spark, dir)
+    CellManifest.write(spark, dir, written)
   }
 }

@@ -4,6 +4,7 @@ import graft.operators.RegionSort
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
@@ -23,10 +24,14 @@ import scala.jdk.CollectionConverters._
   * statistics. Correct — but at 100 TB / 100k region files, opening every
   * footer sequentially on the driver turns a point SCAN into minutes of
   * metadata latency. A region server never does that: it consults META,
-  * written once at region creation. Same move here — the SINK pays one
-  * distributed footer-stat pass at write time (executors each open a
-  * handful of footers — metadata pages only, no data read) and persists
-  * the boundaries; every subsequent scan reads one file.
+  * written once at region creation. Same move here — the manifest is
+  * written when the files are: [[RegionWriter]] returns each file's
+  * length, row count and key bounds from the writer's own footer (the
+  * HFile-trailer analog), and [[write]]/[[update]] persist those entries
+  * without opening any file. Only a part file no writer vouched for —
+  * copied in, rewritten in place, or listed by a plain `write(spark,
+  * dir)` rebuild — is statted from its footer. Every subsequent scan
+  * reads one file.
   *
   * Format (`_graft_region_manifest.tsv`): one
   * `name<TAB>length<TAB>rows<TAB>loHex<TAB>hiHex` line per part file,
@@ -35,7 +40,6 @@ import scala.jdk.CollectionConverters._
   * PLACE under the same name (compaction, manual repair) — the one
   * mutation a name-keyed index cannot see — and fall back to that file's
   * live footer stats instead of trusting stale bounds. The ROW COUNT
-  * rides along because the same footer open yields it for free, and it
   * turns the streaming sink's per-batch count readback into one
   * manifest read instead of N footer opens. Damaged lines parse to
   * −1 = unverifiable, which no reader trusts. The leading underscore
@@ -65,44 +69,49 @@ object CellManifest {
 
   /** Files whose footers were actually opened by [[write]]/[[update]]
     * on the DRIVER — observable so tests can pin the incremental
-    * contract ("update stats only the new files"). The distributed
-    * (>32-file) pass is not counted (executor-side). */
+    * contract ("update stats only the new files", "a write from the
+    * writer's entries stats nothing"). The distributed (>32-file) pass is
+    * not counted (executor-side). */
   val statReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Compute per-file row bounds for every `part-*.parquet` under `dir`
-    * and persist the manifest. Footer stats are gathered on EXECUTORS
-    * (parallelize over file paths), so sink-time cost is
-    * files/parallelism footer opens per task — O(seconds) even at 100k
-    * regions — and the driver only writes the collected ~50 B/file TSV. */
-  def write(spark: SparkSession, dir: String): Unit = {
+  /** Persist the manifest of every `part-*.parquet` under `dir`. A live
+    * file that `written` (a [[RegionWriter]] result) covers at its current
+    * length takes that entry; any other file is statted from its footer
+    * — on EXECUTORS above 32 files (parallelize over file paths), so even
+    * a full rebuild at 100k regions is files/parallelism footer opens per
+    * task, and the driver only writes the collected ~50 B/file TSV. */
+  def write(spark: SparkSession, dir: String,
+            written: Seq[RegionWriter.Written] = Seq.empty): Unit = {
     checkSeam(dir)
-    val hc = spark.sessionState.newHadoopConf()
-    val p = new Path(dir)
-    val fs = p.getFileSystem(hc)
-    persist(fs, p, statFiles(spark, dir, listParts(fs, p)))
+    refresh(spark, dir, written.toMap)
   }
 
-  /** INCREMENTAL manifest maintenance: stat ONLY the part files that are
-    * new (or length-changed) since the existing manifest, keep the
-    * surviving entries verbatim, drop entries for deleted files, rewrite
-    * the (small) TSV. This is the refresh a compaction round or an
-    * appending sink calls — at 100k regions a minor compaction touching
-    * 50 files costs 50 footer opens, not 100k. No existing manifest →
-    * identical to [[write]]. Returns the number of files statted. */
-  def update(spark: SparkSession, dir: String): Int = {
+  /** INCREMENTAL manifest maintenance: the existing manifest's entries
+    * and `written` both vouch for their files; stat ONLY the part files
+    * neither covers at their current length, drop entries for deleted
+    * files, rewrite the (small) TSV. This is the refresh a compaction
+    * round or an appending sink calls — at 100k regions a minor
+    * compaction that hands over its writer's entries stats nothing. No
+    * existing manifest → identical to [[write]]. Returns the number of
+    * files statted. */
+  def update(spark: SparkSession, dir: String,
+             written: Seq[RegionWriter.Written] = Seq.empty): Int = {
     checkSeam(dir)
-    val hc = spark.sessionState.newHadoopConf()
+    refresh(spark, dir, read(spark, dir).getOrElse(Map.empty) ++ written)
+  }
+
+  /** The shared body of [[write]] and [[update]]: entries for the live
+    * part files, `known` ones kept where their length still matches,
+    * the rest statted. Returns the number of files statted. */
+  private def refresh(spark: SparkSession, dir: String, known: Map[String, Entry]): Int = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(hc)
-    val existing = read(spark, dir).getOrElse(Map.empty)
-    val live = listParts(fs, p)
-    val (kept, fresh) = live.partition { case (name, len) =>
-      existing.get(name).exists(e => e.length == len)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val (kept, fresh) = listParts(fs, p).partition { case (name, len) =>
+      known.get(name).exists(e => e.length == len)
     }
     val freshStats = statFiles(spark, dir, fresh)
-    val entries =
-      kept.map { case (name, _) => (name, existing(name)) } ++ freshStats
-    persist(fs, p, entries.sortBy(_._1))
+    persist(fs, p,
+      (kept.map { case (name, _) => (name, known(name)) } ++ freshStats).sortBy(_._1))
     freshStats.size
   }
 
@@ -153,18 +162,16 @@ object CellManifest {
       }
       Await.result(Future.sequence(opens)(implicitly, footerPool), Duration.Inf)
     } else {
-      // Hadoop Configuration is not serializable; ship the entries and
-      // rebuild ONCE PER PARTITION (fs.defaultFS + credentials travel).
-      val confEntries = hc.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
+      // the conf (fs.defaultFS + credentials) travels as one broadcast
+      val conf = org.apache.spark.sql.graft.Bridge.broadcastConf(spark.sparkContext, hc)
       val paths = files.map { case (name, len) => (s"$dir/$name", name, len) }
       spark.sparkContext
         .parallelize(paths, math.min(paths.size,
           math.max(1, spark.sparkContext.defaultParallelism * 2)))
         .mapPartitions { it =>
-          val conf = new Configuration(false)
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
+          val c = conf()
           it.map { case (path, name, len) =>
-            val (rows, bounds) = footerStats(path, conf)
+            val (rows, bounds) = footerStats(path, c)
             (name, Entry(len, rows, bounds))
           }
         }
@@ -174,7 +181,7 @@ object CellManifest {
 
   /** Test seam: [[write]]/[[update]] throw before touching anything when
     * the target dir starts with this prefix — lets a spec drive the
-    * deferred-manifest failure path ([[graft.streaming.StreamingIngest]])
+    * sink's manifest-failure degrade ([[graft.SortedParquetCellSink]])
     * without corrupting real state. Path-scoped so a parallel suite can
     * never trip another test's writes. */
   @volatile private[graft] var failWritesUnder: Option[String] = None
@@ -186,8 +193,8 @@ object CellManifest {
     }
 
   /** Install the TSV through [[Publish.replace]]: a reader racing the
-    * rewrite (the deferred manifest lane made that routine) sees the old
-    * manifest or the new one, never a prefix of a torn write. */
+    * rewrite (a scan beside a compaction round) sees the old manifest or
+    * the new one, never a prefix of a torn write. */
   private def persist(fs: FileSystem, p: Path, entries: Seq[(String, Entry)]): Unit =
     Publish.replace(fs, p, FileName, entries.map {
       case (name, Entry(len, rows, Some((lo, hi)))) =>
@@ -257,25 +264,30 @@ object CellManifest {
       line.split('\t').head -> Entry(-1L, -1L, None))).toMap
   }
 
-  /** (record count, unsigned min/max of the `row` column across the
-    * file's row groups) from ONE footer open — metadata pages only, no
-    * data read. Bounds are None when any row group lacks exact stats.
-    * Takes a plain Configuration so it runs inside executor tasks. */
+  /** [[stats]] of a file's footer, from ONE footer open — metadata
+    * pages only, no data read. Takes a plain Configuration so it runs
+    * inside executor tasks. */
   private[graft] def footerStats(file: String, conf: Configuration)
       : (Long, Option[(Array[Byte], Array[Byte])]) = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    try stats(reader.getFooter) finally reader.close()
+  }
+
+  /** (record count, unsigned min/max of the `row` column across the
+    * file's row groups) of a parquet footer — read back from a file, or
+    * the one a [[RegionWriter]] task just wrote. Bounds are None when any
+    * row group lacks exact stats; a file without row groups has the empty
+    * bounds. */
+  private[graft] def stats(footer: ParquetMetadata): (Long, Option[(Array[Byte], Array[Byte])]) = {
+    val blocks = footer.getBlocks.asScala
     def bounds: Option[(Array[Byte], Array[Byte])] = {
-      val blocks = reader.getFooter.getBlocks
       if (blocks.isEmpty) return Some((Array.empty, Array.empty))
       var lo: Array[Byte] = null
       var hi: Array[Byte] = null
-      val it = blocks.iterator()
+      val it = blocks.iterator
       while (it.hasNext) {
-        val b = it.next()
-        val colMeta = b.getColumns.stream()
-          .filter(c => c.getPath.toDotString == "row").findFirst()
-        if (!colMeta.isPresent) return None
-        val st = colMeta.get().getStatistics
+        val st = it.next().getColumns.asScala.find(_.getPath.toDotString == "row")
+          .map(_.getStatistics).orNull
         if (st == null || !st.hasNonNullValue) return None
         val mn = st.getMinBytes
         val mx = st.getMaxBytes
@@ -284,7 +296,7 @@ object CellManifest {
       }
       Some((lo, hi))
     }
-    try (reader.getRecordCount, bounds) finally reader.close()
+    (blocks.map(_.getRowCount).sum, bounds)
   }
 
   /** Uppercase hex of a row-key bound; `0x` is the empty key (never a

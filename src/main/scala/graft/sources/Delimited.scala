@@ -47,15 +47,27 @@ object Delimited {
     * exactly such a frame) parses identically to the batch path. */
   def naiveSplitLines(raw: DataFrame, delim: String,
                       arity: Int): (DataFrame, DataFrame) = {
-    val tok = raw.select(col("value"), split(col("value"), delim, -1).as("t"))
-    val kept = tok.where(size(col("t")) === arity)
-      .select((0 until arity).map(i => col("t").getItem(i).as(s"c$i")): _*)
-    val rejected = tok.where(size(col("t")) =!= arity).select(col("value"))
-    (kept, rejected)
+    val fields = naiveFields(raw, delim, arity)
+    val fits = col(TokenCount) === arity
+    (fields.where(fits).select((0 until arity).map(i => col(s"c$i")): _*),
+      fields.where(!fits).select(col("value")))
   }
 
-  /** Hive-delimited text (`\u0001` separator, no quoting) — reference text
-    * path (BulkImporterFromText.java:54). */
-  def hiveText(spark: SparkSession, path: String, arity: Int): (DataFrame, DataFrame) =
-    naiveSplit(spark, path, "\u0001", arity)
+  /** Token count column of [[naiveFields]]. */
+  val TokenCount = "__graft_tokens"
+
+  /** The one naive tokenization: each raw line's `value`, its token count
+    * ([[TokenCount]]) and its first `arity` tokens as `c0..` (null past
+    * the line's end). Splitting it by the token count gives
+    * [[naiveSplitLines]]; the naive-split loads also build their
+    * quarantine from it in one pass (`BulkLoad.naiveLines`). */
+  def naiveFields(raw: DataFrame, delim: String, arity: Int): DataFrame = {
+    val tokens = raw.select(col("value"), split(col("value"), delim, -1).as("t"))
+    tokens.select(col("value") +: size(col("t")).as(TokenCount) +:
+      (0 until arity).map(i => get(col("t"), lit(i)).as(s"c$i")): _*)
+  }
+
+  /** The Hive text field separator (`\u0001`, no quoting) — the
+    * reference text path (BulkImporterFromText.java:54). */
+  val HiveDelimiter = "\u0001"
 }

@@ -19,10 +19,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   *    through an epoch+UUID temp sibling and a rename, so a racing reader
   *    sees the old contents or the new, never a prefix.
   *
-  * Region part files moved into a serving directory by compaction are the
-  * one other install ([[CellCompaction]]'s `installParts`): they are
-  * renamed one by one under fresh names, and the manifest replace makes
-  * them visible to pruning readers. */
+  * Region part files are the one other install ([[RegionWriter]]): each
+  * lands under a hidden temp name in its directory and is renamed in
+  * under a fresh `part-*` name, and the manifest replace makes it visible
+  * to pruning readers. */
 object Publish {
 
   private val hex = java.util.HexFormat.of()

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.{BulkLoad, CellSink}
-import graft.sources.Delimited
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Structured Streaming form of the bulk-load pipeline: the exact batch
@@ -35,9 +34,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     regions don't move between micro-batches). Compaction sweeps use
   *     the same boundaries;
   *   - the per-batch cell count is read from metadata on the driver —
-  *     the batch's manifest row counts, or a footer per file it cannot
-  *     vouch for ([[graft.sources.CellScan.countRows]]) — never a Spark
-  *     count job;
+  *     the manifest the sink wrote inline from its writer's statistics
+  *     (no footer is opened, so nothing is left to defer), or a footer per
+  *     file it cannot vouch for ([[graft.sources.CellScan.countRows]]) —
+  *     never a Spark count job;
   *   - what remains per batch — offset/commit log writes, one write job
   *     per output (cells + quarantine), postCommit — is the floor;
   *     `bench_out.json` records per-batch seconds so a regression is
@@ -48,10 +48,11 @@ object StreamingIngest {
   /** One completed micro-batch: its id, output path, cell count,
     * wall-clock seconds spent inside its foreachBatch body, the body's
     * per-phase breakdown (`write` = parse + region-aligned sort + data
-    * files; `quarantine` — runs CONCURRENTLY with `write` on its own
-    * lane, so phases overlap and do not sum to `secs`; `post_commit`),
-    * and the seconds the DEFERRED lane spent on this batch (manifest +
-    * cell-count readback — off the trigger critical path; see [[run]]). */
+    * files + the manifest the sink writes from its writer's statistics;
+    * `quarantine` — runs CONCURRENTLY with `write` on its own lane, so
+    * phases overlap and do not sum to `secs`; `post_commit`), and
+    * `deferredSecs`: the seconds the body spent after postCommit reading
+    * the batch's cell count back from that inline manifest. */
   case class BatchResult(batchId: Long, path: String, cells: Long,
                          secs: Double = 0.0,
                          phases: Map[String, Double] = Map.empty,
@@ -81,19 +82,6 @@ object StreamingIngest {
     val fixedCfg = BulkLoad.withFixedSplits(cfg)
     val results = scala.collection.mutable.ArrayBuffer.empty[BatchResult]
 
-    // DEFERRED lane (one background thread): the per-batch manifest write
-    // and the cell-count readback are NOT adoption-ordered — the manifest
-    // is a cache (readers fall back to footer stats) and the count is
-    // bookkeeping — so they run here while the NEXT trigger's write job
-    // owns the critical path. One thread keeps the deferred Spark jobs
-    // serialized (they never take more than one scheduler lane from the
-    // live trigger). drain() joins the lane: before any compaction sweep
-    // (the sweep retires batch dirs the lane may still be statting) and
-    // before run() returns.
-    val deferredExec = java.util.concurrent.Executors.newSingleThreadExecutor(
-      (r: Runnable) => { val t = new Thread(r, "graft-stream-deferred"); t.setDaemon(true); t })
-    implicit val deferredEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(deferredExec)
     // quarantine lane: the quarantine write IS commit-ordered (it must
     // land before the checkpoint commit — no-silent-drop), but it is
     // INDEPENDENT of the cells write, so it runs concurrently with it
@@ -103,10 +91,6 @@ object StreamingIngest {
       (r: Runnable) => { val t = new Thread(r, "graft-stream-quarantine"); t.setDaemon(true); t })
     val quarEc: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(quarExec)
-    val deferred = scala.collection.concurrent.TrieMap
-      .empty[Long, scala.concurrent.Future[(Long, Double)]]
-    def drain(): Unit = deferred.values.foreach(f =>
-      scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
 
     val lines = spark.readStream
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -120,8 +104,7 @@ object StreamingIngest {
         // cache the raw lines so the second job reads memory, not files
         val cached = batch.persist()
         try {
-          val (kept, rejected) = Delimited.naiveSplitLines(cached, delim, cfg.arity)
-          val r = BulkLoad.fromPositional(kept, rejected, fixedCfg)
+          val r = BulkLoad.naiveLines(cached, delim, fixedCfg)
           val sink = sinkOverride.getOrElse(r.sink)
           val dest = f"$outDir/batch_$batchId%05d"
           // quarantined rows ride along per batch — same no-silent-drop
@@ -133,12 +116,10 @@ object StreamingIngest {
             r.quarantined.write.mode("overwrite").parquet(s"$dest.quarantine")
             lap(t)
           }(quarEc)
-          val deferManifest = sink == graft.SortedParquetCellSink
           val wSecs =
             try {
               val tw = System.nanoTime()
-              if (deferManifest) graft.SortedParquetCellSink.writeData(r.cells, dest)
-              else sink.write(r.cells, dest)
+              sink.write(r.cells, dest)
               lap(tw)
             } catch { case e: Throwable =>
               // join the in-flight quarantine job before the batch failure
@@ -156,38 +137,22 @@ object StreamingIngest {
           val tp = System.nanoTime()
           sink.postCommit(dest)
           val pSecs = lap(tp)
-          deferred(batchId) = scala.concurrent.Future {
-            val td = System.nanoTime()
-            if (deferManifest)
-              // NonFatal only: OutOfMemoryError/InterruptedException must
-              // propagate (fail the Future, surface at drain), never be
-              // logged away as a benign manifest fallback
-              try graft.sources.CellManifest.write(spark, dest)
-              catch { case scala.util.control.NonFatal(e) => System.err.println(
-                s"[graft] deferred manifest for $dest failed " +
-                  s"(${e.getClass.getSimpleName}); readers fall back to footers") }
-            (graft.sources.CellScan.rowCount(spark, dest), lap(td))
-          }
+          val tc = System.nanoTime()
+          val cells = graft.sources.CellScan.rowCount(spark, dest)
           val completed = results.synchronized {
-            results += BatchResult(batchId, dest, -1L, lap(t0),
-              Map("write" -> wSecs, "quarantine" -> qSecs, "post_commit" -> pSecs))
+            results += BatchResult(batchId, dest, cells, lap(t0),
+              Map("write" -> wSecs, "quarantine" -> qSecs, "post_commit" -> pSecs), lap(tc))
             results.size
           }
-          if (compactEvery > 0 && completed % compactEvery == 0) {
-            drain()
+          if (compactEvery > 0 && completed % compactEvery == 0)
             graft.sources.CellCompaction.compactMinor(
               spark, outDir, s"$outDir/serving", fixedCfg)
-          }
         } finally cached.unpersist(blocking = false)
         ()
       }
       .start()
-    try { q.processAllAvailable(); drain() }
-    finally { q.stop(); deferredExec.shutdown(); quarExec.shutdown() }
-    results.map { b =>
-      val (n, dSecs) = scala.concurrent.Await.result(
-        deferred(b.batchId), scala.concurrent.duration.Duration.Inf)
-      b.copy(cells = n, deferredSecs = dSecs)
-    }.sortBy(_.batchId).toSeq
+    try q.processAllAvailable()
+    finally { q.stop(); quarExec.shutdown() }
+    results.sortBy(_.batchId).toSeq
   }
 }

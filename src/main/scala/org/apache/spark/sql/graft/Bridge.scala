@@ -3,11 +3,16 @@ package org.apache.spark.sql.graft
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
-import org.apache.spark.RangePartitioner
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.{RangePartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Column ↔ catalyst Expression converters.
   *
@@ -51,4 +56,28 @@ object Bridge {
   /** The analyzed logical plan behind a DataFrame. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
+
+  /** Run `body` over `df`'s physical rows inside ONE SQL execution, as a
+    * `Dataset` action does: the jobs `body` starts (and any the plan runs
+    * first, such as a boundary sample) are attributed to the query, and
+    * query listeners see its executed plan. `body` also gets the rows'
+    * schema as the executed plan declares it — the nullability the
+    * optimizer proved, which Spark's file writers record, not the
+    * analyzed frame's. */
+  def inExecution[T](df: DataFrame, name: String)(body: (StructType, RDD[InternalRow]) => T): T = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name)) {
+      val schema = StructType(qe.executedPlan.output.map(a =>
+        StructField(a.name, a.dataType, a.nullable, a.metadata)))
+      body(schema, qe.toRdd)
+    }
+  }
+
+  /** `conf` broadcast once per job: tasks call the returned function to
+    * read it, so each executor deserializes the configuration once instead
+    * of every task carrying a copy in its closure. */
+  def broadcastConf(sc: SparkContext, conf: Configuration): () => Configuration = {
+    val b = sc.broadcast(new SerializableConfiguration(conf))
+    () => b.value.value
+  }
 }

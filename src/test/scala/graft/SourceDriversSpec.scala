@@ -589,27 +589,28 @@ class SourceDriversSpec extends SparkSuite {
     def destParts() = fs.listStatus(new Path(dest)).filter(s =>
       s.getPath.getName.startsWith("part-") && s.getPath.getName.endsWith(".parquet"))
 
-    // round 1: two batches absorbed as ONE fileset; manifest statted 10
+    // round 1: two batches absorbed as ONE fileset; the manifest takes
+    // the region writer's entries for its 10 files, no footer opened
     writeBatch(0); writeBatch(1)
     val expected01 = spark.read.parquet(s"$root/batch_00000", s"$root/batch_00001")
       .count()
     val s0 = CellManifest.statReads.get()
     assert(CellCompaction.compactMinor(spark, root, dest, cfg) === 2)
     assert(destParts().length === 10)
-    assert(CellManifest.statReads.get() === s0 + 10,
-      "minor round 1 must stat exactly its 10 new files")
+    assert(CellManifest.statReads.get() === s0 + 0,
+      "minor round 1 must index its 10 new files from the writer, not their footers")
     assert(CellCompaction.batchDirs(spark, root).isEmpty, "inputs retired")
     assert(spark.read.parquet(dest).count() === expected01)
 
     // round 2: one more batch → dest accumulates a SECOND fileset; the
     // incremental manifest refresh keeps the 10 existing entries and
-    // stats only the 10 moved-in files
+    // takes the writer's entries for the 10 new files
     writeBatch(2)
     val s1 = CellManifest.statReads.get()
     assert(CellCompaction.compactMinor(spark, root, dest, cfg) === 1)
     assert(destParts().length === 20)
-    assert(CellManifest.statReads.get() === s1 + 10,
-      "minor round 2 must not re-stat round 1's files")
+    assert(CellManifest.statReads.get() === s1 + 0,
+      "minor round 2 must not re-stat round 1's files nor stat its own")
     val totalRows = spark.read.parquet(dest).count()
 
     // scans across rounds stay manifest-pruned: zero footer opens, a
@@ -1459,11 +1460,12 @@ class SourceDriversSpec extends SparkSuite {
       .select(hex(col("row")), hex(col("qualifier")), hex(col("value")))
       .as[(String, String, String)].collect().sorted.toSeq
     assert(key(served) === key(batch.cells))
-    // two sweeps → two distinct fileset stamps in the part names
-    // (file COUNT varies with how many regions each tiny sweep touches)
+    // two sweeps → two distinct fileset stamps in the part names,
+    // `part-<region>-<stamp>.parquet` (file COUNT varies with how many
+    // regions each tiny sweep touches)
     val stamps = new java.io.File(serving).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .map(_.getName.split("-")(1)).toSet
+      .map(_.getName.split("-", 3)(2)).toSet
     assert(stamps.size === 2, s"expected 2 sweep stamps, got $stamps")
     val before = CellScan.footerOpens.get()
     assert(CellScan.scanRange(spark, serving, None, None).count() === served.count())
@@ -1514,6 +1516,56 @@ class SourceDriversSpec extends SparkSuite {
     assert(spark.read.parquet(s"$out.quarantine").as[String].collect().sorted.toSeq ===
       planted.sorted)
     assert(spark.read.parquet(out).count() === 40 * 9)
+  }
+
+  /** Input records Spark tasks read while `body` runs. A marker job in
+    * its own group runs afterwards; once the listener has seen it start,
+    * every earlier task end has been delivered (the bus keeps post order). */
+  private def recordsReadDuring(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val marker = s"graft-records-${System.nanoTime()}"
+    val read = new java.util.concurrent.atomic.AtomicLong(0L)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerSeen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      read.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("naive-split quarantine scans the input once: arity rejects verbatim, un-keyable rows as JSON") {
+    val in = tmpDir() + "/in"
+    val good = (0 until 40).map(i => (0 until 9).map(c => s"q${i}_$c").mkString(","))
+    val planted = Seq(
+      "short,row,of,eight,fields,only,here,x",
+      "long,row,of,ten,fields,one,two,three,four,five",
+      "p0,p1,\"quoted, comma\",p3,p4,p5,p6,p7,p8")
+    (good.take(20) ++ planted ++ good.drop(20)).toDF("value")
+      .coalesce(1).write.mode("overwrite").text(in)
+    // the CLI's csv-compat quarantine stage over the 43-line input
+    val r = BulkLoad.csv(spark, in, IngestCli.configFrom(Map.empty).copy(compatNaiveSplit = true))
+    val q = tmpDir() + "/q"
+    assert(recordsReadDuring(r.quarantined.write.parquet(q)) === 43)
+    assert(spark.read.parquet(q).as[String].collect().sorted.toSeq === planted.sorted)
+    // a key field beyond the arity makes every fitting row un-keyable:
+    // its JSON joins the raw arity rejects, still from one scan
+    val all = BulkLoad.csv(spark, in, BulkLoad.Config(compatNaiveSplit = true, keyFields = Seq(0, 9)))
+    val q2 = tmpDir() + "/q2"
+    assert(recordsReadDuring(all.quarantined.write.parquet(q2)) === 43)
+    val json = good.map(l => l.split(",").zipWithIndex
+      .map { case (v, i) => s""""c$i":"$v"""" }.mkString("{", ",", "}"))
+    assert(spark.read.parquet(q2).as[String].collect().sorted.toSeq === (planted ++ json).sorted)
+    assert(all.cells.count() === 0)
   }
 
   test("compactMinor ledger: a re-used batch id with DIFFERENT content fails loudly; the ledger stays bounded") {
@@ -1777,7 +1829,7 @@ class SourceDriversSpec extends SparkSuite {
         finally System.setErr(oldErr)
       } finally CellManifest.failWritesUnder = None
     assert(batches.length === 2, "batches must still commit past a manifest failure")
-    assert(new String(errBuf.toByteArray, "UTF-8").contains("deferred manifest"),
+    assert(new String(errBuf.toByteArray, "UTF-8").contains("readers fall back to footers"),
       "the degrade must be logged, not silent")
     batches.foreach { b =>
       assert(!new java.io.File(b.path, CellManifest.FileName).exists(),
